@@ -415,7 +415,15 @@ def explode_lines(
     out = df.select(
         *keep, F.posexplode(lines).alias(line_no_col, raw_col)
     )
-    return out.withColumn(raw_col, F.regexp_replace(raw_col, "\r$", ""))
+    # drop exactly ONE trailing CR, without a regex: Java's "\r$" also
+    # matches before a final line terminator, so "a\r\r" lost both CRs
+    # where the oracle keeps "a\r"
+    raw = F.col(raw_col)
+    return out.withColumn(
+        raw_col,
+        F.when(raw.endswith("\r"), raw.substr(F.lit(1), F.length(raw) - 1))
+        .otherwise(raw),
+    )
 
 
 def with_global_line_id(

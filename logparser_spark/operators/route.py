@@ -5,15 +5,19 @@ one filter = one visible view) to multi-sink routing. Every sink predicate
 is wrapped in the malformed-acceptance rule (F10,
 ``filtered_file_reader.cpp:258-262``).
 
-Two physical strategies (SURVEY.md §4 custom item 3):
+Physical strategies (SURVEY.md §4 custom item 3):
 
-- :func:`route` — persist the parsed DF once, then N filtered outputs.
+- :func:`route` — persist the parsed DF once, then N filtered views.
   Right for small N (each sink is a cheap scan of the cached parse
   result; without the persist, Catalyst re-runs the parse UDF per sink —
   verified via .explain, see .claude/skills/verify/SKILL.md).
 - :func:`route_mask` — single pass producing one boolean column per sink
   (plus a packed bitmask); right for large N or when sinks feed one
   aggregate pass instead of N writers.
+- :func:`write_routes_single_pass` — one scan, each row exploded to the
+  sinks it matches (:func:`routed_sink_ids`), one write partitioned by
+  sink. ``plans/checkpoint.route_checkpointed`` writes the same way,
+  partitioned by sink and lineage bucket.
 """
 
 from __future__ import annotations
@@ -122,25 +126,6 @@ def route(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
     }, parsed_df
 
 
-def write_routes(routes: dict, base_path: str, fmt: str = "parquet",
-                 mode: str = "overwrite", partition_by: Optional[list] = None):
-    """Write each routed view to ``{base_path}/{name}``. Parquet locally;
-    on a real cluster pass fmt='iceberg' table identifiers instead (the
-    sink abstraction in sources/sinks.py).
-
-    Scale note: this is the SMALL-N strategy — it scans the persisted
-    parse output once per sink, and :func:`route`'s persist of the full
-    parse output is not viable at 10^12 rows. For large N (or any time
-    the parse output can't be cached) use
-    :func:`write_routes_single_pass`, which streams every row
-    source→parse→explode→writer exactly once."""
-    for name, df in routes.items():
-        w = df.write.format(fmt).mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(f"{base_path}/{name}")
-
-
 def routed_sink_ids(sinks: list[SinkSpec], spec: FormatSpec,
                     parsed_col: str = "parsed"):
     """Array column of the sink names whose predicate accepts the row
@@ -166,13 +151,13 @@ def write_routes_single_pass(parsed_df, sinks: list[SinkSpec],
     single-directory scans via partition pruning
     (:func:`read_routed_sink`).
 
-    Why this exists: :func:`route` + :func:`write_routes` persist the
-    full parse output and scan it N times — fine for N=7 at bench scale,
-    impossible at 10^12 rows (nothing that size fits a cache tier, and N
-    re-scans of cold parquet re-pay the IO N times). Here rows flow
+    Why this exists: writing each :func:`route` view on its own persists
+    the full parse output and scans it N times — impossible at 10^12
+    rows (nothing that size fits a cache tier, and N re-scans of cold
+    parquet re-pay the IO N times). Here rows flow
     source→parse→explode→writer exactly once; a row matching k sinks is
     duplicated k times AT THE WRITER ONLY — the same total output bytes
-    ``write_routes`` produces, without persisting or re-scanning the
+    N per-sink writes produce, without persisting or re-scanning the
     input. Rows matching no sink are dropped by the explode (no
     pass-through cost)."""
     from pyspark.sql import functions as F

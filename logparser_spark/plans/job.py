@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+import shutil
 from dataclasses import dataclass, field
 
 from ..functions.formats import DEFAULT_FORMAT, compile_format
@@ -50,13 +52,10 @@ class JobConfig:
     buckets: int = 64
     text_col: str = "text"
     key_col: str = "doc_id"
-    # "checkpoint": lineage-bucketed fan-out with idempotent resume (the
-    # default; one persisted scan per bucket, right for small sink
-    # counts). "single_pass": route.write_routes_single_pass — ONE
-    # streamed scan, explode by matching sink, dynamic-partitioned
-    # write; the 10^12-row / large-N strategy (no persist of the parse
-    # output, no per-sink re-scan; resume = re-run, the write is a
-    # single atomic overwrite).
+    # the only strategy: lineage-bucketed fan-out with idempotent resume
+    # (plans/checkpoint.route_checkpointed — one aggregate and one
+    # write partitioned by sink and bucket per run); any other value
+    # raises ValueError in run_job
     route_strategy: str = "checkpoint"
 
     @classmethod
@@ -98,87 +97,128 @@ class JobConfig:
             return cls.from_dict(json.load(f))
 
 
+def _source_identity(cfg: JobConfig) -> dict:
+    """What the lineage must have been written from, beyond the route's
+    own fingerprint: the input location, each data file's relative path,
+    size and mtime (for a local parquet input), and the job settings that
+    shape rows before the route."""
+    from ..sources.sinks import SinkTarget
+
+    target = SinkTarget.parse(cfg.input)
+    files = []
+    if target.kind == "parquet" and os.path.isdir(target.location):
+        for d, dirs, names in os.walk(target.location):
+            dirs[:] = sorted(n for n in dirs if not n.startswith(("_", ".")))
+            for n in sorted(names):
+                if not n.startswith(("_", ".")):
+                    st = os.stat(os.path.join(d, n))
+                    rel = os.path.relpath(os.path.join(d, n), target.location)
+                    files.append([rel, st.st_size, st.st_mtime_ns])
+    elif target.kind == "parquet" and os.path.isfile(target.location):
+        st = os.stat(target.location)
+        files.append(["", st.st_size, st.st_mtime_ns])
+    return {
+        "input": cfg.input,
+        "files": files,
+        # pairs, not a dict: the cascade order matters and the digest
+        # sorts dict keys
+        "extra_formats": list(cfg.extra_formats.items()),
+        "enrich": cfg.enrich,
+        "text_col": cfg.text_col,
+    }
+
+
+def _write_level_hists(base: str, hists: dict) -> None:
+    """Writes each sink's ``_agg/<sink>_level_hist`` table (columns
+    ``Level``, ``n``, ``sink``) from the lineage sums, on the driver.
+    ``_agg/_hists.json`` records what the tables hold, so an unchanged
+    lineage rewrites nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    agg = os.path.join(base, "_agg")
+    marker = os.path.join(agg, "_hists.json")
+    state = json.dumps(hists, sort_keys=True)
+    if os.path.isfile(marker):
+        with open(marker) as f:
+            if f.read() == state:
+                return
+        os.remove(marker)
+    os.makedirs(agg, exist_ok=True)
+    for name, hist in hists.items():
+        level = pa.array([lv for lv, _ in hist])
+        if pa.types.is_null(level.type):
+            level = level.cast(pa.string())
+        table = pa.table({
+            "Level": level,
+            "n": pa.array([n for _, n in hist], pa.int64()),
+            "sink": pa.array([name] * len(hist), pa.string()),
+        })
+        dst = os.path.join(agg, f"{name}_level_hist")
+        tmp = os.path.join(agg, f".{name}_level_hist.tmp")
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+        if os.path.isdir(dst):
+            shutil.rmtree(dst)
+        os.rename(tmp, dst)
+    with open(marker, "w") as f:
+        f.write(state)
+
+
 def run_job(spark, cfg: JobConfig) -> dict:
     """Full pipeline with lineage-checkpointed routing. Returns the
-    lineage metrics summary (rows / well-formed across buckets)."""
-    from pyspark.sql import functions as F
+    lineage metrics summary (rows / well-formed across buckets).
 
-    from ..operators import aggregate, enrich as enrich_mod
+    The lineage is checked before the input is read: when every bucket
+    is committed and the ``_agg`` tables match it, the job returns
+    without launching a Spark job. A lineage written for another
+    format, sink set, bucket count, key or input raises ``ValueError``."""
+    from ..operators import enrich as enrich_mod
     from ..operators.parse import explode_lines, parse_lines
     from ..plans import checkpoint as C
     from ..plans.skew import skew_conf
-    from ..sources.sinks import SinkTarget, read_source, write_sink
+    from ..sources.sinks import SinkTarget, read_source
 
-    skew_conf(spark)
-    spec = compile_format(cfg.format)
-
-    pages = read_source(spark, SinkTarget.parse(cfg.input))
-    keep = [c for c in (cfg.key_col, "url", "lang") if c in pages.columns]
-    lines = explode_lines(pages, text_col=cfg.text_col, keep_cols=keep)
-    if cfg.extra_formats:
-        # multi-format cascade: primary format first, then the extras in
-        # declaration order; the primary's struct becomes `parsed` so
-        # sink filters (bound to the primary format's fields) apply
-        # unchanged — lines matched only by a secondary format are
-        # malformed under the primary, exactly the reference's semantics
-        # before a runtime format swap.
-        from ..operators.parse import parse_lines_multi
-
-        specs = [spec] + [
-            compile_format(f, name) for name, f in cfg.extra_formats.items()
-        ]
-        parsed = parse_lines_multi(lines, specs).withColumnRenamed(
-            f"parsed_{spec.name}", "parsed"
-        )
-    else:
-        parsed = parse_lines(lines, spec)
-    if cfg.enrich and "url" in parsed.columns and "lang" in parsed.columns:
-        parsed = enrich_mod.enrich_all(parsed, spark)
-
-    if cfg.route_strategy == "single_pass":
-        from ..operators.route import (
-            read_routed_sink,
-            write_routes_single_pass,
-        )
-
-        base = f"{cfg.output}/routed"
-        write_routes_single_pass(parsed, cfg.sinks, spec, base)
-        for s in cfg.sinks:
-            routed = read_routed_sink(spark, base, s.name)
-            hist = aggregate.field_histogram(routed, "Level")
-            write_sink(
-                hist.withColumn("sink", F.lit(s.name)),
-                SinkTarget.parse(f"{cfg.output}/_agg/{s.name}_level_hist"),
-                mode="overwrite",
-            )
-        counts = {
-            r["sink"]: r["n"]
-            for r in spark.read.parquet(base)
-            .groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        return {"strategy": "single_pass",
-                "sink_rows": {s.name: int(counts.get(s.name, 0))
-                              for s in cfg.sinks}}
     if cfg.route_strategy != "checkpoint":
         raise ValueError(
             f"unknown route_strategy {cfg.route_strategy!r} "
-            "(expected 'checkpoint' or 'single_pass')"
+            "(expected 'checkpoint')"
+        )
+    spec = compile_format(cfg.format)
+    source = _source_identity(cfg)
+    fp = C.fingerprint(spec, cfg.sinks, cfg.buckets, cfg.key_col)
+    if len(C.verified_buckets(cfg.output, fp, source)) < cfg.buckets:
+        skew_conf(spark)
+        pages = read_source(spark, SinkTarget.parse(cfg.input))
+        keep = [c for c in (cfg.key_col, "url", "lang") if c in pages.columns]
+        lines = explode_lines(pages, text_col=cfg.text_col, keep_cols=keep)
+        if cfg.extra_formats:
+            # multi-format cascade: primary format first, then the extras
+            # in declaration order; the primary's struct becomes `parsed`
+            # so sink filters (bound to the primary format's fields)
+            # apply unchanged — lines matched only by a secondary format
+            # are malformed under the primary, exactly the reference's
+            # semantics before a runtime format swap.
+            from ..operators.parse import parse_lines_multi
+
+            specs = [spec] + [
+                compile_format(f, name) for name, f in cfg.extra_formats.items()
+            ]
+            parsed = parse_lines_multi(lines, specs).withColumnRenamed(
+                f"parsed_{spec.name}", "parsed"
+            )
+        else:
+            parsed = parse_lines(lines, spec)
+        if cfg.enrich and "url" in parsed.columns and "lang" in parsed.columns:
+            parsed = enrich_mod.enrich_all(parsed, spark)
+        C.route_checkpointed(
+            parsed, cfg.sinks, spec, cfg.output,
+            buckets=cfg.buckets, key_col=cfg.key_col, source=source,
         )
 
-    C.route_checkpointed(
-        parsed, cfg.sinks, spec, cfg.output,
-        buckets=cfg.buckets, key_col=cfg.key_col,
-    )
-
-    # per-sink aggregate tables (counts by matched format + level hist)
-    for s in cfg.sinks:
-        routed = C.read_routed(spark, cfg.output, s.name)
-        hist = aggregate.field_histogram(routed, "Level")
-        write_sink(
-            hist.withColumn("sink", F.lit(s.name)),
-            SinkTarget.parse(f"{cfg.output}/_agg/{s.name}_level_hist"),
-            mode="overwrite",
-        )
+    # per-sink level histograms, summed from the lineage entries
+    _write_level_hists(cfg.output, C.sink_histograms(cfg.output))
     return C.lineage_metrics(cfg.output)
 
 

@@ -303,6 +303,26 @@ def cms_stream(stream_df, out_dir: str, depth: int = 4,
     )
 
 
+def _is_replay(batch_id: int, applied, out_dir: str) -> bool:
+    """Replay check for the ``__batch_id``-stamped merge tables. Batch
+    ids are monotone, so ``batch_id == applied`` is an at-least-once
+    replay of the last merged batch (a no-op). A SMALLER id is never a
+    Structured Streaming replay: the stream's checkpoint was reset (or
+    deleted) while its merged table was kept, so ids restarted at 0.
+    Dropping it would lose new data and merging it could double-count
+    re-read data, so it raises."""
+    if applied is None or batch_id > applied:
+        return False
+    if batch_id == applied:
+        return True
+    raise ValueError(
+        f"batch {batch_id} arrived after batch {applied} was merged into "
+        f"{out_dir!r}: batch ids went backwards, which means the stream's "
+        "checkpoint was reset; start the reset stream with a new out_dir "
+        "(or remove the merged table) instead of reusing this one"
+    )
+
+
 def make_cms_merger(out_dir: str, depth: int = 4, width: int = 64,
                     text_col: str = "text"):
     """The ``foreachBatch`` merger behind :func:`cms_stream`, exposed
@@ -337,12 +357,11 @@ def make_cms_merger(out_dir: str, depth: int = 4, width: int = 64,
             merged = prev = None
         if prev is not None:
             # batch ids are monotone, so the whole-table stamp is the
-            # max APPLIED id: any batch_id <= it is a replay (not just
-            # the most recent one a direct re-invocation might repeat)
+            # max APPLIED id
             applied = prev.agg(
                 F.max("__batch_id").alias("m")).first()["m"]
-            if applied is not None and batch_id <= applied:
-                return  # replay of an already-merged batch: no-op
+            if _is_replay(batch_id, applied, out_dir):
+                return  # replay of the last merged batch: no-op
             merged = (
                 prev.select("r", "bucket", "cnt").unionAll(new)
                 .groupBy("r", "bucket")
@@ -437,10 +456,9 @@ def make_keep_latest_merger(out_dir: str, key_col: str = "url",
     Replay detection: batch ids are MONOTONE (Structured Streaming's
     contract; direct callers inherit it), so the whole-table
     ``__batch_id`` stamp written by the last merge IS the max applied
-    id, and any incoming ``batch_id <= max`` — not just the most
-    recent — is a detected replay and a no-op. A direct caller must
-    therefore never assign a NEW batch a smaller id than an already
-    merged one (it would be dropped as a replay, by design)."""
+    id. An incoming ``batch_id == max`` is a detected replay and a
+    no-op; a smaller one means the stream's checkpoint was reset and
+    raises ``ValueError`` (see :func:`_is_replay`)."""
     import os
 
     from pyspark.sql import functions as F
@@ -463,8 +481,8 @@ def make_keep_latest_merger(out_dir: str, key_col: str = "url",
         if prev is not None:
             applied = prev.agg(
                 F.max("__batch_id").alias("m")).first()["m"]
-            if applied is not None and batch_id <= applied:
-                return  # replay of ANY already-merged batch: no-op
+            if _is_replay(batch_id, applied, out_dir):
+                return  # replay of the last merged batch: no-op
             merged = merge_latest(prev, new, key_col=key_col,
                                   ts_col=ts_col, carry=carry)
         else:

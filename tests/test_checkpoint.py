@@ -91,6 +91,143 @@ def test_kill_and_rerun_exact_counts(spark, parsed, base):
     assert ids_routed == df.select("doc_id", "line_no").distinct().count()
 
 
+def _row_sets(spark, base, names):
+    from logparser_spark.plans import checkpoint as C
+
+    return {
+        n: sorted(
+            (r["doc_id"], r["line_no"])
+            for r in C.read_routed(spark, base, n)
+            .select("doc_id", "line_no").collect()
+        )
+        for n in names
+    }
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, parsed):
+    """A crash-free 8-bucket run: the reference the crash tests compare
+    row sets and lineage histograms against."""
+    from logparser_spark.plans import checkpoint as C
+
+    df, spec = parsed
+    d = tempfile.mkdtemp(prefix="ckpt_clean_")
+    C.route_checkpointed(df, _sinks(), spec, d, buckets=8)
+    yield {"rows": _row_sets(spark, d, ["s_info", "s_all"]),
+           "hists": C.sink_histograms(d)}
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _crash_mid_rename(monkeypatch, after: int):
+    """Makes the route's directory renames fail after ``after`` of them."""
+    from logparser_spark.plans import checkpoint as C
+
+    real = C.os.rename
+    calls = []
+
+    def rename(src, dst):
+        if len(calls) >= after:
+            raise OSError("injected crash mid-rename")
+        calls.append(src)
+        real(src, dst)
+
+    monkeypatch.setattr(C.os, "rename", rename)
+
+
+@pytest.mark.parametrize("crash", ["mid_rename", "before_publish", "mid_publish"])
+def test_crash_then_rerun_matches_clean_run(spark, parsed, base, clean_run,
+                                            monkeypatch, crash):
+    """A crash at each point of the route — while staged bucket
+    directories are renamed into place, after all sink data is in place
+    but before any lineage publish, and between lineage publishes —
+    then a re-run: exact per-sink row sets and histograms of a clean
+    run, the lineage's per-sink row counts equal to the rows read back,
+    and no staging directory left behind."""
+    import os
+
+    from logparser_spark.plans import checkpoint as C
+
+    df, spec = parsed
+    if crash == "mid_rename":
+        with monkeypatch.context() as m:
+            _crash_mid_rename(m, after=3)
+            with pytest.raises(OSError, match="injected"):
+                C.route_checkpointed(df, _sinks(), spec, base, buckets=8)
+        assert any(fn.startswith(C.STAGING_PREFIX) for fn in os.listdir(base))
+    else:
+        n = 0 if crash == "before_publish" else 3
+        with pytest.raises(RuntimeError, match="injected failure"):
+            C.route_checkpointed(df, _sinks(), spec, base, buckets=8,
+                                 fail_after_buckets=n)
+        assert C.lineage_metrics(base)["buckets"] == n
+    # data not yet published is invisible
+    assert C.read_routed(spark, base, "s_all").count() == sum(
+        e["rows"] for e in C.completed_buckets(base).values())
+
+    r = C.route_checkpointed(df, _sinks(), spec, base, buckets=8)
+    assert len(r["processed"]) + len(r["skipped"]) == 8
+    assert _row_sets(spark, base, ["s_info", "s_all"]) == clean_run["rows"]
+    assert C.sink_histograms(base) == clean_run["hists"]
+    entries = C.completed_buckets(base).values()
+    for name, rows in clean_run["rows"].items():
+        assert sum(e["sinks"][name]["rows"] for e in entries) == len(rows)
+    assert not any(fn.startswith(C.STAGING_PREFIX) for fn in os.listdir(base))
+
+
+def test_lineage_histograms_match_spark(spark, parsed, base):
+    """The per-sink histograms summed from the lineage equal
+    aggregate.field_histogram over the rows read back."""
+    from logparser_spark.operators.aggregate import field_histogram
+    from logparser_spark.plans import checkpoint as C
+
+    df, spec = parsed
+    C.route_checkpointed(df, _sinks(), spec, base, buckets=4)
+    for name in ("s_info", "s_all"):
+        want = {(r["Level"], r["n"]) for r in
+                field_histogram(C.read_routed(spark, base, name), "Level").collect()}
+        assert {tuple(p) for p in C.sink_histograms(base)[name]} == want
+
+
+def test_empty_sink_reads_back_empty(spark, parsed, base):
+    """A sink no row matches leaves no directory, yet reads back as an
+    empty frame with the other sinks' schema."""
+    from logparser_spark.operators.route import SinkSpec
+    from logparser_spark.plans import checkpoint as C
+
+    df, spec = parsed
+    sinks = _sinks() + [SinkSpec("s_none", "Level EQ NO_SUCH_LEVEL",
+                                 accept_bad_format=False)]
+    C.route_checkpointed(df, sinks, spec, base, buckets=4)
+    none = C.read_routed(spark, base, "s_none")
+    assert none.count() == 0
+    assert none.schema == C.read_routed(spark, base, "s_all").schema
+    assert C.sink_histograms(base)["s_none"] == []
+
+
+def test_changed_config_raises(spark, parsed, base):
+    """A lineage written for another bucket count or filter must not be
+    resumed: buckets 4 -> 8 duplicated rows and INFO -> TRACE kept the
+    old output before the lineage carried a fingerprint."""
+    from logparser_spark.operators.route import SinkSpec
+    from logparser_spark.plans import checkpoint as C
+
+    df, spec = parsed
+    C.route_checkpointed(df, _sinks(), spec, base, buckets=4)
+    before = C.lineage_metrics(base)
+    with pytest.raises(ValueError, match="buckets"):
+        C.route_checkpointed(df, _sinks(), spec, base, buckets=8)
+    trace = [SinkSpec("s_info", "Level EQ TRACE"), SinkSpec("s_all", None)]
+    with pytest.raises(ValueError, match="sinks"):
+        C.route_checkpointed(df, trace, spec, base, buckets=4)
+    with pytest.raises(ValueError, match="key_col"):
+        C.route_checkpointed(df, _sinks(), spec, base, buckets=4,
+                             key_col="line_no")
+    assert C.lineage_metrics(base) == before
+    # an equivalent spelling of the same filter is the same fingerprint
+    same = [SinkSpec("s_info", "Level  EQ INFO"), SinkSpec("s_all", None)]
+    assert C.route_checkpointed(df, same, spec, base, buckets=4)["processed"] == []
+
+
 def test_salted_count_equals_plain(spark, parsed):
     from logparser_spark.operators.enrich import url_host
     from logparser_spark.plans.skew import salted_count

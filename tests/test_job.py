@@ -45,59 +45,125 @@ def test_job_run_and_resume(spark, work):
     assert {(r["Level"], r["n"]) for r in hist} == {("INFO", 2521)}
 
 
-def test_job_single_pass_strategy_matches_checkpoint(spark, work):
-    """route_strategy='single_pass' (one streamed scan, partitioned
-    write) must land the same per-sink row sets as the checkpointed
-    strategy, and its aggregate tables must agree."""
-    from logparser_spark.plans import checkpoint as C
-    from logparser_spark.plans.job import JobConfig, run_job
+def _cfg(work, out, **kw):
+    from logparser_spark.plans.job import JobConfig
 
-    base_cfg = {
+    return JobConfig.from_dict({
         "input": f"parquet:{work}/pages",
+        "output": f"{work}/{out}",
         "sinks": [
             {"name": "info", "filter": "Level EQ INFO"},
             {"name": "all", "filter": None},
         ],
         "buckets": 8,
-    }
-    cfg_cp = JobConfig.from_dict(
-        {**base_cfg, "output": f"{work}/out_cp"}
-    )
-    cfg_sp = JobConfig.from_dict(
-        {**base_cfg, "output": f"{work}/out_sp",
-         "route_strategy": "single_pass"}
-    )
-    run_job(spark, cfg_cp)
-    m = run_job(spark, cfg_sp)
-    assert m["strategy"] == "single_pass"
+        **kw,
+    })
 
-    from logparser_spark.operators.route import read_routed_sink
 
-    for name in ("info", "all"):
-        cp = {
-            (r["doc_id"], r["line_no"])
-            for r in C.read_routed(spark, f"{work}/out_cp", name)
-            .select("doc_id", "line_no").collect()
-        }
-        sp = {
-            (r["doc_id"], r["line_no"])
-            for r in read_routed_sink(spark, f"{work}/out_sp/routed", name)
-            .select("doc_id", "line_no").collect()
-        }
-        assert sp == cp, name
-        assert m["sink_rows"][name] == len(cp)
+def _jobs_in(spark, group, fn):
+    """Runs ``fn`` under job group ``group``; returns (result, Spark
+    jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    h_cp = {(r["Level"], r["n"]) for r in spark.read.parquet(
-        f"{work}/out_cp/_agg/info_level_hist").collect()}
-    h_sp = {(r["Level"], r["n"]) for r in spark.read.parquet(
-        f"{work}/out_sp/_agg/info_level_hist").collect()}
-    assert h_cp == h_sp
+
+def test_job_complete_lineage_launches_no_spark_job(spark, work):
+    """A fresh job launches a handful of Spark jobs (one aggregate, one
+    write, plus planning); re-running it over its complete lineage
+    launches none and returns the same metrics."""
+    from logparser_spark.plans.job import run_job
+
+    cfg = _cfg(work, "out")
+    m1, fresh = _jobs_in(spark, "job-fresh", lambda: run_job(spark, cfg))
+    m2, resumed = _jobs_in(spark, "job-resume", lambda: run_job(spark, cfg))
+    assert m2 == m1 and set(m1) == {"buckets", "rows", "well_formed_rows"}
+    assert 0 < fresh <= 10
+    assert resumed == 0
+
+
+def test_job_only_checkpoint_strategy(spark, work):
+    from logparser_spark.plans.job import run_job
 
     with pytest.raises(ValueError, match="route_strategy"):
-        run_job(spark, JobConfig.from_dict(
-            {**base_cfg, "output": f"{work}/out_bad",
-             "route_strategy": "bogus"}
-        ))
+        run_job(spark, _cfg(work, "out", route_strategy="single_pass"))
+
+
+def test_job_changed_config_or_input_raises(spark, work):
+    """Each change that would make the lineage lie raises instead of
+    resuming: buckets 4 -> 8 (duplicated rows before), Level EQ INFO ->
+    Level EQ TRACE (kept the old output before), the format, and the
+    input files."""
+    import glob
+    import os
+
+    from logparser_spark.plans import checkpoint as C
+    from logparser_spark.plans.job import run_job
+
+    m = run_job(spark, _cfg(work, "out", buckets=4))
+    with pytest.raises(ValueError, match="buckets"):
+        run_job(spark, _cfg(work, "out", buckets=8))
+    with pytest.raises(ValueError, match="sinks"):
+        run_job(spark, _cfg(work, "out", buckets=4, sinks=[
+            {"name": "info", "filter": "Level EQ TRACE"},
+            {"name": "all", "filter": None},
+        ]))
+    with pytest.raises(ValueError, match="format"):
+        run_job(spark, _cfg(work, "out", buckets=4,
+                            format="{INT:Date} {INT:Time} {STR:Level} {STR:Mesg}"))
+    part = sorted(glob.glob(f"{work}/pages/part-*"))[0]
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    with pytest.raises(ValueError, match="different input"):
+        run_job(spark, _cfg(work, "out", buckets=4))
+    assert C.lineage_metrics(f"{work}/out") == m
+
+
+def _agg(spark, base, name):
+    return sorted(tuple(r) for r in
+                  spark.read.parquet(f"{base}/_agg/{name}_level_hist").collect())
+
+
+@pytest.mark.parametrize("after", [0, 3])
+def test_job_crash_then_rerun_matches_clean_run(spark, work, monkeypatch, after):
+    """A job killed after the sink data is in place (0 lineage entries
+    published) or mid-publish (3 of 8), then re-run: the same per-sink
+    row sets and ``_agg`` histograms as a clean run."""
+    from logparser_spark.plans import checkpoint as C
+    from logparser_spark.plans.job import run_job
+
+    clean = run_job(spark, _cfg(work, "clean"))
+
+    real = C._write_lineage
+    calls = []
+
+    def crashing(base, entry):
+        if len(calls) >= after:
+            raise RuntimeError("injected crash mid-publish")
+        calls.append(entry["bucket"])
+        real(base, entry)
+
+    with monkeypatch.context() as m:
+        m.setattr(C, "_write_lineage", crashing)
+        with pytest.raises(RuntimeError, match="injected"):
+            run_job(spark, _cfg(work, "crashed"))
+    assert C.lineage_metrics(f"{work}/crashed")["buckets"] == after
+    assert run_job(spark, _cfg(work, "crashed")) == clean
+
+    for name in ("info", "all"):
+        rows = {
+            b: sorted((r["doc_id"], r["line_no"]) for r in
+                      C.read_routed(spark, f"{work}/{b}", name)
+                      .select("doc_id", "line_no").collect())
+            for b in ("clean", "crashed")
+        }
+        assert rows["crashed"] == rows["clean"], name
+        assert _agg(spark, f"{work}/crashed", name) == _agg(spark, f"{work}/clean", name)
 
 
 def test_sink_target_parse_and_iceberg_gate(spark):

@@ -6,6 +6,7 @@ the oracle itself).
 """
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from logparser_spark.functions.formats import DEFAULT_FORMAT, compile_format
 from logparser_spark.functions.oracle import parse_line, split_lines
@@ -179,6 +180,10 @@ class TestExplodeLines:
             "a\n\n",
             "a\n\r\n",
             "\n\n",
+            # regression: Java $ matches before a final line terminator,
+            # so a "\r$" strip ate both CRs of "a\r\r" (oracle: 'a\r')
+            "a\r\r\nb",
+            "\r\r",
         ]
         df = explode_lines(self._pages(spark, texts))
         got = {}
@@ -187,6 +192,19 @@ class TestExplodeLines:
         for i, t in enumerate(texts):
             want = list(enumerate(split_lines(t)))
             assert sorted(got.get(f"u{i}", [])) == want, f"text {t!r}"
+
+    @settings(max_examples=30, deadline=None)
+    @given(texts=st.lists(st.text(alphabet="a\r\né", max_size=12),
+                          min_size=1, max_size=16))
+    def test_explode_matches_split_lines_property(self, spark, texts):
+        """Differential: explode_lines == oracle split_lines on CR/LF-dense
+        pages, empty pages included (one Spark job per example batch)."""
+        df = explode_lines(self._pages(spark, texts))
+        got = {}
+        for r in df.collect():
+            got.setdefault(r["url"], []).append((r["line_no"], r["raw_line"]))
+        for i, t in enumerate(texts):
+            assert sorted(got.get(f"u{i}", [])) == list(enumerate(split_lines(t))), t
 
     def test_golden_payload_roundtrip(self, spark):
         payload = "\n".join(GOLDEN_LINES) + "\n"

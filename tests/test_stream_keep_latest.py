@@ -10,6 +10,8 @@ import os
 import shutil
 import tempfile
 
+import pytest
+
 
 SCHEMA = "url string, warc_ts timestamp, text string"
 
@@ -100,11 +102,11 @@ def test_keep_latest_merger_replay_is_noop(spark):
         before = _winners(spark, d)
         merger(b1, 1)  # at-least-once replay
         assert _winners(spark, d) == before
-        # a replay of an OLDER batch (direct re-invocation, not just
-        # the most recent micro-batch) must also be a detected no-op —
-        # before the batch_id <= max(applied) guard this double-counted
-        # n_revisions
-        merger(b0, 0)
+        # an OLDER batch id is never a Structured Streaming replay (the
+        # checkpoint was reset): it raises instead of double-counting
+        # n_revisions or silently dropping a new batch
+        with pytest.raises(ValueError, match="checkpoint was reset"):
+            merger(b0, 0)
         assert _winners(spark, d) == before
         # a genuinely new batch still merges
         t9 = datetime.datetime(2026, 3, 1)

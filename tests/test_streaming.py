@@ -413,3 +413,45 @@ def test_cms_stream_equals_batch_and_replay_idempotent(spark):
         assert sum(got3.values()) == sum(want.values()) + 3 * 4
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_cms_stream_checkpoint_reset_raises(spark):
+    """Resetting a stream's checkpoint restarts its batch ids at 0 while
+    the merged sketch still carries the last applied id: the merger must
+    raise (naming the reset), not drop the restarted batches as replays."""
+    import os
+    import shutil
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from logparser_spark.streaming import pipeline as SP
+
+    d = tempfile.mkdtemp(prefix="scms_reset_")
+    try:
+        for f in range(2):
+            spark.createDataFrame(
+                [(f * 10 + i, f"alpha beta{i}") for i in range(4)],
+                "doc_id bigint, text string",
+            ).coalesce(1).write.mode(
+                "append" if f else "overwrite"
+            ).parquet(f"{d}/src")
+
+        def run():
+            stream = SP.stream_pages(spark, f"{d}/src", max_files=1,
+                                     schema="doc_id bigint, text string")
+            q = SP.cms_stream(stream, d, depth=4, width=32).start()
+            q.awaitTermination(120)
+
+        run()
+        before = sorted(tuple(r) for r in
+                        spark.read.parquet(f"{d}/cms_sketch").collect())
+        shutil.rmtree(os.path.join(d, "_ckpt"))
+        with pytest.raises(StreamingQueryException,
+                           match="checkpoint was reset"):
+            run()
+        after = sorted(tuple(r) for r in
+                       spark.read.parquet(f"{d}/cms_sketch").collect())
+        assert after == before
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
