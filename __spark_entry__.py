@@ -5381,9 +5381,9 @@ DBL_FORMAT = "{STR:Name} {DBL:Value} {INT:Seq}"
 
 
 def q_parse_dbl_spec(spark, sf_dir):
-    """Exercises the pandas-UDF nested-regex tier (DBL specs have no flat
-    fast path): synthesize '<name> <d.dd> <i>' lines from doc_id and parse
-    them with a DBL-bearing format."""
+    """Exercises the NumPy walker kernel (DBL specs have no flat regex,
+    so the walker parses every row): synthesize '<name> <d.dd> <i>' lines
+    from doc_id and parse them with a DBL-bearing format."""
     from pyspark.sql import functions as F
 
     from logparser_spark.functions.formats import compile_format

@@ -513,10 +513,9 @@ box's bandwidth at both levels) is the scaling evidence that transfers.
   size is not a lever worth tuning further.
 - Strategy trade (measured both rounds): co-resident local JVMs under
   host contention degrade arrow_udf's ArrowEvalPython ~3x while
-  mapInArrow degrades ~1.5x, so the executor-model bench pins
-  strategy="mapinarrow"; single-JVM (and real clusters, where executors
-  do not share a kernel) default to arrow_udf
-  (env SPARK_GRAFT_PARSE_STRATEGY overrides).
+  mapInArrow degrades ~1.5x, so the executor-model bench pinned
+  strategy="mapinarrow". That lever is gone: every parse now runs as
+  one arrow_udf.
 - The concurrent multi-JVM executor proxy remains kernel-bound on this
   VM (any multi-process load shows 24-75%% system CPU; identical runs
   vary 5-10x across windows) — its 0.28 is a lower bound with the
@@ -554,7 +553,7 @@ slower than native C++ (~0.75M RE2-bound rows/s/core single-threaded vs
 `extract_regex` itself, so the remaining per-core gap needs an
 RE2-class engine with cheaper capture materialization, not a plan
 change. Two alternatives were built and measured SLOWER: the JVM-codegen
-extract path (parse_lines_hybrid, 1.69M vs 2.17M rows/s — java.util.regex
+extract path (parse_lines_hybrid, since deleted, 1.69M vs 2.17M rows/s — java.util.regex
 backtracks at ~0.5M matches/s/core vs RE2's ~1M) and running the
 vectorized NumPy walker on full batches (0.1M rows/s — its class-stop
 index arrays blow up to ~1GB on multi-MB buffers; it stays
@@ -850,13 +849,7 @@ def _executor_shard(args):
     def run(st, n):
         pages = enrich.page_host_cols(synth_pages(spark, n, cpus * 8, start=st))
         lines = explode_lines(pages, keep_cols=["doc_id", "tld", "lang"])
-        # co-resident local JVMs: mapInArrow degrades gracefully under
-        # host contention while the arrow_udf path's ArrowEvalPython
-        # buffering collapses 3x (measured both rounds; on a real
-        # cluster executors don't share a kernel and arrowudf wins)
-        parsed = parse_lines_arrow(
-            lines, spec, drop_cols=["raw_line"], strategy="mapinarrow"
-        )
+        parsed = parse_lines_arrow(lines, spec, drop_cols=["raw_line"])
         enriched = enrich.enrich_all(parsed, spark)
         aggs = [F.count(F.lit(1)).alias("total_lines")] + [
             F.sum(sink_column(s, spec).cast("long")).alias(s.name)

@@ -1,6 +1,6 @@
 """Civil-date arithmetic for the DATE field type — vectorizable and
 dependency-free so every parse tier (NumPy walker, Arrow kernel,
-pandas tiers, pure-Python oracle) shares ONE definition of validity
+pure-Python oracle) shares ONE definition of validity
 and epoch conversion.
 
 ``days_from_civil`` is the era-based Gregorian algorithm (Howard

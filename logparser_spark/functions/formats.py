@@ -5,8 +5,8 @@ Compiles LogParser-style format strings such as::
     {INT:Date} {INT:Time} {STR:Level} :{CHR:,.,1}{STR:Source}: {STR:Mesg}
 
 into a :class:`FormatSpec`: an ordered list of typed field specs, the target
-Spark ``StructType``, and an anchored possessive regex usable as a vectorized
-fast path.
+Spark ``StructType``, and (when provably sound) a flat RE2 regex for the
+vectorized parse kernel.
 
 Grammar semantics mirror the reference compiler
 (``/root/reference/src/line_parsing/line_format.hpp:176-284``):
@@ -133,69 +133,6 @@ class FormatSpec:
 
     # ---- regex fast path ----------------------------------------------------
 
-    def to_regex(self) -> str:
-        """Anchored possessive regex implementing the parse program.
-
-        Trailing instructions are optional via nested ``(?:...)?`` groups so a
-        line that ends exactly at a field boundary still matches (the
-        reference's ``s < end`` loop guard, line_parser.cpp:65) while any
-        unconsumed tail fails the anchored ``$`` (``:96``).
-
-        Soundness: possessive quantifiers mirror the reference's greedy
-        no-backtracking char-walker; whenever this regex matches, the walker
-        produces the same consumption and (after the DBL post-checks in
-        ``operators/parse.py``) the same values. When it does not match, the
-        caller MUST fall back to the oracle walker: the walker can succeed in
-        ways no regex can express (e.g. ``parse_int`` accepting ``-5`` by
-        value without consuming the sign, parsing_basics.cpp:8-12).
-        """
-        frags = []
-        for i, f in enumerate(self.fields):
-            g = f"g{i}"
-            if f.ftype == FieldType.INT:
-                frags.append(f"(?P<{g}>[0-9]++)")
-            elif f.ftype == FieldType.DATE:
-                # fixed shape; CALENDAR validity is checked post-match
-                # by the tier (invalid => the row is walker-resolved,
-                # and the walker rejects it)
-                frags.append(f"(?P<{g}>[0-9]{{4}}-[0-9]{{2}}-[0-9]{{2}})")
-            elif f.ftype == FieldType.DBL:
-                # Require a leading digit/dot (walker may succeed without
-                # consuming; those rows must take the fallback), forbid a
-                # well-formed exponent continuation (atof would consume it
-                # by value while the cursor would not).
-                frags.append(
-                    f"(?P<{g}>(?=[0-9.])[0-9]*+(?:\\.[0-9]*+)?+)(?![eE][-+]?[0-9])"
-                )
-            elif f.ftype == FieldType.CHR:
-                t = re.escape(f.target)
-                rep = f"{t}*+" if f.repeat else ""
-                frags.append(f"(?P<{g}>{t}){rep}")
-            elif f.ftype == FieldType.STR:
-                if f.stop == StrStop.NCHAR:
-                    frags.append(f"(?P<{g}>.{{{f.nchar}}})")
-                elif f.stop == StrStop.ANY_WS:
-                    frags.append(f"(?P<{g}>[^{re.escape(C_WHITESPACE)}]*+)")
-                else:  # DELIM; '\0' means read-to-EOL (no '\0' in split lines)
-                    if f.delim == "\0":
-                        frags.append(f"(?P<{g}>[^\\n]*+)")
-                    else:
-                        frags.append(f"(?P<{g}>[^{re.escape(f.delim)}\\n]*+)")
-            elif f.ftype == FieldType.WS:
-                frags.append(f"[{re.escape(WS_NO_NEWLINE)}]*+")
-        # Nest: every instruction is skippable iff the cursor is at EOL.
-        # `(?!$)` reproduces the walker's `s < end` pre-instruction guard
-        # (line_parser.cpp:65): at exact EOL the instruction is skipped and
-        # its field stays unset, rather than a zero-width fragment
-        # "participating" and capturing ''.
-        pat = ""
-        for frag in reversed(frags):
-            pat = f"(?:(?!$){frag}{pat})?"
-        # `wf0` is a match sentinel: it participates (capturing '') iff the
-        # anchored pattern matched, letting pandas str.extract distinguish
-        # "matched with empty/unset fields" from "no match".
-        return f"^(?P<wf0>){pat}$"
-
     def to_fast_regex(self) -> Optional[str]:
         """Flat RE2-safe regex (no lookaheads/possessive quantifiers) for the
         PyArrow ``extract_regex`` fast path, or None when the spec is not
@@ -212,7 +149,7 @@ class FormatSpec:
         after ANY_WS STR fields; an ANY_WS STR is emitted ``+`` when
         preceded by a ``+`` WS, a fixed CHR, or start-of-spec (in all these
         positions the walker value is provably non-empty mid-line; the rare
-        lines where it would be empty fall back to the exact nested path).
+        lines where it would be empty fall back to the walker).
 
         Pass B (soundness) — for every variable-length fragment F with
         consumable char-set cf, the following fragment G must satisfy one:
@@ -227,10 +164,10 @@ class FormatSpec:
         - G is a ``*`` WS with ws-chars disjoint from cf: transparent,
           recurse to the fragment after G.
 
-        DBL fields disable the fast path entirely (atof value/cursor
-        divergences need per-row inspection). Lines the flat pattern
-        rejects are NOT malformed — they go to the nested-optional Python
-        regex + walker fallback (trailing-field optionality lives there).
+        DBL fields disable the flat regex entirely (strtod reads what the
+        cursor does not); such specs run on the NumPy walker. Lines the
+        flat pattern rejects are NOT malformed — they go to the walker
+        (trailing-field optionality lives there).
         """
         if any(f.ftype == FieldType.DBL for f in self.fields):
             return None

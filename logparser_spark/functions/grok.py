@@ -23,7 +23,7 @@ driver's DuckDB oracle.
 Scale shape: the gate is one regex pass per line and each extracted
 field is one more (k+1 linear scans for k fields, all inside
 whole-stage codegen — no Python). For a pinned-format hot path the
-3-tier Arrow kernel (``operators/fastsplit.py``) is still the fast
+Arrow parse kernel (``operators/parse.py``) is still the fast
 surface; grok is the flexible one. At 10^12 lines the plan is scan →
 project, so it partitions trivially and pushes the line column alone
 through the scan.
@@ -205,7 +205,8 @@ def grok_oracle_exprs(spec: GrokSpec, line_sql: str,
     side PARSES rather than predicting by construction."""
     rx = spec.regex.replace("'", "''")
     m = f"regexp_matches({line_sql}, '{rx}')"
-    exprs = [f"{m} AS {matched_col}"]
+    # a NULL line is unmatched (FALSE), as grok_parse reports it
+    exprs = [f"coalesce({m}, FALSE) AS {matched_col}"]
     for f in spec.fields:
         e = (f"CASE WHEN {m} THEN "
              f"regexp_extract({line_sql}, '{rx}', {f.group}) END")

@@ -2,29 +2,31 @@
 
 The core custom operator (SURVEY.md §4 item 1). Catalyst cannot express the
 reference's format-spec semantics (INT zero-rule, trailing-field
-optionality, NCHAR), so parsing runs inside ONE Arrow-batched pandas UDF
-per line column, in three tiers:
+optionality, NCHAR, strtod reading past the DBL cursor), so parsing runs
+inside ONE scalar Arrow UDF (``arrow_udf``) per line column. Only the line
+column crosses into Python and only the parsed struct comes back. The
+kernel is chosen once, from the spec:
 
-1. **pyarrow fast path** — a flat RE2 pattern (``FormatSpec.to_fast_regex``,
-   emitted only when provably capture-equal to the walker) run through
-   ``pyarrow.compute.extract_regex``: pure C++, zero Python objects,
-   ~1M rows/s/core. Covers virtually all well-formed production lines.
-2. **nested-regex middle path** — the anchored possessive Python regex
-   (``FormatSpec.to_regex``) via ``pandas.Series.str.extract`` on only
-   the rows tier 1 rejected; handles trailing-field optionality and
-   zero-width whitespace the flat pattern cannot express
-   (``/root/reference/src/line_parsing/line_parser.cpp:58-98``).
-3. **oracle walker fallback** — per-row pure Python, only for rows tier 2
-   rejects or flags (the walker can succeed where no regex can:
-   ``parse_int`` accepts ``-5`` by value without consuming the sign,
-   ``parsing_basics.cpp:7-13``; ``atof`` value/cursor divergences). The
-   byte-exact oracle (``functions.oracle.parse_line``) decides those rows.
+1. **flat-regex tier** — when ``FormatSpec.to_fast_regex`` yields a flat
+   RE2 pattern (emitted only when provably capture-equal to the walker):
+   the capture-free split plan (``fastsplit``) for the shapes it
+   recognizes, else ``pyarrow.compute.extract_regex``. Pure C++, no Python
+   objects; decides virtually all well-formed production lines.
+2. **NumPy walker** (``walker_np.batch_walk_arrow``) — every row of a spec
+   without a flat regex (DBL fields, ambiguous shapes), and the rows tier 1
+   leaves undecided otherwise (malformed lines, trailing-optional endings,
+   zero-width whitespace, atol sign/whitespace quirks).
+3. **oracle bails** — the walker hands the few rows it cannot decide
+   vectorized (>18-digit INT runs, strtod reading outside the DBL cursor
+   span, non-ASCII text in codepoint mode) to the byte-exact
+   ``functions.oracle.parse_line``.
 
 Scale notes (100 TB): the UDF sees a single string column per batch; all
 other columns stay JVM-side. Everything upstream (split/posexplode/CRLF
 strip) and downstream (filters, joins, aggregates) is pure Catalyst, so
 predicate pushdown and whole-stage codegen are unaffected. The Python
-worker cost is one C-regex pass per batch; fallback rows are O(malformed).
+worker cost is one C-regex pass per batch; walker rows are O(malformed)
+for flat-regex specs.
 
 Unicode contract: the reference parses raw BYTES (``parsing_basics.cpp``
 walks ``char*``); the default mode here counts codepoints — the two are
@@ -32,7 +34,7 @@ provably identical for any spec where ``FormatSpec.byte_sensitive()`` is
 False (all stops/targets ASCII, no NCHAR — continuation bytes never
 collide with ASCII comparisons), which covers the crawl pipeline's
 formats. For byte-sensitive specs, ``byte_mode=True`` gives exact
-reference parity on multi-byte UTF-8: the RE2 fast tier decides only
+reference parity on multi-byte UTF-8: the RE2 tier decides only
 pure-ASCII rows (byte == codepoint there), the NumPy walker — which
 already advances over raw UTF-8 bytes — handles the rest vectorized,
 and only captures whose NCHAR boundary splits a codepoint fall to
@@ -42,16 +44,14 @@ split bytes a UTF-8 column cannot carry).
 
 from __future__ import annotations
 
-import re
 from typing import Iterable, Optional
 
-import pandas as pd
 import pyarrow as pa  # module-level: arrow_udf type-hint resolution needs it
 
 from ..functions.formats import FieldType, FormatSpec
-from ..functions.oracle import parse_line as oracle_parse_line
+from .walker_np import batch_walk_arrow
 
-__all__ = ["explode_lines", "make_arrow_parse_udf", "make_parse_udf", "parse_lines", "parse_lines_arrow", "parse_lines_hybrid", "parse_lines_multi", "parsed_to_json", "render_parsed"]
+__all__ = ["explode_lines", "parse_lines", "parse_lines_arrow", "parse_lines_multi", "parsed_to_json", "render_parsed"]
 
 
 def _fast_plan(spec: FormatSpec):
@@ -106,7 +106,6 @@ def _date_arrays_from_captures(child, row_valid):
     ``functions.dates``) is decided here — invalid rows become
     undecided and the walker (which rejects them) settles the line."""
     import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     from ..functions.dates import days_from_civil, is_valid_date
@@ -127,260 +126,6 @@ def _date_arrays_from_captures(child, row_valid):
     date_arr = pa.array(days, type=pa.date32(), mask=~ok)
     invalid = pa.array(present & ~ok)
     return date_arr, invalid
-
-
-def _dates_from_str_series(s: pd.Series):
-    """pandas-tier DATE conversion: object Series of shape-valid
-    'YYYY-MM-DD'/None → (object Series of datetime.date/None,
-    calendar-invalid ndarray). Per-row datetime.date is acceptable
-    here — the pandas tiers are the non-hot path; the Arrow kernel
-    uses the vectorized civil-date math."""
-    import datetime
-
-    import numpy as np
-
-    vals = []
-    invalid = np.zeros(len(s), dtype=bool)
-    for j, x in enumerate(s.tolist()):
-        if not isinstance(x, str):
-            vals.append(None)
-            continue
-        try:
-            vals.append(datetime.date(
-                int(x[0:4]), int(x[5:7]), int(x[8:10])
-            ))
-        except ValueError:
-            vals.append(None)
-            invalid[j] = True
-    return pd.Series(vals, index=s.index, dtype="object"), invalid
-
-
-def _batch_parse_fast(lines: pd.Series, spec: FormatSpec, fast_rx: str,
-                      unset_suffix: list):
-    """Tier-1: pyarrow extract_regex. Returns (result_df, well, decided)
-    where ``decided`` marks rows the fast path fully resolved."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    arr = pa.Array.from_pandas(lines)
-    st = pc.extract_regex(arr, pattern=fast_rx)
-    valid = pc.is_valid(st)
-    # >18-digit INT captures route to the exact tiers (int64 SATURATION
-    # contract, functions.oracle._atol) — a raw cast would raise.
-    for _, (i, f) in enumerate(spec.output_fields()):
-        if f.ftype == FieldType.INT:
-            long_run = pc.fill_null(
-                pc.greater(pc.utf8_length(st.field(f"g{i}")), 18), False
-            )
-            valid = pc.and_(valid, pc.invert(long_run))
-    valid_np = valid.to_numpy(zero_copy_only=False)
-
-    cols = spec.column_names()
-    data = {}
-    str_cols = {}
-    for k, (i, f) in enumerate(spec.output_fields()):
-        child = pc.if_else(valid, st.field(f"g{i}"), pa.scalar(None, pa.string()))
-        if f.ftype == FieldType.INT:
-            data[cols[k]] = child.cast(pa.int64()).to_pandas().astype("Int64")
-        elif f.ftype == FieldType.DATE:
-            dates, invalid = _dates_from_str_series(child.to_pandas())
-            data[cols[k]] = dates
-            # calendar-invalid rows are undecided (the exact tiers'
-            # walker rejects them => malformed); the merged result row
-            # is fully overwritten there
-            valid_np = valid_np & ~invalid
-        else:
-            s = child.to_pandas()
-            data[cols[k]] = s
-            str_cols[k] = s
-    result = pd.DataFrame(data, index=lines.index)
-
-    # Trailing zero-width captures: '' here means the walker's cursor was
-    # already at EOL, i.e. the field is UNSET (None), not empty
-    # (line_parser.cpp:65 `s < end` guard). Walk the suffix backwards.
-    if unset_suffix:
-        tail_zero = valid_np.copy()
-        for k in unset_suffix:  # already last-to-first
-            s = str_cols[k]
-            is_empty = (s.str.len() == 0).fillna(False).to_numpy()
-            unset = tail_zero & is_empty
-            if unset.any():
-                s2 = s.copy()
-                s2[unset] = None
-                result[cols[k]] = s2
-            tail_zero = tail_zero & is_empty
-    return result, valid_np
-
-
-def _batch_parse(lines: pd.Series, spec: FormatSpec,
-                 byte_mode: bool = False) -> pd.DataFrame:
-    """Parse one Arrow batch: tier-1 pyarrow flat regex, then the nested
-    regex + walker on the remainder."""
-    s = lines.astype("object")
-    fast_rx, unset_suffix = _fast_plan(spec)
-    if fast_rx is None:
-        return _batch_parse_nested(s, spec, byte_mode=byte_mode)
-
-    result, decided = _batch_parse_fast(s, spec, fast_rx, unset_suffix)
-    if byte_mode and spec.byte_sensitive():
-        # fast tier counts codepoints; only pure-ASCII rows are decided
-        nonascii = s.map(
-            lambda x: isinstance(x, str) and not x.isascii()
-        ).to_numpy(dtype=bool)
-        decided = decided & ~nonascii
-    if decided.all():
-        result["well_formed"] = True
-        return result
-    rest_idx = s.index[~decided]
-    rest = _batch_parse_nested(s.loc[rest_idx], spec, byte_mode=byte_mode)
-    result["well_formed"] = pd.Series(decided, index=s.index, dtype=bool)
-    if len(rest_idx):
-        cols = spec.column_names()
-        for c in cols:
-            result.loc[rest_idx, c] = rest[c]
-        result.loc[rest_idx, "well_formed"] = rest["well_formed"].astype(bool)
-        # .loc assignment degrades extension dtypes; restore them
-        for k, (i, f) in enumerate(spec.output_fields()):
-            if f.ftype == FieldType.INT:
-                result[cols[k]] = result[cols[k]].astype("Int64")
-            elif f.ftype == FieldType.DBL:
-                result[cols[k]] = result[cols[k]].astype("float64")
-        result["well_formed"] = result["well_formed"].astype(bool)
-    return result
-
-
-def _batch_parse_nested(lines: pd.Series, spec: FormatSpec,
-                        byte_mode: bool = False) -> pd.DataFrame:
-    """Tiers 2+3: anchored possessive Python regex via str.extract, walker
-    on the rows it rejects/flags. Exact for every spec.
-
-    In byte_mode on a byte-sensitive spec, non-ASCII rows go straight to
-    the byte oracle (the Python regex counts codepoints)."""
-    pattern = re.compile(spec.to_regex())
-    cols = spec.column_names()
-    out_fields = spec.output_fields()
-
-    s = lines.astype("object").fillna("")
-    # Sentinel group `wf0` participates iff the anchored pattern matched
-    # (it captures '', which is notna; unmatched rows are all-NaN).
-    extracted = s.str.extract(pattern)
-    matched = extracted["wf0"].notna()
-
-    # Rows the fast path may not decide correctly -> oracle walker:
-    #  - regex failed (walker can still succeed: sign/ws-led numbers);
-    #  - any DBL capture in the atof-divergence set (see to_regex docstring).
-    fallback = ~matched
-    if byte_mode and spec.byte_sensitive():
-        fallback |= s.map(
-            lambda x: isinstance(x, str) and not x.isascii()
-        ).astype(bool)
-    date_cols: dict[int, pd.Series] = {}
-    for k, (i, f) in enumerate(out_fields):
-        if f.ftype == FieldType.INT:
-            # int64 saturation contract: >18-digit captures go to the
-            # oracle walker (pd.to_numeric would lossily float them)
-            g = extracted[f"g{i}"]
-            fallback |= (g.str.len() > 18).fillna(False)
-            continue
-        if f.ftype == FieldType.DATE:
-            # calendar-invalid captures: walker decides (and rejects)
-            g = extracted[f"g{i}"]
-            dates, invalid = _dates_from_str_series(g)
-            date_cols[k] = dates
-            fallback |= pd.Series(invalid, index=g.index)
-            continue
-        if f.ftype != FieldType.DBL:
-            continue
-        g = extracted[f"g{i}"]
-        present = g.notna()
-        num = pd.to_numeric(g, errors="coerce")
-        susp = present & (
-            g.isin(["", ".", "0"])
-            | (num.eq(0.0) & ~g.str.startswith("0").fillna(False))
-            | num.isna()
-        )
-        fallback |= susp
-
-    null_line = lines.isna()
-    fallback &= ~null_line
-
-    data = {}
-    for k, (i, f) in enumerate(out_fields):
-        g = extracted[f"g{i}"]
-        if f.ftype == FieldType.INT:
-            # >18-digit captures are fallback rows (masked here so the
-            # base Int64 conversion can't overflow); the oracle walker
-            # overwrites them with the saturated value below
-            g = g.where(~(g.str.len() > 18).fillna(False))
-            data[cols[k]] = pd.to_numeric(g, errors="coerce").astype("Int64")
-        elif f.ftype == FieldType.DBL:
-            data[cols[k]] = pd.to_numeric(g, errors="coerce").astype("float64")
-        elif f.ftype == FieldType.DATE:
-            data[cols[k]] = date_cols[k]
-        else:  # CHR / STR as strings; CHR capture is the target char
-            data[cols[k]] = g.where(g.notna(), None)
-    result = pd.DataFrame(data, index=s.index)
-    well = matched & ~null_line
-
-    if fallback.any():
-        from ..functions.oracle import parse_line_bytes
-
-        oracle_fn = (
-            parse_line_bytes if byte_mode and spec.byte_sensitive()
-            else oracle_parse_line
-        )
-        fb_idx = s.index[fallback]
-        fb_vals: dict[str, list] = {c: [] for c in cols}
-        fb_wf = []
-        for raw in s.loc[fb_idx]:
-            values, wf = oracle_fn(raw, spec)
-            fb_wf.append(wf)
-            for k, v in enumerate(values):
-                fb_vals[cols[k]].append(v)
-        for k, (i, f) in enumerate(out_fields):
-            col = pd.Series(fb_vals[cols[k]], index=fb_idx, dtype="object")
-            if f.ftype == FieldType.INT:
-                col = col.astype("Int64")
-            elif f.ftype == FieldType.DBL:
-                col = col.astype("float64")
-            result.loc[fb_idx, cols[k]] = col
-        well = well.copy()
-        well.loc[fb_idx] = fb_wf
-
-    # dtypes can degrade through .loc assignment; restore the Arrow-friendly ones
-    for k, (i, f) in enumerate(out_fields):
-        if f.ftype == FieldType.INT:
-            result[cols[k]] = result[cols[k]].astype("Int64")
-        elif f.ftype == FieldType.DBL:
-            result[cols[k]] = result[cols[k]].astype("float64")
-    result["well_formed"] = well.astype(bool)
-    return result
-
-
-def make_parse_udf(spec: FormatSpec, byte_mode: bool = False):
-    """Build the pandas UDF ``string -> struct<fields..., well_formed>``.
-
-    The compiled spec travels to executors via closure capture (the Spark
-    analog of the reference's compile-once parse program,
-    ``line_parser.cpp:5-45``)."""
-    from pyspark.sql.functions import pandas_udf
-
-    schema = spec.spark_schema()
-
-    @pandas_udf(schema)
-    def parse(lines: pd.Series) -> pd.DataFrame:
-        return _batch_parse(lines, spec, byte_mode=byte_mode)
-
-    # The parse IS deterministic; the marker is an optimizer fence.
-    # Without it, predicate pushdown substitutes the UDF expression into
-    # filters referencing the parsed struct, and the planner then emits
-    # TWO ArrowEvalPython nodes — the whole parse runs twice on
-    # filter+project queries (measured). The cost: upstream predicates
-    # no longer push below the parse projection, which never matters
-    # here (the pipeline filters on parse OUTPUT; source-level pruning
-    # happens before explode_lines).
-    return parse.asNondeterministic()
 
 
 def explode_lines(
@@ -489,54 +234,9 @@ def with_global_line_id(
     ).drop("__off")
 
 
-def parse_lines(
-    df,
-    spec: FormatSpec,
-    line_col: str = "raw_line",
-    out_col: str = "parsed",
-    with_matched_format: bool = True,
-    byte_mode: bool = False,
-):
-    """Attach the parsed struct (and the ``matched_format`` tag used by the
-    per-format aggregate counts).
-
-    Picks the Arrow-native mapInArrow path automatically when the spec has
-    a provably-sound flat regex (~0.5-0.8M rows/s/core); falls back to the
-    pandas-UDF nested-regex path otherwise (DBL fields, ambiguous specs).
-
-    ``byte_mode=True`` selects the reference's exact BYTE semantics
-    (NCHAR counts bytes; see the module docstring's Unicode contract) —
-    a no-op for specs where ``byte_sensitive()`` is False.
-    """
-    from pyspark.sql import functions as F
-
-    if spec.to_fast_regex() is not None:
-        out = parse_lines_arrow(
-            df, spec, line_col=line_col, out_col=out_col,
-            byte_mode=byte_mode,
-        )
-    else:
-        udf = make_parse_udf(spec, byte_mode=byte_mode)
-        out = df.withColumn(out_col, udf(F.col(line_col)))
-    if with_matched_format:
-        out = out.withColumn(
-            "matched_format",
-            F.when(F.col(f"{out_col}.well_formed"), F.lit(spec.name)),
-        )
-    return out
-
-
-# ── Arrow-native hot path (mapInArrow) ────────────────────────────────
-
-
 def _split_plan_for(spec: FormatSpec):
     """Compile (once per spec instance) the capture-free split plan, or
-    None when the spec is outside fastsplit's recognized family or
-    SPARK_GRAFT_SPLIT_PLAN=0 disables it (A/B lever)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SPLIT_PLAN", "1") == "0":
-        return None
+    None when the spec is outside fastsplit's recognized family."""
     cached = spec.__dict__.get("_split_plan", "unset")
     if cached == "unset":
         from .fastsplit import compile_any_split_plan
@@ -551,8 +251,7 @@ def _batch_parse_arrow(arr, spec: FormatSpec, rx: str, unset_suffix: list,
     """Tier-1 + walker, entirely in Arrow: no Python string objects for
     decided rows. Returns (list of output pa.Arrays, well_formed array).
     Undecided rows (flat-regex misses: malformed, trailing-optional,
-    zero-width-WS, walker-only quirks) are resolved by the exact oracle
-    walker per row.
+    zero-width-WS, walker-only quirks) go to the NumPy walker.
 
     Tier-1 has two kernels over the SAME flat regex: the capture-free
     DFA-gate + split decomposition (``fastsplit``, ~1.7x the extract
@@ -566,7 +265,6 @@ def _batch_parse_arrow(arr, spec: FormatSpec, rx: str, unset_suffix: list,
     are not byte-sensitive need no gate — both semantics agree. (The
     split-plan family never contains NCHAR, so it is never
     byte-sensitive.)"""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     out_fields = spec.output_fields()
@@ -621,11 +319,9 @@ def _batch_parse_arrow(arr, spec: FormatSpec, rx: str, unset_suffix: list,
     walker_outs = None
     walker_wf = None
     if n_und:
-        from .walker_np import batch_walk_arrow
-
         sub = arr.filter(undecided)
         # vectorized NumPy walker (itself bails per-row to the python
-        # oracle only for atol-overflow/unicode/DBL territory)
+        # oracle only for atol-overflow/strtod/unicode territory)
         walker_outs, walker_wf = batch_walk_arrow(
             sub, spec, byte_mode=byte_mode
         )
@@ -648,8 +344,6 @@ def _batch_parse_arrow(arr, spec: FormatSpec, rx: str, unset_suffix: list,
             )
             if f.ftype == FieldType.INT:
                 base = base.cast(pa.int64())
-            elif f.ftype == FieldType.DBL:
-                base = base.cast(pa.float64())
         if n_und:
             base = pc.replace_with_mask(base, undecided, walker_outs[k])
         outs.append(base)
@@ -659,40 +353,43 @@ def _batch_parse_arrow(arr, spec: FormatSpec, rx: str, unset_suffix: list,
     return outs, wf_arr
 
 
-def make_arrow_parse_udf(spec: FormatSpec, byte_mode: bool = False):
-    """Scalar Arrow UDF ``string -> struct`` over the tier-1 kernel, or
-    None when the spec has no flat fast regex or the runtime predates
-    ``pyspark.sql.functions.arrow_udf`` (Spark 4.0).
-
-    NOT the default path: it is ~10% faster than mapInArrow in a single
-    JVM (only the line column crosses into Python), but measured 5-7x
-    slower when several local JVMs run concurrently on one host
-    (ArrowEvalPython's JVM-side buffering interacts badly with
-    contention), while the mapInArrow path stays healthy. parse_lines
-    therefore prefers mapInArrow; this UDF remains available for
-    expression-style composition."""
-    from pyspark.sql import functions as F
-
-    if not hasattr(F, "arrow_udf"):
-        return None
+def _kernel(spec: FormatSpec, byte_mode: bool = False):
+    """The batch kernel for ``spec``: ``pa.Array -> (outs, well_formed)``.
+    The flat-regex tier (walker on its undecided rows) when the spec has
+    a flat regex, else the NumPy walker on every row."""
     rx, unset_suffix = _fast_plan(spec)
     if rx is None:
-        return None
+        return lambda arr: batch_walk_arrow(arr, spec, byte_mode=byte_mode)
+    return lambda arr: _batch_parse_arrow(
+        arr, spec, rx, unset_suffix, byte_mode=byte_mode
+    )
+
+
+def _parse_udf(spec: FormatSpec, byte_mode: bool = False):
+    """Scalar Arrow UDF ``string -> struct<fields..., well_formed>`` over
+    the spec's kernel. The compiled spec travels to executors via closure
+    capture (the Spark analog of the reference's compile-once parse
+    program, ``line_parser.cpp:5-45``)."""
+    from pyspark.sql import functions as F
+
+    kernel = _kernel(spec, byte_mode=byte_mode)
     names = spec.column_names() + ["well_formed"]
 
     @F.arrow_udf(spec.spark_schema())
     def parse(lines: pa.Array) -> pa.Array:
         if isinstance(lines, pa.ChunkedArray):
             lines = lines.combine_chunks()
-        outs, wf = _batch_parse_arrow(
-            lines, spec, rx, unset_suffix, byte_mode=byte_mode
-        )
+        outs, wf = kernel(lines)
         return pa.StructArray.from_arrays(outs + [wf], names=names)
 
-    # deterministic in fact; marked non-deterministic as an optimizer
-    # fence so predicate pushdown cannot clone the UDF into filters —
-    # without this, filter+project queries plan TWO ArrowEvalPython
-    # nodes and parse every line twice (see make_parse_udf note).
+    # The parse IS deterministic; the marker is an optimizer fence.
+    # Without it, predicate pushdown substitutes the UDF expression into
+    # filters referencing the parsed struct, and the planner then emits
+    # TWO ArrowEvalPython nodes — the whole parse runs twice on
+    # filter+project queries (measured). The cost: upstream predicates
+    # no longer push below the parse projection, which never matters
+    # here (the pipeline filters on parse OUTPUT; source-level pruning
+    # happens before explode_lines).
     return parse.asNondeterministic()
 
 
@@ -702,79 +399,46 @@ def parse_lines_arrow(
     line_col: str = "raw_line",
     out_col: str = "parsed",
     drop_cols: Optional[Iterable[str]] = None,
-    strategy: Optional[str] = None,
     byte_mode: bool = False,
 ):
-    """Arrow-native parse stage: zero pandas/object materialization on
-    the fast path. Two physical strategies over the SAME kernel:
-
-    - ``"arrowudf"`` (default when the runtime has
-      ``pyspark.sql.functions.arrow_udf``, Spark 4.0+): scalar Arrow UDF
-      — ONLY the line column crosses into Python and only the parsed
-      struct returns; every passthrough column (ids, page dims) stays
-      JVM-side. Measured +37% end-to-end over mapInArrow at local[32]
-      (2.87M vs 2.10M rows/s) because the passthrough transfer is the
-      marginal cost once raw_line is dropped.
-    - ``"mapinarrow"``: whole-batch passthrough. Kept selectable
-      (``strategy=`` or env ``SPARK_GRAFT_PARSE_STRATEGY``) because
-      round-1 measured ArrowEvalPython buffering degrading under
-      heavily-contended co-resident JVMs; re-measured in a clean window
-      the two are within noise there (see BENCH/BASELINE.md).
+    """Attach the parsed struct ``out_col`` (one scalar Arrow UDF over
+    ``line_col``; every passthrough column stays JVM-side).
 
     ``drop_cols`` (e.g. ``["raw_line"]`` when nothing downstream reads
-    the raw text) trims the return stream — at 10^12 rows the raw-line
-    bytes dominate transfer. Requires a fast-safe spec
-    (``to_fast_regex() is not None``)."""
-    import os
+    the raw text) trims the output — at 10^12 rows the raw-line bytes
+    dominate transfer. ``byte_mode=True`` selects the reference's exact
+    BYTE semantics (NCHAR counts bytes; see the module docstring's
+    Unicode contract) — a no-op for specs where ``byte_sensitive()`` is
+    False."""
+    from pyspark.sql import functions as F
 
-    import pyarrow as pa
-    from pyspark.sql import types as T
+    out = df.withColumn(out_col, _parse_udf(spec, byte_mode)(F.col(line_col)))
+    drop = [c for c in (drop_cols or ()) if c in df.columns]
+    return out.drop(*drop) if drop else out
 
-    rx, unset_suffix = _fast_plan(spec)
-    if rx is None:
-        raise ValueError(
-            f"spec {spec.name!r} has no flat fast regex; use parse_lines"
-        )
 
-    if strategy is None:
-        strategy = os.environ.get("SPARK_GRAFT_PARSE_STRATEGY", "arrowudf")
-    if strategy == "arrowudf":
-        udf = make_arrow_parse_udf(spec, byte_mode=byte_mode)
-        if udf is not None:
-            from pyspark.sql import functions as F
+def parse_lines(
+    df,
+    spec: FormatSpec,
+    line_col: str = "raw_line",
+    out_col: str = "parsed",
+    with_matched_format: bool = True,
+    byte_mode: bool = False,
+):
+    """:func:`parse_lines_arrow` plus the ``matched_format`` tag used by
+    the per-format aggregate counts (the spec's name on well-formed
+    rows, null elsewhere)."""
+    from pyspark.sql import functions as F
 
-            out = df.withColumn(out_col, udf(F.col(line_col)))
-            drop = [c for c in (drop_cols or ()) if c in df.columns]
-            return out.drop(*drop) if drop else out
-        # no arrow_udf on this runtime -> fall through to mapInArrow
-
-    drop = set(drop_cols or ())
-    kept = [f for f in df.schema.fields if f.name not in drop]
-    out_schema = T.StructType(
-        kept + [T.StructField(out_col, spec.spark_schema(), False)]
+    out = parse_lines_arrow(
+        df, spec, line_col=line_col, out_col=out_col, byte_mode=byte_mode
     )
-    names = spec.column_names() + ["well_formed"]
-
-    def fn(batches):
-        for batch in batches:
-            arr = batch.column(line_col)
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
-            if not pa.types.is_string(arr.type):
-                arr = arr.cast(pa.string())
-            outs, wf = _batch_parse_arrow(
-                arr, spec, rx, unset_suffix, byte_mode=byte_mode
-            )
-            struct = pa.StructArray.from_arrays(outs + [wf], names=names)
-            if drop:
-                keep_idx = [
-                    i for i, name in enumerate(batch.schema.names)
-                    if name not in drop
-                ]
-                batch = batch.select(keep_idx)
-            yield batch.append_column(out_col, struct)
-
-    return df.mapInArrow(fn, out_schema)
+    if with_matched_format:
+        out = out.withColumn(
+            "matched_format",
+            F.when(F.col(f"{out_col}.well_formed"), F.lit(spec.name)),
+        )
+    return out
 
 
 def render_parsed(df, spec: FormatSpec, parsed_col: str = "parsed",
@@ -875,15 +539,11 @@ def parse_lines_multi(
     boundary once regardless of len(specs); spec k's kernel runs only on
     the rows specs 0..k-1 rejected, so the common case (spec 0 matches
     ~everything) costs the same as single-spec parse plus a cheap
-    scatter. Specs with a provably-sound flat regex use the RE2 kernel;
-    others run the vectorized NumPy walker directly.
+    scatter. Each spec runs the same kernel as :func:`parse_lines_arrow`.
     """
     import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import types as T
-
-    from .walker_np import batch_walk_arrow
 
     specs = list(specs)
     if not specs:
@@ -891,7 +551,7 @@ def parse_lines_multi(
     names = [s.name for s in specs]
     if len(set(names)) != len(names):
         raise ValueError(f"spec names must be unique, got {names}")
-    plans = [_fast_plan(s) for s in specs]
+    kernels = [_kernel(s, byte_mode=byte_mode) for s in specs]
 
     drop = set(drop_cols or ())
     kept = [f for f in df.schema.fields if f.name not in drop]
@@ -915,21 +575,12 @@ def parse_lines_multi(
             remaining = np.ones(n, dtype=bool)
             matched = np.full(n, None, dtype=object)
             structs = []
-            for spec, (rx, unset_suffix) in zip(specs, plans):
+            for spec, kernel in zip(specs, kernels):
                 field_names = spec.column_names() + ["well_formed"]
                 idx = np.flatnonzero(remaining)
                 full_wf = np.zeros(n, dtype=bool)
                 if len(idx):
-                    sub = arr.take(pa.array(idx))
-                    if rx is not None:
-                        outs, wf = _batch_parse_arrow(
-                            sub, spec, rx, unset_suffix,
-                            byte_mode=byte_mode,
-                        )
-                    else:
-                        outs, wf = batch_walk_arrow(
-                            sub, spec, byte_mode=byte_mode
-                        )
+                    outs, wf = kernel(arr.take(pa.array(idx)))
                     wf_np = wf.to_numpy(zero_copy_only=False)
                     win = idx[wf_np]
                     full_wf[win] = True
@@ -970,7 +621,6 @@ def parse_lines_multi(
 
 def _arrow_types(spec: FormatSpec):
     """Arrow type per output field of a spec (mirrors spark_schema)."""
-    import pyarrow as pa
 
     m = {
         FieldType.INT: pa.int64(),
@@ -980,140 +630,3 @@ def _arrow_types(spec: FormatSpec):
         FieldType.DATE: pa.date32(),
     }
     return [m[f.ftype] for _, f in spec.output_fields()]
-
-
-def parse_lines_hybrid(
-    df,
-    spec: FormatSpec,
-    line_col: str = "raw_line",
-    out_col: str = "parsed",
-    drop_cols: Optional[Iterable[str]] = None,
-):
-    """Alternative strategy: JVM-codegen fast path + Python residual, in
-    ONE scan. NOT the default — measured slower than the Arrow kernel on
-    this hardware; see the trade-off note below.
-
-    The flat regex is Java-compatible (greedy, backtracking leftmost-
-    greedy — the same preference order the soundness proof covers), so
-    matched rows are extracted entirely JVM-side with whole-stage codegen
-    in TWO regex executions total: one ``rlike`` gate and one
-    ``regexp_replace`` that packs every capture group into a
-    separator-joined string (per-group ``regexp_extract`` would re-run
-    the full match k times). Rows the flat pattern rejects still need
-    walker semantics: the mapInArrow kernel runs over a column that is
-    NULL for matched rows — null strings cross the Arrow boundary for
-    ~free — so Python cost is proportional to the residual only.
-
-    Trade-off (measured, local[32], identical checksums): mapInArrow
-    2.17M rows/s vs hybrid 1.69M — java.util.regex backtracking runs
-    ~0.5M matches/s/core on this pattern while RE2 inside pyarrow does
-    ~0.9-1M, so eliminating the Arrow transfer does not pay for the
-    slower JVM engine here. The hybrid wins where Python workers are
-    scarce or rows are fat (transfer-bound) — hence kept as an opt-in
-    strategy with full parity coverage.
-    """
-    from pyspark.sql import functions as F
-
-    rx, unset_suffix = _fast_plan(spec)
-    if rx is None:
-        return parse_lines(df, spec, line_col=line_col, out_col=out_col)
-    jrx = rx.replace("(?P<", "(?<")
-
-    out_fields = spec.output_fields()
-    cols = spec.column_names()
-    # single-match multi-group extraction: ONE regexp_replace with
-    # backreferences packs every group into a \x01-separated string
-    # (k regexp_extract calls would run k full regex matches per row).
-    # Rows containing the separator byte are routed to the walker.
-    sep = "\u0001"
-    repl = sep.join(f"${k + 1}" for k in range(len(out_fields)))
-    matched = (
-        F.col(line_col).isNotNull()
-        & ~F.col(line_col).contains(sep)
-        & F.col(line_col).rlike(jrx)
-    )
-    if any(f.ftype == FieldType.INT for _, f in out_fields):
-        # int64 saturation contract: a 19+-digit run anywhere routes the
-        # row to the walker residual — the JVM cast("long") would
-        # silently NULL an overflowing capture with well_formed=true.
-        matched = matched & ~F.col(line_col).rlike("[0-9]{19}")
-    if any(f.ftype == FieldType.DATE for _, f in out_fields):
-        # DATE calendar contract: any shape-valid but calendar-invalid
-        # date (incl. year 0000, which Java's proleptic ISO chronology
-        # would accept but datetime.date rejects) routes the row to the
-        # walker residual, which declares it malformed. Same validity
-        # rules as functions.dates.is_valid_date, as Catalyst exprs.
-        def _date_invalid(s):
-            y = F.substring(s, 1, 4).cast("int")
-            m = F.substring(s, 6, 2).cast("int")
-            d = F.substring(s, 9, 2).cast("int")
-            leap = (y % 4 == 0) & ((y % 100 != 0) | (y % 400 == 0))
-            base = F.element_at(
-                F.array(*[F.lit(x) for x in
-                          (31, 28, 31, 30, 31, 30,
-                           31, 31, 30, 31, 30, 31)]), m
-            )
-            dim = base + F.when((m == 2) & leap, 1).otherwise(0)
-            return F.when(
-                (y < 1) | (m < 1) | (m > 12), F.lit(True)
-            ).otherwise((d < 1) | (d > dim))
-
-        matched = matched & ~F.exists(
-            F.regexp_extract_all(
-                F.col(line_col),
-                F.lit(r"([0-9]{4}-[0-9]{2}-[0-9]{2})"), F.lit(1),
-            ),
-            _date_invalid,
-        )
-    residual_col = "__residual"
-    packed_col = "__packed"
-    with_res = df.withColumn(
-        residual_col,
-        F.when(matched, F.lit(None)).otherwise(F.col(line_col)),
-    ).withColumn(
-        packed_col,
-        F.when(
-            matched,
-            F.split(F.regexp_replace(F.col(line_col), jrx, repl), sep),
-        ),
-    )
-    # the packed array must survive the kernel; the raw line need not
-    kernel = parse_lines_arrow(
-        with_res, spec, line_col=residual_col, out_col="__py_parsed",
-        drop_cols=[residual_col] + list(drop_cols or []),
-    )
-
-    raw_g = {
-        k: F.element_at(F.col(packed_col), k + 1)
-        for k in range(len(out_fields))
-    }
-    # trailing zero-width captures: '' at EOL means UNSET (None) — the
-    # same tail-zero chain the Arrow kernel applies, as Catalyst exprs
-    unset: dict[int, object] = {}
-    tail = F.lit(True)
-    for k in unset_suffix:  # last-to-first
-        tail = tail & (F.length(raw_g[k]) == 0)
-        unset[k] = tail
-    jvm_fields = []
-    for k, (i, f) in enumerate(out_fields):
-        g = raw_g[k]
-        if k in unset:
-            g = F.when(unset[k], F.lit(None)).otherwise(g)
-        if f.ftype == FieldType.INT:
-            g = g.cast("long")
-        elif f.ftype == FieldType.DBL:
-            g = g.cast("double")
-        elif f.ftype == FieldType.DATE:
-            # calendar-invalid rows were routed to the residual above,
-            # so this conversion never nulls a matched row
-            g = F.to_date(g, "yyyy-MM-dd")
-        jvm_fields.append(g.alias(cols[k]))
-    jvm_struct = F.struct(*jvm_fields, F.lit(True).alias("well_formed"))
-
-    combined = kernel.withColumn(
-        out_col,
-        F.when(F.col(packed_col).isNotNull(), jvm_struct).otherwise(
-            F.col("__py_parsed")
-        ),
-    ).drop("__py_parsed", packed_col)
-    return combined

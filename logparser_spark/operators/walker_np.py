@@ -1,10 +1,10 @@
-"""Vectorized (NumPy/Arrow) instruction walker for flat-regex-rejected rows.
+"""Vectorized (NumPy/Arrow) instruction walker.
 
-The tier-1 flat regex decides well-formed production lines at RE2 speed;
-rows it rejects (malformed lines, trailing-optional endings, zero-width
-whitespace, walker-only atol quirks) previously walked one-by-one through
-the pure-Python oracle (~80k rows/s/core). This module walks a whole
-batch at once:
+The parse kernel for every row of a spec without a flat regex (DBL
+fields, ambiguous shapes), and for the rows a flat regex rejects
+(malformed lines, trailing-optional endings, zero-width whitespace,
+walker-only atol quirks). It walks a whole batch at once, not row by
+row like the pure-Python oracle (~80k rows/s/core):
 
 - all lines are packed into one byte buffer with per-row [start, end);
 - every instruction advances a per-row cursor array via
@@ -16,9 +16,14 @@ batch at once:
 - STR captures are materialized as Arrow StringArrays straight from
   (start, stop) offset arrays with one ragged gather — no Python string
   objects;
-- remaining bail-outs to the byte-exact Python oracle: >18-digit runs
-  (atol overflow territory), non-Latin-1 text, DBL fields (those specs
-  never take this path — no flat regex exists for them).
+- DBL takes the oracle's cursor span (a digit run with at most one
+  ``.``) and converts every gathered span with ONE Arrow ``float64``
+  cast, which rounds exactly like ``strtod``. A row goes to the oracle
+  only where ``strtod`` could read outside that span: a cursor byte
+  that starts a number without being ``[0-9.]`` (whitespace, sign,
+  ``inf``/``nan``), or an ``[eExXpP]`` right after the span;
+- remaining bail-outs to the byte-exact Python oracle: >18-digit INT
+  runs (atol overflow territory), non-ASCII text in codepoint mode.
 
 Differentially fuzz-tested against the oracle in tests/test_walker_np.py.
 """
@@ -27,6 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..functions.formats import (
     C_WHITESPACE,
@@ -42,7 +48,19 @@ _WS_SET = np.frombuffer(WS_NO_NEWLINE.encode("latin-1"), dtype=np.uint8)
 _CWS_SET = np.frombuffer(C_WHITESPACE.encode("latin-1"), dtype=np.uint8)
 _DIGITS = np.frombuffer(b"0123456789", dtype=np.uint8)
 _MAX_INT_DIGITS = 18
-_PLUS, _MINUS, _ZERO = ord("+"), ord("-"), ord("0")
+_PLUS, _MINUS, _ZERO, _DOT = ord("+"), ord("-"), ord("0"), ord(".")
+
+
+def _lut(chars: bytes) -> np.ndarray:
+    lut = np.zeros(256, dtype=bool)
+    lut[np.frombuffer(chars, dtype=np.uint8)] = True
+    return lut
+
+
+# DBL: cursor bytes where strtod starts a number the cursor span does not
+# cover, and bytes after the span that strtod may read on (exponent, hex)
+_STRTOD_LEAD = _lut(C_WHITESPACE.encode("latin-1") + b"+-iInN")
+_STRTOD_TAIL = _lut(b"eExXpP")
 
 
 def _class_stops(buf: np.ndarray, member: np.ndarray) -> np.ndarray:
@@ -147,18 +165,13 @@ def batch_walk_arrow(lines: pa.Array, spec: FormatSpec,
         ends[null_row] = 0
 
     bail = np.zeros(n_rows, dtype=bool)
-    has_dbl = any(f.ftype == FieldType.DBL for f in spec.fields)
-    if has_dbl:
-        bail = ~null_row
-    elif not byte_mode:
+    if not byte_mode:
         # codepoint contract: the walker counts BYTES, so multi-byte
         # rows go to the codepoint oracle; in byte_mode they stay here
         hi = np.flatnonzero(buf >= 0x80)
         if len(hi):
             cnt = np.searchsorted(hi, ends) - np.searchsorted(hi, starts)
             bail = (cnt > 0) & ~null_row
-
-    py = None  # materialized lazily, only for bail rows
 
     cur = starts.copy()
     dead = bail | null_row
@@ -171,8 +184,8 @@ def batch_walk_arrow(lines: pa.Array, spec: FormatSpec,
             stop_cache[key] = _class_stops(buf, member)
         return stop_cache[key]
 
-    int_vals: dict[int, np.ndarray] = {}
-    int_valid: dict[int, np.ndarray] = {}
+    num_vals: dict[int, np.ndarray] = {}  # int64 (INT) / float64 (DBL)
+    num_valid: dict[int, np.ndarray] = {}
     str_start: dict[int, np.ndarray] = {}
     str_stop: dict[int, np.ndarray] = {}
     str_valid: dict[int, np.ndarray] = {}
@@ -222,14 +235,50 @@ def batch_walk_arrow(lines: pa.Array, spec: FormatSpec,
             failed[okr[fail_zero]] = True
             keep = okr[~fail_zero]
             k = out_idx[i]
-            if k not in int_vals:
-                int_vals[k] = np.zeros(n_rows, dtype=np.int64)
-                int_valid[k] = np.zeros(n_rows, dtype=bool)
-            int_vals[k][keep] = v[~fail_zero]
-            int_valid[k][keep] = True
+            if k not in num_vals:
+                num_vals[k] = np.zeros(n_rows, dtype=np.int64)
+                num_valid[k] = np.zeros(n_rows, dtype=bool)
+            num_vals[k][keep] = v[~fail_zero]
+            num_valid[k][keep] = True
             # cursor advances only over digits AT the original position
             adv = _run_end(stops_for("digit", _DIGITS), c[okm], e[okm])
             cur[keep] = adv[~fail_zero]
+        elif f.ftype == FieldType.DBL:
+            # cursor span: digits, at most one '.', digits (oracle rule)
+            digit_stops = stops_for("digit", _DIGITS)
+            d1 = _run_end(digit_stops, c, e)
+            dot = (d1 < e) & (buf[np.minimum(d1, safe_hi)] == _DOT)
+            span_end = np.where(
+                dot, _run_end(digit_stops, d1 + 1, e), d1
+            )
+            at_cur = buf[np.minimum(c, safe_hi)]
+            after = np.where(
+                span_end < e, buf[np.minimum(span_end, safe_hi)], 0
+            )
+            odd = _STRTOD_LEAD[at_cur] | _STRTOD_TAIL[after]
+            bail[rows[odd]] = True
+            failed[rows[odd]] = True
+            # no digit in the span: strtod reads nothing, value 0.0, and
+            # the cursor byte is not '0', so the zero rule fails the row
+            has_digit = (d1 > c) | (span_end > d1 + 1)
+            ok = ~odd & has_digit
+            failed[rows[~odd & ~has_digit]] = True
+            okr = rows[ok]
+            v = pc.cast(
+                _gather_strings(buf, c[ok], span_end[ok],
+                                np.ones(len(okr), dtype=bool)),
+                pa.float64(),
+            ).to_numpy(zero_copy_only=False)
+            fail_zero = (v == 0.0) & (at_cur[ok] != _ZERO)
+            failed[okr[fail_zero]] = True
+            keep = okr[~fail_zero]
+            k = out_idx[i]
+            if k not in num_vals:
+                num_vals[k] = np.zeros(n_rows, dtype=np.float64)
+                num_valid[k] = np.zeros(n_rows, dtype=bool)
+            num_vals[k][keep] = v[~fail_zero]
+            num_valid[k][keep] = True
+            cur[keep] = span_end[ok][~fail_zero]
         elif f.ftype == FieldType.DATE:
             # exact 10-byte ISO shape at the cursor, fully vectorized:
             # digits at relative offsets 0-3,5,6,8,9; '-' at 4 and 7;
@@ -362,34 +411,27 @@ def batch_walk_arrow(lines: pa.Array, spec: FormatSpec,
     outs = []
     for k, (i, f) in enumerate(out_fields):
         if f.ftype in (FieldType.INT, FieldType.DBL):
-            vals = int_vals.get(k)
-            valid = int_valid.get(k)
+            is_int = f.ftype == FieldType.INT
+            vals = num_vals.get(k)
             if vals is None:
-                vals = np.zeros(n_rows, dtype=np.int64)
+                vals = np.zeros(
+                    n_rows, dtype=np.int64 if is_int else np.float64
+                )
                 valid = np.zeros(n_rows, dtype=bool)
-            valid = valid & landed
-            if f.ftype == FieldType.INT:
-                arr_vals = vals.copy()
-                for r in bail_rows:
-                    ov = oracle_vals[r][k]
-                    if ov is not None:
-                        # oracle _atol saturates at int64 bounds, so this
-                        # assignment never overflows
-                        arr_vals[r] = ov
-                        valid[r] = True
-                outs.append(pa.array(arr_vals, type=pa.int64(),
-                                     mask=~valid))
             else:
-                # DBL never touches the int64 array (inf/huge values
-                # would raise on int64 assignment)
-                fvals = vals.astype("float64")
-                for r in bail_rows:
-                    ov = oracle_vals[r][k]
-                    if ov is not None:
-                        fvals[r] = ov
-                        valid[r] = True
-                outs.append(pa.array(fvals, type=pa.float64(),
-                                     mask=~valid))
+                valid = num_valid[k]
+            valid = valid & landed
+            for r in bail_rows:
+                ov = oracle_vals[r][k]
+                if ov is not None:
+                    # oracle _atol saturates at int64 bounds, so an INT
+                    # assignment never overflows
+                    vals[r] = ov
+                    valid[r] = True
+            outs.append(pa.array(
+                vals, type=pa.int64() if is_int else pa.float64(),
+                mask=~valid,
+            ))
         elif f.ftype == FieldType.DATE:
             from ..functions.dates import days_from_civil as _dfc
 
@@ -407,8 +449,6 @@ def batch_walk_arrow(lines: pa.Array, spec: FormatSpec,
                     valid[r] = True
             outs.append(pa.array(dvals, type=pa.date32(), mask=~valid))
         elif f.ftype == FieldType.CHR:
-            import pyarrow.compute as pc
-
             valid = chr_valid.get(k, np.zeros(n_rows, dtype=bool)) & landed
             arr = pc.if_else(
                 pa.array(valid), pa.scalar(f.target, pa.string()),
@@ -429,8 +469,6 @@ def batch_walk_arrow(lines: pa.Array, spec: FormatSpec,
             sp = np.minimum(sp, len(buf))  # clamp NCHAR overshoot
             arr = _gather_strings(buf, ss, sp, valid)
             if len(bail_rows):
-                import pyarrow.compute as pc
-
                 mask = np.zeros(n_rows, dtype=bool)
                 mask[bail_rows] = True
                 repl = pa.array(

@@ -6,7 +6,7 @@ same compiled format specs, filter DSL and routing semantics run
 unchanged over a stream (e.g. pages landing in an object-store prefix,
 the streaming analog of a crawl feed):
 
-- the parse stage is the SAME arrow/pandas UDF (vectorized UDFs are
+- the parse stage is the SAME Arrow UDF (vectorized UDFs are
   streaming-safe: stateless, per-batch);
 - routing fans out inside ``foreachBatch`` so one micro-batch writes all
   sinks from one cached parse result (exactly the batch route() shape);

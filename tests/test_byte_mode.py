@@ -5,7 +5,7 @@ Covers the documented Unicode contract end to end: the oracle byte
 walker (latin-1 trick + U+FFFD replacement), the provable
 byte==codepoint equivalence for non-byte-sensitive specs, the NumPy
 walker's native byte mode, and the full Spark kernel with
-``byte_mode=True`` under both physical strategies."""
+``byte_mode=True``."""
 
 from __future__ import annotations
 
@@ -147,13 +147,10 @@ class TestSparkByteMode:
         ]
         return spark.createDataFrame(lines, "doc_id LONG, raw_line STRING")
 
-    @pytest.mark.parametrize("strategy", ["mapinarrow", "arrowudf"])
-    def test_kernel_matches_byte_oracle(self, spark, unicode_df, strategy):
+    def test_kernel_matches_byte_oracle(self, spark, unicode_df):
         from logparser_spark.operators.parse import parse_lines_arrow
 
-        parsed = parse_lines_arrow(
-            unicode_df, NCHAR_SPEC, strategy=strategy, byte_mode=True
-        )
+        parsed = parse_lines_arrow(unicode_df, NCHAR_SPEC, byte_mode=True)
         rows = {r["doc_id"]: r["parsed"] for r in parsed.collect()}
         for r in unicode_df.collect():
             evals, ewf = parse_line_bytes(r["raw_line"], NCHAR_SPEC)

@@ -1,6 +1,6 @@
 """DATE field type (engine extension — the reference README promises
 "`DATE` support incoming" at /root/reference/README.md:57 but never
-shipped it): every Spark strategy must agree with the pure-Python
+shipped it): the Spark parse must agree with the pure-Python
 oracle on an adversarial corpus of calendar edges, and the date math
 itself is pinned against datetime.date."""
 
@@ -78,31 +78,18 @@ def test_oracle_date_semantics():
     ) == ([42, datetime.date(2020, 5, 6)], True)
 
 
-@pytest.mark.parametrize(
-    "strategy", ["mapinarrow", "arrowudf", "pandas", "hybrid"]
-)
-def test_all_spark_strategies_match_oracle(spark, strategy):
-    from pyspark.sql import functions as F
-
+def test_spark_parse_matches_oracle(spark):
     from logparser_spark.operators import parse as P
 
     spec = compile_format(FMT)
     cols = spec.column_names()
     want = {l: parse_line(l, spec) for l in LINES}
     df = spark.createDataFrame([(l,) for l in LINES], "raw_line string")
-    if strategy == "pandas":
-        out = df.withColumn(
-            "parsed", P.make_parse_udf(spec)(F.col("raw_line"))
-        )
-    elif strategy == "hybrid":
-        out = P.parse_lines_hybrid(df, spec)
-    else:
-        out = P.parse_lines_arrow(df, spec, strategy=strategy)
-    for r in out.collect():
+    for r in P.parse_lines_arrow(df, spec).collect():
         vals, wf = want[r["raw_line"]]
         p = r["parsed"]
         assert ([p[c] for c in cols], p["well_formed"]) == \
-            (list(vals), wf), (strategy, r["raw_line"])
+            (list(vals), wf), r["raw_line"]
 
 
 def test_multi_format_cascade_and_render(spark):
@@ -121,7 +108,7 @@ def test_multi_format_cascade_and_render(spark):
         assert (rows[l]["matched_format"] == "datefmt") == wf or not wf
 
     rend = P.render_parsed(
-        P.parse_lines_arrow(df, spec, strategy="mapinarrow"), spec
+        P.parse_lines_arrow(df, spec), spec
     )
     got = {r["raw_line"]: r["rendered"] for r in rend.collect()}
     assert got["2024-02-29 1200 INFO :hello world"] == (
@@ -133,7 +120,6 @@ def test_multi_format_cascade_and_render(spark):
     r2 = P.render_parsed(
         P.parse_lines_arrow(
             spark.createDataFrame([("7 x",)], "raw_line string"), nod,
-            strategy="mapinarrow",
         ), nod,
     ).collect()[0]["rendered"]
     assert r2 == 'ParsedLine: ints(7); dbls(); chrs(); strs("x")'
@@ -152,7 +138,7 @@ def test_date_filters(spark):
          ("2023-01-01 1 INFO :c",)],
         "raw_line string",
     )
-    parsed = P.parse_lines_arrow(df, spec, strategy="mapinarrow")
+    parsed = P.parse_lines_arrow(df, spec)
     kept = sorted(
         r["raw_line"][:10]
         for r in parsed.where(to_column(flt, spec)).collect()

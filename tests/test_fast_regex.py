@@ -5,7 +5,7 @@ provably equal the reference walker's no-backtracking consumption
 (/root/reference/src/line_parsing/line_parser.cpp:58-98). These tests
 check that claim empirically: wherever the flat pattern MATCHES, the
 pure-Python oracle walker must agree on well-formedness AND every field
-value. (Non-matches are fine — they take the nested-regex/walker
+value. (Non-matches are fine — they take the walker
 fallback.)
 
 Python's `re` has the same leftmost-greedy backtracking preference order

@@ -82,11 +82,11 @@ def test_duckdb_replay_matches_python_re():
     spec = compile_grok(ACCESS)
     con = duckdb.connect()
     exprs = ", ".join(grok_oracle_exprs(spec, "l"))
-    for line in [GOOD, BAD, "", "10.1.2.3 - u [x] bad"]:
+    for line in [GOOD, BAD, "", "10.1.2.3 - u [x] bad", None]:
         row = con.execute(
-            f"SELECT {exprs} FROM (SELECT ? AS l)", [line]).fetchone()
-        m = re.match(spec.regex, line)
-        assert row[0] == bool(m)
+            f"SELECT {exprs} FROM (SELECT ?::VARCHAR AS l)", [line]).fetchone()
+        m = re.match(spec.regex, line) if line is not None else None
+        assert row[0] is bool(m)
         if m:
             assert row[1] == m.group(1)
             assert row[3] == int(m.group(3))
