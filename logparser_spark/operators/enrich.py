@@ -2,10 +2,13 @@
 
 The reference has no joins (SURVEY.md §2.6); BASELINE.json mandates
 dictionary enrichment as the Spark-side generalization. Dimensions are
-tiny, deterministic, generated in-code (FIXTURES.md §3) and joined with an
-explicit ``F.broadcast`` hint so the plan is a BroadcastHashJoin with no
-shuffle of the fact side — the only join strategy that survives a 10^12-row
-fact table with dictionary dims.
+tiny, deterministic and defined in-code (FIXTURES.md §3). Each is an
+inline ``VALUES`` relation (a ``LocalRelation``), so its broadcast is
+built from the plan's literals by a JVM-only job: no RDD of pickled rows,
+no Python task, no Python worker. Each is joined with an explicit
+``F.broadcast`` hint so the plan is a BroadcastHashJoin with no shuffle of
+the fact side — the only join strategy that survives a 10^12-row fact
+table with dictionary dims.
 """
 
 from __future__ import annotations
@@ -39,20 +42,39 @@ STATUS_DIM = [
 ]
 
 
+def _sql_literal(v) -> str:
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _inline_dim(spark, rows: list[tuple], schema: str):
+    """``rows`` as a ``VALUES`` relation with ``schema``'s column names and
+    types. The rows are rendered as SQL literals: positional ``spark.sql``
+    args bind out of order inside ``VALUES`` on Spark 4.1, and
+    ``createDataFrame`` would plan a Python RDD."""
+    cols = [c.split() for c in schema.split(",")]
+    values = ", ".join(
+        "(" + ", ".join(_sql_literal(v) for v in r) + ")" for r in rows)
+    select = ", ".join(
+        f"CAST(col{i} AS {typ}) AS {name}" for i, (name, typ) in enumerate(cols, 1))
+    return spark.sql(f"SELECT {select} FROM VALUES {values}")
+
+
 def lang_dim(spark):
-    return spark.createDataFrame(
-        LANG_DIM, "lang STRING, lang_name STRING, lang_family STRING"
-    )
+    return _inline_dim(
+        spark, LANG_DIM, "lang STRING, lang_name STRING, lang_family STRING")
 
 
 def tld_dim(spark):
-    return spark.createDataFrame(TLD_DIM, "tld STRING, region STRING, is_cc BOOLEAN")
+    return _inline_dim(spark, TLD_DIM, "tld STRING, region STRING, is_cc BOOLEAN")
 
 
 def status_dim(spark):
-    return spark.createDataFrame(
-        STATUS_DIM, "level STRING, severity INT, is_error BOOLEAN"
-    )
+    return _inline_dim(
+        spark, STATUS_DIM, "level STRING, severity INT, is_error BOOLEAN")
 
 
 def url_host(col):

@@ -16,8 +16,9 @@ Physical strategies (SURVEY.md §4 custom item 3):
   aggregate pass instead of N writers.
 - :func:`write_routes_single_pass` — one scan, each row exploded to the
   sinks it matches (:func:`routed_sink_ids`), one write partitioned by
-  sink. ``plans/checkpoint.route_checkpointed`` writes the same way,
-  partitioned by sink and lineage bucket.
+  sink. ``plans/checkpoint.route_checkpointed`` also explodes rows with
+  :func:`routed_sink_ids`, but first hash-distributes them by lineage
+  bucket and persists them, then writes partitioned by sink and bucket.
 """
 
 from __future__ import annotations

@@ -9,11 +9,13 @@ lineage entry per bucket AFTER its data is fully committed. A re-run
 without an entry (write-audit-publish light — on Iceberg this maps to
 snapshot/WAP, here to a staged write renamed into place).
 
-One route pass reads its input once: the bucketed frame is persisted,
-ONE grouped aggregate gives every per-bucket count the lineage records
-(rows, well-formed rows, and per sink its rows and its well-formed
-level histogram), and ONE write, dynamic-partitioned by ``(sink,
-__bucket)``, lands every sink's rows in a staging directory. Each
+One route pass reads its input once and shuffles it once: the to-do rows
+are hash-distributed by ``__bucket`` (every bucket in one partition) and
+persisted, ONE grouped aggregate over the cache, with no exchange of its
+own, gives every per-bucket count the lineage records (rows, well-formed
+rows, and per sink its rows and its well-formed level histogram), and
+ONE write, dynamic-partitioned by ``(sink, __bucket)``, lands every
+sink's rows in a staging directory, one file per (sink, bucket). Each
 ``sink=<name>/__bucket=<b>`` directory is then renamed to
 ``{base}/<name>/__bucket=<b>`` after every to-do bucket's old target has
 been cleared, and only then are the lineage entries published.
@@ -39,9 +41,12 @@ Guarantees (tested in tests/test_checkpoint.py and tests/test_job.py):
 Scale notes: lineage is O(buckets) driver-side JSON (choose buckets ~
 10-100x executor count; at 10^12 rows you'd use 10k-100k buckets and an
 Iceberg lineage table instead of JSON files — the protocol is
-identical). The bucket column is pmod(key, buckets) so the same row
-always lands in the same bucket across runs — the precondition for
-idempotent redo.
+identical). A run writes at most sinks x buckets data files, whatever
+the input's task count; written straight from the input's tasks it
+would be up to tasks x sinks x buckets small files (Iceberg's hash write
+distribution clusters by partition key for the same reason). The bucket
+column is pmod(key, buckets) so the same row always lands in the same
+bucket across runs — the precondition for idempotent redo.
 """
 
 from __future__ import annotations
@@ -172,23 +177,41 @@ def _pairs(hist: Counter) -> list:
             sorted(hist.items(), key=lambda kv: (kv[0] is None, str(kv[0])))]
 
 
-def _bucket_stats(work, sinks: list[SinkSpec], spec: FormatSpec,
-                  parsed_col: str, todo: list[int]) -> dict[int, dict]:
+def _bucketed(parsed_df, key_col: str, buckets: int, todo: list[int]):
+    """The to-do rows with their ``__bucket``, hash-distributed by it: each
+    bucket's rows sit in one partition, so the write makes one file per
+    (sink, bucket) whatever the input's task count, and an aggregate
+    grouped by ``__bucket`` needs no exchange of its own."""
+    from pyspark.sql import functions as F
+
+    return parsed_df.withColumn(
+        "__bucket", F.pmod(F.col(key_col), F.lit(buckets)).cast("int")
+    ).filter(F.col("__bucket").isin(todo)).repartition(F.col("__bucket"))
+
+
+def _stats_frame(work, sinks: list[SinkSpec], spec: FormatSpec,
+                 parsed_col: str):
     """ONE aggregate over the bucketed frame, grouped by (bucket,
-    well_formed, level): per bucket its rows and well-formed rows, and
-    per sink its rows and its well-formed level histogram."""
+    well_formed, level): the row count and, per sink, its routed rows."""
     from pyspark.sql import functions as F
 
     wf = F.col(f"{parsed_col}.well_formed")
     level = (F.col(f"{parsed_col}.{HIST_FIELD}")
              if HIST_FIELD in spec.column_names() else F.lit(None))
-    rows = work.groupBy(
+    return work.groupBy(
         "__bucket", wf.alias("wf"), level.alias("level")
     ).agg(
         F.count(F.lit(1)).alias("n"),
         *[F.sum(sink_column(s, spec, parsed_col).cast("long")).alias(f"s{i}")
           for i, s in enumerate(sinks)],
-    ).collect()
+    )
+
+
+def _bucket_stats(work, sinks: list[SinkSpec], spec: FormatSpec,
+                  parsed_col: str, todo: list[int]) -> dict[int, dict]:
+    """Per bucket its rows and well-formed rows, and per sink its rows and
+    its well-formed level histogram, from :func:`_stats_frame`."""
+    rows = _stats_frame(work, sinks, spec, parsed_col).collect()
 
     stats = {b: {"rows": 0, "well_formed_rows": 0,
                  "sinks": {s.name: [0, Counter()] for s in sinks}}
@@ -260,8 +283,6 @@ def route_checkpointed(
     after the sink data is in place, before any lineage publish) — the
     test hook for the kill-and-rerun invariant.
     """
-    from pyspark.sql import functions as F
-
     fp = fingerprint(spec, sinks, buckets, key_col)
     done = set(verified_buckets(base, fp, source))
     todo = [b for b in range(buckets) if b not in done]
@@ -274,10 +295,7 @@ def route_checkpointed(
             if fn.startswith(STAGING_PREFIX):
                 shutil.rmtree(os.path.join(base, fn))
 
-    work = parsed_df.withColumn(
-        "__bucket", F.pmod(F.col(key_col), F.lit(buckets)).cast("int")
-    ).filter(F.col("__bucket").isin(todo))
-    work = work.persist()
+    work = _bucketed(parsed_df, key_col, buckets, todo).persist()
     try:
         stats = _bucket_stats(work, sinks, spec, parsed_col, todo)
         _publish(_schema_path(base), json.dumps(_nullable(work.schema.jsonValue())))

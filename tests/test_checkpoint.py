@@ -228,6 +228,77 @@ def test_changed_config_raises(spark, parsed, base):
     assert C.route_checkpointed(df, same, spec, base, buckets=4)["processed"] == []
 
 
+def _files_per_bucket_dir(base, sinks):
+    import os
+
+    return {
+        (s, b): sum(fn.startswith("part-") and fn.endswith(".parquet")
+                    for fn in os.listdir(os.path.join(base, s, b)))
+        for s in sinks if os.path.isdir(os.path.join(base, s))
+        for b in os.listdir(os.path.join(base, s)) if b.startswith("__bucket=")
+    }
+
+
+def test_one_file_per_sink_bucket(spark, parsed, base):
+    """Rows are hash-distributed by bucket before the write, so every
+    ``<sink>/__bucket=<b>`` holds exactly one data file — also after a
+    crash and a resume that redoes some buckets."""
+    from logparser_spark.plans import checkpoint as C
+
+    df, spec = parsed
+    df = df.repartition(3)
+    names = [s.name for s in _sinks()]
+    C.route_checkpointed(df, _sinks(), spec, base, buckets=8)
+    files = _files_per_bucket_dir(base, names)
+    assert len(files) == 16 and set(files.values()) == {1}
+
+    redo = tempfile.mkdtemp(prefix="ckpt_redo_")
+    try:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            C.route_checkpointed(df, _sinks(), spec, redo, buckets=8,
+                                 fail_after_buckets=3)
+        r = C.route_checkpointed(df, _sinks(), spec, redo, buckets=8)
+        assert len(r["processed"]) == 5
+        files = _files_per_bucket_dir(redo, names)
+        assert len(files) == 16 and set(files.values()) == {1}
+    finally:
+        shutil.rmtree(redo, ignore_errors=True)
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a final AQE plan, children only: the result stage is
+    unwrapped, any other query stage is a leaf, and the cached plan under
+    an InMemoryTableScan is not walked."""
+    if plan.nodeName() == "ResultQueryStage":
+        plan = plan.plan()
+    out = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        out += _plan_nodes(children.apply(i))
+    return out
+
+
+def test_bucket_stats_read_the_cache_without_exchange(spark, parsed):
+    """The bucket-stats aggregate groups by ``__bucket`` first, and the
+    persisted frame is already hash-distributed by it: the final AQE
+    plan has no exchange between the aggregate and the cache scan, so
+    a route run shuffles its rows once."""
+    from logparser_spark.plans import checkpoint as C
+
+    df, spec = parsed
+    work = C._bucketed(df, "doc_id", 8, list(range(8))).persist()
+    try:
+        agg = C._stats_frame(work, _sinks(), spec, "parsed")
+        agg.collect()
+        final = agg._jdf.queryExecution().executedPlan().executedPlan()
+        nodes = _plan_nodes(final)
+    finally:
+        work.unpersist()
+    assert "HashAggregate" in nodes
+    assert any(n in ("InMemoryTableScan", "TableCacheQueryStage") for n in nodes)
+    assert not [n for n in nodes if "Exchange" in n or "ShuffleQueryStage" in n], nodes
+
+
 def test_salted_count_equals_plain(spark, parsed):
     from logparser_spark.operators.enrich import url_host
     from logparser_spark.plans.skew import salted_count
