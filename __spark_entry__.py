@@ -731,33 +731,6 @@ def q_embedding_near_dup(spark, sf_dir):
     return similarity.embedding_near_dup_pairs(emb, tau=0.25)
 
 
-def q_multimodal_meta(spark, sf_dir):
-    """REAL image-header decode: synthesize a valid PNG per document
-    (dims derived from doc_id), then parse width/height back out of the
-    raw bytes with the struct-based header reader — the oracle predicts
-    the dims arithmetically, so any decoder bug mismatches."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return multimodal.image_metadata(
-        multimodal.synth_png(docs), binary_col="img"
-    )
-
-
-def q_video_meta(spark, sf_dir):
-    """REAL video-container decode: synthesize a valid MP4 (even ids)
-    or AVI (odd ids) header per document, then walk the boxes/chunks
-    back out of the raw bytes (`multimodal.video_dims`) — width/height/
-    duration/frame-count all arithmetic in doc_id, so the oracle
-    predicts every field and any box-walker bug mismatches."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return multimodal.video_metadata(
-        multimodal.synth_video(docs), binary_col="vid"
-    )
-
-
 def q_robots_allowed(spark, sf_dir):
     """robots.txt gate: 20 hosts, half with real Allow/Disallow rules
     (longest-match, allow-wins-ties, inline comments) and half with a
@@ -2377,148 +2350,6 @@ def q_extract_text(spark, sf_dir):
     return multimodal.extract_text(pages).select("doc_id", "extracted")
 
 
-def q_audio_meta(spark, sf_dir):
-    """REAL audio-header decode across all three parsers: synthesize a
-    valid WAV (ids % 3 == 0), FLAC (1) or MP3 (2, even ids behind an
-    ID3v2 tag) per document and parse rate/channels/bits/samples back
-    out of the raw bytes — every field arithmetic in doc_id, so the
-    oracle predicts the whole struct and any header-walk bug
-    mismatches."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return multimodal.audio_metadata(
-        multimodal.synth_audio(docs), binary_col="aud"
-    )
-
-
-def q_audio_samples(spark, sf_dir):
-    """REAL compressed-audio SAMPLE decode: synthesize PCM WAV (even
-    ids) and FLAC (odd ids, cycling constant/verbatim/fixed-2/LPC
-    subframes — Rice-coded residuals, CRC-verified frames) whose
-    sample values are arithmetic in (doc_id, t, channel), decode the
-    bits back, and aggregate the decoded samples. The oracle computes
-    the same aggregates from the closed-form sample formula — so any
-    bit-level codec bug surfaces as a value mismatch."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return multimodal.decode_audio_samples(
-        multimodal.synth_audio_pcm(docs), binary_col="aud", strict=True
-    )
-
-
-def q_image_pixels_jpeg(spark, sf_dir):
-    """REAL JPEG PIXEL decode: synthesize a baseline JPEG per document
-    (family id mod 4: grayscale / 4:4:4 interleaved / 4:2:0
-    chroma-subsampled — the real-crawl layout with four Y + Cb + Cr
-    per MCU — / PROGRESSIVE SOF2 multi-scan; dims and per-16×16-tile
-    fill arithmetic in doc_id, every second stream carrying restart
-    markers), decode the bits back through the full entropy path —
-    stream-carried canonical Huffman tables, per-component DC
-    prediction (incl. the progressive point-transform + refinement
-    accumulation and EOBn runs), AC run/size, byte unstuffing, RSTn,
-    chroma replication-upsample — dequantize, 2-D
-    IDCT, crop, and aggregate the decoded samples. The tile-constant
-    content makes every component's DCT spectrum DC-only and the
-    chroma resample lossless, so the round-trip is exact and the
-    oracle computes every aggregate from the closed-form sample
-    formula: any Huffman, zigzag, IDCT, interleave, subsampling or
-    MCU cropping bug surfaces as a value mismatch."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return multimodal.decode_image_pixels(
-        multimodal.synth_jpeg(docs), binary_col="img", strict=True
-    )
-
-
-def q_image_pixels_png(spark, sf_dir):
-    """REAL PNG PIXEL decode: synthesize a PNG per document (gray /
-    RGB / palette family by id mod 3, every row written with a
-    different scanline filter so all five unfilter paths — None, Sub,
-    Up, Average, Paeth — run at query scale), inflate and unfilter the
-    bytes back, and aggregate the decoded pixels. PNG is lossless, so
-    the oracle computes every aggregate from the closed-form sample
-    formula: any inflate-framing, filter-arithmetic or palette-lookup
-    bug surfaces as a value mismatch."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return multimodal.decode_image_pixels(
-        multimodal.synth_png_pixels(docs), binary_col="img", strict=True
-    )
-
-
-def q_image_pixels_gif(spark, sf_dir):
-    """REAL GIF PIXEL decode: synthesize a GIF89a per document (pixel
-    indices arithmetic in doc_id, odd ids interlaced), decode the
-    variable-width LZW code stream back through the global color
-    table, and aggregate the decoded pixels. The oracle computes the
-    same aggregates from the closed-form index formula — any LZW
-    bit-packing, code-width, interlace or palette bug mismatches."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return multimodal.decode_image_pixels(
-        multimodal.synth_gif(docs), binary_col="img", strict=True
-    )
-
-
-def q_image_pixels_bmp(spark, sf_dir):
-    """REAL BMP PIXEL decode: synthesize a .bmp per document (24-bit
-    bottom-up, 24-bit top-down negative-height DIB, or 8-bit BI_RLE8
-    palettized by id mod 3; dims arithmetic in doc_id so every 4-byte
-    stride-padding case occurs), walk the file+info headers, flip DIB
-    rows, strip stride padding, decode RLE8 opcodes through the
-    RGBQUAD palette, and aggregate the decoded pixels against the
-    closed-form oracle — any stride, orientation, palette or opcode
-    bug mismatches."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return multimodal.decode_image_pixels(
-        multimodal.synth_bmp(docs), binary_col="img", strict=True
-    )
-
-
-def q_video_frames(spark, sf_dir):
-    """REAL frame-pixel extraction: synthesize a playable uncompressed
-    AVI per document (dims/frame-count/fill all arithmetic in doc_id,
-    every 4-byte DIB stride-padding case exercised), then walk the RIFF
-    chunks and decode each frame's raw BGR rows back out
-    (`multimodal.extract_frames_avi`) — the oracle predicts width,
-    height, pixel count and pixel SUM per frame, so any row-stride or
-    padding bug mismatches."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    frames = multimodal.frame_sample(
-        multimodal.synth_avi_rgb(docs), binary_col="vid"
-    )
-    return frames.select(
-        "doc_id", "frame_no", "width", "height", "n_px", "px_sum"
-    )
-
-
-def q_video_frames_rle(spark, sf_dir):
-    """REAL COMPRESSED-video frame decode: synthesize a BI_RLE8
-    (Microsoft run-length codec) AVI per document and decode each
-    frame's runs/escapes through the stream's RGBQUAD palette back to
-    BGR pixels. Palette entry j sums to 60j + 3, so the oracle
-    predicts every decoded frame's pixel sum arithmetically — any
-    opcode, palette or row-order bug mismatches."""
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    frames = multimodal.frame_sample(
-        multimodal.synth_avi_rle8(docs), binary_col="vid", strict=True
-    )
-    return frames.select(
-        "doc_id", "frame_no", "width", "height", "n_px", "px_sum"
-    )
-
-
 def q_contamination_check(spark, sf_dir):
     """Benchmark decontamination: every 13th document stands in for the
     benchmark suite; per-doc distinct word 3-grams are semi-joined
@@ -3194,12 +3025,6 @@ def _dataprep_sql() -> dict[str, str]:
         ON x.vec_id < y.vec_id AND bit_count(xor(x.bk, y.bk)) <= 1)
     WHERE cos_sim >= 0.25"""
 
-    sqls["multimodal_meta"] = """
-    SELECT doc_id, 45::BIGINT AS n_bytes, 'png' AS format,
-      ((doc_id % 640) + 1)::INT AS width,
-      ((doc_id % 480) + 1)::INT AS height
-    FROM documents"""
-
     # integer-space half-up 6-decimal rounding (same contract as
     # quality_score: IEEE division is cross-engine exact, ROUND is not)
     def _r6(num: str, den: str) -> str:
@@ -3256,18 +3081,6 @@ def _dataprep_sql() -> dict[str, str]:
       len(regexp_extract_all(text, '{PII_IPV4_RX}'))::BIGINT AS n_ipv4,
       len(regexp_extract_all(text, '{PII_SSN_RX}'))::BIGINT AS n_ssn
     FROM p"""
-
-    sqls["video_meta"] = """
-    SELECT doc_id,
-      (CASE WHEN doc_id % 2 = 0 THEN 284 + 4 * ((doc_id % 30) + 1)
-            ELSE 88 END)::BIGINT AS n_bytes,
-      CASE WHEN doc_id % 2 = 0 THEN 'mp4' ELSE 'avi' END AS format,
-      ((doc_id % 640) + 1)::INT AS width,
-      ((doc_id % 480) + 1)::INT AS height,
-      (CASE WHEN doc_id % 2 = 0 THEN (doc_id % 5000) + 1
-            ELSE 40 * ((doc_id % 30) + 1) END)::BIGINT AS duration_ms,
-      ((doc_id % 30) + 1)::BIGINT AS n_frames
-    FROM documents"""
 
     sqls["crawl_delays"] = """
     SELECT 'site' || doc_id AS host,
@@ -4541,162 +4354,6 @@ def _dataprep_sql() -> dict[str, str]:
       'Doc ' || doc_id || ' ' || text || ' A & B <ok> "q" ''s''' AS extracted
     FROM documents"""
 
-    sqls["audio_meta"] = """
-    SELECT doc_id,
-      (CASE doc_id % 3
-         WHEN 0 THEN 44 + ((doc_id % 500) + 1) * ((doc_id % 2) + 1) * 2
-         WHEN 1 THEN 42
-         ELSE ((doc_id % 6) + 1)
-              * (18432000 // (CASE (doc_id // 3) % 3 WHEN 0 THEN 44100
-                              WHEN 1 THEN 48000 ELSE 32000 END))
-              + (CASE WHEN doc_id % 2 = 0 THEN 10 ELSE 0 END)
-       END)::BIGINT AS n_bytes,
-      (CASE doc_id % 3 WHEN 0 THEN 'wav' WHEN 1 THEN 'flac'
-       ELSE 'mp3' END) AS format,
-      (CASE doc_id % 3
-         WHEN 0 THEN 8000 + (doc_id % 90) * 100
-         WHEN 1 THEN 8000 + (doc_id % 40000)
-         ELSE (CASE (doc_id // 3) % 3 WHEN 0 THEN 44100
-               WHEN 1 THEN 48000 ELSE 32000 END)
-       END)::INT AS sample_rate,
-      (CASE doc_id % 3 WHEN 1 THEN (doc_id % 8) + 1
-       ELSE (doc_id % 2) + 1 END)::INT AS channels,
-      (CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 16 END)::INT
-        AS bits_per_sample,
-      (CASE doc_id % 3
-         WHEN 0 THEN (doc_id % 500) + 1
-         WHEN 1 THEN ((doc_id * 37) % 100000) + 1
-         ELSE 1152 * ((doc_id % 6) + 1)
-       END)::BIGINT AS n_samples
-    FROM documents"""
-
-    sqls["audio_samples"] = """
-    WITH p AS (
-      SELECT doc_id,
-        (doc_id % 300) + 1 AS n,
-        ((doc_id // 2) % 2) + 1 AS ch,
-        (doc_id % 2) AS fam,
-        ((doc_id // 2) % 4) AS sub
-      FROM documents),
-    s AS (
-      SELECT p.doc_id, p.n, p.ch, p.fam,
-        CASE WHEN p.fam = 1 AND p.sub = 0 THEN (p.doc_id % 201) - 100
-             ELSE ((p.doc_id + 3 * t.t + 7 * c.c) % 201) - 100
-        END AS v
-      FROM p, unnest(range(0, p.n)) t(t), unnest(range(0, p.ch)) c(c))
-    SELECT doc_id,
-      CASE fam WHEN 0 THEN 'wav' ELSE 'flac' END AS format,
-      (CASE fam WHEN 0 THEN 16000 ELSE 44100 END)::INT AS sample_rate,
-      ch::INT AS channels,
-      n::BIGINT AS n_samples,
-      sum(v)::BIGINT AS sum_s,
-      sum(abs(v))::BIGINT AS sum_abs,
-      max(v)::INT AS max_s
-    FROM s GROUP BY doc_id, fam, ch, n"""
-
-    sqls["video_frames"] = """
-    SELECT doc_id,
-      unnest(generate_series(0, doc_id % 5))::INT AS frame_no,
-      ((doc_id % 8) + 1)::INT AS width,
-      ((doc_id % 6) + 1)::INT AS height,
-      (3 * ((doc_id % 8) + 1) * ((doc_id % 6) + 1))::BIGINT AS n_px,
-      (((doc_id * 7 + unnest(generate_series(0, doc_id % 5)) * 13) % 256)
-       * 3 * ((doc_id % 8) + 1) * ((doc_id % 6) + 1))::BIGINT AS px_sum
-    FROM documents"""
-
-    sqls["image_pixels_jpeg"] = """
-    WITH p AS (
-      SELECT doc_id, (doc_id % 21) + 4 AS w, (doc_id % 13) + 4 AS h,
-        CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 3 END AS nch
-      FROM documents),
-    b AS (
-      SELECT p.doc_id, p.w, p.h, p.nch,
-        (p.doc_id * 31 + ty.t * 17 + tx.t * 5 + c.c * 43) % 256 AS v,
-        least(16, p.h - 16 * ty.t) * least(16, p.w - 16 * tx.t) AS npx
-      FROM p,
-        unnest(range(0, (p.h + 15) // 16)) ty(t),
-        unnest(range(0, (p.w + 15) // 16)) tx(t),
-        unnest(range(0, p.nch)) c(c))
-    SELECT doc_id, 'jpeg' AS format,
-      max(w)::INT AS width, max(h)::INT AS height,
-      (max(w * h) * max(nch))::BIGINT AS n_px,
-      sum(v * npx)::BIGINT AS px_sum,
-      max(v)::INT AS px_max
-    FROM b GROUP BY doc_id"""
-
-    sqls["image_pixels_png"] = """
-    WITH p AS (
-      SELECT doc_id, (doc_id % 19) + 1 AS w, (doc_id % 11) + 1 AS h,
-        doc_id % 3 AS fam
-      FROM documents),
-    s AS (
-      SELECT p.doc_id, p.w, p.h, p.fam,
-        CASE WHEN p.fam = 2
-          THEN 10 * ((p.doc_id + y.y * 5 + x.x) % 8) * (c.c + 1) + c.c
-          ELSE (p.doc_id * 13 + y.y * 7 + x.x * 3 + c.c * 11) % 256
-        END AS v
-      FROM p,
-        unnest(range(0, p.h)) y(y),
-        unnest(range(0, p.w)) x(x),
-        unnest(range(0, CASE WHEN p.fam = 0 THEN 1 ELSE 3 END)) c(c))
-    SELECT doc_id, 'png' AS format,
-      max(w)::INT AS width, max(h)::INT AS height,
-      count(*)::BIGINT AS n_px,
-      sum(v)::BIGINT AS px_sum,
-      max(v)::INT AS px_max
-    FROM s GROUP BY doc_id"""
-
-    sqls["image_pixels_gif"] = """
-    WITH p AS (
-      SELECT doc_id, (doc_id % 17) + 1 AS w, (doc_id % 9) + 1 AS h
-      FROM documents),
-    s AS (
-      SELECT p.doc_id, p.w, p.h,
-        10 * ((p.doc_id + 3 * y.y + 5 * x.x) % 8) * (c.c + 1) + c.c AS v
-      FROM p,
-        unnest(range(0, p.h)) y(y),
-        unnest(range(0, p.w)) x(x),
-        unnest(range(0, 3)) c(c))
-    SELECT doc_id, 'gif' AS format,
-      max(w)::INT AS width, max(h)::INT AS height,
-      count(*)::BIGINT AS n_px,
-      sum(v)::BIGINT AS px_sum,
-      max(v)::INT AS px_max
-    FROM s GROUP BY doc_id"""
-
-    sqls["image_pixels_bmp"] = """
-    WITH p AS (
-      SELECT doc_id, (doc_id % 14) + 1 AS w, (doc_id % 7) + 1 AS h,
-        doc_id % 3 AS fam
-      FROM documents),
-    s AS (
-      SELECT p.doc_id, p.w, p.h,
-        CASE WHEN p.fam = 2
-          THEN 10 * ((p.doc_id + 2 * y.y + 3 * x.x) % 8) * (c.c + 1) + c.c
-          ELSE (p.doc_id * 11 + y.y * 5 + x.x * 3 + c.c * 7) % 256
-        END AS v
-      FROM p,
-        unnest(range(0, p.h)) y(y),
-        unnest(range(0, p.w)) x(x),
-        unnest(range(0, 3)) c(c))
-    SELECT doc_id, 'bmp' AS format,
-      max(w)::INT AS width, max(h)::INT AS height,
-      count(*)::BIGINT AS n_px,
-      sum(v)::BIGINT AS px_sum,
-      max(v)::INT AS px_max
-    FROM s GROUP BY doc_id"""
-
-    sqls["video_frames_rle"] = """
-    SELECT doc_id,
-      unnest(generate_series(0, doc_id % 5))::INT AS frame_no,
-      ((doc_id % 8) + 1)::INT AS width,
-      ((doc_id % 6) + 1)::INT AS height,
-      (3 * ((doc_id % 8) + 1) * ((doc_id % 6) + 1))::BIGINT AS n_px,
-      ((60 * ((doc_id * 7 + unnest(generate_series(0, doc_id % 5)) * 13)
-              % 8) + 3)
-       * ((doc_id % 8) + 1) * ((doc_id % 6) + 1))::BIGINT AS px_sum
-    FROM documents"""
-
     sqls["contamination_check"] = """
     WITH w AS (
       SELECT doc_id, list_filter(string_split(text, ' '), x -> len(x) > 0) AS w
@@ -5778,16 +5435,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repetition_stats": q_repetition_stats,
         "filter_verdict": q_filter_verdict,
         "pii_scrub": q_pii_scrub,
-        "multimodal_meta": q_multimodal_meta,
-        "video_meta": q_video_meta,
-        "video_frames": q_video_frames,
-        "video_frames_rle": q_video_frames_rle,
-        "audio_meta": q_audio_meta,
-        "audio_samples": q_audio_samples,
-        "image_pixels_jpeg": q_image_pixels_jpeg,
-        "image_pixels_png": q_image_pixels_png,
-        "image_pixels_gif": q_image_pixels_gif,
-        "image_pixels_bmp": q_image_pixels_bmp,
         "extract_text": q_extract_text,
         "boilerplate_blocks": q_boilerplate_blocks,
         "main_content": q_main_content,

@@ -1,59 +1,18 @@
-"""Multimodal column handling: opaque ``binary`` payloads + typed
-metadata, processed by Arrow-batched ``mapInPandas`` stages.
+"""Byte and text helpers for crawled payloads, as Catalyst expressions.
 
-IMAGE metadata is REAL: PNG/GIF/JPEG/BMP dimensions are parsed straight
-from the header bytes with ``struct``. AUDIO metadata is REAL for WAV,
-FLAC (STREAMINFO) and MP3 (frame-header walk) — no codec library
-needed for header-level rate/channels/bits/sample counts. VIDEO frame
-PIXEL extraction is REAL for uncompressed (BI_RGB) AVI and for the
-BI_RLE8 compressed codec (``extract_frames_avi``: RIFF chunk walk →
-DIB rows / RLE8 opcode decode through the RGBQUAD palette, stride
-padding excluded). AUDIO SAMPLE decode is REAL for PCM WAV and for FLAC — the
-full bit-level frame codec lives in ``operators/flaccodec.py``
-(constant/verbatim/fixed/LPC subframes, Rice residuals, CRC-verified)
-and feeds ``decode_audio_samples``. Only DSP-grade LOSSY decode (MP3
-huffman+IMDCT, MPEG/H.264 video bitstreams) remains stubbed — that
-genuinely is a DSP codec library, unavailable here: those paths
-either raise ``NotImplementedError`` (strict mode) or produce a
-deterministic fallback derived from the bytes, so pipelines exercise
-the exact dataflow a real decoder would see — one binary column in, a
-struct of typed features out, Arrow batches end to end, no driver
-collect.
+- ``decode_html``: binary HTML → UTF-8 text with tags stripped.
+- ``extract_text``: main-content extraction (script/style/comment
+  removal, tag strip, entity unescape, whitespace collapse); the WARC
+  reader calls it on response bodies.
+- ``detect_charset``: BOM → ``<meta charset>`` → ASCII/windows-1252
+  sniffing over the raw bytes.
+- ``sniff_mime``: magic-byte MIME detection, trusted before any
+  Content-Type header.
 
-``decode_html`` is NOT a stub: pages.html really is UTF-8 HTML and is
-decoded/stripped with Catalyst expressions only.
+Each adds its output columns with map-only expressions: no UDF, no shuffle.
 """
 
 from __future__ import annotations
-
-import struct
-from typing import Iterator, Optional
-
-import pandas as pd
-
-IMAGE_META_SCHEMA = (
-    "doc_id long, n_bytes long, format string, width int, height int"
-)
-
-AUDIO_META_SCHEMA = (
-    "doc_id long, n_bytes long, format string, sample_rate int, "
-    "channels int, bits_per_sample int, n_samples long"
-)
-
-FRAME_SAMPLE_SCHEMA = (
-    "doc_id long, frame_no int, width int, height int, n_px long, "
-    "px_sum long, frame_hash long"
-)
-
-VIDEO_META_SCHEMA = (
-    "doc_id long, n_bytes long, format string, width int, height int, "
-    "duration_ms long, n_frames long"
-)
-
-AUDIO_SAMPLES_SCHEMA = (
-    "doc_id long, format string, sample_rate int, channels int, "
-    "n_samples long, sum_s long, sum_abs long, max_s int"
-)
 
 
 def decode_html(df, html_col: str = "html", out_col: str = "html_text"):
@@ -100,1310 +59,6 @@ def extract_text(df, html_col: str = "html", out_col: str = "extracted",
     ]:
         s = F.regexp_replace(s, pat, rep)
     return df.withColumn(out_col, F.trim(s))
-
-
-def image_dims(b: bytes) -> Optional[tuple[str, int, int]]:
-    """(format, width, height) parsed from raw header bytes, or None when
-    the payload is not a recognized image. Pure ``struct`` — no imaging
-    library. Formats: PNG (IHDR), GIF87a/89a (logical screen), JPEG
-    (first SOFn marker), BMP (BITMAPINFOHEADER)."""
-    if len(b) >= 24 and b[:8] == b"\x89PNG\r\n\x1a\n":
-        # first chunk must be IHDR: 4-byte len, 'IHDR', then w/h as BE32
-        if b[12:16] == b"IHDR":
-            w, h = struct.unpack(">II", b[16:24])
-            return "png", w, h
-        return None
-    if len(b) >= 10 and b[:6] in (b"GIF87a", b"GIF89a"):
-        w, h = struct.unpack("<HH", b[6:10])
-        return "gif", w, h
-    if len(b) >= 4 and b[:2] == b"\xff\xd8":
-        # walk marker segments to the first start-of-frame (SOFn)
-        i = 2
-        while i + 9 <= len(b):
-            if b[i] != 0xFF:
-                return None
-            marker = b[i + 1]
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2  # standalone markers carry no length
-                continue
-            seglen = struct.unpack(">H", b[i + 2:i + 4])[0]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                h, w = struct.unpack(">HH", b[i + 5:i + 9])
-                return "jpeg", w, h
-            i += 2 + seglen
-        return None
-    if len(b) >= 26 and b[:2] == b"BM":
-        w, h = struct.unpack("<ii", b[18:26])
-        return "bmp", w, abs(h)  # negative height = top-down DIB
-    return None
-
-
-def image_metadata(df, binary_col: str = "html", id_col: str = "doc_id"):
-    """mapInPandas stage: binary column → typed image metadata struct.
-
-    REAL header decode (``image_dims``): PNG/GIF/JPEG/BMP dimensions from
-    the bytes; unrecognized payloads yield null format/width/height.
-    One binary column crosses into Python; Arrow-batched; no collect.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(buf) if buf is not None else b""
-                dims = image_dims(b)
-                if dims is None:
-                    rows.append((did, len(b), None, None, None))
-                else:
-                    fmt, w, h = dims
-                    rows.append((did, len(b), fmt, w, h))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_bytes", "format", "width", "height"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(fn, IMAGE_META_SCHEMA)
-
-
-def make_png(width: int, height: int) -> bytes:
-    """A minimal, VALID 45-byte PNG (signature + IHDR + IEND, real CRCs):
-    the deterministic test feed for ``image_metadata`` where a crawl
-    would carry real image bytes."""
-    import zlib
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-    out = [b"\x89PNG\r\n\x1a\n"]
-    for tag, data in ((b"IHDR", ihdr), (b"IEND", b"")):
-        out.append(struct.pack(">I", len(data)) + tag + data)
-        out.append(struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-    return b"".join(out)
-
-
-def _synth_binary_stage(df, make_fn, out_col: str, id_col: str = "doc_id",
-                        keep_cols: Optional[list] = None):
-    """Shared scaffold for the deterministic binary synthesizers: keep
-    the requested columns, append ``out_col`` as ``make_fn(id)`` bytes,
-    one Arrow-batched mapInPandas stage (every synth_* below differs
-    only in its bytes-maker)."""
-    keep = keep_cols if keep_cols is not None else [id_col]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.select(*keep).schema.fields
-    ) + f", {out_col} binary"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [make_fn(int(i)) for i in pdf[id_col]]
-            yield pdf
-
-    return df.select(*keep).mapInPandas(fn, schema)
-
-
-def synth_png(df, id_col: str = "doc_id", out_col: str = "img",
-              keep_cols: Optional[list] = None):
-    """Deterministic PNG synthesizer: one valid PNG per row with
-    width = (id % 640) + 1, height = (id % 480) + 1 — lets an oracle
-    predict the decoded dimensions arithmetically while the engine
-    really parses the bytes. mapInPandas; scales like any codec stage."""
-    return _synth_binary_stage(
-        df, lambda i: make_png((i % 640) + 1, (i % 480) + 1),
-        out_col, id_col, keep_cols,
-    )
-
-
-# MPEG audio frame-header tables (Layer III only — the overwhelmingly
-# common case in crawls). Bitrate in kbps, indexed by the 4-bit field;
-# index 0 = "free" and 15 = invalid (both rejected).
-_MP3_BITRATE_V1 = (None, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
-                   224, 256, 320, None)
-_MP3_BITRATE_V2 = (None, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128,
-                   144, 160, None)
-# sample-rate table keyed by the 2-bit version field (0=MPEG2.5, 2=MPEG2,
-# 3=MPEG1; 1 is reserved)
-_MP3_RATES = {
-    3: (44100, 48000, 32000),
-    2: (22050, 24000, 16000),
-    0: (11025, 12000, 8000),
-}
-
-
-def _mp3_frame(b: bytes, i: int) -> Optional[tuple[int, int, int, int]]:
-    """Parse one MPEG Layer III frame header at offset ``i``:
-    (sample_rate, channels, samples_per_frame, frame_length_bytes), or
-    None if no valid frame starts there."""
-    if i + 4 > len(b) or b[i] != 0xFF or (b[i + 1] & 0xE0) != 0xE0:
-        return None
-    version = (b[i + 1] >> 3) & 0x3
-    layer = (b[i + 1] >> 1) & 0x3
-    if version == 1 or layer != 0x1:  # reserved version / not Layer III
-        return None
-    br_idx = (b[i + 2] >> 4) & 0xF
-    sr_idx = (b[i + 2] >> 2) & 0x3
-    if sr_idx == 3:
-        return None
-    bitrate = (_MP3_BITRATE_V1 if version == 3 else _MP3_BITRATE_V2)[br_idx]
-    if bitrate is None:
-        return None
-    rate = _MP3_RATES[version][sr_idx]
-    padding = (b[i + 2] >> 1) & 0x1
-    channels = 1 if ((b[i + 3] >> 6) & 0x3) == 0x3 else 2
-    spf = 1152 if version == 3 else 576  # Layer III samples per frame
-    frame_len = (spf // 8 * bitrate * 1000) // rate + padding
-    return rate, channels, spf, frame_len
-
-
-def audio_dims(b: bytes) -> Optional[tuple]:
-    """(format, sample_rate, channels, bits_per_sample, n_samples) from
-    raw header bytes, or None. Parsed for REAL with ``struct``/bit math
-    — no audio library:
-
-    - WAV: RIFF/WAVE ``fmt `` + ``data`` chunks.
-    - FLAC: the mandatory STREAMINFO metadata block (rate/channels/bits/
-      total samples live in a packed 64-bit field).
-    - MP3: MPEG Layer III frame headers (optionally behind an ID3v2
-      tag); rate/channels from the first frame, n_samples by walking
-      CBR/VBR frame lengths; bits_per_sample is null (lossy format).
-
-    Sample DECODE is also real for WAV PCM and FLAC — see
-    ``flaccodec.decode_flac`` / ``decode_audio_samples``; only lossy
-    MP3 sample decode still needs a DSP codec library (``strict`` mode
-    raises where that call belongs).
-    """
-    # ── WAV ──
-    if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        i = 12
-        rate = ch = bits = None
-        n_samples = None
-        while i + 8 <= len(b):
-            tag = b[i:i + 4]
-            size = struct.unpack("<I", b[i + 4:i + 8])[0]
-            if tag == b"fmt " and i + 24 <= len(b):
-                ch, rate = struct.unpack("<HI", b[i + 10:i + 16])
-                bits = struct.unpack("<H", b[i + 22:i + 24])[0]
-            elif tag == b"data" and ch and bits:
-                n_samples = size // max(ch * (bits // 8), 1)
-            i += 8 + size + (size & 1)  # chunks are word-aligned
-        if rate is None:
-            return None
-        return "wav", rate, ch, bits, n_samples
-    # ── FLAC: walk metadata blocks to STREAMINFO (type 0, 34 bytes) ──
-    if len(b) >= 8 and b[:4] == b"fLaC":
-        i = 4
-        while i + 4 <= len(b):
-            hdr = b[i]
-            blen = int.from_bytes(b[i + 1:i + 4], "big")
-            if (hdr & 0x7F) == 0 and i + 4 + 34 <= len(b):
-                si = b[i + 4:i + 38]
-                # bytes 10..17: 20-bit rate, 3-bit ch-1, 5-bit bps-1,
-                # 36-bit total samples (0 = unknown)
-                v = int.from_bytes(si[10:18], "big")
-                rate = v >> 44
-                if rate == 0:
-                    return None
-                n = v & ((1 << 36) - 1)
-                return ("flac", rate, ((v >> 41) & 0x7) + 1,
-                        ((v >> 36) & 0x1F) + 1, n if n else None)
-            if hdr & 0x80:  # last-metadata-block flag
-                break
-            i += 4 + blen
-        return None
-    # ── MP3: optional ID3v2 tag, then MPEG Layer III frames ──
-    i = 0
-    if len(b) >= 10 and b[:3] == b"ID3":
-        size = 0
-        for x in b[6:10]:  # syncsafe 28-bit size
-            size = (size << 7) | (x & 0x7F)
-        i = 10 + size
-    first = _mp3_frame(b, i)
-    if first is not None:
-        rate, ch, spf, _ = first
-        n_frames = 0
-        while True:
-            fr = _mp3_frame(b, i)
-            if fr is None:
-                break
-            n_frames += 1
-            i += fr[3]
-        return "mp3", rate, ch, None, n_frames * spf
-    return None
-
-
-def make_wav(sample_rate: int, n_samples: int, channels: int = 1,
-             bits: int = 16, samples=None) -> bytes:
-    """A minimal valid PCM WAV — silence by default, or real PCM when
-    ``samples`` (int array ``(n_samples, channels)``) is given. The
-    deterministic test feed for the real header parser and the real
-    sample decoder."""
-    if samples is not None:
-        import numpy as np
-
-        arr = np.asarray(samples)
-        assert bits == 16 and arr.shape == (n_samples, channels)
-        data = arr.astype("<i2").tobytes()
-    else:
-        data = b"\x00" * (n_samples * channels * (bits // 8))
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate,
-        sample_rate * channels * (bits // 8), channels * (bits // 8), bits,
-    )
-    chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt \
-        + b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
-
-
-def make_flac(sample_rate: int, n_samples: int, channels: int = 1,
-              bits: int = 16) -> bytes:
-    """A minimal valid FLAC header (magic + STREAMINFO, no frames) —
-    deterministic test feed for the real STREAMINFO parser."""
-    v = ((sample_rate << 44) | ((channels - 1) << 41) | ((bits - 1) << 36)
-         | (n_samples & ((1 << 36) - 1)))
-    si = (struct.pack(">HH", 4096, 4096) + b"\x00" * 6
-          + v.to_bytes(8, "big") + b"\x00" * 16)
-    assert len(si) == 34
-    return b"fLaC" + bytes([0x80]) + (34).to_bytes(3, "big") + si
-
-
-def make_mp3(sample_rate: int = 44100, n_frames: int = 4,
-             channels: int = 1, bitrate_kbps: int = 128,
-             id3: bool = False) -> bytes:
-    """Minimal valid CBR MPEG1 Layer III byte stream (silence payloads,
-    optional empty ID3v2 tag) — deterministic test feed for the real
-    frame-header walker. sample_rate must be one of 44100/48000/32000."""
-    sr_idx = {44100: 0, 48000: 1, 32000: 2}[sample_rate]
-    br_idx = _MP3_BITRATE_V1.index(bitrate_kbps)
-    frame_len = (1152 // 8 * bitrate_kbps * 1000) // sample_rate
-    hdr = bytes([
-        0xFF, 0xFB,  # sync + MPEG1 + Layer III + no CRC
-        (br_idx << 4) | (sr_idx << 2),
-        0xC0 if channels == 1 else 0x00,
-    ])
-    frame = hdr + b"\x00" * (frame_len - 4)
-    out = b""
-    if id3:
-        out += b"ID3\x04\x00\x00\x00\x00\x00\x00"  # empty ID3v2.4 tag
-    return out + frame * n_frames
-
-
-def synth_audio(df, id_col: str = "doc_id", out_col: str = "aud",
-                keep_cols: Optional[list] = None):
-    """Deterministic audio synthesizer cycling all three real header
-    parsers: id % 3 == 0 → PCM WAV, 1 → FLAC STREAMINFO, 2 → CBR MP3
-    (even ids behind an ID3v2 tag, exercising the syncsafe-size skip).
-    Every field is arithmetic in the id, so an oracle predicts the full
-    decoded struct while the engine really parses the bytes."""
-    def synth(i: int) -> bytes:
-        if i % 3 == 0:
-            return make_wav(8000 + (i % 90) * 100, (i % 500) + 1,
-                            channels=(i % 2) + 1, bits=16)
-        if i % 3 == 1:
-            return make_flac(8000 + (i % 40000), ((i * 37) % 100000) + 1,
-                             channels=(i % 8) + 1, bits=16)
-        return make_mp3([44100, 48000, 32000][(i // 3) % 3],
-                        n_frames=(i % 6) + 1, channels=(i % 2) + 1,
-                        bitrate_kbps=128, id3=(i % 2 == 0))
-
-    return _synth_binary_stage(df, synth, out_col, id_col, keep_cols)
-
-
-# ISO BMFF container boxes that hold child boxes directly (no payload
-# before the first child) — the only ones the metadata walk descends into.
-_MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
-
-
-def _mp4_boxes(b: bytes, lo: int, hi: int):
-    """Yield (type, payload_lo, payload_hi) for each top-level box in
-    ``b[lo:hi]``. Handles 64-bit largesize boxes; stops on corruption."""
-    i = lo
-    while i + 8 <= hi:
-        size = struct.unpack(">I", b[i:i + 4])[0]
-        typ = b[i + 4:i + 8]
-        body = i + 8
-        if size == 1:  # 64-bit largesize follows the type
-            if i + 16 > hi:
-                return
-            size = struct.unpack(">Q", b[i + 8:i + 16])[0]
-            body = i + 16
-        elif size == 0:  # box extends to end of enclosing scope
-            size = hi - i
-        if size < 8 or i + size > hi:
-            return
-        yield typ, body, i + size
-        i += size
-
-
-def video_dims(b: bytes) -> Optional[tuple]:
-    """(format, width, height, duration_ms, n_frames) parsed from raw
-    container bytes, or None when the payload is not a recognized video
-    container. Pure ``struct``/bit math — no ffmpeg:
-
-    - MP4/ISO BMFF (``ftyp`` + ``moov``): duration from ``mvhd``
-      (timescale + duration, v0 and v1), width/height from the first
-      video ``tkhd`` (16.16 fixed point), frame count from the first
-      non-empty ``stsz`` sample table.
-    - AVI (RIFF): ``avih`` MainAVIHeader — dwTotalFrames, dwWidth,
-      dwHeight, duration from dwMicroSecPerFrame x frames.
-
-    Frame PIXEL extraction still needs a codec (``strict`` mode in
-    ``frame_sample`` raises where that call belongs).
-    """
-    # ── MP4 / ISO BMFF ──
-    if len(b) >= 12 and b[4:8] == b"ftyp":
-        dur_ms = width = height = n_frames = None
-
-        def walk(lo, hi):
-            nonlocal dur_ms, width, height, n_frames
-            for typ, blo, bhi in _mp4_boxes(b, lo, hi):
-                if typ == b"mvhd" and bhi - blo >= 20:
-                    ver = b[blo]
-                    if ver == 1 and bhi - blo >= 28:
-                        ts, dur = struct.unpack(
-                            ">IQ", b[blo + 20:blo + 32]
-                        )
-                    else:
-                        ts, dur = struct.unpack(
-                            ">II", b[blo + 12:blo + 20]
-                        )
-                    if ts:
-                        dur_ms = dur * 1000 // ts
-                elif typ == b"tkhd" and width is None:
-                    ver = b[blo]
-                    # ver/flags 4 + ctime/mtime/id/rsvd/duration
-                    # (20 at v0, 32 at v1) + rsvd 8 + layer/alt/vol/
-                    # rsvd 8 + matrix 36 → width at 76 (v0) / 88 (v1)
-                    off = blo + (88 if ver == 1 else 76)
-                    if off + 8 <= bhi:
-                        w, h = struct.unpack(">II", b[off:off + 8])
-                        if w and h:  # audio tracks carry 0x0
-                            width, height = w >> 16, h >> 16
-                elif typ == b"stsz" and n_frames is None \
-                        and bhi - blo >= 12:
-                    cnt = struct.unpack(">I", b[blo + 8:blo + 12])[0]
-                    if cnt:
-                        n_frames = cnt
-                elif typ in _MP4_CONTAINERS:
-                    walk(blo, bhi)
-
-        walk(0, len(b))
-        if dur_ms is None and width is None:
-            return None
-        return "mp4", width, height, dur_ms, n_frames
-    # ── AVI ──
-    if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-        # walk RIFF chunks; descend into LIST chunks to find 'avih'
-        def find_avih(lo, hi):
-            i = lo
-            while i + 8 <= hi:
-                tag = b[i:i + 4]
-                size = struct.unpack("<I", b[i + 4:i + 8])[0]
-                if i + 8 + size > hi:
-                    return None
-                if tag == b"avih":
-                    return i + 8
-                if tag == b"LIST":
-                    r = find_avih(i + 12, i + 8 + size)
-                    if r is not None:
-                        return r
-                i += 8 + size + (size & 1)
-            return None
-
-        off = find_avih(12, len(b))
-        if off is None or off + 40 > len(b):
-            return None
-        us_pf, = struct.unpack("<I", b[off:off + 4])
-        frames, = struct.unpack("<I", b[off + 16:off + 20])
-        w, h = struct.unpack("<II", b[off + 32:off + 40])
-        dur_ms = us_pf * frames // 1000 if us_pf else None
-        return "avi", w, h, dur_ms, frames
-    return None
-
-
-def _box(tag: bytes, payload: bytes) -> bytes:
-    return struct.pack(">I", len(payload) + 8) + tag + payload
-
-
-def make_mp4(width: int, height: int, duration_ms: int,
-             n_frames: int, timescale: int = 1000) -> bytes:
-    """A minimal valid ISO BMFF header (ftyp + moov/mvhd + trak/tkhd +
-    mdia/minf/stbl/stsz, no media data) — deterministic test feed for
-    the real box walker. duration_ms must be exact at ``timescale``."""
-    mvhd = (b"\x00" + b"\x00" * 3 + b"\x00" * 8
-            + struct.pack(">II", timescale, duration_ms * timescale // 1000)
-            + b"\x00" * 80)
-    tkhd = (b"\x00" + b"\x00" * 3 + b"\x00" * 72
-            + struct.pack(">II", width << 16, height << 16))
-    stsz = _box(b"stsz", struct.pack(">III", 0, 0, n_frames)
-                + b"\x00" * 4 * n_frames)
-    stbl = _box(b"stbl", stsz)
-    minf = _box(b"minf", stbl)
-    mdia = _box(b"mdia", minf)
-    trak = _box(b"trak", _box(b"tkhd", tkhd) + mdia)
-    moov = _box(b"moov", _box(b"mvhd", mvhd) + trak)
-    return _box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2") + moov
-
-
-def make_avi(width: int, height: int, n_frames: int,
-             us_per_frame: int = 40000) -> bytes:
-    """A minimal valid AVI header (RIFF/AVI LIST hdrl avih, no movi
-    data) — deterministic test feed for the real avih parser."""
-    avih = struct.pack(
-        "<IIIIIIIIII", us_per_frame, 0, 0, 0, n_frames, 0, 1, 0,
-        width, height,
-    ) + b"\x00" * 16
-    hdrl = b"hdrl" + _avi_chunk(b"avih", avih)
-    body = b"AVI " + _avi_chunk(b"LIST", hdrl)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _avi_chunk(tag: bytes, payload: bytes) -> bytes:
-    return tag + struct.pack("<I", len(payload)) + payload \
-        + (b"\x00" if len(payload) & 1 else b"")
-
-
-def make_avi_rgb(width: int, height: int, fills: list,
-                 us_per_frame: int = 40000) -> bytes:
-    """A complete PLAYABLE uncompressed AVI: RIFF → LIST hdrl (avih +
-    LIST strl (strh 'vids'/'DIB ' + strf BITMAPINFOHEADER, BI_RGB
-    24bpp)) → LIST movi with one ``00db`` chunk per frame of raw
-    bottom-up BGR rows padded to the DIB 4-byte stride. Frame ``i`` is
-    constant-filled with byte value ``fills[i]`` — so a decoder's pixel
-    sums are arithmetic in the fill, while the bytes themselves are a
-    bona-fide device-independent bitmap stream."""
-    n_frames = len(fills)
-    stride = (width * 3 + 3) & ~3
-    avih = struct.pack(
-        "<IIIIIIIIII", us_per_frame, stride * height, 0, 0, n_frames,
-        0, 1, stride * height, width, height,
-    ) + b"\x00" * 16
-    strh = (b"vids" + b"DIB " + struct.pack(
-        "<IHHIIIIIIII", 0, 0, 0, 0, us_per_frame, 1_000_000, 0,
-        n_frames, stride * height, 0xFFFFFFFF, 0,
-    ) + struct.pack("<hhhh", 0, 0, width, height))
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, stride * height,
-        0, 0, 0, 0,
-    )
-    strl = b"strl" + _avi_chunk(b"strh", strh) + _avi_chunk(b"strf", strf)
-    hdrl = b"hdrl" + _avi_chunk(b"avih", avih) + _avi_chunk(b"LIST", strl)
-    movi = b"movi" + b"".join(
-        _avi_chunk(b"00db",
-                   (bytes([f]) * (width * 3)
-                    + b"\x00" * (stride - width * 3)) * height)
-        for f in fills
-    )
-    body = b"AVI " + _avi_chunk(b"LIST", hdrl) + _avi_chunk(b"LIST", movi)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def make_avi_rle8(width: int, height: int, fill_indices: list,
-                  palette: list, us_per_frame: int = 40000) -> bytes:
-    """A complete BI_RLE8 COMPRESSED AVI: same RIFF/hdrl scaffolding
-    as ``make_avi_rgb`` but an 8bpp palettized stream
-    (biCompression = 1, RGBQUAD palette after the BITMAPINFOHEADER)
-    whose frame ``f`` is a spec RLE8 encoding (max-255 runs + EOL/EOB
-    escapes) of a constant fill with palette index
-    ``fill_indices[f]`` — decoded pixel sums stay arithmetic in the
-    index while the bytes are a bona-fide RLE8 bitstream."""
-    n_frames = len(fill_indices)
-    npal = len(palette)
-    frame_payloads = [
-        _rle8_encode_fill(width, height, ix) for ix in fill_indices
-    ]
-    max_sz = max(len(p) for p in frame_payloads)
-    avih = struct.pack(
-        "<IIIIIIIIII", us_per_frame, max_sz, 0, 0, n_frames,
-        0, 1, max_sz, width, height,
-    ) + b"\x00" * 16
-    strh = (b"vids" + b"MRLE" + struct.pack(
-        "<IHHIIIIIIII", 0, 0, 0, 0, us_per_frame, 1_000_000, 0,
-        n_frames, max_sz, 0xFFFFFFFF, 0,
-    ) + struct.pack("<hhhh", 0, 0, width, height))
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 8, 1, 0,
-        0, 0, npal, npal,
-    ) + b"".join(
-        struct.pack("<BBBB", bl, g, r, 0) for bl, g, r in palette
-    )
-    strl = b"strl" + _avi_chunk(b"strh", strh) + _avi_chunk(b"strf", strf)
-    hdrl = b"hdrl" + _avi_chunk(b"avih", avih) + _avi_chunk(b"LIST", strl)
-    movi = b"movi" + b"".join(
-        _avi_chunk(b"00dc", p) for p in frame_payloads
-    )
-    body = b"AVI " + _avi_chunk(b"LIST", hdrl) + _avi_chunk(b"LIST", movi)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _rle8_decode(data: bytes, width: int, height: int):
-    """MS-RLE8 bitmap decode (biCompression = BI_RLE8): encoded runs /
-    escapes → palette-index rows in DIB order (row 0 = bottom).
-    Handles all four escapes — end-of-line, end-of-bitmap, delta
-    (skipped pixels stay index 0, per the 'undefined' license the
-    format grants), and word-aligned absolute mode."""
-    rows = [bytearray(width) for _ in range(height)]
-    x = y = 0
-    i = 0
-    while i + 2 <= len(data) and y < height:
-        cnt = data[i]
-        val = data[i + 1]
-        i += 2
-        if cnt > 0:  # encoded run
-            for _ in range(cnt):
-                if x < width:
-                    rows[y][x] = val
-                x += 1
-        elif val == 0:    # end of line
-            y += 1
-            x = 0
-        elif val == 1:    # end of bitmap
-            break
-        elif val == 2:    # delta
-            if i + 2 > len(data):
-                break
-            x += data[i]
-            y += data[i + 1]
-            i += 2
-        else:             # absolute mode: val literal indices
-            for k in range(val):
-                if i + k < len(data) and x < width and y < height:
-                    rows[y][x] = data[i + k]
-                x += 1
-            i += val + (val & 1)  # padded to a word boundary
-    return rows
-
-
-def _rle8_encode_fill(width: int, height: int, index: int) -> bytes:
-    """Constant-fill frame as spec RLE8: max-255 runs per row, EOL
-    after each row, EOB at the end."""
-    row = bytearray()
-    left = width
-    while left > 0:
-        n = min(255, left)
-        row += bytes([n, index])
-        left -= n
-    row += b"\x00\x00"  # EOL
-    return bytes(row) * height + b"\x00\x01"  # EOB
-
-
-def extract_frames_avi(b: bytes):
-    """REAL frame-pixel extraction for AVI video streams: walks the
-    RIFF chunk tree, reads the stream's BITMAPINFOHEADER, then decodes
-    every ``00db``/``00dc`` movi chunk into its pixel bytes (stride
-    padding excluded from counts/sums). Two codecs are decoded for
-    real: uncompressed BI_RGB 24bpp, and BI_RLE8 (the Microsoft
-    run-length codec: 8bpp palette indices, run/absolute/delta/EOL/EOB
-    opcodes — see ``_rle8_decode``), whose indices are mapped through
-    the stream's RGBQUAD palette to the same bottom-up BGR layout as
-    BI_RGB. Returns a list of
-    ``(frame_no, width, height, n_px, px_sum, pixels)`` or ``None``
-    when the stream needs a DSP codec (MPEG/H.264 etc. — the caller
-    decides whether to raise)."""
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-        return None
-
-    def chunks(lo: int, hi: int):
-        i = lo
-        while i + 8 <= hi:
-            tag = b[i:i + 4]
-            ln = struct.unpack("<I", b[i + 4:i + 8])[0]
-            payload_lo = i + 8
-            payload_hi = min(payload_lo + ln, hi)
-            yield tag, payload_lo, payload_hi
-            i = payload_lo + ln + (ln & 1)
-
-    width = height = bitcount = None
-    compression = None
-    palette = None
-    frames = []
-    for tag, lo, hi in chunks(12, len(b)):
-        if tag != b"LIST":
-            continue
-        kind = b[lo:lo + 4]
-        if kind == b"hdrl":
-            for t2, lo2, hi2 in chunks(lo + 4, hi):
-                if t2 == b"LIST" and b[lo2:lo2 + 4] == b"strl":
-                    # the strf's meaning depends on the SIBLING strh's
-                    # fccType: only a 'vids' stream's strf is a
-                    # BITMAPINFOHEADER (an audio stream's WAVEFORMAT
-                    # must not be unpacked as one, whichever stream is
-                    # listed first)
-                    is_video = False
-                    for t3, lo3, hi3 in chunks(lo2 + 4, hi2):
-                        if t3 == b"strh":
-                            is_video = b[lo3:lo3 + 4] == b"vids"
-                        elif t3 == b"strf" and is_video \
-                                and hi3 - lo3 >= 20 and width is None:
-                            (_sz, width, height, _pl, bitcount,
-                             compression) = struct.unpack(
-                                "<IiiHHI", b[lo3:lo3 + 20]
-                            )
-                            if bitcount == 8 and hi3 - lo3 >= 40:
-                                n_colors = struct.unpack(
-                                    "<I", b[lo3 + 32:lo3 + 36]
-                                )[0] or 256
-                                pal_raw = b[lo3 + 40:
-                                            lo3 + 40 + 4 * n_colors]
-                                import numpy as np
-                                palette = np.zeros((256, 3),
-                                                   dtype=np.uint8)
-                                got = len(pal_raw) // 4
-                                palette[:got] = np.frombuffer(
-                                    pal_raw[:got * 4], dtype=np.uint8
-                                ).reshape(-1, 4)[:, :3]  # B,G,R,(rsvd)
-        elif kind == b"movi":
-            rgb = compression == 0 and bitcount == 24
-            rle8 = compression == 1 and bitcount == 8 \
-                and palette is not None
-            if not width or not (rgb or rle8):
-                return None  # stream needs a DSP codec
-            h = abs(height)
-            stride = (width * 3 + 3) & ~3
-            n_px = width * 3 * h
-            for t2, lo2, hi2 in chunks(lo + 4, hi):
-                if t2[2:4] not in (b"db", b"dc"):
-                    continue
-                if rgb:
-                    if hi2 - lo2 < stride * h:
-                        return None  # truncated frame
-                    px_sum = 0
-                    for r in range(h):
-                        row = b[lo2 + r * stride:
-                                lo2 + r * stride + width * 3]
-                        px_sum += sum(row)
-                    frames.append(
-                        (len(frames), width, h, n_px, px_sum,
-                         b[lo2:lo2 + stride * h])
-                    )
-                    continue
-                import numpy as np
-
-                idx_rows = _rle8_decode(b[lo2:hi2], width, h)
-                pad = b"\x00" * (stride - width * 3)
-                px_sum = 0
-                buf = bytearray()
-                for row in idx_rows:  # row 0 = bottom, DIB order
-                    bgr = palette[np.frombuffer(bytes(row),
-                                                dtype=np.uint8)]
-                    px_sum += int(bgr.sum())
-                    buf += bgr.tobytes() + pad
-                frames.append(
-                    (len(frames), width, h, n_px, px_sum, bytes(buf))
-                )
-    if width is None:
-        return None
-    return frames
-
-
-def synth_video(df, id_col: str = "doc_id", out_col: str = "vid",
-                keep_cols: Optional[list] = None):
-    """Deterministic video-container synthesizer: even ids get a valid
-    MP4 (ISO BMFF) header, odd ids a valid AVI header, with
-    width = (id % 640) + 1, height = (id % 480) + 1,
-    n_frames = (id % 30) + 1, and duration_ms = (id % 5000) + 1 for MP4
-    / 40 ms x n_frames for AVI — so an oracle predicts every decoded
-    field arithmetically while the engine really walks the boxes."""
-
-    def synth(i: int) -> bytes:
-        w, h = (i % 640) + 1, (i % 480) + 1
-        nf = (i % 30) + 1
-        if i % 2 == 0:
-            return make_mp4(w, h, (i % 5000) + 1, nf)
-        return make_avi(w, h, nf, us_per_frame=40000)
-
-    return _synth_binary_stage(df, synth, out_col, id_col, keep_cols)
-
-
-def video_metadata(df, binary_col: str = "html", id_col: str = "doc_id",
-                   strict: bool = False):
-    """mapInPandas stage: binary column → typed video metadata struct.
-    MP4 (ISO BMFF box walk) and AVI (avih) container headers are decoded
-    for REAL (``video_dims``); frame PIXEL extraction needs ffmpeg
-    (unavailable here) — ``strict=True`` raises exactly where that codec
-    call belongs for unrecognized payloads, otherwise they yield null
-    metadata."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(buf) if buf is not None else b""
-                dims = video_dims(b)
-                if dims is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "non-MP4/AVI video decode requires ffmpeg "
-                            "(unavailable here)"
-                        )
-                    rows.append((did, len(b), None, None, None, None,
-                                 None))
-                else:
-                    fmt, w, h, dur, nf = dims
-                    rows.append((did, len(b), fmt, w, h, dur, nf))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_bytes", "format", "width", "height",
-                         "duration_ms", "n_frames"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(fn, VIDEO_META_SCHEMA)
-
-
-def audio_metadata(df, binary_col: str = "html", id_col: str = "doc_id",
-                   strict: bool = False):
-    """mapInPandas stage: binary column → typed audio metadata struct.
-    WAV, FLAC STREAMINFO, and MP3 frame headers are decoded for REAL
-    (``audio_dims``); for SAMPLES see ``decode_audio_samples`` (real
-    for WAV PCM and FLAC). ``strict=True`` raises for payloads no
-    header parser recognizes, otherwise they yield null metadata."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(buf) if buf is not None else b""
-                dims = audio_dims(b)
-                if dims is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "non-WAV audio decode requires soundfile/"
-                            "ffmpeg (unavailable here)"
-                        )
-                    rows.append((did, len(b), None, None, None, None,
-                                 None))
-                else:
-                    fmt, rate, ch, bits, n = dims
-                    rows.append((did, len(b), fmt, rate, ch, bits, n))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_bytes", "format", "sample_rate",
-                         "channels", "bits_per_sample", "n_samples"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(fn, AUDIO_META_SCHEMA)
-
-
-def decode_audio_samples(df, binary_col: str = "aud",
-                         id_col: str = "doc_id", strict: bool = False):
-    """mapInPandas stage: audio binary → per-doc DECODED-SAMPLE
-    aggregates (sum, sum of |s|, max) plus stream metadata. PCM WAV
-    and FLAC are decoded for REAL — FLAC through the full bit-level
-    frame codec in ``operators/flaccodec.py`` (constant / verbatim /
-    fixed / LPC subframes, Rice residuals, CRC-verified). Lossy
-    formats (MP3) genuinely need a DSP codec library (huffman + IMDCT)
-    that this sandbox lacks: ``strict=True`` raises exactly where that
-    call belongs, otherwise such rows carry null sample fields.
-
-    Aggregates rather than a per-sample explode keep the stage's
-    output proportional to rows, not samples — the shape a 100 TB
-    audio-stats pass needs; a per-sample variant is one F.explode away
-    from returning the raw arrays instead."""
-    from logparser_spark.operators.flaccodec import (
-        decode_flac,
-        decode_wav_pcm,
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(buf) if buf is not None else b""
-                if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                    meta, arr = decode_wav_pcm(b)
-                    fmt = "wav"
-                elif b[:4] == b"fLaC":
-                    meta, arr = decode_flac(b)
-                    fmt = "flac"
-                else:
-                    if strict:
-                        raise NotImplementedError(
-                            "lossy audio sample decode requires a DSP "
-                            "codec library (unavailable here)"
-                        )
-                    rows.append((did, None, None, None, None, None,
-                                 None, None))
-                    continue
-                rows.append((
-                    did, fmt, meta["sample_rate"], meta["channels"],
-                    arr.shape[0], int(arr.sum()),
-                    int(abs(arr.astype("int64")).sum()),
-                    int(arr.max()) if arr.size else None,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "format", "sample_rate", "channels",
-                         "n_samples", "sum_s", "sum_abs", "max_s"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        fn, AUDIO_SAMPLES_SCHEMA
-    )
-
-
-def synth_audio_pcm(df, id_col: str = "doc_id", out_col: str = "aud",
-                    keep_cols: Optional[list] = None):
-    """Deterministic SAMPLE-BEARING audio synthesizer: even ids → PCM
-    WAV at 16 kHz, odd ids → FLAC at 44.1 kHz cycling subframe kinds
-    (id div 2 mod 4: constant, verbatim, fixed-2, LPC). n = (id % 300)
-    + 1 samples (several 64-sample FLAC frames), channels = (id div 2)
-    % 2 + 1, and sample (t, c) = ((id + 3t + 7c) % 201) - 100 — except
-    constant-subframe docs, whose samples are all (id % 201) - 100. An
-    oracle predicts every decoded-sample aggregate arithmetically
-    while the engine really decodes the bits."""
-    import numpy as np
-
-    from logparser_spark.operators.flaccodec import encode_flac
-
-    def synth(i: int) -> bytes:
-        n = (i % 300) + 1
-        ch = ((i // 2) % 2) + 1
-        if i % 2 == 1 and (i // 2) % 4 == 0:
-            arr = np.full((n, ch), (i % 201) - 100, dtype=np.int64)
-        else:
-            t = np.arange(n)[:, None]
-            c = np.arange(ch)[None, :]
-            arr = (i + 3 * t + 7 * c) % 201 - 100
-        if i % 2 == 0:
-            return make_wav(16000, n, channels=ch, bits=16, samples=arr)
-        kind = ["constant", "verbatim", "fixed2", "lpc1"][(i // 2) % 4]
-        return encode_flac(arr, 44100, bps=16, blocksize=64, kind=kind)
-
-    return _synth_binary_stage(df, synth, out_col, id_col, keep_cols)
-
-
-def frame_sample(df, binary_col: str = "html", id_col: str = "doc_id",
-                 every_n_frames: int = 1, every_n_bytes: int = 4096,
-                 strict: bool = False):
-    """mapInPandas stage: video binary → one row per sampled frame.
-
-    Uncompressed (BI_RGB) AVI payloads are decoded for REAL
-    (``extract_frames_avi``): every ``every_n_frames``-th frame yields
-    its true width/height, pixel count (stride padding excluded), pixel
-    byte sum, and an md5-derived hash of the raw frame bytes. Payloads
-    needing a codec (compressed AVI, MP4 bitstreams) raise in strict
-    mode exactly where the ffmpeg call belongs; otherwise they degrade
-    to byte-window sampling (null pixel fields) so the 1→N fan-out
-    dataflow still runs end to end."""
-    import hashlib
-
-    if every_n_frames <= 0 or every_n_bytes <= 0:
-        raise ValueError("every_n_frames and every_n_bytes must be positive")
-
-    def _hash(window: bytes) -> int:
-        return int.from_bytes(
-            hashlib.md5(window).digest()[:8], "big", signed=False
-        ) >> 1
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(buf) if buf is not None else b""
-                frames = extract_frames_avi(b)
-                if frames is not None:
-                    for fno, w, h, n_px, px_sum, raw in frames:
-                        if fno % every_n_frames:
-                            continue
-                        rows.append((did, fno, w, h, n_px, px_sum,
-                                     _hash(raw)))
-                    continue
-                if strict:
-                    raise NotImplementedError(
-                        "compressed-video frame extraction requires "
-                        "ffmpeg (unavailable)"
-                    )
-                for fno, off in enumerate(range(0, max(len(b), 1),
-                                                every_n_bytes)):
-                    rows.append((did, fno, None, None, None, None,
-                                 _hash(b[off:off + every_n_bytes])))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_no", "width", "height", "n_px",
-                         "px_sum", "frame_hash"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(fn, FRAME_SAMPLE_SCHEMA)
-
-
-def synth_avi_rgb(df, id_col: str = "doc_id", out_col: str = "vid",
-                  keep_cols: Optional[list] = None):
-    """Deterministic uncompressed-AVI synthesizer: per id,
-    width = (id % 8) + 1 (exercising every 4-byte-stride padding case),
-    height = (id % 6) + 1, n_frames = (id % 5) + 1, and frame ``f`` is
-    constant-filled with byte (id * 7 + f * 13) % 256 — so an oracle
-    predicts every extractor output (dims, pixel counts, pixel sums)
-    arithmetically while the engine really walks RIFF chunks and DIB
-    rows."""
-    return _synth_binary_stage(
-        df,
-        lambda i: make_avi_rgb(
-            (i % 8) + 1, (i % 6) + 1,
-            [(i * 7 + f * 13) % 256 for f in range((i % 5) + 1)],
-        ),
-        out_col, id_col, keep_cols,
-    )
-
-
-RLE8_TEST_PALETTE = [(10 * j, 20 * j + 1, 30 * j + 2) for j in range(8)]
-
-
-def synth_avi_rle8(df, id_col: str = "doc_id", out_col: str = "vid",
-                   keep_cols: Optional[list] = None):
-    """Deterministic COMPRESSED-AVI synthesizer (BI_RLE8): per id,
-    width = (id % 8) + 1, height = (id % 6) + 1, n_frames =
-    (id % 5) + 1, frame ``f`` constant-filled with palette index
-    a = (id * 7 + f * 13) % 8 over ``RLE8_TEST_PALETTE`` (entry j =
-    BGR (10j, 20j+1, 30j+2), so a decoded pixel sums to 60a + 3) — an
-    oracle predicts every decoded pixel sum arithmetically while the
-    engine really decodes RLE8 opcodes through the palette."""
-    return _synth_binary_stage(
-        df,
-        lambda i: make_avi_rle8(
-            (i % 8) + 1, (i % 6) + 1,
-            [(i * 7 + f * 13) % 8 for f in range((i % 5) + 1)],
-            RLE8_TEST_PALETTE,
-        ),
-        out_col, id_col, keep_cols,
-    )
-
-
-IMAGE_PIXELS_SCHEMA = (
-    "doc_id long, format string, width int, height int, n_px long, "
-    "px_sum long, px_max int"
-)
-
-
-def decode_image_pixels(df, binary_col: str = "img",
-                        id_col: str = "doc_id", strict: bool = False):
-    """mapInPandas stage: image binary → per-doc DECODED-PIXEL
-    aggregates (count, sum, max) plus dimensions. Three formats are
-    decoded for REAL: baseline grayscale JPEG through
-    ``operators/jpegcodec.py`` (stream-carried canonical Huffman
-    tables, DC prediction, AC run/size with ZRL and EOB, byte
-    unstuffing, restart markers, dequantize → 2-D IDCT); PNG through
-    ``operators/pngcodec.py`` (CRC-verified chunk walk, zlib inflate,
-    all five scanline unfilters, gray/RGB/palette color types); GIF
-    through ``operators/gifcodec.py`` (full variable-width LZW,
-    interlace, palette lookup). Decodes whose codec genuinely isn't
-    buildable here (progressive/color-subsampled JPEG, alpha PNG)
-    follow the audio pattern: ``strict=True`` raises exactly where the
-    codec call belongs, otherwise the row carries null pixel fields.
-
-    Aggregates, not a per-pixel explode: output stays proportional to
-    rows, the shape a 100 TB image-stats pass needs."""
-    from logparser_spark.operators.gifcodec import decode_gif
-    from logparser_spark.operators.jpegcodec import decode_jpeg_auto
-    from logparser_spark.operators.pngcodec import decode_png_pixels
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, buf in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(buf) if buf is not None else b""
-                px = None
-                if b[:2] == b"\xff\xd8":
-                    fmt, px = "jpeg", decode_jpeg_auto(b)
-                elif b[:8] == b"\x89PNG\r\n\x1a\n":
-                    fmt, (_, px) = "png", decode_png_pixels(b)
-                elif b[:6] in (b"GIF87a", b"GIF89a"):
-                    fmt, px = "gif", decode_gif(b)
-                elif b[:2] == b"BM":
-                    fmt, px = "bmp", decode_bmp_pixels(b)
-                if px is not None:
-                    h, w = px.shape[:2]
-                    rows.append((
-                        did, fmt, w, h, int(px.size),
-                        int(px.astype("int64").sum()),
-                        int(px.max()) if px.size else None,
-                    ))
-                    continue
-                if strict:
-                    raise NotImplementedError(
-                        "pixel decode for this format requires an "
-                        "imaging library (unavailable here)"
-                    )
-                rows.append((did, None, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "format", "width", "height", "n_px",
-                         "px_sum", "px_max"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        fn, IMAGE_PIXELS_SCHEMA
-    )
-
-
-def synth_jpeg(df, id_col: str = "doc_id", out_col: str = "img",
-               keep_cols: Optional[list] = None):
-    """Deterministic PIXEL-BEARING JPEG synthesizer: per id a baseline
-    JPEG with width = (id % 21) + 4, height = (id % 13) + 4 (partial
-    edge MCUs in both axes), family id mod 4 — 0 GRAYSCALE, 1
-    3-component 4:4:4 INTERLEAVED, 2 4:2:0 CHROMA-SUBSAMPLED (the
-    real-crawl layout: four Y + Cb + Cr per MCU, floor-mean
-    downsample, replication upsample), 3 PROGRESSIVE (SOF2 multi-scan:
-    point-transformed DC first pass, DC refinement bits, per-component
-    EOBn-coded AC band scans at two successive-approximation levels,
-    correction-bit refinement included); sample (y, x, c) =
-    (id*31 + (y div 16)*17 + (x div 16)*5 + c*43) % 256 — constant per
-    16×16 tile, so every component's DCT spectrum is DC-only, the
-    chroma down/upsample is lossless, and the decode round-trips
-    EXACTLY (q = 1), letting an oracle predict every decoded-sample
-    aggregate arithmetically while the engine runs the full Huffman →
-    dequant → IDCT path (with per-component DC predictors). Every
-    second id carries restart markers (DRI = 2 MCUs) so RSTn handling
-    is exercised at query scale in every family."""
-    import numpy as np
-
-    from logparser_spark.operators.jpegcodec import (
-        encode_jpeg,
-        encode_jpeg_420,
-        encode_jpeg_progressive,
-    )
-
-    def synth(i: int) -> bytes:
-        w = (i % 21) + 4
-        h = (i % 13) + 4
-        y, x = np.mgrid[0:h, 0:w]
-        base = i * 31 + (y // 16) * 17 + (x // 16) * 5
-        ri = 2 if i % 2 == 0 else 0
-        if i % 4 == 0:
-            return encode_jpeg((base % 256).astype(np.uint8),
-                               restart_interval=ri)
-        c = np.arange(3)[None, None, :]
-        img = ((base[:, :, None] + c * 43) % 256).astype(np.uint8)
-        if i % 4 == 1:
-            return encode_jpeg(img, restart_interval=ri)
-        if i % 4 == 2:
-            return encode_jpeg_420(img, restart_interval=ri)
-        return encode_jpeg_progressive(img, restart_interval=ri,
-                                       ac_levels=2)
-
-    return _synth_binary_stage(df, synth, out_col, id_col, keep_cols)
-
-
-IMAGE_TEST_PALETTE = [(10 * j, 20 * j + 1, 30 * j + 2) for j in range(8)]
-
-
-def synth_png_pixels(df, id_col: str = "doc_id", out_col: str = "img",
-                     keep_cols: Optional[list] = None):
-    """Deterministic PIXEL-BEARING PNG synthesizer: per id a PNG with
-    width = (id % 19) + 1, height = (id % 11) + 1, color family
-    id mod 3 (0 = grayscale, 1 = RGB truecolor, 2 = palette over
-    ``IMAGE_TEST_PALETTE``), sample (y, x, c) =
-    (id*13 + y*7 + x*3 + c*11) % 256 for gray/RGB and palette index
-    (id + y*5 + x) % 8 for the palette family. Row ``y`` is written
-    with filter type (id + y) % 5 — every decode exercises all five
-    unfilter paths across the corpus — and every 7th id is written in
-    the Adam7 INTERLACED layout (decoded pixels identical, so the
-    oracle is layout-blind while the decoder walks all 7 passes). PNG
-    is lossless, so an oracle
-    predicts every decoded-pixel aggregate arithmetically while the
-    engine really inflates and unfilters."""
-    import numpy as np
-
-    from logparser_spark.operators.pngcodec import encode_png_pixels
-
-    def synth(i: int) -> bytes:
-        w = (i % 19) + 1
-        h = (i % 11) + 1
-        inter = i % 7 == 0
-        # interlaced streams carry up to h+14 scanlines across passes
-        filters = [(i + y) % 5 for y in range(h + 14)]
-        y, x = np.mgrid[0:h, 0:w]
-        fam = i % 3
-        if fam == 2:
-            idx = ((i + y * 5 + x) % 8).astype(np.uint8)
-            return encode_png_pixels(idx, row_filters=filters,
-                                     palette=IMAGE_TEST_PALETTE,
-                                     interlace=inter)
-        if fam == 0:
-            img = ((i * 13 + y * 7 + x * 3) % 256).astype(np.uint8)
-        else:
-            c = np.arange(3)[None, None, :]
-            img = ((i * 13 + y[:, :, None] * 7 + x[:, :, None] * 3
-                    + c * 11) % 256).astype(np.uint8)
-        return encode_png_pixels(img, row_filters=filters,
-                                 interlace=inter)
-
-    return _synth_binary_stage(df, synth, out_col, id_col, keep_cols)
-
-
-def synth_gif(df, id_col: str = "doc_id", out_col: str = "img",
-              keep_cols: Optional[list] = None):
-    """Deterministic PIXEL-BEARING GIF synthesizer: per id a GIF89a
-    with width = (id % 17) + 1, height = (id % 9) + 1, palette
-    ``IMAGE_TEST_PALETTE`` (entry j decodes to RGB (10j, 20j+1,
-    30j+2)), pixel index (y, x) = (id + 3y + 5x) % 8, and INTERLACED
-    row order for odd ids — the oracle predicts every decoded-pixel
-    aggregate arithmetically while the engine really unpacks
-    variable-width LZW codes."""
-    import numpy as np
-
-    from logparser_spark.operators.gifcodec import encode_gif
-
-    def synth(i: int) -> bytes:
-        w = (i % 17) + 1
-        h = (i % 9) + 1
-        y, x = np.mgrid[0:h, 0:w]
-        idx = ((i + 3 * y + 5 * x) % 8).astype(np.uint8)
-        return encode_gif(idx, IMAGE_TEST_PALETTE, interlace=i % 2 == 1)
-
-    return _synth_binary_stage(df, synth, out_col, id_col, keep_cols)
-
-
-def _rle8_encode_rows(rows) -> bytes:
-    """Arbitrary palette-index rows → spec RLE8 (encoded runs capped
-    at 255, EOL after each row, EOB at the end). Inverse of
-    ``_rle8_decode`` for in-bounds content; used by the BMP/AVI
-    synthesizers to exercise varied-run decode paths."""
-    out = bytearray()
-    for row in rows:
-        x = 0
-        n = len(row)
-        while x < n:
-            run = 1
-            while (x + run < n and row[x + run] == row[x]
-                   and run < 255):
-                run += 1
-            out += bytes([run, row[x]])
-            x += run
-        out += b"\x00\x00"  # EOL
-    out += b"\x00\x01"      # EOB
-    return bytes(out)
-
-
-def make_bmp(pixels, top_down: bool = False,
-             palette: Optional[list] = None, rle8: bool = False) -> bytes:
-    """Pixels → spec-valid .bmp bytes (BITMAPFILEHEADER +
-    BITMAPINFOHEADER). ``pixels`` is (H, W, 3) BGR for 24-bit BI_RGB
-    (``top_down=True`` writes a negative-height top-down DIB), or
-    (H, W) palette indices with ``palette`` = [(b, g, r), ...] for
-    8-bit — BI_RGB rows, or BI_RLE8 when ``rle8=True``. Row order in
-    ``pixels`` is always logical top-down; this function handles the
-    DIB bottom-up flip."""
-    import numpy as np
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    if palette is None:
-        h, w = px.shape[:2]
-        stride = (w * 3 + 3) & ~3
-        rows = px if top_down else px[::-1]
-        data = b"".join(
-            rows[y].tobytes() + b"\x00" * (stride - w * 3)
-            for y in range(h)
-        )
-        bih = struct.pack("<IiiHHIIiiII", 40, w,
-                          -h if top_down else h, 1, 24, 0,
-                          len(data), 0, 0, 0, 0)
-        pal = b""
-    else:
-        h, w = px.shape
-        npal = len(palette)
-        pal = b"".join(struct.pack("<BBBB", bl, g, r, 0)
-                       for bl, g, r in palette)
-        dib_rows = px if top_down else px[::-1]
-        if rle8:
-            if top_down:
-                raise ValueError("bmp: RLE8 must be bottom-up (spec)")
-            data = _rle8_encode_rows([bytes(r) for r in dib_rows])
-            comp = 1
-        else:
-            stride = (w + 3) & ~3
-            data = b"".join(
-                dib_rows[y].tobytes() + b"\x00" * (stride - w)
-                for y in range(h)
-            )
-            comp = 0
-        bih = struct.pack("<IiiHHIIiiII", 40, w,
-                          -h if top_down else h, 1, 8, comp,
-                          len(data), 0, 0, npal, npal)
-    offset = 14 + 40 + len(pal)
-    bfh = struct.pack("<2sIHHI", b"BM", offset + len(data), 0, 0, offset)
-    return bfh + bih + pal + data
-
-
-def decode_bmp_pixels(b: bytes):
-    """BMP bytes → (H, W, 3) uint8 BGR pixel array (logical top-down
-    row order, whatever the DIB orientation). REAL decode for 24-bit
-    BI_RGB (bottom-up and top-down), 8-bit palettized BI_RGB, and
-    8-bit BI_RLE8 (through ``_rle8_decode`` — the same opcode walk the
-    AVI 'MRLE' stream uses). 16/32-bit and BI_RLE4 raise."""
-    import numpy as np
-
-    if b[:2] != b"BM":
-        raise ValueError("bmp: bad signature")
-    (offset,) = struct.unpack("<I", b[10:14])
-    size, w, h_signed, planes, bpp, comp = struct.unpack(
-        "<IiiHHI", b[14:34]
-    )
-    if size < 40:
-        raise ValueError("bmp: pre-BITMAPINFOHEADER DIB")
-    (clr_used,) = struct.unpack("<I", b[46:50])
-    top_down = h_signed < 0
-    h = abs(h_signed)
-    if bpp == 24 and comp == 0:
-        stride = (w * 3 + 3) & ~3
-        need = offset + stride * h
-        if len(b) < need:
-            raise ValueError("bmp: truncated pixel data")
-        rows = np.frombuffer(
-            b[offset:need], dtype=np.uint8
-        ).reshape(h, stride)[:, :w * 3].reshape(h, w, 3)
-        return rows if top_down else rows[::-1]
-    if bpp == 8:
-        npal = clr_used or 256
-        pal_at = 14 + size
-        quads = np.frombuffer(
-            b[pal_at:pal_at + 4 * npal], dtype=np.uint8
-        ).reshape(-1, 4)[:, :3]  # BGR, reserved byte dropped
-        if comp == 0:
-            stride = (w + 3) & ~3
-            idx = np.frombuffer(
-                b[offset:offset + stride * h], dtype=np.uint8
-            ).reshape(h, stride)[:, :w]
-            if not top_down:
-                idx = idx[::-1]
-        elif comp == 1:
-            if top_down:
-                raise ValueError("bmp: top-down RLE8 is invalid")
-            rows = _rle8_decode(b[offset:], w, h)
-            idx = np.array([list(r) for r in rows],
-                           dtype=np.uint8)[::-1]
-        else:
-            raise NotImplementedError(f"bmp: compression {comp}")
-        if int(idx.max(initial=0)) >= quads.shape[0]:
-            raise ValueError("bmp: palette index out of range")
-        return quads[idx]
-    raise NotImplementedError(f"bmp: {bpp}bpp/compression {comp}")
-
-
-def synth_bmp(df, id_col: str = "doc_id", out_col: str = "img",
-              keep_cols: Optional[list] = None):
-    """Deterministic PIXEL-BEARING BMP synthesizer: per id a BMP with
-    width = (id % 14) + 1, height = (id % 7) + 1, family id mod 3
-    (0 = 24-bit bottom-up, 1 = 24-bit TOP-DOWN negative-height DIB,
-    2 = 8-bit BI_RLE8 over ``IMAGE_TEST_PALETTE``). 24-bit sample
-    (y, x, c) = (id*11 + y*5 + x*3 + c*7) % 256 in logical top-down
-    coordinates; RLE8 index (y, x) = (id + 2y + 3x) % 8 (varied runs,
-    so the opcode decode sees real run boundaries). BMP is lossless —
-    the oracle predicts every decoded-pixel aggregate arithmetically
-    while the engine really walks strides, flips DIB rows and decodes
-    RLE8 opcodes."""
-    import numpy as np
-
-    def synth(i: int) -> bytes:
-        w = (i % 14) + 1
-        h = (i % 7) + 1
-        fam = i % 3
-        y, x = np.mgrid[0:h, 0:w]
-        if fam == 2:
-            idx = ((i + 2 * y + 3 * x) % 8).astype(np.uint8)
-            return make_bmp(idx, palette=IMAGE_TEST_PALETTE, rle8=True)
-        c = np.arange(3)[None, None, :]
-        px = ((i * 11 + y[:, :, None] * 5 + x[:, :, None] * 3
-               + c * 7) % 256).astype(np.uint8)
-        return make_bmp(px, top_down=fam == 1)
-
-    return _synth_binary_stage(df, synth, out_col, id_col, keep_cols)
 
 
 # (magic-prefix, mime) in precedence order; RIFF subtypes need the

@@ -45,6 +45,25 @@ class SinkSpec:
         return self.filter
 
 
+def check_sink_names(sinks: list[SinkSpec]) -> None:
+    """Raises ``ValueError`` unless every sink name is non-empty, unique
+    and does not start with ``_``. A name becomes a column
+    (``route_<name>``) and an output directory (``{base}/<name>``): a
+    duplicate overwrites another sink's column or merges two sinks'
+    rows, and ``_`` names the job's own directories (``_agg``,
+    ``_lineage``, ``_staging_*``), which a resume may delete."""
+    seen = set()
+    for s in sinks:
+        if not s.name or s.name.startswith("_"):
+            raise ValueError(
+                f"sink name {s.name!r} must be non-empty and must not "
+                "start with '_'"
+            )
+        if s.name in seen:
+            raise ValueError(f"duplicate sink name {s.name!r}")
+        seen.add(s.name)
+
+
 # The seven fixture sinks (FIXTURES.md §4) exercising every comparator
 # class, boolean op, inversion, line ranges, and the badfmt-only view.
 def fixture_sinks() -> list[SinkSpec]:
@@ -95,6 +114,7 @@ def route_mask(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
     evaluation, no data movement."""
     from pyspark.sql import functions as F
 
+    check_sink_names(sinks)
     out = parsed_df
     bits = F.lit(0).cast("long")
     for i, s in enumerate(sinks):
@@ -117,6 +137,7 @@ def route(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
     :func:`route_mask` / ``aggregate.sink_count_frame`` when the sinks
     feed aggregates.
     """
+    check_sink_names(sinks)
     if persist:
         from pyspark.storagelevel import StorageLevel
 
@@ -163,6 +184,7 @@ def write_routes_single_pass(parsed_df, sinks: list[SinkSpec],
     pass-through cost)."""
     from pyspark.sql import functions as F
 
+    check_sink_names(sinks)
     out = parsed_df.withColumn(
         "sink", F.explode(routed_sink_ids(sinks, spec, parsed_col))
     )

@@ -61,7 +61,12 @@ from typing import Optional
 from urllib.parse import unquote
 
 from ..functions.formats import FormatSpec
-from ..operators.route import SinkSpec, routed_sink_ids, sink_column
+from ..operators.route import (
+    SinkSpec,
+    check_sink_names,
+    routed_sink_ids,
+    sink_column,
+)
 
 LINEAGE_DIR = "_lineage"
 STAGING_PREFIX = "_staging_"
@@ -86,7 +91,10 @@ def fingerprint(spec: FormatSpec, sinks: list[SinkSpec], buckets: int,
                 key_col: str) -> dict:
     """What a lineage entry promises: the format, each sink's name,
     canonical filter and malformed-acceptance flag, the bucket count
-    and the bucket key."""
+    and the bucket key. Raises ``ValueError`` for sink names that
+    :func:`~logparser_spark.operators.route.check_sink_names` rejects."""
+    check_sink_names(sinks)
+
     def filter_text(s: SinkSpec):
         ast = s.ast(spec)
         return ast.to_string(spec) if ast is not None else None

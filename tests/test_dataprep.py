@@ -288,102 +288,6 @@ def test_token_stats_consistency(spark, docs):
     assert ts.filter(F.col("rx_tokens") <= 0).count() == 0
 
 
-def test_image_dims_header_parsers():
-    """Real struct-based header decode for every supported format."""
-    import struct as st
-
-    from logparser_spark.operators.multimodal import image_dims, make_png
-
-    # PNG: synthesized valid file round-trips its dims
-    assert image_dims(make_png(321, 123)) == ("png", 321, 123)
-    # GIF: little-endian logical-screen dims
-    gif = b"GIF89a" + st.pack("<HH", 640, 350) + b"\x00" * 4
-    assert image_dims(gif) == ("gif", 640, 350)
-    # JPEG: APP0 segment then SOF0 (dims live in the SOF, height first)
-    jpg = (b"\xff\xd8"
-           + b"\xff\xe0" + st.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-           + b"\xff\xc0" + st.pack(">H", 11) + b"\x08"
-           + st.pack(">HH", 480, 640) + b"\x03")
-    assert image_dims(jpg) == ("jpeg", 640, 480)
-    # progressive JPEG (SOF2) and a DHT (0xC4) that must be skipped
-    jpg2 = (b"\xff\xd8"
-            + b"\xff\xc4" + st.pack(">H", 4) + b"\x00\x00"
-            + b"\xff\xc2" + st.pack(">H", 11) + b"\x08"
-            + st.pack(">HH", 10, 20) + b"\x01")
-    assert image_dims(jpg2) == ("jpeg", 20, 10)
-    # BMP: negative height means top-down, report abs
-    bmp = (b"BM" + b"\x00" * 16 + st.pack("<ii", 800, -600) + b"\x00" * 8)
-    assert image_dims(bmp) == ("bmp", 800, 600)
-    # non-images -> None
-    assert image_dims(b"") is None
-    assert image_dims(b"<html><body>hi</body></html>") is None
-    assert image_dims(b"\x89PNG\r\n\x1a\nXXXXIDAT") is None  # no IHDR
-
-
-def test_image_metadata_real_decode(spark):
-    from logparser_spark.operators import multimodal
-    from logparser_spark.sources.pages import build_pages_from_documents
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(20)
-    meta = multimodal.image_metadata(
-        multimodal.synth_png(docs), binary_col="img"
-    ).collect()
-    assert len(meta) == 20
-    for r in meta:
-        assert r["format"] == "png" and r["n_bytes"] == 45
-        assert r["width"] == (r["doc_id"] % 640) + 1
-        assert r["height"] == (r["doc_id"] % 480) + 1
-
-    # non-image payloads (html bytes) -> null metadata, no crash
-    pages = build_pages_from_documents(spark, SF_DIR).limit(5)
-    for r in multimodal.image_metadata(pages).collect():
-        assert r["format"] is None and r["width"] is None
-
-    # WAV/FLAC/MP3 headers decode for REAL; sample decode stays stubbed
-    wav = multimodal.make_wav(44100, 2_000, channels=2, bits=16)
-    assert multimodal.audio_dims(wav) == ("wav", 44100, 2, 16, 2_000)
-    assert multimodal.audio_dims(b"ID3\x03mp3data") is None
-
-    flac = multimodal.make_flac(48000, 123_456, channels=2, bits=24)
-    assert multimodal.audio_dims(flac) == ("flac", 48000, 2, 24, 123_456)
-    # unknown total-samples (0) reads as null, not 0
-    assert multimodal.audio_dims(
-        multimodal.make_flac(8000, 0)
-    ) == ("flac", 8000, 1, 16, None)
-
-    # MP3: 4 CBR MPEG1 LayerIII frames = 4*1152 samples; ID3v2 skipped;
-    # stereo + MPEG2 (576 spf) variants exercise both table branches
-    mp3 = multimodal.make_mp3(44100, n_frames=4, channels=1)
-    assert multimodal.audio_dims(mp3) == ("mp3", 44100, 1, None, 4 * 1152)
-    mp3s = multimodal.make_mp3(32000, n_frames=2, channels=2, id3=True)
-    assert multimodal.audio_dims(mp3s) == ("mp3", 32000, 2, None, 2 * 1152)
-    # truncated garbage after a valid sync byte -> rejected
-    assert multimodal.audio_dims(b"\xff\xfb") is None
-
-    wdf = spark.createDataFrame(
-        [(1, bytearray(wav)), (2, bytearray(flac)), (3, bytearray(mp3))],
-        "doc_id LONG, snd BINARY",
-    )
-    got = {r["doc_id"]: r for r in
-           multimodal.audio_metadata(wdf, binary_col="snd").collect()}
-    w = got[1]
-    assert (w["format"], w["sample_rate"], w["channels"],
-            w["bits_per_sample"], w["n_samples"]) == ("wav", 44100, 2, 16,
-                                                      2_000)
-    assert (got[2]["format"], got[2]["n_samples"]) == ("flac", 123_456)
-    assert (got[3]["format"], got[3]["sample_rate"],
-            got[3]["n_samples"]) == ("mp3", 44100, 4608)
-    with pytest.raises(Exception) as exc:
-        multimodal.audio_metadata(pages, strict=True).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError
-    )
-
-    frames = multimodal.frame_sample(pages)
-    per_doc = frames.groupBy("doc_id").count().collect()
-    assert all(r["count"] >= 1 for r in per_doc)
-
-
 def test_repetition_stats_edges(spark):
     """Word/2-gram repetition: hand-computed docs incl. empty and
     single-word edges; plan must stay shuffle-free (per-row arrays)."""
@@ -438,156 +342,6 @@ def test_pii_scrub_patterns(spark):
         s = r["scrubbed_text"]
         assert "<EMAIL>" in s and "<IP>" in s and "<SSN>" in s
         assert "@example.com" not in s
-
-
-def test_video_dims_header_parsers(spark):
-    """Real struct-based container decode: MP4 box walk + AVI avih."""
-    import struct as st
-
-    from logparser_spark.operators import multimodal
-    from logparser_spark.operators.multimodal import (
-        make_avi,
-        make_mp4,
-        video_dims,
-    )
-
-    # MP4: synthesized valid boxes round-trip every field
-    assert video_dims(make_mp4(640, 360, 12345, 42)) == \
-        ("mp4", 640, 360, 12345, 42)
-    # v1 mvhd (64-bit duration) + v1 tkhd offsets
-    mvhd1 = (b"\x01" + b"\x00" * 3 + b"\x00" * 16
-             + st.pack(">IQ", 90000, 90 * 90000) + b"\x00" * 80)
-    tkhd1 = (b"\x01" + b"\x00" * 3 + b"\x00" * 84
-             + st.pack(">II", 1280 << 16, 720 << 16))
-    box = multimodal._box
-    moov = box(b"moov", box(b"mvhd", mvhd1)
-               + box(b"trak", box(b"tkhd", tkhd1)))
-    b1 = box(b"ftyp", b"isom") + moov
-    assert video_dims(b1) == ("mp4", 1280, 720, 90_000, None)
-    # audio-only tkhd (0x0 dims) is skipped, not reported as 0x0
-    tkhd_a = (b"\x00" + b"\x00" * 3 + b"\x00" * 72 + b"\x00" * 8)
-    moov2 = box(b"moov", box(b"trak", box(b"tkhd", tkhd_a))
-                + box(b"trak", box(b"tkhd",
-                                   b"\x00" * 76
-                                   + st.pack(">II", 320 << 16,
-                                             240 << 16))))
-    assert video_dims(box(b"ftyp", b"mp42") + moov2) == \
-        ("mp4", 320, 240, None, None)
-    # AVI: avih fields incl. duration from us/frame
-    assert video_dims(make_avi(320, 240, 250, us_per_frame=40000)) == \
-        ("avi", 320, 240, 10_000, 250)
-    # non-videos -> None; truncation never crashes
-    assert video_dims(b"") is None
-    assert video_dims(b"RIFF\x00\x00\x00\x00WAVE") is None
-    full = make_mp4(64, 48, 100, 3)
-    for cut in (4, 11, 20, 40, len(full) - 1):
-        video_dims(full[:cut])  # must not raise
-    assert video_dims(b"\x00" * 4 + b"ftyp") is None
-
-    # the Spark stage: synth per-doc containers, decode them back
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(24)
-    meta = multimodal.video_metadata(
-        multimodal.synth_video(docs), binary_col="vid"
-    ).collect()
-    assert len(meta) == 24
-    for r in meta:
-        i = r["doc_id"]
-        assert r["width"] == (i % 640) + 1
-        assert r["height"] == (i % 480) + 1
-        assert r["n_frames"] == (i % 30) + 1
-        if i % 2 == 0:
-            assert r["format"] == "mp4"
-            assert r["duration_ms"] == (i % 5000) + 1
-            assert r["n_bytes"] == 284 + 4 * ((i % 30) + 1)
-        else:
-            assert r["format"] == "avi"
-            assert r["duration_ms"] == 40 * ((i % 30) + 1)
-            assert r["n_bytes"] == 88
-
-    # strict mode raises where the ffmpeg call belongs
-    from logparser_spark.sources.pages import build_pages_from_documents
-
-    pages = build_pages_from_documents(spark, SF_DIR).limit(3)
-    with pytest.raises(Exception) as exc:
-        multimodal.video_metadata(pages, strict=True).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError
-    )
-
-
-def test_avi_frame_extraction(spark):
-    """REAL uncompressed-AVI pixel decode: RIFF walk → DIB rows.
-
-    Every expectation is arithmetic in the synthesis parameters; the
-    stride-padding exclusion is what a naive whole-chunk sum would get
-    wrong (widths 1,2,3,5,6,7 all pad)."""
-    import struct as st
-
-    from logparser_spark.operators import multimodal
-    from logparser_spark.operators.multimodal import (
-        extract_frames_avi,
-        make_avi,
-        make_avi_rgb,
-    )
-
-    # exact pixel sums for every stride-padding case
-    for w in range(1, 9):
-        fills = [0, 17, 255]
-        frames = extract_frames_avi(make_avi_rgb(w, 3, fills))
-        assert [f[:5] for f in frames] == [
-            (i, w, 3, 3 * w * 3, fill * 3 * w * 3)
-            for i, fill in enumerate(fills)
-        ]
-        # hash distinguishes distinct fills
-        hashes = {f[5] for f in frames}
-        assert len(hashes) == 3
-
-    # BI_RGB stream with an empty movi decodes to zero frames;
-    # a header-only AVI with NO strf can't prove it's uncompressed,
-    # so it routes to the codec path (None)
-    assert extract_frames_avi(make_avi_rgb(32, 24, [])) == []
-    assert extract_frames_avi(make_avi(32, 24, 5)) is None
-    # compressed stream (biCompression != 0) is None -> codec path
-    b = make_avi_rgb(4, 2, [9])
-    comp = b.replace(st.pack("<IiiHHI", 40, 4, 2, 1, 24, 0),
-                     st.pack("<IiiHHI", 40, 4, 2, 1, 24, 1), 1)
-    assert extract_frames_avi(comp) is None
-    # truncated frame payload is None, never a crash
-    assert extract_frames_avi(b[:-5]) is None
-    assert extract_frames_avi(b"") is None
-
-    # the Spark stage end to end: frame rows match the synthesis math
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(20)
-    rows = multimodal.frame_sample(
-        multimodal.synth_avi_rgb(docs), binary_col="vid"
-    ).collect()
-    assert len(rows) == sum((i % 5) + 1 for i in range(20))
-    for r in rows:
-        i, f = r["doc_id"], r["frame_no"]
-        w, h = (i % 8) + 1, (i % 6) + 1
-        assert (r["width"], r["height"]) == (w, h)
-        assert r["n_px"] == 3 * w * h
-        assert r["px_sum"] == ((i * 7 + f * 13) % 256) * 3 * w * h
-
-    # every_n_frames sampling keeps only multiples
-    sampled = multimodal.frame_sample(
-        multimodal.synth_avi_rgb(docs), binary_col="vid", every_n_frames=2
-    ).collect()
-    assert all(r["frame_no"] % 2 == 0 for r in sampled)
-    assert len(sampled) == sum(((i % 5) + 2) // 2 for i in range(20))
-
-    # compressed/unknown payloads: strict raises where ffmpeg belongs
-    from logparser_spark.sources.pages import build_pages_from_documents
-
-    pages = build_pages_from_documents(spark, SF_DIR).limit(3)
-    with pytest.raises(Exception) as exc:
-        multimodal.frame_sample(pages, strict=True).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError
-    )
-    # non-strict fallback still fans out >=1 row per doc with null px
-    fb = multimodal.frame_sample(pages).collect()
-    assert len(fb) >= 3 and all(r["px_sum"] is None for r in fb)
 
 
 def test_decode_html_roundtrip(spark):
@@ -1156,112 +910,6 @@ def test_robots_parse_and_filter(spark):
             for r in weburl.robots_filter(
                 np, weburl.parse_robots(robots)).collect()}
     assert gotn == {8: True, 9: True}
-
-
-def test_rle8_opcodes_hand_built():
-    """MS-RLE8 decode against a HAND-WRITTEN opcode stream (runs,
-    word-padded absolute mode, delta skip, EOL, EOB) — independent of
-    the fill-run encoder, so the decoder is pinned to the spec."""
-    from logparser_spark.operators.multimodal import _rle8_decode
-
-    data = bytes([
-        2, 1,           # run: 2 pixels of index 1
-        0, 3, 4, 5, 6,  # absolute mode: 3 literal indices...
-        0,              # ...padded to a word boundary
-        0, 0,           # EOL -> next row up
-        0, 2, 2, 0,     # delta: skip 2 right (stay on row)
-        3, 7,           # run: 3 pixels of index 7
-        0, 0,           # EOL
-        0, 1,           # EOB
-    ])
-    rows = _rle8_decode(data, 5, 2)
-    assert bytes(rows[0]) == bytes([1, 1, 4, 5, 6])   # bottom row
-    assert bytes(rows[1]) == bytes([0, 0, 7, 7, 7])   # delta left 0s
-    # truncated stream: partial decode (the cut-off absolute byte
-    # stays index 0), never a crash
-    rows = _rle8_decode(data[:6], 5, 2)
-    assert bytes(rows[0]) == bytes([1, 1, 4, 5, 0])
-    assert bytes(rows[1]) == bytes(5)
-    # early EOB leaves the rest at index 0
-    rows = _rle8_decode(bytes([1, 9, 0, 1, 5, 5]), 3, 2)
-    assert bytes(rows[0]) == bytes([9, 0, 0])
-    assert bytes(rows[1]) == bytes(3)
-
-
-def test_rle8_avi_roundtrip():
-    """BI_RLE8 AVI end to end: encoder emits spec opcodes (incl. the
-    max-255 run split at width 300), extractor decodes through the
-    palette; pixel sums arithmetic in the palette entry."""
-    from logparser_spark.operators.multimodal import (
-        RLE8_TEST_PALETTE,
-        extract_frames_avi,
-        make_avi_rle8,
-    )
-
-    for w, h in [(1, 1), (5, 3), (8, 6), (300, 2)]:
-        idxs = [0, 3, 7]
-        frames = extract_frames_avi(
-            make_avi_rle8(w, h, idxs, RLE8_TEST_PALETTE)
-        )
-        assert frames is not None and len(frames) == 3
-        for f, (fno, fw, fh, n_px, px_sum, raw) in enumerate(frames):
-            a = idxs[f]
-            assert (fno, fw, fh, n_px) == (f, w, h, 3 * w * h)
-            assert px_sum == (60 * a + 3) * w * h
-            assert len(raw) == ((w * 3 + 3) & ~3) * h
-    # an 8bpp RLE stream with NO palette bytes routes to the codec path
-    import struct as st
-
-    b = make_avi_rle8(4, 2, [1], RLE8_TEST_PALETTE)
-    strf_hdr = st.pack("<IiiHHIIiiII", 40, 4, 2, 1, 8, 1, 0, 0, 0, 8, 8)
-    broken = b.replace(
-        st.pack("<I", len(strf_hdr) + 32) + strf_hdr,
-        st.pack("<I", len(strf_hdr)) + strf_hdr, 1,
-    )
-    # (palette truncated out of the chunk -> still decodes via the
-    # zero-filled remainder, or None; must never crash)
-    extract_frames_avi(broken)
-
-
-def test_avi_multistream_video_strf_wins(spark):
-    """A second (audio) stream's strf must not shadow the video
-    BITMAPINFOHEADER: splice an audio strl AFTER the video one and
-    assert frames still decode identically."""
-    import struct as st
-
-    from logparser_spark.operators.multimodal import (
-        _avi_chunk,
-        extract_frames_avi,
-        make_avi_rgb,
-    )
-
-    base = make_avi_rgb(5, 3, [7, 200])
-    want = [f[:5] for f in extract_frames_avi(base)]
-
-    # audio strl: strh 'auds' + a WAVEFORMATEX-ish strf whose leading
-    # bytes would parse as (compression != 0) garbage if mis-taken
-    audio_strf = st.pack("<HHIIHH", 1, 2, 44100, 176400, 4, 16)
-    audio_strl = b"strl" + _avi_chunk(b"strh", b"auds" + b"\x00" * 52) \
-        + _avi_chunk(b"strf", audio_strf + b"\x00" * 8)
-    marker = b"hdrl"
-    i = base.index(marker)
-    # append the audio strl inside the hdrl LIST: grow the LIST size
-    hdrl_size_at = i - 4
-    hdrl_size = st.unpack("<I", base[hdrl_size_at:i])[0]
-    hdrl_end = i + hdrl_size
-    patched = (
-        base[:hdrl_size_at]
-        + st.pack("<I", hdrl_size + 8 + len(audio_strl) + (len(audio_strl) & 1))
-        + base[i:hdrl_end]
-        + _avi_chunk(b"LIST", audio_strl)
-        + base[hdrl_end:]
-    )
-    # fix the RIFF size too
-    grown = len(patched) - 8
-    patched = patched[:4] + st.pack("<I", grown) + patched[8:]
-
-    got = extract_frames_avi(patched)
-    assert got is not None and [f[:5] for f in got] == want
 
 
 def test_tfidf_top_terms_ranking_and_model_reuse(spark):

@@ -1,0 +1,32 @@
+"""The driver registry stays whole: every query has its DuckDB oracle and
+every oracle its query, the priority head names registered queries, and
+the tools that read the registry still import. No Spark session."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+import __spark_entry__ as E
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_queries_and_oracles_have_the_same_names():
+    q, o = set(E.queries()), set(E.oracle_sql())
+    assert q == o, {"no oracle": sorted(q - o), "no query": sorted(o - q)}
+
+
+def test_driver_head_names_are_registered():
+    missing = [n for n in E._DRIVER_HEAD if n not in E._all_queries()]
+    assert not missing
+    assert list(E.queries())[:len(E._DRIVER_HEAD)] == E._DRIVER_HEAD
+
+
+def test_registry_tools_import():
+    for name in ("check_oracle", "gen_manifest"):
+        spec = importlib.util.spec_from_file_location(
+            f"tools_{name}", os.path.join(ROOT, "tools", f"{name}.py"))
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        assert callable(mod.main)

@@ -33,15 +33,6 @@ def test_at_most_one_python_stage_per_query(query_plans):
     """The parse is the only Python stage and must be planned ONCE —
     two ArrowEvalPython/MapInArrow nodes means the optimizer cloned the
     UDF (the filter+project pushdown bug) and every line parses twice."""
-    # multimodal_meta / video_meta / video_frames(_rle) / audio_meta /
-    # audio_samples / image_pixels_jpeg intentionally chain TWO
-    # mapInPandas stages: the synth_png / synth_video / synth_avi_rgb /
-    # synth_avi_rle8 / synth_audio(_pcm) / synth_jpeg test feed (stands
-    # in for a data source) + the real decoder.
-    allowed_two = {"multimodal_meta", "video_meta", "video_frames",
-                   "video_frames_rle", "audio_meta", "audio_samples",
-                   "image_pixels_jpeg", "image_pixels_png",
-                   "image_pixels_gif", "image_pixels_bmp"}
     # incremental_dedup_bloom intentionally plans the digest+bloom UDF
     # in BOTH union branches (bypass + verify): a deliberate
     # scan-twice / shuffle-only-candidates trade — the map-only stage
@@ -54,7 +45,7 @@ def test_at_most_one_python_stage_per_query(query_plans):
         if (p.count("ArrowEvalPython") > 1
             and name not in allowed_two_arrow)
         or p.count("MapInArrow") > 1
-        or (p.count("MapInPandas") > 1 and name not in allowed_two)
+        or p.count("MapInPandas") > 1
     }
     assert not bad, f"queries planning >1 Python stage: {bad}"
 

@@ -1,0 +1,103 @@
+"""Sink names are checked before any routing: duplicate, empty or
+``_``-prefixed names raise ``ValueError`` in ``route_mask``, ``route``,
+``write_routes_single_pass``, ``route_checkpointed`` and ``run_job``.
+
+A name is a column (``route_<name>``) and an output directory
+(``{base}/<name>``). Two sinks named ``dup`` would share one column in
+``route_mask`` (the later predicate wins) and one directory in
+``route_checkpointed`` (both sinks' rows merged), and a sink named
+``_staging_x`` would be deleted by the next resume's staging cleanup
+while its lineage says it is done."""
+
+from __future__ import annotations
+
+import os
+import shutil
+import tempfile
+
+import pytest
+
+from logparser_spark.functions.formats import DEFAULT_FORMAT, compile_format
+from logparser_spark.operators.route import (
+    SinkSpec,
+    check_sink_names,
+    fixture_sinks,
+)
+
+SPEC = compile_format(DEFAULT_FORMAT)
+SAMPLE = os.path.join(os.path.dirname(__file__), "data", "sample.log")
+
+BAD = {
+    "duplicate": [SinkSpec("dup", "Level EQ INFO"),
+                  SinkSpec("dup", "Level EQ TRACE")],
+    "empty": [SinkSpec("", "Level EQ INFO")],
+    "agg": [SinkSpec("ok", None), SinkSpec("_agg", "Level EQ INFO")],
+    "staging": [SinkSpec("_staging_x", "Level EQ INFO")],
+}
+MESSAGE = "duplicate sink name|must be non-empty and must not start with '_'"
+
+
+@pytest.fixture(scope="module")
+def parsed(spark):
+    from logparser_spark.operators.parse import explode_lines, parse_lines
+
+    with open(SAMPLE) as f:
+        pages = spark.createDataFrame([(0, f.read())], "doc_id long, text string")
+    return parse_lines(explode_lines(pages, keep_cols=["doc_id"]), SPEC)
+
+
+@pytest.fixture()
+def base():
+    d = tempfile.mkdtemp(prefix="sinknames_")
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_valid_names_pass():
+    check_sink_names(fixture_sinks())
+    check_sink_names([SinkSpec("a_", None), SinkSpec("a", None),
+                      SinkSpec("x_agg", None)])
+    check_sink_names([])
+
+
+@pytest.mark.parametrize("case", sorted(BAD))
+def test_route_mask_and_route_reject(parsed, base, case):
+    from logparser_spark.operators.route import (
+        route,
+        route_mask,
+        write_routes_single_pass,
+    )
+
+    with pytest.raises(ValueError, match=MESSAGE):
+        route_mask(parsed, BAD[case], SPEC)
+    with pytest.raises(ValueError, match=MESSAGE):
+        route(parsed, BAD[case], SPEC, persist=False)
+    with pytest.raises(ValueError, match=MESSAGE):
+        write_routes_single_pass(parsed, BAD[case], SPEC, f"{base}/out")
+    assert os.listdir(base) == []
+
+
+@pytest.mark.parametrize("case", sorted(BAD))
+def test_route_checkpointed_rejects_before_writing(parsed, base, case):
+    from logparser_spark.plans.checkpoint import route_checkpointed
+
+    with pytest.raises(ValueError, match=MESSAGE):
+        route_checkpointed(parsed, BAD[case], SPEC, base, buckets=4)
+    assert os.listdir(base) == []
+
+
+@pytest.mark.parametrize("case", sorted(BAD))
+def test_run_job_rejects_before_reading_input(spark, base, case):
+    """The input does not exist: the job must raise on the sink names
+    before it looks at the input at all."""
+    from logparser_spark.plans.job import JobConfig, run_job
+
+    cfg = JobConfig.from_dict({
+        "input": f"parquet:{base}/missing",
+        "output": f"{base}/out",
+        "sinks": [{"name": s.name, "filter": s.filter} for s in BAD[case]],
+        "buckets": 4,
+    })
+    with pytest.raises(ValueError, match=MESSAGE):
+        run_job(spark, cfg)
+    assert os.listdir(base) == []
