@@ -24,14 +24,14 @@ The companion encoders (``encode_jpeg``, ``encode_jpeg_420``,
 ``encode_jpeg_progressive``) emit
 spec-valid streams with their own canonical tables; constant blocks
 quantize to a DC-only spectrum whose IDCT is exact integer, which is
-what lets the oracle predict decoded pixels arithmetically while the
+what lets a test predict decoded pixels exactly while the
 decoder runs the full general path (Huffman → dequant → IDCT). AC
 coefficients, ZRL runs and restart markers are exercised by hand-built
 streams in tests/test_jpeg.py.
 
-Scale shape: called only inside Arrow-batched ``mapInPandas`` stages
-(``multimodal.decode_image_pixels``) — map-only, the same codec-slot
-budget as the FLAC/RLE8 decoders.
+No package module calls this codec; its pixel-decode Spark stage and
+driver query were removed with the rest of the media stack, and only
+tests/test_jpeg.py exercises it.
 """
 
 from __future__ import annotations

@@ -333,39 +333,6 @@ def test_color_components_carry_independent_dc_predictors():
     assert np.array_equal(decode_jpeg(encode_jpeg(img)), img)
 
 
-def test_synth_jpeg_decode_pixels_stage(spark):
-    """Spark-side plumbing: synth → decode over Arrow batches matches
-    the closed-form pixel aggregates for every doc id shape."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators import multimodal
-
-    docs = spark.range(0, 64).select(F.col("id").alias("doc_id"))
-    got = {
-        r["doc_id"]: r
-        for r in multimodal.decode_image_pixels(
-            multimodal.synth_jpeg(docs), binary_col="img", strict=True
-        ).collect()
-    }
-    assert len(got) == 64
-    for did in range(64):
-        w = (did % 21) + 4
-        h = (did % 13) + 4
-        y, x = np.mgrid[0:h, 0:w]
-        base = did * 31 + (y // 16) * 17 + (x // 16) * 5
-        if did % 4 == 0:
-            img = (base % 256).astype(np.uint8)
-        else:
-            c = np.arange(3)[None, None, :]
-            img = ((base[:, :, None] + c * 43) % 256).astype(np.uint8)
-        r = got[did]
-        assert r["format"] == "jpeg"
-        assert (r["width"], r["height"]) == (img.shape[1], img.shape[0])
-        assert r["n_px"] == img.size
-        assert r["px_sum"] == int(img.astype(np.int64).sum())
-        assert r["px_max"] == int(img.max())
-
-
 def _tile_constant_420(did: int) -> np.ndarray:
     w = (did % 37) + 4
     h = (did % 23) + 4
