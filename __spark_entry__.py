@@ -2026,21 +2026,6 @@ def q_phrase_search(spark, sf_dir):
     return invindex.phrase_search(idx, "batch", "batch")
 
 
-def q_warc_gz_roundtrip(spark, sf_dir):
-    """Gzipped-WARC round-trip (the actual Common Crawl transport:
-    one gzip member per record): render the same corrupted record
-    stream as warc_roundtrip, compress each record as its own
-    deterministic member, parse the member chain back with the
-    zlib-streaming splitter. Output — and therefore the oracle — is
-    identical to the plain-WARC round-trip: compression must be
-    invisible to record semantics."""
-    from logparser_spark.sources import warc_gz
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    files = warc_gz.synth_warc_gz_files(docs, per_file=8)
-    return warc_gz.parse_warc_gz(files)
-
-
 def _outlink_pages(docs):
     """Shared synth for the outlink/web-graph queries: pages whose
     hrefs are all arithmetic in doc_id (see q_outlink_degrees)."""
@@ -4113,9 +4098,6 @@ def _dataprep_sql() -> dict[str, str]:
       (doc_id % 17 <> 0) AS valid
     FROM documents"""
 
-    # gzip is invisible to record semantics by design: same oracle
-    sqls["warc_gz_roundtrip"] = sqls["warc_roundtrip"]
-
     sqls["wet_records"] = """
     SELECT (doc_id // 8)::BIGINT AS file_id,
       (doc_id % 8)::INT AS rec_no,
@@ -5471,7 +5453,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tag_keywords": q_tag_keywords,
         "sitemap_urls": q_sitemap_urls,
         "warc_roundtrip": q_warc_roundtrip,
-        "warc_gz_roundtrip": q_warc_gz_roundtrip,
         "wet_records": q_wet_records,
         "term_search": q_term_search,
         "bm25_topk": q_bm25_topk,

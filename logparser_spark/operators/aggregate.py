@@ -97,11 +97,14 @@ def sink_count_frame(parsed_df, sinks, spec: FormatSpec, spark,
                      parsed_col: str = "parsed"):
     """All sink counts in ONE pass: sum each route mask column. No persist
     needed, single parse-UDF evaluation, one job — the scalable shape when
-    only counts are required."""
+    only counts are required. Each sum is aliased by sink name, so the
+    names :func:`~logparser_spark.operators.route.check_sink_names`
+    rejects raise ``ValueError``."""
     from pyspark.sql import functions as F
 
-    from .route import sink_column
+    from .route import check_sink_names, sink_column
 
+    check_sink_names(sinks)
     aggs = [
         F.sum(sink_column(s, spec, parsed_col).cast("long")).alias(s.name)
         for s in sinks

@@ -111,10 +111,19 @@ def route_mask(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
                parsed_col: str = "parsed"):
     """Single-pass: adds ``route_<name>`` boolean per sink and a packed
     ``route_bits`` long (bit i = sink i). One projection, one parse-UDF
-    evaluation, no data movement."""
+    evaluation, no data movement.
+
+    Raises ``ValueError`` for the names :func:`check_sink_names` rejects
+    and for a sink named ``bits``, whose ``route_bits`` column the packed
+    mask would overwrite."""
     from pyspark.sql import functions as F
 
     check_sink_names(sinks)
+    if any(s.name == "bits" for s in sinks):
+        raise ValueError(
+            "sink name 'bits' collides with route_mask's packed "
+            "'route_bits' column"
+        )
     out = parsed_df
     bits = F.lit(0).cast("long")
     for i, s in enumerate(sinks):

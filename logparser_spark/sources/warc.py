@@ -111,8 +111,7 @@ def synth_warc_files(docs, per_file: int = 8, id_col: str = "doc_id",
     ``per_file`` small (≤ ~100). A real WARC segment holds ~10^5
     records/GB; at that width the collect_list rows become GB-sized
     and the groupBy shuffles whole files as single rows. Real
-    segments are READ (``parse_warc`` / ``read_warc_gz_files``),
-    never synthesized this way."""
+    segments are READ (``parse_warc``), never synthesized this way."""
     from pyspark.sql import functions as F
 
     recs = synth_warc_records(docs, id_col=id_col, text_col=text_col)

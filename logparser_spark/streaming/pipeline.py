@@ -22,7 +22,7 @@ from __future__ import annotations
 from typing import Optional
 
 from ..functions.formats import FormatSpec
-from ..operators.route import SinkSpec, sink_column
+from ..operators.route import SinkSpec, check_sink_names, sink_column
 
 
 def stream_pages(spark, path: str, schema=None, max_files: int = 10):
@@ -73,7 +73,12 @@ def make_batch_writer(sinks: list[SinkSpec], spec: FormatSpec,
     ``__batch_id`` with DYNAMIC partition overwrite — a replayed batch
     id atomically replaces exactly its own partition, leaving every
     other batch's data untouched. Readers need no dedup.
+
+    Sink names are checked here, when the writer is built (so
+    ``route_stream`` raises before the stream starts): a duplicate name
+    would make one sink's overwrite replace another's rows.
     """
+    check_sink_names(sinks)
 
     def write_batch(batch_df, batch_id: int):
         from pyspark.sql import functions as F

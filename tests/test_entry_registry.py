@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import shutil
+import sys
 
 import __spark_entry__ as E
 
@@ -30,3 +32,20 @@ def test_registry_tools_import():
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
         assert callable(mod.main)
+
+
+def test_check_oracle_puts_its_own_checkout_first(tmp_path):
+    """Run from any checkout, check_oracle imports that checkout's
+    ``__spark_entry__``: the root it puts on ``sys.path`` is the parent
+    of its own ``tools/`` directory."""
+    (tmp_path / "tools").mkdir()
+    copy = shutil.copy(os.path.join(ROOT, "tools", "check_oracle.py"),
+                       tmp_path / "tools")
+    spec = importlib.util.spec_from_file_location("tools_check_oracle_copy",
+                                                  copy)
+    saved = list(sys.path)
+    try:
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
+        assert sys.path[0] == str(tmp_path)
+    finally:
+        sys.path[:] = saved

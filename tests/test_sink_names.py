@@ -1,13 +1,17 @@
 """Sink names are checked before any routing: duplicate, empty or
 ``_``-prefixed names raise ``ValueError`` in ``route_mask``, ``route``,
-``write_routes_single_pass``, ``route_checkpointed`` and ``run_job``.
+``write_routes_single_pass``, ``route_checkpointed``, ``run_job``, the
+streaming batch writer and ``sink_count_frame``.
 
 A name is a column (``route_<name>``) and an output directory
 (``{base}/<name>``). Two sinks named ``dup`` would share one column in
-``route_mask`` (the later predicate wins) and one directory in
-``route_checkpointed`` (both sinks' rows merged), and a sink named
-``_staging_x`` would be deleted by the next resume's staging cleanup
-while its lineage says it is done."""
+``route_mask`` (the later predicate wins), one directory in
+``route_checkpointed`` (both sinks' rows merged) and in the streaming
+writer (the second sink's overwrite replaces the first's rows), and one
+sum alias in ``sink_count_frame`` (both read the first sink's count). A
+sink named ``_staging_x`` would be deleted by the next resume's staging
+cleanup while its lineage says it is done. ``route_mask`` also rejects
+``bits``: ``route_bits`` is its packed mask column."""
 
 from __future__ import annotations
 
@@ -101,3 +105,48 @@ def test_run_job_rejects_before_reading_input(spark, base, case):
     with pytest.raises(ValueError, match=MESSAGE):
         run_job(spark, cfg)
     assert os.listdir(base) == []
+
+
+@pytest.mark.parametrize("case", sorted(BAD))
+def test_batch_writer_rejects_when_built(base, case):
+    from logparser_spark.streaming.pipeline import make_batch_writer
+
+    with pytest.raises(ValueError, match=MESSAGE):
+        make_batch_writer(BAD[case], SPEC, f"{base}/out")
+    assert os.listdir(base) == []
+
+
+@pytest.mark.parametrize("case", sorted(BAD))
+def test_route_stream_rejects_before_starting(spark, base, case):
+    from logparser_spark.streaming import pipeline as SP
+
+    src = tempfile.mkdtemp(prefix="sinknames_src_")
+    try:
+        parsed = SP.parse_stream(SP.stream_pages(spark, src), SPEC)
+        with pytest.raises(ValueError, match=MESSAGE):
+            SP.route_stream(parsed, BAD[case], SPEC, f"{base}/out",
+                            f"{base}/ckpt")
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+    assert spark.streams.active == []
+    assert os.listdir(base) == []
+
+
+@pytest.mark.parametrize("case", sorted(BAD))
+def test_sink_count_frame_rejects(spark, parsed, case):
+    from logparser_spark.operators.aggregate import sink_count_frame
+
+    with pytest.raises(ValueError, match=MESSAGE):
+        sink_count_frame(parsed, BAD[case], SPEC, spark)
+
+
+def test_route_mask_rejects_bits(parsed):
+    """``route_bits`` would overwrite the ``bits`` sink's boolean column
+    with the packed mask. Only ``route_mask`` adds that column, so
+    ``check_sink_names`` (and the other routes) still accept ``bits``."""
+    from logparser_spark.operators.route import route_mask
+
+    sinks = [SinkSpec("ok", None), SinkSpec("bits", "Level EQ INFO")]
+    check_sink_names(sinks)
+    with pytest.raises(ValueError, match="'bits'"):
+        route_mask(parsed, sinks, SPEC)
