@@ -16,9 +16,10 @@ Physical strategies (SURVEY.md §4 custom item 3):
   aggregate pass instead of N writers.
 - :func:`write_routes_single_pass` — one scan, each row exploded to the
   sinks it matches (:func:`routed_sink_ids`), one write partitioned by
-  sink. ``plans/checkpoint.route_checkpointed`` also explodes rows with
-  :func:`routed_sink_ids`, but first hash-distributes them by lineage
-  bucket and persists them, then writes partitioned by sink and bucket.
+  sink. ``plans/checkpoint.route_checkpointed`` explodes nothing: it
+  hash-distributes rows by lineage bucket, adds each sink's
+  :func:`sink_column` as a boolean column, and one ``mapInArrow`` stage
+  splits every Arrow batch per (sink, bucket) and writes the files.
 """
 
 from __future__ import annotations
@@ -124,13 +125,11 @@ def route_mask(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
             "sink name 'bits' collides with route_mask's packed "
             "'route_bits' column"
         )
-    out = parsed_df
+    cols = {f"route_{s.name}": sink_column(s, spec, parsed_col) for s in sinks}
     bits = F.lit(0).cast("long")
-    for i, s in enumerate(sinks):
-        c = sink_column(s, spec, parsed_col)
-        out = out.withColumn(f"route_{s.name}", c)
-        bits = bits + F.when(F.col(f"route_{s.name}"), F.lit(1 << i)).otherwise(0)
-    return out.withColumn("route_bits", bits)
+    for i, c in enumerate(cols.values()):
+        bits = bits + F.when(c, F.lit(1 << i)).otherwise(0)
+    return parsed_df.withColumns({**cols, "route_bits": bits})
 
 
 def route(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,

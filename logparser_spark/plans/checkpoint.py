@@ -10,12 +10,13 @@ without an entry (write-audit-publish light — on Iceberg this maps to
 snapshot/WAP, here to a staged write renamed into place).
 
 One route pass reads its input once and shuffles it once: the to-do rows
-are hash-distributed by ``__bucket`` (every bucket in one partition) and
-persisted, ONE grouped aggregate over the cache, with no exchange of its
-own, gives every per-bucket count the lineage records (rows, well-formed
-rows, and per sink its rows and its well-formed level histogram), and
-ONE write, dynamic-partitioned by ``(sink, __bucket)``, lands every
-sink's rows in a staging directory, one file per (sink, bucket). Each
+are hash-distributed by ``__bucket`` (every bucket in one partition), and
+ONE ``mapInArrow`` stage over them both writes and counts. Each sink's
+predicate is a Catalyst boolean column; the Python side splits each
+Arrow batch per (sink, bucket) with ``pyarrow.compute``, streams the rows
+into one parquet file per (sink, bucket) under a staging directory, and
+returns per ``(bucket, well_formed, Level)`` the row count and each
+sink's rows, so the lineage counts exactly the rows written. Each
 ``sink=<name>/__bucket=<b>`` directory is then renamed to
 ``{base}/<name>/__bucket=<b>`` after every to-do bucket's old target has
 been cleared, and only then are the lineage entries published.
@@ -32,8 +33,12 @@ Guarantees (tested in tests/test_checkpoint.py and tests/test_job.py):
 - resume after a crash at any point neither duplicates nor drops rows;
 - a re-run over a complete lineage is a no-op (0 buckets processed, no
   Spark job);
-- a lineage written for another format, sink set, filter, bucket count,
-  key or input raises ``ValueError`` instead of being reused;
+- a lineage written for another format, sink set, filter (an inverted
+  node included), bucket count, key or input raises ``ValueError``
+  instead of being reused;
+- a retried or speculative task attempt replaces the files it writes
+  and never adds a second copy, and a bucket that two tasks report
+  raises before anything is committed;
 - per-bucket parse-success metrics (total/well-formed) are recorded in
   the lineage entries — the north rule's "per-partition lineage +
   parse-success metrics".
@@ -57,21 +62,31 @@ import os
 import shutil
 import uuid
 from collections import Counter
+from dataclasses import dataclass
 from typing import Optional
-from urllib.parse import unquote
+from urllib.parse import quote, unquote
 
 from ..functions.formats import FormatSpec
-from ..operators.route import (
-    SinkSpec,
-    check_sink_names,
-    routed_sink_ids,
-    sink_column,
-)
+from ..operators.filters import CombinedFilter
+from ..operators.route import SinkSpec, check_sink_names, sink_column
 
 LINEAGE_DIR = "_lineage"
 STAGING_PREFIX = "_staging_"
+# the one data file of each (sink, bucket) directory
+DATA_FILE = "part-00000.parquet"
+# a writer flushes its buffered rows as one row group at this size, and
+# a task flushes its largest buffer when all of them together pass the
+# task budget
+ROW_GROUP_BYTES = 64 << 20
+TASK_BUFFER_BYTES = 256 << 20
+# spark.sql.parquet.compression.codec -> pyarrow's name for the codec
+PARQUET_CODECS = {"none": "none", "uncompressed": "none", "snappy": "snappy",
+                  "gzip": "gzip", "zstd": "zstd", "brotli": "brotli",
+                  "lz4": "lz4", "lz4_raw": "lz4"}
 # the field each sink's histogram counts (well-formed rows only)
 HIST_FIELD = "Level"
+# what the writer stage counts rows by
+COUNT_KEYS = ["bucket", "wf", "level"]
 
 
 def _lineage_path(base: str) -> str:
@@ -90,14 +105,15 @@ def _canonical(obj):
 def fingerprint(spec: FormatSpec, sinks: list[SinkSpec], buckets: int,
                 key_col: str) -> dict:
     """What a lineage entry promises: the format, each sink's name,
-    canonical filter and malformed-acceptance flag, the bucket count
-    and the bucket key. Raises ``ValueError`` for sink names that
-    :func:`~logparser_spark.operators.route.check_sink_names` rejects."""
+    canonical filter (:func:`_filter_text`) and malformed-acceptance
+    flag, the bucket count and the bucket key. Raises ``ValueError`` for
+    sink names that :func:`~logparser_spark.operators.route.check_sink_names`
+    rejects."""
     check_sink_names(sinks)
 
     def filter_text(s: SinkSpec):
         ast = s.ast(spec)
-        return ast.to_string(spec) if ast is not None else None
+        return _filter_text(ast, spec) if ast is not None else None
 
     return _canonical({
         "format": spec.source,
@@ -105,6 +121,18 @@ def fingerprint(spec: FormatSpec, sinks: list[SinkSpec], buckets: int,
         "buckets": buckets,
         "key_col": key_col,
     })
+
+
+def _filter_text(node, spec: FormatSpec) -> str:
+    """``to_string`` with every inverted node written ``NOT (<node>)``:
+    ``to_string`` drops the invert flag, as the reference's does. A
+    filter with no inverted node reads the same as its ``to_string``."""
+    if isinstance(node, CombinedFilter):
+        text = (f"({_filter_text(node.left, spec)}) {node.op} "
+                f"({_filter_text(node.right, spec)})")
+    else:
+        text = node.to_string(spec)
+    return f"NOT ({text})" if node.inverted else text
 
 
 def _source_digest(source: dict) -> str:
@@ -187,9 +215,8 @@ def _pairs(hist: Counter) -> list:
 
 def _bucketed(parsed_df, key_col: str, buckets: int, todo: list[int]):
     """The to-do rows with their ``__bucket``, hash-distributed by it: each
-    bucket's rows sit in one partition, so the write makes one file per
-    (sink, bucket) whatever the input's task count, and an aggregate
-    grouped by ``__bucket`` needs no exchange of its own."""
+    bucket's rows sit in one partition, so one task writes each (sink,
+    bucket) file, whatever the input's task count."""
     from pyspark.sql import functions as F
 
     return parsed_df.withColumn(
@@ -197,35 +224,204 @@ def _bucketed(parsed_df, key_col: str, buckets: int, todo: list[int]):
     ).filter(F.col("__bucket").isin(todo)).repartition(F.col("__bucket"))
 
 
-def _stats_frame(work, sinks: list[SinkSpec], spec: FormatSpec,
-                 parsed_col: str):
-    """ONE aggregate over the bucketed frame, grouped by (bucket,
-    well_formed, level): the row count and, per sink, its routed rows."""
-    from pyspark.sql import functions as F
+class _SinkFile:
+    """One (sink, bucket) parquet file of a writer task. Added rows are
+    buffered and flushed as one row group; the file is written under a
+    hidden name unique to this writer and renamed to ``DATA_FILE`` when
+    closed."""
 
-    wf = F.col(f"{parsed_col}.well_formed")
-    level = (F.col(f"{parsed_col}.{HIST_FIELD}")
-             if HIST_FIELD in spec.column_names() else F.lit(None))
-    return work.groupBy(
-        "__bucket", wf.alias("wf"), level.alias("level")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(sink_column(s, spec, parsed_col).cast("long")).alias(f"s{i}")
-          for i, s in enumerate(sinks)],
-    )
+    def __init__(self, directory: str, schema, compression: str):
+        self.path = os.path.join(directory, DATA_FILE)
+        self.tmp = os.path.join(directory, f".{DATA_FILE}.{uuid.uuid4().hex}")
+        self.schema = schema
+        self.compression = compression
+        self.pending: list = []
+        self.nbytes = 0
+        self.writer = None
+
+    def add(self, rows) -> None:
+        self.pending.append(rows)
+        self.nbytes += rows.nbytes
+        if self.nbytes >= ROW_GROUP_BYTES:
+            self.flush()
+
+    def flush(self) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if not self.pending:
+            return
+        if self.writer is None:
+            os.makedirs(os.path.dirname(self.path), exist_ok=True)
+            self.writer = pq.ParquetWriter(self.tmp, self.schema,
+                                           compression=self.compression)
+        table = pa.Table.from_batches(self.pending, self.schema)
+        self.writer.write_table(table, row_group_size=table.num_rows)
+        self.pending, self.nbytes = [], 0
+
+    def close(self) -> None:
+        self.flush()
+        self.writer.close()
+        self.writer = None
+        os.replace(self.tmp, self.path)
+
+    def discard(self) -> None:
+        if self.writer is not None:
+            self.writer.close()
+            os.remove(self.tmp)
 
 
-def _bucket_stats(work, sinks: list[SinkSpec], spec: FormatSpec,
-                  parsed_col: str, todo: list[int]) -> dict[int, dict]:
+@dataclass(frozen=True)
+class _SinkWriter:
+    """The route's writer stage: ``mapInArrow`` runs it once per task over
+    the bucketed rows plus one boolean ``__sink_<i>`` column per sink.
+
+    Each Arrow batch is split per (sink, bucket) with ``pyarrow.compute``
+    and streamed into one :class:`_SinkFile` per (sink, bucket) the task
+    holds, ``{staging}/sink=<name>/__bucket=<b>/part-00000.parquet``: a
+    retried or speculative attempt replaces the file and never adds a
+    second copy. The task then returns, per ``(bucket, well_formed,
+    level)``, its partition id, the row count and each sink's rows, so
+    the lineage counts exactly the rows written."""
+
+    staging: str
+    sinks: tuple            # names, in the order of the __sink_<i> columns
+    schema: object          # pa.Schema of the rows as written
+    counts_schema: object   # pa.Schema of the returned counts
+    compression: str
+    parsed_col: str
+
+    def __call__(self, batches):
+        from pyspark import TaskContext
+
+        return self.run(batches, TaskContext.get().partitionId())
+
+    def run(self, batches, partition: int):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        files: dict = {}
+        counts = []
+        try:
+            for batch in batches:
+                if not batch.num_rows:
+                    continue
+                counts.append(self._counts(batch))
+                rows = batch.select(self.schema.names).cast(self.schema)
+                bucket = batch.column("__bucket")
+                routes = batch.select([f"__sink_{i}" for i in range(len(self.sinks))])
+                for b in pc.unique(bucket).to_pylist():
+                    in_b = pc.equal(bucket, b)
+                    rows_b, routes_b = rows.filter(in_b), routes.filter(in_b)
+                    for i, name in enumerate(self.sinks):
+                        part = rows_b.filter(routes_b.column(i))
+                        if not part.num_rows:
+                            continue
+                        if (name, b) not in files:
+                            files[name, b] = _SinkFile(
+                                os.path.join(self.staging,
+                                             f"sink={quote(name, safe='')}",
+                                             f"__bucket={b}"),
+                                self.schema, self.compression)
+                        files[name, b].add(part)
+                while sum(f.nbytes for f in files.values()) > TASK_BUFFER_BYTES:
+                    max(files.values(), key=lambda f: f.nbytes).flush()
+            for f in files.values():
+                f.close()
+        except BaseException:
+            for f in files.values():
+                f.discard()
+            raise
+        if counts:
+            total = _sum_by(pa.concat_tables(counts), COUNT_KEYS)
+            yield from pa.Table.from_arrays(
+                [pa.array([partition] * total.num_rows, pa.int32()), *total.columns],
+                schema=self.counts_schema).to_batches()
+
+    def _counts(self, batch):
+        """The batch's rows and each sink's rows per (bucket, well_formed,
+        level)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        parsed = batch.column(self.parsed_col)
+        if parsed.type.get_field_index(HIST_FIELD) >= 0:
+            level = pc.struct_field(parsed, HIST_FIELD)
+        else:
+            level = pa.nulls(batch.num_rows, self.counts_schema.field("level").type)
+        cols = {"bucket": batch.column("__bucket"),
+                "wf": pc.struct_field(parsed, "well_formed"), "level": level,
+                "n": pa.repeat(pa.scalar(1, pa.int64()), batch.num_rows)}
+        for i in range(len(self.sinks)):
+            cols[f"s{i}"] = batch.column(f"__sink_{i}").cast(pa.int64())
+        return _sum_by(pa.table(cols), COUNT_KEYS)
+
+
+def _sum_by(table, keys: list[str]):
+    """``table`` grouped by ``keys``, every other column summed: the keys
+    first, then the sums under their own names."""
+    sums = [c for c in table.column_names if c not in keys]
+    out = table.group_by(keys).aggregate([(c, "sum") for c in sums])
+    return out.select(keys + [f"{c}_sum" for c in sums]).rename_columns(keys + sums)
+
+
+def _writer_stage(work, sinks: list[SinkSpec], spec: FormatSpec,
+                  staging: str, parsed_col: str):
+    """The route's one Spark job over the bucketed frame: every sink's
+    predicate as a Catalyst boolean column, then :class:`_SinkWriter`.
+    The files match Spark's own writer: the frame's columns minus
+    ``__bucket``, all nullable, in the session's
+    ``spark.sql.parquet.compression.codec``."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    spark = work.sparkSession
+    codec = spark.conf.get("spark.sql.parquet.compression.codec").lower()
+    if codec not in PARQUET_CODECS:
+        raise ValueError(
+            f"spark.sql.parquet.compression.codec {codec!r} is not supported "
+            f"by the route's writer (one of {sorted(PARQUET_CODECS)})"
+        )
+    data = T.StructType.fromJson(_nullable(T.StructType(
+        [f for f in work.schema if f.name != "__bucket"]).jsonValue()))
+    schema = to_arrow_schema(data)
+    parsed_type = work.schema[parsed_col].dataType
+    level = (parsed_type[HIST_FIELD].dataType
+             if HIST_FIELD in parsed_type.names else T.StringType())
+    counts = T.StructType(
+        [T.StructField("partition", T.IntegerType()),
+         T.StructField("bucket", T.IntegerType()),
+         T.StructField("wf", T.BooleanType()),
+         T.StructField("level", level),
+         T.StructField("n", T.LongType())]
+        + [T.StructField(f"s{i}", T.LongType()) for i in range(len(sinks))])
+    writer = _SinkWriter(staging, tuple(s.name for s in sinks), schema,
+                         to_arrow_schema(counts), PARQUET_CODECS[codec],
+                         parsed_col)
+    return work.withColumns({
+        f"__sink_{i}": sink_column(s, spec, parsed_col)
+        for i, s in enumerate(sinks)
+    }).mapInArrow(writer, counts)
+
+
+def _fold_counts(rows, sinks: list[SinkSpec], todo: list[int]) -> dict[int, dict]:
     """Per bucket its rows and well-formed rows, and per sink its rows and
-    its well-formed level histogram, from :func:`_stats_frame`."""
-    rows = _stats_frame(work, sinks, spec, parsed_col).collect()
+    its well-formed level histogram, from the writer's count rows.
 
+    Raises ``RuntimeError`` when two partitions report one bucket: both
+    tasks wrote that bucket's files, so one replaced the other's rows."""
+    owner: dict[int, int] = {}
     stats = {b: {"rows": 0, "well_formed_rows": 0,
                  "sinks": {s.name: [0, Counter()] for s in sinks}}
              for b in todo}
     for r in rows:
-        st = stats[r["__bucket"]]
+        b = r["bucket"]
+        if owner.setdefault(b, r["partition"]) != r["partition"]:
+            raise RuntimeError(
+                f"bucket {b} was written by partitions {owner[b]} and "
+                f"{r['partition']}; the route needs each bucket in one task"
+            )
+        st = stats[b]
         st["rows"] += r["n"]
         if r["wf"]:
             st["well_formed_rows"] += r["n"]
@@ -238,19 +434,11 @@ def _bucket_stats(work, sinks: list[SinkSpec], spec: FormatSpec,
     return stats
 
 
-def _write_staged(work, sinks: list[SinkSpec], spec: FormatSpec, base: str,
-                  todo: list[int], parsed_col: str) -> None:
-    """ONE write of every sink's rows, partitioned by (sink, bucket), into
-    a staging directory; then every (sink, to-do bucket) target is cleared
-    (also where the redo wrote no rows) and the staged bucket directories
-    are renamed into ``{base}/<sink>/__bucket=<b>``."""
-    from pyspark.sql import functions as F
-
-    staging = os.path.join(base, f"{STAGING_PREFIX}{uuid.uuid4().hex}")
-    (
-        work.withColumn("sink", F.explode(routed_sink_ids(sinks, spec, parsed_col)))
-        .write.partitionBy("sink", "__bucket").parquet(staging)
-    )
+def _commit_staged(staging: str, sinks: list[SinkSpec], base: str,
+                   todo: list[int]) -> None:
+    """Clears every (sink, to-do bucket) target, also where the redo wrote
+    no rows, then renames the staged bucket directories into
+    ``{base}/<sink>/__bucket=<b>``."""
     for s in sinks:
         for b in todo:
             target = os.path.join(base, s.name, f"__bucket={b}")
@@ -303,29 +491,30 @@ def route_checkpointed(
             if fn.startswith(STAGING_PREFIX):
                 shutil.rmtree(os.path.join(base, fn))
 
-    work = _bucketed(parsed_df, key_col, buckets, todo).persist()
-    try:
-        stats = _bucket_stats(work, sinks, spec, parsed_col, todo)
-        _publish(_schema_path(base), json.dumps(_nullable(work.schema.jsonValue())))
-        _write_staged(work, sinks, spec, base, todo, parsed_col)
-        src = _source_digest(source) if source is not None else None
-        for committed, b in enumerate(todo):
-            if fail_after_buckets is not None and committed >= fail_after_buckets:
-                raise RuntimeError(
-                    f"injected failure after {committed} bucket commits"
-                )
-            st = stats[b]
-            _write_lineage(base, {
-                "bucket": b,
-                "rows": st["rows"],
-                "well_formed_rows": st["well_formed_rows"],
-                "fingerprint": fp,
-                "source": src,
-                "sinks": {name: {"rows": n, "levels": _pairs(levels)}
-                          for name, (n, levels) in st["sinks"].items()},
-            })
-    finally:
-        work.unpersist()
+    work = _bucketed(parsed_df, key_col, buckets, todo)
+    _publish(_schema_path(base), json.dumps(_nullable(work.schema.jsonValue())))
+    staging = os.path.join(base, f"{STAGING_PREFIX}{uuid.uuid4().hex}")
+    os.makedirs(staging)
+    stats = _fold_counts(
+        _writer_stage(work, sinks, spec, staging, parsed_col).collect(),
+        sinks, todo)
+    _commit_staged(staging, sinks, base, todo)
+    src = _source_digest(source) if source is not None else None
+    for committed, b in enumerate(todo):
+        if fail_after_buckets is not None and committed >= fail_after_buckets:
+            raise RuntimeError(
+                f"injected failure after {committed} bucket commits"
+            )
+        st = stats[b]
+        _write_lineage(base, {
+            "bucket": b,
+            "rows": st["rows"],
+            "well_formed_rows": st["well_formed_rows"],
+            "fingerprint": fp,
+            "source": src,
+            "sinks": {name: {"rows": n, "levels": _pairs(levels)}
+                      for name, (n, levels) in st["sinks"].items()},
+        })
     return {"processed": todo, "skipped": sorted(done)}
 
 

@@ -53,9 +53,9 @@ class JobConfig:
     text_col: str = "text"
     key_col: str = "doc_id"
     # the only strategy: lineage-bucketed fan-out with idempotent resume
-    # (plans/checkpoint.route_checkpointed — one aggregate and one
-    # write partitioned by sink and bucket per run); any other value
-    # raises ValueError in run_job
+    # (plans/checkpoint.route_checkpointed — one Arrow writer stage per
+    # run, writing every (sink, bucket) file and the lineage counts);
+    # any other value raises ValueError in run_job
     route_strategy: str = "checkpoint"
 
     @classmethod

@@ -3,6 +3,7 @@ checkpoint with per-partition lineage + metrics') and skew helpers."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -265,38 +266,256 @@ def test_one_file_per_sink_bucket(spark, parsed, base):
         shutil.rmtree(redo, ignore_errors=True)
 
 
-def _plan_nodes(plan) -> list[str]:
-    """Node names of a final AQE plan, children only: the result stage is
-    unwrapped, any other query stage is a leaf, and the cached plan under
-    an InMemoryTableScan is not walked."""
-    if plan.nodeName() == "ResultQueryStage":
-        plan = plan.plan()
-    out = [plan.nodeName()]
+def _plan_nodes(plan) -> list:
+    """Every node of an executed plan: adaptive plans and query stages are
+    unwrapped, so the nodes below a shuffle are listed too."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _plan_nodes(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _plan_nodes(plan.plan())
+    out = [plan]
     children = plan.children()
     for i in range(children.size()):
         out += _plan_nodes(children.apply(i))
     return out
 
 
-def test_bucket_stats_read_the_cache_without_exchange(spark, parsed):
-    """The bucket-stats aggregate groups by ``__bucket`` first, and the
-    persisted frame is already hash-distributed by it: the final AQE
-    plan has no exchange between the aggregate and the cache scan, so
-    a route run shuffles its rows once."""
+def test_route_run_plans_one_shuffle_and_one_writer_stage(spark, base, monkeypatch):
+    """A route run over an unpersisted parse is one Spark job: the rows
+    are shuffled once (hash on ``__bucket``), the parse runs once
+    (``ArrowEvalPython``) and one ``MapInArrow`` stage writes every sink
+    and counts the lineage, with no cache in between."""
+    from logparser_spark.functions.formats import DEFAULT_FORMAT, compile_format
+    from logparser_spark.operators.parse import explode_lines, parse_lines
+    from logparser_spark.plans import checkpoint as C
+    from logparser_spark.sources.pages import build_pages_from_documents
+
+    spec = compile_format(DEFAULT_FORMAT)
+    pages = build_pages_from_documents(spark, SF_DIR)
+    df = parse_lines(explode_lines(pages, keep_cols=["doc_id"]), spec)
+    stages = []
+    real = C._writer_stage
+
+    def writer_stage(*args):
+        stages.append(real(*args))
+        return stages[-1]
+
+    monkeypatch.setattr(C, "_writer_stage", writer_stage)
+    C.route_checkpointed(df, _sinks(), spec, base, buckets=8)
+    assert C.lineage_metrics(base)["rows"] == 15634
+    nodes = _plan_nodes(stages[0]._jdf.queryExecution().executedPlan())
+    names = [n.nodeName() for n in nodes]
+    exchanges = [n for n in nodes if "Exchange" in n.nodeName()]
+    assert len(exchanges) == 1, names
+    assert "hashpartitioning(__bucket" in exchanges[0].outputPartitioning().toString()
+    assert names.count("ArrowEvalPython") == 1, names
+    assert names.count("MapInArrow") == 1, names
+    assert not [n for n in names if "InMemory" in n], names
+
+
+def test_fingerprint_encodes_inversion(spark, parsed, base):
+    """Inverting a sink's filter, at the root or at an inner node, changes
+    the fingerprint (``to_string`` drops the flag, as the reference's
+    does), so a resume after an inversion raises instead of mixing the
+    outputs of two filters."""
+    from logparser_spark.operators.filters import parse_filter
+    from logparser_spark.operators.route import SinkSpec
     from logparser_spark.plans import checkpoint as C
 
     df, spec = parsed
-    work = C._bucketed(df, "doc_id", 8, list(range(8))).persist()
+
+    def fp(f):
+        return C.fingerprint(spec, [SinkSpec("s", f)], 8, "doc_id")
+
+    plain = parse_filter("Level EQ TRACE", spec)
+    root = parse_filter("Level EQ TRACE", spec).invert()
+    assert root.to_string(spec) == plain.to_string(spec)
+    assert fp(root) != fp(plain)
+
+    both = "(Level EQ TRACE) AND (Time GT 1)"
+    inner = parse_filter(both, spec)
+    inner.left.invert()
+    assert inner.to_string(spec) == parse_filter(both, spec).to_string(spec)
+    assert fp(inner) != fp(parse_filter(both, spec))
+    assert fp(inner) != fp(parse_filter(both, spec).invert())
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        C.route_checkpointed(df, [SinkSpec("s", plain, accept_bad_format=False)],
+                             spec, base, buckets=8, fail_after_buckets=3)
+    with pytest.raises(ValueError, match="sinks"):
+        C.route_checkpointed(df, [SinkSpec("s", root, accept_bad_format=False)],
+                             spec, base, buckets=8)
+    assert C.lineage_metrics(base)["buckets"] == 3
+
+
+def _writer(staging):
+    """A writer stage for two sinks over rows ``(doc_id, parsed{Level,
+    well_formed})``, with the batches it reads."""
+    import pyarrow as pa
+
+    from logparser_spark.plans import checkpoint as C
+
+    parsed = pa.struct([("Level", pa.string()), ("well_formed", pa.bool_())])
+    schema = pa.schema([("doc_id", pa.int64()), ("parsed", parsed)])
+    counts = pa.schema([("partition", pa.int32()), ("bucket", pa.int32()),
+                        ("wf", pa.bool_()), ("level", pa.string()),
+                        ("n", pa.int64()), ("s0", pa.int64()), ("s1", pa.int64())])
+    batches = []
+    for start in (0, 6):
+        ids = list(range(start, start + 6))
+        batches.append(pa.RecordBatch.from_pydict({
+            "doc_id": pa.array(ids, pa.int64()),
+            "parsed": pa.array([{"Level": "INFO" if i % 3 else "WARN",
+                                 "well_formed": i != 4} for i in ids], parsed),
+            "__bucket": pa.array([i % 2 for i in ids], pa.int32()),
+            "__sink_0": pa.array([i % 3 != 0 for i in ids]),
+            "__sink_1": pa.array([True] * len(ids)),
+        }))
+    return C._SinkWriter(staging, ("a", "b"), schema, counts, "snappy", "parsed"), batches
+
+
+def test_writer_rerun_replaces_its_files(base):
+    """The writer run twice over the same batches into one staging
+    directory, as a retried task attempt would: each (sink, bucket) still
+    holds one ``part-00000.parquet`` with its rows once, and no hidden
+    file is left."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    writer, batches = _writer(base)
+    first = list(writer.run(iter(batches), 0))
+    second = list(writer.run(iter(batches), 0))
+    assert [b.to_pylist() for b in first] == [b.to_pylist() for b in second]
+    for sink, keep in (("a", lambda i: i % 3 != 0), ("b", lambda i: True)):
+        for b in (0, 1):
+            d = os.path.join(base, f"sink={sink}", f"__bucket={b}")
+            assert os.listdir(d) == ["part-00000.parquet"]
+            f = pq.ParquetFile(os.path.join(d, "part-00000.parquet"))
+            assert f.metadata.num_row_groups == 1
+            ids = f.read()["doc_id"]
+            assert ids.to_pylist() == [i for i in range(12) if i % 2 == b and keep(i)]
+    counts = {(r["bucket"], r["wf"], r["level"]): (r["n"], r["s0"], r["s1"])
+              for b in first for r in b.to_pylist()}
+    assert counts == {(0, True, "WARN"): (2, 0, 2), (0, True, "INFO"): (3, 3, 3),
+                      (0, False, "INFO"): (1, 1, 1), (1, True, "WARN"): (2, 0, 2),
+                      (1, True, "INFO"): (4, 4, 4)}
+
+
+def test_writer_flushes_its_largest_buffer_past_the_task_budget(base, monkeypatch):
+    """Past the task's buffer budget the largest buffer is flushed as a
+    row group: with no budget every batch's rows become their own row
+    group, and the file still holds each row once."""
+    import pyarrow.parquet as pq
+
+    from logparser_spark.plans import checkpoint as C
+
+    monkeypatch.setattr(C, "TASK_BUFFER_BYTES", 0)
+    writer, batches = _writer(base)
+    list(writer.run(iter(batches), 0))
+    f = pq.ParquetFile(os.path.join(base, "sink=b", "__bucket=0", "part-00000.parquet"))
+    assert f.metadata.num_row_groups == 2
+    assert f.read()["doc_id"].to_pylist() == [0, 2, 4, 6, 8, 10]
+
+
+def test_bucket_split_across_tasks_raises(spark, parsed, base, monkeypatch):
+    """Rows not distributed by bucket put one bucket in two tasks, which
+    would write the same (sink, bucket) file: the route raises before
+    anything is committed."""
+    from logparser_spark.plans import checkpoint as C
+
+    df, spec = parsed
+
+    def round_robin(parsed_df, key_col, buckets, todo):
+        return parsed_df.withColumn(
+            "__bucket", F.pmod(F.col(key_col), F.lit(buckets)).cast("int")
+        ).repartition(4)
+
+    monkeypatch.setattr(C, "_bucketed", round_robin)
+    with pytest.raises(RuntimeError, match="written by partitions"):
+        C.route_checkpointed(df, _sinks(), spec, base, buckets=8)
+    assert C.lineage_metrics(base)["buckets"] == 0
+    assert not any(os.path.isdir(os.path.join(base, s.name)) for s in _sinks())
+
+
+def test_no_hidden_files_after_a_run(spark, parsed, base):
+    """A run, and a crash then a resume, leave no file whose name starts
+    with ``.`` (temporary data files, checksum files)."""
+    from logparser_spark.plans import checkpoint as C
+
+    df, spec = parsed
+    with pytest.raises(RuntimeError, match="injected failure"):
+        C.route_checkpointed(df, _sinks(), spec, base, buckets=8,
+                             fail_after_buckets=2)
+    C.route_checkpointed(df, _sinks(), spec, base, buckets=8)
+    hidden = [os.path.join(d, n) for d, _, names in os.walk(base)
+              for n in names if n.startswith(".")]
+    assert not hidden, hidden[:5]
+
+
+ROUND_TRIP_FORMAT = "{DATE:Day} {DBL:Val} {STR:Level} :{STR:Msg} {INT:N}"
+ROUND_TRIP_PAGES = [
+    "2024-02-29 1.5 INFO :plain 7\n2024-03-01 2.25e3 WARN :x 8\n"
+    "2023-12-31 3 INFO :ünïcödé✓ 9\r\n2020-01-01 0.5 INFO",
+    "garbage line\n\n2024-02-30 1 INFO :bad date 1\n"
+    "1999-09-09 12.75 ERROR :日本語のログ 123\n2001-01-01 1e-3 INFO :",
+    "2010-10-10 99999999999999999999 INFO :huge 5\n2011-11-11 4 TRACE\n"
+    "2012-12-12 2.5 INFO :tail\n0001-01-01 1 INFO :ancient 2",
+]
+
+
+def test_round_trip_types_and_schema(spark, base):
+    """DATE and DBL fields, trailing unset fields, malformed lines and
+    multi-byte text through the route: every sink reads back exactly the
+    rows ``route_mask`` routes to it, a schema-less read of a sink
+    directory reports the schema Spark's own writer gives the frame, and
+    the files use the session's parquet codec."""
+    import pyarrow.parquet as pq
+
+    from logparser_spark.functions.formats import compile_format
+    from logparser_spark.operators.filters import parse_filter
+    from logparser_spark.operators.parse import explode_lines, parse_lines
+    from logparser_spark.operators.route import SinkSpec, route_mask
+    from logparser_spark.plans import checkpoint as C
+
+    spec = compile_format(ROUND_TRIP_FORMAT)
+    pages = spark.createDataFrame(
+        [(i, ROUND_TRIP_PAGES[i % 3]) for i in range(40)], "doc_id long, text string")
+    df = parse_lines(explode_lines(pages, keep_cols=["doc_id"]), spec)
+    sinks = [
+        SinkSpec("info", "Level EQ INFO"),
+        SinkSpec("big", "Val GT 2", accept_bad_format=False),
+        SinkSpec("cjk", "Msg CT ログ"),
+        SinkSpec("not_info", parse_filter("Level EQ INFO", spec).invert(),
+                 accept_bad_format=False),
+        SinkSpec("all", None),
+    ]
+    codec = spark.conf.get("spark.sql.parquet.compression.codec")
+    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
     try:
-        agg = C._stats_frame(work, _sinks(), spec, "parsed")
-        agg.collect()
-        final = agg._jdf.queryExecution().executedPlan().executedPlan()
-        nodes = _plan_nodes(final)
+        C.route_checkpointed(df, sinks, spec, base, buckets=4)
     finally:
-        work.unpersist()
-    assert "HashAggregate" in nodes
-    assert any(n in ("InMemoryTableScan", "TableCacheQueryStage") for n in nodes)
-    assert not [n for n in nodes if "Exchange" in n or "ShuffleQueryStage" in n], nodes
+        spark.conf.set("spark.sql.parquet.compression.codec", codec)
+    data = os.path.join(base, "all", "__bucket=0", "part-00000.parquet")
+    assert pq.ParquetFile(data).metadata.row_group(0).column(0).compression == "ZSTD"
+
+    def rows(frame):
+        return sorted(frame.select(df.columns).collect(),
+                      key=lambda r: (r["doc_id"], r["line_no"]))
+
+    masked = route_mask(df, sinks, spec)
+    for s in sinks:
+        assert rows(C.read_routed(spark, base, s.name)) == \
+            rows(masked.filter(F.col(f"route_{s.name}"))), s.name
+    assert rows(C.read_routed(spark, base, "all")) == rows(df)
+
+    spark_dir = os.path.join(base, "_spark_written")
+    df.withColumn("__bucket", F.pmod(F.col("doc_id"), F.lit(4)).cast("int")) \
+        .write.partitionBy("__bucket").parquet(spark_dir)
+    want = spark.read.parquet(spark_dir).schema
+    for s in sinks:
+        assert spark.read.parquet(os.path.join(base, s.name)).schema == want, s.name
 
 
 def test_salted_count_equals_plain(spark, parsed):
