@@ -146,37 +146,6 @@ def q_sink_counts(spark, sf_dir):
     return agg.sink_count_frame(_parsed(spark, sf_dir), _SINKS, _SPEC, spark)
 
 
-def q_route_single_pass_counts(spark, sf_dir):
-    """End-to-end check of the large-N single-pass fan-out WRITER
-    (route.write_routes_single_pass: ONE scan, explode by matching sink
-    name, one dynamic-partitioned write — the 10^12-row strategy where
-    route()'s persist+N-scans is impossible): write all 7 fixture sinks
-    to a temp dir, read the files back, count rows per sink. The oracle
-    recomputes the same per-sink counts from the accept predicates, so
-    this pins that the written layout loses/duplicates nothing."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.route import write_routes_single_pass
-
-    base = tempfile.mkdtemp(prefix="route_sp_")
-    try:
-        write_routes_single_pass(
-            _parsed(spark, sf_dir), _SINKS, _SPEC, base
-        )
-        rows = [
-            (r["sink"], r["n"])
-            for r in spark.read.parquet(base)
-            .groupBy("sink").agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "sink STRING, n BIGINT")
-
-
 def _route_rows(spark, sf_dir, sink_name: str) -> DataFrame:
     p = _parsed(spark, sf_dir)
     return _parsed_fields(p.filter(sink_column(_sink(sink_name), _SPEC)))
@@ -5374,7 +5343,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "global_line_ids": q_global_line_ids,
         "level_histogram": q_level_histogram,
         "sink_counts": q_sink_counts,
-        "route_single_pass_counts": q_route_single_pass_counts,
         "route_info_rows": q_route_info_rows,
         "route_mixed_rows": q_route_mixed_rows,
         "route_window_rows": q_route_window_rows,
@@ -5571,8 +5539,6 @@ def oracle_sql() -> dict[str, str]:
         for name, pred in _SINK_PREDS.items()
     )
     sqls["sink_counts"] = f"{_prelude()}\n    {sink_counts}"
-    # the single-pass writer must land exactly the same per-sink rows
-    sqls["route_single_pass_counts"] = sqls["sink_counts"]
 
     sqls["route_info_rows"] = _route_sql(
         "sink_info", "doc_id, line_no, f_date, f_time, level, source, mesg, well_formed"

@@ -87,12 +87,6 @@ def observe_parse_metrics(df, name: str = "parse_metrics",
     return out, obs
 
 
-def sink_counts(routes: dict):
-    """{sink_name: count} over routed views — the per-sink aggregate the
-    correctness gate checks (BASELINE.json: exact per-sink counts)."""
-    return {name: df.count() for name, df in routes.items()}
-
-
 def sink_count_frame(parsed_df, sinks, spec: FormatSpec, spark,
                      parsed_col: str = "parsed"):
     """All sink counts in ONE pass: sum each route mask column. No persist

@@ -5,7 +5,9 @@ reference's format-spec semantics (INT zero-rule, trailing-field
 optionality, NCHAR, strtod reading past the DBL cursor), so parsing runs
 inside ONE scalar Arrow UDF (``arrow_udf``) per line column. Only the line
 column crosses into Python and only the parsed struct comes back. The
-kernel is chosen once, from the spec:
+multi-format cascade (:func:`parse_lines_multi`) is the same shape: one
+scalar Arrow UDF runs every spec's kernel over the line column and returns
+one struct, expanded JVM-side. The kernel is chosen once, from the spec:
 
 1. **flat-regex tier** — when ``FormatSpec.to_fast_regex`` yields a flat
    RE2 pattern (emitted only when provably capture-equal to the walker):
@@ -518,8 +520,6 @@ def parse_lines_multi(
     df,
     specs,
     line_col: str = "raw_line",
-    out_prefix: str = "parsed_",
-    matched_col: str = "matched_format",
     drop_cols: Optional[Iterable[str]] = None,
     byte_mode: bool = False,
 ):
@@ -531,18 +531,21 @@ def parse_lines_multi(
     single pass instead of N sequential re-parses.
 
     Output: input columns (minus ``drop_cols``) + one struct column
-    ``{out_prefix}{spec.name}`` per spec (well_formed=True only on rows
-    that spec won; fields null elsewhere) + ``matched_col`` (winning
-    spec name, null when no spec matches).
+    ``parsed_{spec.name}`` per spec (well_formed=True only on rows that
+    spec won; fields null elsewhere) + ``matched_format`` (winning spec
+    name, null when no spec matches, e.g. on a NULL line).
 
-    Scale shape: ONE mapInArrow stage — every row crosses the Python
-    boundary once regardless of len(specs); spec k's kernel runs only on
-    the rows specs 0..k-1 rejected, so the common case (spec 0 matches
-    ~everything) costs the same as single-spec parse plus a cheap
-    scatter. Each spec runs the same kernel as :func:`parse_lines_arrow`.
+    Scale shape: ONE scalar Arrow UDF over ``line_col``, like
+    :func:`parse_lines_arrow` — only the line column crosses into Python
+    and one struct (per-spec structs plus ``matched_format``) comes
+    back, expanded JVM-side; passthrough columns never enter Python.
+    Spec k's kernel runs only on the rows specs 0..k-1 rejected, so the
+    common case (spec 0 matches ~everything) costs the same as a
+    single-spec parse plus a cheap scatter.
     """
     import numpy as np
     import pyarrow.compute as pc
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     specs = list(specs)
@@ -552,81 +555,46 @@ def parse_lines_multi(
     if len(set(names)) != len(names):
         raise ValueError(f"spec names must be unique, got {names}")
     kernels = [_kernel(s, byte_mode=byte_mode) for s in specs]
+    schemas = [s.spark_schema() for s in specs]
+    out_names = [f"parsed_{n}" for n in names] + ["matched_format"]
+    out_type = T.StructType([
+        T.StructField(name, t)
+        for name, t in zip(out_names, schemas + [T.StringType()])
+    ])
 
+    @F.arrow_udf(out_type)
+    def cascade(lines: pa.Array) -> pa.Array:
+        if isinstance(lines, pa.ChunkedArray):
+            lines = lines.combine_chunks()
+        n = len(lines)
+        remaining = np.ones(n, dtype=bool)
+        matched = np.full(n, None, dtype=object)
+        structs = []
+        for spec, kernel, schema in zip(specs, kernels, schemas):
+            idx = np.flatnonzero(remaining)
+            outs, wf = kernel(lines.take(pa.array(idx)))
+            win = idx[wf.to_numpy(zero_copy_only=False)]
+            won = np.zeros(n, dtype=bool)
+            won[win] = True
+            remaining[win] = False
+            matched[win] = spec.name
+            won = pa.array(won)
+            cols = [
+                pc.replace_with_mask(pa.nulls(n, o.type), won, o.filter(wf))
+                for o in outs
+            ]
+            structs.append(pa.StructArray.from_arrays(
+                cols + [won], names=schema.fieldNames()
+            ))
+        return pa.StructArray.from_arrays(
+            structs + [pa.array(matched, type=pa.string())], names=out_names
+        )
+
+    # the same optimizer fence as _parse_udf: one ArrowEvalPython even
+    # when filters and projections both read the cascade's output
+    out = df.withColumn("__cascade", cascade.asNondeterministic()(F.col(line_col)))
     drop = set(drop_cols or ())
-    kept = [f for f in df.schema.fields if f.name not in drop]
-    out_schema = T.StructType(
-        kept
-        + [
-            T.StructField(f"{out_prefix}{s.name}", s.spark_schema(), False)
-            for s in specs
-        ]
-        + [T.StructField(matched_col, T.StringType(), True)]
+    kept = [c for c in df.columns if c not in drop]
+    return out.select(
+        *kept, *[F.col(f"__cascade.{c}").alias(c) for c in out_names]
     )
-
-    def fn(batches):
-        for batch in batches:
-            arr = batch.column(line_col)
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
-            if not pa.types.is_string(arr.type):
-                arr = arr.cast(pa.string())
-            n = len(arr)
-            remaining = np.ones(n, dtype=bool)
-            matched = np.full(n, None, dtype=object)
-            structs = []
-            for spec, kernel in zip(specs, kernels):
-                field_names = spec.column_names() + ["well_formed"]
-                idx = np.flatnonzero(remaining)
-                full_wf = np.zeros(n, dtype=bool)
-                if len(idx):
-                    outs, wf = kernel(arr.take(pa.array(idx)))
-                    wf_np = wf.to_numpy(zero_copy_only=False)
-                    win = idx[wf_np]
-                    full_wf[win] = True
-                    remaining[win] = False
-                    matched[win] = spec.name
-                    mask = pa.array(full_wf)
-                    wf_pa = pa.array(wf_np)
-                    cols = [
-                        pc.replace_with_mask(
-                            pa.nulls(n, type=o.type), mask, o.filter(wf_pa)
-                        )
-                        for o in outs
-                    ]
-                else:
-                    cols = [
-                        pa.nulls(n, type=o)
-                        for o in _arrow_types(spec)
-                    ]
-                structs.append(
-                    pa.StructArray.from_arrays(
-                        cols + [pa.array(full_wf)], names=field_names
-                    )
-                )
-            if drop:
-                keep_idx = [
-                    i for i, name in enumerate(batch.schema.names)
-                    if name not in drop
-                ]
-                batch = batch.select(keep_idx)
-            for s, st in zip(specs, structs):
-                batch = batch.append_column(f"{out_prefix}{s.name}", st)
-            yield batch.append_column(
-                matched_col, pa.array(matched, type=pa.string())
-            )
-
-    return df.mapInArrow(fn, out_schema)
-
-
-def _arrow_types(spec: FormatSpec):
-    """Arrow type per output field of a spec (mirrors spark_schema)."""
-
-    m = {
-        FieldType.INT: pa.int64(),
-        FieldType.DBL: pa.float64(),
-        FieldType.CHR: pa.string(),
-        FieldType.STR: pa.string(),
-        FieldType.DATE: pa.date32(),
-    }
-    return [m[f.ftype] for _, f in spec.output_fields()]

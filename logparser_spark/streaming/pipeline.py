@@ -8,8 +8,9 @@ the streaming analog of a crawl feed):
 
 - the parse stage is the SAME Arrow UDF (vectorized UDFs are
   streaming-safe: stateless, per-batch);
-- routing fans out inside ``foreachBatch`` so one micro-batch writes all
-  sinks from one cached parse result (exactly the batch route() shape);
+- routing fans out inside ``foreachBatch``: one micro-batch is persisted
+  once and each sink writes the rows its ``route.sink_column`` verdict
+  accepts (the same predicate the batch writer and ``route_mask`` use);
 - watermarked per-window aggregates handle late data for the
   matched-format counts.
 

@@ -281,19 +281,34 @@ def _plan_nodes(plan) -> list:
     return out
 
 
-def test_route_run_plans_one_shuffle_and_one_writer_stage(spark, base, monkeypatch):
+@pytest.mark.parametrize("parse", ["single", "multi"])
+def test_route_run_plans_one_shuffle_and_one_writer_stage(spark, base, monkeypatch,
+                                                          parse):
     """A route run over an unpersisted parse is one Spark job: the rows
     are shuffled once (hash on ``__bucket``), the parse runs once
     (``ArrowEvalPython``) and one ``MapInArrow`` stage writes every sink
-    and counts the lineage, with no cache in between."""
+    and counts the lineage, with no cache in between. The multi-format
+    cascade (``run_job``'s ``extra_formats`` shape) plans the same."""
     from logparser_spark.functions.formats import DEFAULT_FORMAT, compile_format
-    from logparser_spark.operators.parse import explode_lines, parse_lines
+    from logparser_spark.operators.parse import (
+        explode_lines,
+        parse_lines,
+        parse_lines_multi,
+    )
     from logparser_spark.plans import checkpoint as C
     from logparser_spark.sources.pages import build_pages_from_documents
 
     spec = compile_format(DEFAULT_FORMAT)
     pages = build_pages_from_documents(spark, SF_DIR)
-    df = parse_lines(explode_lines(pages, keep_cols=["doc_id"]), spec)
+    lines = explode_lines(pages, keep_cols=["doc_id"])
+    if parse == "single":
+        df = parse_lines(lines, spec)
+    else:
+        hexdump = compile_format(
+            "{INT:B0}x{STR:H0} {INT:B1}x{STR:H1} {INT:B2}x{STR:H2} "
+            "{INT:B3}x{STR:H3} {STR:Tag}", "hexdump")
+        df = parse_lines_multi(lines, [spec, hexdump]).withColumnRenamed(
+            "parsed_default", "parsed")
     stages = []
     real = C._writer_stage
 

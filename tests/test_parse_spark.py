@@ -281,8 +281,12 @@ class TestParseMulti:
     HEX = "{INT:B0}x{STR:H0} {INT:B1}x{STR:H1} {INT:B2}x{STR:H2} {INT:B3}x{STR:H3} {STR:Tag}"
 
     def _check_cascade(self, spark, lines, specs):
+        """Every cascade also sees a NULL line (no spec matches it:
+        ``matched_format`` NULL, ``well_formed`` False under every spec)
+        and an empty line (parsed like any other line)."""
         from logparser_spark.operators.parse import parse_lines_multi
 
+        lines = list(lines) + [None, ""]
         df = _to_rows(spark, lines)
         out = {
             r["line_no"]: r
@@ -290,7 +294,7 @@ class TestParseMulti:
         }
         for i, line in enumerate(lines):
             want_name, want_vals = None, None
-            for s in specs:
+            for s in specs if line is not None else ():
                 vals, wf = parse_line(line, s)
                 if wf:
                     want_name, want_vals, want_spec = s.name, vals, s

@@ -22,7 +22,7 @@ from logparser_spark.operators.aggregate import (
 )
 from logparser_spark.operators.enrich import STATUS_DIM, enrich_all
 from logparser_spark.operators.parse import explode_lines, parse_lines
-from logparser_spark.operators.route import fixture_sinks, route, route_mask
+from logparser_spark.operators.route import fixture_sinks, route_mask
 from logparser_spark.sources.corpus import GOLDEN_LINES
 from logparser_spark.sources.pages import build_pages_from_documents
 
@@ -117,19 +117,6 @@ class TestParsePipeline:
 
 
 class TestRouting:
-    def test_routed_row_sets_exact(self, parsed_df):
-        routes, handle = route(parsed_df, fixture_sinks(), SPEC)
-        try:
-            for sink in fixture_sinks():
-                want = oracle_routed(sink)
-                got = {
-                    (r["doc_id"], r["line_no"])
-                    for r in routes[sink.name].select("doc_id", "line_no").collect()
-                }
-                assert got == want, f"{sink.name}: {len(got)} vs {len(want)}"
-        finally:
-            handle.unpersist()
-
     def test_single_pass_counts_match(self, parsed_df, spark):
         cf = {r["sink"]: r["n"] for r in
               sink_count_frame(parsed_df, fixture_sinks(), SPEC, spark).collect()}
@@ -149,53 +136,6 @@ class TestRouting:
             bits = {(r["doc_id"], r["line_no"]) for r in rows
                     if (r["route_bits"] >> i) & 1}
             assert bits == want, f"bitmask {sink.name}"
-
-    def test_single_pass_writer_matches_route(self, parsed_df, spark,
-                                              tmp_path):
-        """write_routes_single_pass: per-sink row sets identical to
-        route()'s for all 7 fixture sinks, from ONE scan of the input —
-        no persist, no per-sink re-scan (the large-N shape; SURVEY §4
-        custom item 3)."""
-        from logparser_spark.operators.route import (
-            read_routed_sink,
-            routed_sink_ids,
-            write_routes_single_pass,
-        )
-
-        base = str(tmp_path / "routed")
-        write_routes_single_pass(parsed_df, fixture_sinks(), SPEC, base)
-        for sink in fixture_sinks():
-            got = {
-                (r["doc_id"], r["line_no"])
-                for r in read_routed_sink(spark, base, sink.name)
-                .select("doc_id", "line_no").collect()
-            }
-            assert got == oracle_routed(sink), sink.name
-
-        # plan shape: the exploded write input scans its source ONCE and
-        # parses once — N sinks never multiply the scan or the Python
-        # stage (contrast: route() persists + N filtered scans)
-        from pyspark.sql import functions as F
-
-        out = parsed_df.withColumn(
-            "sink", F.explode(routed_sink_ids(fixture_sinks(), SPEC))
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        # exactly ONE source scan. If another test module cached the
-        # documents parquet, the source resolves through one
-        # InMemoryTableScan (whose printout embeds the relation's own
-        # FileScan line) — still a single scan.
-        n_scans = plan.count("InMemoryTableScan") or plan.count("FileScan")
-        n_py = (plan.count("ArrowEvalPython") + plan.count("MapInArrow")
-                + plan.count("MapInPandas"))
-        assert n_scans == 1, plan
-        assert n_py <= 1, plan
-
-        # per-sink reads prune to the one sink=<name> directory
-        files = read_routed_sink(spark, base, "sink_info").select(
-            F.input_file_name().alias("f")
-        ).distinct().collect()
-        assert files and all("sink=sink_info" in r["f"] for r in files)
 
 
 class TestAggregates:

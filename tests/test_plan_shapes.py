@@ -50,6 +50,15 @@ def test_at_most_one_python_stage_per_query(query_plans):
     assert not bad, f"queries planning >1 Python stage: {bad}"
 
 
+def test_format_cascade_is_one_scalar_arrow_udf(query_plans):
+    """The multi-format cascade runs as one scalar Arrow UDF over the
+    line column (passthrough columns stay JVM-side), not a
+    ``mapInArrow`` that ships every column through Python."""
+    p = query_plans["matched_format_counts_multi"]
+    assert p.count("ArrowEvalPython") == 1, p
+    assert "MapInArrow" not in p, p
+
+
 def test_no_cartesian_or_nested_loop_joins(query_plans):
     bad = {
         name: [f for f in FORBIDDEN if f in p]
