@@ -1560,102 +1560,6 @@ def q_etld1(spark, sf_dir):
     ).select("doc_id", "host", "etld1")
 
 
-def q_sniff_mime(spark, sf_dir):
-    """Magic-byte MIME sniffing over synthesized binaries: eight
-    prefix families (JPEG/PNG/RIFF-WAVE/RIFF-AVI/MP4-ftyp/zip/html/
-    unknown) built via unhex so the bytes are exact; oracle emits the
-    expected mime arithmetically."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.multimodal import sniff_mime
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    i = F.col("doc_id")
-    hexes = [
-        "ffd8ffe000",                 # jpeg
-        "89504e470d0a1a0a00",         # png
-        "52494646aabbccdd57415645",   # RIFF....WAVE
-        "52494646aabbccdd41564920",   # RIFF....AVI(space)
-        "000000206674797069736f6d",   # ....ftypisom
-        "504b030400",                 # zip
-        "3c68746d6c3e",               # <html>
-        "deadbeef",                   # unknown
-    ]
-    hx = F.lit(hexes[0])
-    for j, s in enumerate(hexes[1:], start=1):
-        hx = F.when(i % 8 == j, F.lit(s)).otherwise(hx)
-    data = F.unhex(F.concat(hx, F.lpad(F.lit(""), 8, "00")))
-    return sniff_mime(
-        docs.select("doc_id", data.alias("data")), binary_col="data"
-    ).select("doc_id", "mime")
-
-
-def q_detect_charset(spark, sf_dir):
-    """Charset sniffing over nine synthesized payload families: five
-    BOMs (UTF-32 before UTF-16 — FF FE 00 00 must not read as
-    UTF-16LE), a mixed-case http-equiv meta, an unquoted <meta
-    charset=...>, pure-ASCII, and a high-byte no-declaration payload
-    (WHATWG windows-1252 fallback). Bytes are exact via unhex; the
-    oracle states the expected (charset, method) per family
-    arithmetically — intent, not implementation."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.multimodal import detect_charset
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    i = F.col("doc_id")
-    meta1 = ('<HTML><head><META HTTP-EQUIV="Content-Type" '
-             'CONTENT="text/html; CHARSET=ISO-8859-2"></head>')
-    meta2 = "<!doctype html><meta charset=utf-8><p>hi"
-    hexes = [
-        "efbbbf" + b"hello".hex(),          # 0: utf-8 BOM
-        "fffe" + "6100",                    # 1: utf-16le BOM + 'a'
-        "feff" + "0061",                    # 2: utf-16be BOM
-        "fffe0000" + "61000000",            # 3: utf-32le BOM
-        "0000feff" + "00000061",            # 4: utf-32be BOM
-        meta1.encode().hex(),               # 5: http-equiv meta
-        meta2.encode().hex(),               # 6: unquoted meta charset
-        b"plain ascii page".hex(),          # 7: ascii heuristic
-        b"caf".hex() + "e9" + b" page".hex(),  # 8: latin-1 high byte
-    ]
-    hx = F.lit(hexes[0])
-    for j, s in enumerate(hexes[1:], start=1):
-        hx = F.when(i % 9 == j, F.lit(s)).otherwise(hx)
-    out = detect_charset(
-        docs.select("doc_id", F.unhex(hx).alias("data")),
-        binary_col="data",
-    )
-    return out.select("doc_id", "charset", "charset_method")
-
-
-def q_http_headers(spark, sf_dir):
-    """HTTP header extraction from response payloads: full response
-    text per doc (status line, three headers — one with odd casing
-    and padding, one arithmetic, one malformed line that must drop —
-    blank line, then a body containing a colon line that must NOT
-    leak into the header table). Oracle rebuilds every header row
-    arithmetically."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.sources.warc import http_headers
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    i = F.col("doc_id")
-    payload = F.concat(
-        F.lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-              "X-Doc-Id:  "),
-        i.cast("string"),
-        F.lit(" \r\nnot a header line\r\nSERVER:nginx\r\n\r\n"
-              "body: with colon\r\nrest"),
-    )
-    return http_headers(
-        docs.select(
-            F.col("doc_id").cast("string").alias("record_id"),
-            payload.alias("payload"),
-        )
-    )
-
-
 def q_boilerplate_blocks(spark, sf_dir):
     """jusText-style block classification over the synth pages. The
     oracle is ANALYTIC: the three boilerplate blocks are restated as
@@ -1912,23 +1816,6 @@ def q_cdx_lookup(spark, sf_dir):
     return weburl.cdx_lookup(cdx, "com,site5,")
 
 
-def q_warc_roundtrip(spark, sf_dir):
-    """WARC container round-trip: render every document as a
-    spec-shaped WARC/1.0 response record (exact octet Content-Length,
-    embedded HTTP response, 404s on doc_id%11, and a PLANTED
-    missing-Content-Length corruption on doc_id%17), pack 8 records
-    per file blob, then parse the blobs back with the byte walker —
-    which must emit valid=false for the corrupt records and resync at
-    the next magic without losing any neighbor. The oracle predicts
-    every output field arithmetically (octet_length over the
-    reconstructed HTTP block) without touching the parser."""
-    from logparser_spark.sources import warc
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    files = warc.synth_warc_files(docs, per_file=8)
-    return warc.parse_warc(files)
-
-
 def q_filter_verdict(spark, sf_dir):
     """The corpus keep/drop filter chain (C4/FineWeb-style): language
     + length + quality + repetition gates in one projection, with the
@@ -1940,19 +1827,6 @@ def q_filter_verdict(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.filter_verdict(docs)
-
-
-def q_wet_records(spark, sf_dir):
-    """The WARC→WET derivation (Common Crawl's extracted-text
-    product): pack the corpus into WARC files, parse the records back,
-    keep the valid responses and reduce each HTML payload to main
-    text. The oracle predicts every WET row arithmetically — including
-    that the %17 corrupted records and nothing else are absent."""
-    from logparser_spark.sources import warc
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    files = warc.synth_warc_files(docs, per_file=8)
-    return warc.to_wet(warc.parse_warc(files))
 
 
 def q_term_search(spark, sf_dir):
@@ -2275,35 +2149,6 @@ def q_length_quantile_sketch(spark, sf_dir):
     )
 
 
-def q_extract_text(spark, sf_dir):
-    """Boilerplate removal from realistic messy HTML: per document,
-    build a page with script/style blocks (containing '<', quotes and
-    entities), a comment, nested tags and the five named entities
-    around the document text, then run the pure-Catalyst extractor.
-    The oracle predicts the extracted string by CONSTRUCTION ('Doc N
-    <text> A & B <ok> "q" \\'s\\''), not by re-running the regexes — an
-    independent check of every removal/unescape/collapse rule."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators import multimodal
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    html = F.concat(
-        F.lit('<html><head><script type="text/javascript">'
-              'if(1<2){x("&amp;");}</script><style>p>a{color:red}'
-              '</style></head>\n<body><h1>Doc '),
-        F.col("doc_id").cast("string"),
-        F.lit("</h1>\n<!-- hidden "),
-        F.col("doc_id").cast("string"),
-        F.lit(" -->\n<p>"),
-        F.col("text"),
-        F.lit("</p>\n<p>A &amp; B &lt;ok&gt; &quot;q&quot; "
-              "&#39;s&#39;</p></body></html>"),
-    )
-    pages = docs.select("doc_id", F.encode(html, "UTF-8").alias("html"))
-    return multimodal.extract_text(pages).select("doc_id", "extracted")
-
-
 def q_contamination_check(spark, sf_dir):
     """Benchmark decontamination: every 13th document stands in for the
     benchmark suite; per-doc distinct word 3-grams are semi-joined
@@ -2381,39 +2226,6 @@ def q_strip_duplicate_spans(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return corpus.strip_duplicate_spans(docs, k=5)
-
-
-# Fixed tokenizer merge rules for the apply-side query: compound
-# chains (t+h → th+e; r+o → ro+w) exercise training-order dependence.
-BPE_MERGES = [("t", "h"), ("th", "e"), ("s", "t"), ("a", "r"),
-              ("e", "r"), ("r", "o"), ("ro", "w"), ("i", "n")]
-
-
-def q_bpe_tokens(spark, sf_dir):
-    """REAL BPE tokenization (apply half): the full spaced-symbol
-    merge chain — 8 ordered literal replaces with word boundaries
-    blocking cross-word merges — over every document, emitting the
-    COMPLETE token stream plus counts. Map-only, zero UDF/shuffle; the
-    oracle states the identical replace chain, so every token
-    boundary is hash-checked cross-engine."""
-    from logparser_spark.operators import bpe
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bpe.bpe_apply_tokens(docs, BPE_MERGES)
-
-
-def q_bpe_train(spark, sf_dir):
-    """REAL BPE training (learn half, Sennrich et al. 2016): 4 merge
-    rounds over the distinct-word frequency table — adjacent-pair
-    explode weighted by word frequency, corpus argmax with the
-    lexicographic tie-break, winner folded back via one replace. The
-    oracle UNROLLS the same 4 rounds in SQL (each round's argmax CTE
-    feeding the next round's replace through scalar subqueries), so
-    the learned rules AND their pair counts must match exactly."""
-    from logparser_spark.operators import bpe
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bpe.bpe_train_frame(docs, n_merges=4)
 
 
 def q_paragraph_dedup(spark, sf_dir):
@@ -3625,43 +3437,6 @@ def _dataprep_sql() -> dict[str, str]:
         ELSE 'site' || (doc_id % 40) || '.co.jp' END AS etld1
     FROM documents"""
 
-    sqls["sniff_mime"] = """
-    SELECT doc_id,
-      CASE doc_id % 8
-        WHEN 0 THEN 'image/jpeg'
-        WHEN 1 THEN 'image/png'
-        WHEN 2 THEN 'audio/wav'
-        WHEN 3 THEN 'video/x-msvideo'
-        WHEN 4 THEN 'video/mp4'
-        WHEN 5 THEN 'application/zip'
-        WHEN 6 THEN 'text/html'
-        ELSE 'application/octet-stream' END AS mime
-    FROM documents"""
-
-    sqls["detect_charset"] = """
-    SELECT doc_id,
-      CASE doc_id % 9
-        WHEN 0 THEN 'utf-8'    WHEN 1 THEN 'utf-16le'
-        WHEN 2 THEN 'utf-16be' WHEN 3 THEN 'utf-32le'
-        WHEN 4 THEN 'utf-32be' WHEN 5 THEN 'iso-8859-2'
-        WHEN 6 THEN 'utf-8'    WHEN 7 THEN 'ascii'
-        ELSE 'windows-1252' END AS charset,
-      CASE WHEN doc_id % 9 <= 4 THEN 'bom'
-           WHEN doc_id % 9 <= 6 THEN 'meta'
-           ELSE 'heuristic' END AS charset_method
-    FROM documents"""
-
-    sqls["http_headers"] = """
-    SELECT doc_id::VARCHAR AS record_id, 1::BIGINT AS seq,
-           'content-type' AS name, 'text/html' AS value
-    FROM documents
-    UNION ALL
-    SELECT doc_id::VARCHAR, 2::BIGINT, 'x-doc-id', doc_id::VARCHAR
-    FROM documents
-    UNION ALL
-    SELECT doc_id::VARCHAR, 4::BIGINT, 'server', 'nginx'
-    FROM documents"""
-
     sqls["route_date_rows"] = """
     WITH c AS (
       SELECT doc_id,
@@ -4042,40 +3817,6 @@ def _dataprep_sql() -> dict[str, str]:
       FROM s)
     WHERE rank <= 3"""
 
-    sqls["warc_roundtrip"] = """
-    SELECT (doc_id // 8)::BIGINT AS file_id,
-      (doc_id % 8)::INT AS rec_no,
-      'response' AS warc_type,
-      'http://site' || (doc_id % 50) || '.com/page/' || doc_id
-        AS target_uri,
-      '<urn:uuid:' || lpad(doc_id::VARCHAR, 32, '0') || '>' AS record_id,
-      (CASE WHEN doc_id % 17 = 0 THEN NULL
-        ELSE octet_length(encode(
-          (CASE WHEN doc_id % 11 = 0 THEN 'HTTP/1.1 404 Not Found'
-                ELSE 'HTTP/1.1 200 OK' END)
-          || chr(13) || chr(10)
-          || 'Content-Type: text/html; charset=utf-8'
-          || chr(13) || chr(10) || chr(13) || chr(10)
-          || '<html><body>' || text || '</body></html>'))
-       END)::BIGINT AS content_length,
-      (CASE WHEN doc_id % 17 = 0 THEN NULL
-            WHEN doc_id % 11 = 0 THEN 404 ELSE 200 END)::INT
-        AS http_status,
-      CASE WHEN doc_id % 17 = 0 THEN NULL
-           ELSE '<html><body>' || text || '</body></html>' END
-        AS payload,
-      (doc_id % 17 <> 0) AS valid
-    FROM documents"""
-
-    sqls["wet_records"] = """
-    SELECT (doc_id // 8)::BIGINT AS file_id,
-      (doc_id % 8)::INT AS rec_no,
-      'http://site' || (doc_id % 50) || '.com/page/' || doc_id
-        AS target_uri,
-      '<urn:uuid:' || lpad(doc_id::VARCHAR, 32, '0') || '>' AS record_id,
-      trim(regexp_replace(text, '\\s+', ' ', 'g')) AS wet_text
-    FROM documents WHERE doc_id % 17 <> 0"""
-
     sqls["term_search"] = """
     WITH d AS (
       SELECT doc_id,
@@ -4300,11 +4041,6 @@ def _dataprep_sql() -> dict[str, str]:
         + ") WHERE starts_with(surt_key, 'com,site5,')"
     )
 
-    sqls["extract_text"] = """
-    SELECT doc_id,
-      'Doc ' || doc_id || ' ' || text || ' A & B <ok> "q" ''s''' AS extracted
-    FROM documents"""
-
     sqls["contamination_check"] = """
     WITH w AS (
       SELECT doc_id, list_filter(string_split(text, ' '), x -> len(x) > 0) AS w
@@ -4453,62 +4189,6 @@ def _dataprep_sql() -> dict[str, str]:
     FROM t
     LEFT JOIN c ON c.doc_id = t.doc_id
     LEFT JOIN m ON m.doc_id = t.doc_id"""
-
-    _bpe_marked = r"""regexp_replace(
-      regexp_replace(
-        regexp_replace(regexp_replace(text, '[#|]', '', 'g'),
-                       '\s+', '|', 'g'),
-        '^\|+|\|+$', '', 'g'),
-      '(.)', '#\1 ', 'g')"""
-    _bpe_chain = _bpe_marked
-    for _a, _b in BPE_MERGES:
-        _bpe_chain = (f"replace({_bpe_chain}, '#{_a} #{_b} ', "
-                      f"'#{_a}{_b} ')")
-    sqls["bpe_tokens"] = f"""
-    SELECT doc_id,
-      trim(replace({_bpe_chain}, '#', '')) AS bpe_text,
-      len(list_filter(string_split({_bpe_chain}, ' '),
-          t -> len(t) > 1 AND t != '#|'))::BIGINT AS n_tokens,
-      len(list_filter(string_split_regex(text, '\\s+'),
-          t -> len(t) > 0))::BIGINT AS n_words
-    FROM documents"""
-
-    # unrolled 4-round BPE training: round k's argmax CTE (r{k}) feeds
-    # round k+1's word table (w{k}) through scalar subqueries
-    _rounds = 4
-    _bpe_sql = [r"""
-    WITH w0 AS (
-      SELECT regexp_replace(word, '(.)', '#\1 ', 'g') AS s,
-             count(*)::BIGINT AS freq
-      FROM (SELECT unnest(list_filter(
-              string_split_regex(
-                regexp_replace(text, '[#|]', '', 'g'), '\s+'),
-              t -> len(t) > 0)) AS word
-            FROM documents)
-      GROUP BY 1)"""]
-    for _k in range(1, _rounds + 1):
-        _bpe_sql.append(f""",
-    r{_k} AS (
-      SELECT t[i.i] AS a, t[i.i + 1] AS b, sum(freq)::BIGINT AS cnt
-      FROM (SELECT list_filter(string_split(s, ' '),
-                               x -> len(x) > 0) AS t, freq
-            FROM w{_k - 1}),
-        unnest(range(1, len(t))) i(i)
-      GROUP BY 1, 2 ORDER BY cnt DESC, a, b LIMIT 1)""")
-        if _k < _rounds:
-            _bpe_sql.append(f""",
-    w{_k} AS (
-      SELECT replace(s,
-                     (SELECT a || ' ' || b || ' ' FROM r{_k}),
-                     (SELECT '#' || substr(a, 2) || substr(b, 2) || ' '
-                      FROM r{_k})) AS s, freq
-      FROM w{_k - 1})""")
-    _bpe_sql.append("\n    " + "\n    UNION ALL ".join(
-        f"SELECT {_k}::INT AS step, substr(a, 2) AS \"left\", "
-        f"substr(b, 2) AS \"right\", cnt AS pair_count FROM r{_k}"
-        for _k in range(1, _rounds + 1)
-    ))
-    sqls["bpe_train"] = "".join(_bpe_sql)
 
     sqls["paragraph_dedup"] = """
     SELECT doc_id,
@@ -5253,8 +4933,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # so ordering IS evidence routing.  _DRIVER_HEAD lists, in priority
 # order, the queries that most need a driver CORRECTNESS row this
 # round (r05): first any round-5 additions (never checked by
-# definition), then the 37 queries that have never had a driver row
-# across r01-r04 (all 37 verified green locally via
+# definition), then the 34 queries that have never had a driver row
+# across r01-r04 (all 34 verified green locally via
 # tools/check_oracle.py at sf0.01 in round 4), then 13 rotated-back
 # queries whose operator files round 4 touched (dedup.py +174,
 # parse.py +140, filters.py +15) so they re-earn a fresh row.
@@ -5266,7 +4946,7 @@ _DRIVER_HEAD: list[str] = [
     "incremental_lsh",
     "crawl_frontier",
     "sentence_dedup",
-    # -- never driver-checked across r01-r04 (37) --
+    # -- never driver-checked across r01-r04 (34) --
     "cluster_representatives",
     "norm_exact_dedup",
     "hard_negatives",
@@ -5297,16 +4977,13 @@ _DRIVER_HEAD: list[str] = [
     "crawl_diff",
     "dq_check",
     "clean_corpus_verdicts",
-    "sniff_mime",
-    "detect_charset",
-    "http_headers",
     "containment_pairs",
     "collocations",
     "sample_weighted",
     "levenshtein_pairs",
     # -- rotated back: operator files touched in round 4 (13) --
     # Ordered so the ~50-entry driver window catches the highest-value
-    # rows first (54 entries total → the last ~4 wait for the next
+    # rows first (51 entries total → the last ~1 waits for the next
     # rotation): the flagship invariant (sink_counts), the parse
     # headline (parse_metrics) and the filters.py consumers beat the
     # redundant dedup.py consumers (lsh_pairs + near_dup_clusters
@@ -5385,7 +5062,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repetition_stats": q_repetition_stats,
         "filter_verdict": q_filter_verdict,
         "pii_scrub": q_pii_scrub,
-        "extract_text": q_extract_text,
         "boilerplate_blocks": q_boilerplate_blocks,
         "main_content": q_main_content,
         "canonical_urls": q_canonical_urls,
@@ -5420,8 +5096,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rebalance_mix": q_rebalance_mix,
         "tag_keywords": q_tag_keywords,
         "sitemap_urls": q_sitemap_urls,
-        "warc_roundtrip": q_warc_roundtrip,
-        "wet_records": q_wet_records,
         "term_search": q_term_search,
         "bm25_topk": q_bm25_topk,
         "url_revisions_latest": q_url_revisions_latest,
@@ -5448,8 +5122,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "winnow_overlap": q_winnow_overlap,
         "duplicate_spans": q_duplicate_spans,
         "strip_duplicate_spans": q_strip_duplicate_spans,
-        "bpe_tokens": q_bpe_tokens,
-        "bpe_train": q_bpe_train,
         # checkpoint/lineage + skew
         "lineage_buckets": q_lineage_buckets,
         "host_line_tally_salted": q_host_line_tally_salted,
@@ -5477,9 +5149,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_doc_lines": q_dedup_doc_lines,
         "robots_sitemaps": q_robots_sitemaps,
         "etld1": q_etld1,
-        "sniff_mime": q_sniff_mime,
-        "detect_charset": q_detect_charset,
-        "http_headers": q_http_headers,
         "route_raw_contains": q_route_raw_contains,
         "route_ew_rows": q_route_ew_rows,
         "route_nor_rows": q_route_nor_rows,

@@ -106,36 +106,6 @@ def keep_latest(df, key_col: str = "url", ts_col: str = "warc_ts",
     return agg.select(*out)
 
 
-def merge_latest(a, b, key_col: str = "url", ts_col: str = "warc_ts",
-                 carry: Sequence[str] = ()):
-    """Merge law for :func:`keep_latest` outputs — winners tables are
-    a MERGEABLE summary: the winner of a union is
-    ``max(struct(ts, digest, carry...))`` of the per-shard winners and
-    revision counts ADD. Associative + commutative, so shard/snapshot
-    winner tables combine in any order (and a streaming upsert can
-    fold micro-batches into a persisted winners table with the same
-    one-line law). Inputs must share the keep_latest output schema."""
-    from pyspark.sql import functions as F
-
-    cols = [key_col, ts_col, "digest", "n_revisions",
-            *[c for c in carry]]
-    u = a.select(*cols).unionAll(b.select(*cols))
-    fields = [F.col(ts_col).alias("__ts"),
-              F.col("digest").alias("__digest")]
-    fields += [F.col(c).alias(f"__c_{c}") for c in carry]
-    agg = u.groupBy(key_col).agg(
-        F.max(F.struct(*fields)).alias("__w"),
-        F.sum("n_revisions").cast("long").alias("n_revisions"),
-    )
-    out = [
-        F.col(key_col),
-        F.col("__w.__ts").alias(ts_col),
-        F.col("__w.__digest").alias("digest"),
-        F.col("n_revisions"),
-    ] + [F.col(f"__w.__c_{c}").alias(c) for c in carry]
-    return agg.select(*out)
-
-
 def diff_summary(old, new, id_col: str = "doc_id",
                  cols: Sequence[str] = ("text",)):
     """Aggregate form: one row per status with its count."""

@@ -24,6 +24,9 @@ from typing import Optional, Union
 from ..functions.formats import FormatSpec
 from .filters import Filter, accept_expr, parse_filter, to_column
 
+# route_mask's bit i is sink i, and bit 63 of a long is its sign
+ROUTE_BITS_MAX_SINKS = 63
+
 
 @dataclass
 class SinkSpec:
@@ -115,9 +118,10 @@ def route_mask(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
     ``route_bits`` long (bit i = sink i). One projection, one parse-UDF
     evaluation, no data movement.
 
-    Raises ``ValueError`` for the names :func:`check_sink_names` rejects
-    and for a sink named ``bits``, whose ``route_bits`` column the packed
-    mask would overwrite."""
+    Raises ``ValueError`` for the names :func:`check_sink_names` rejects,
+    for a sink named ``bits``, whose ``route_bits`` column the packed
+    mask would overwrite, and for more than 63 sinks, the bits of a
+    non-negative long."""
     from pyspark.sql import functions as F
 
     check_sink_names(sinks)
@@ -125,6 +129,12 @@ def route_mask(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
         raise ValueError(
             "sink name 'bits' collides with route_mask's packed "
             "'route_bits' column"
+        )
+    if len(sinks) > ROUTE_BITS_MAX_SINKS:
+        raise ValueError(
+            f"route_mask packs one bit per sink into the 'route_bits' long, "
+            f"so it takes at most {ROUTE_BITS_MAX_SINKS} sinks, "
+            f"got {len(sinks)}"
         )
     cols = {f"route_{s.name}": sink_column(s, spec, parsed_col) for s in sinks}
     bits = F.lit(0).cast("long")

@@ -371,9 +371,8 @@ def extract_anchors(pages, html_col: str = "html",
 
 
 def _unescape_entities(col):
-    """The five named HTML entities + numeric decimal refs are out of
-    scope here (multimodal.extract_text handles the full rule set);
-    anchors only need the named five."""
+    """Unescape the five named HTML entities; numeric refs are out of
+    scope, since anchors only need the named five."""
     from pyspark.sql import functions as F
 
     for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),

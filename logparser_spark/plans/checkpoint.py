@@ -50,8 +50,9 @@ identical). A run writes at most sinks x buckets data files, whatever
 the input's task count; written straight from the input's tasks it
 would be up to tasks x sinks x buckets small files (Iceberg's hash write
 distribution clusters by partition key for the same reason). The bucket
-column is pmod(key, buckets) so the same row always lands in the same
-bucket across runs — the precondition for idempotent redo.
+column is pmod(key, buckets), or 0 for a NULL key, so the same row always
+lands in the same bucket across runs — the precondition for idempotent
+redo.
 """
 
 from __future__ import annotations
@@ -108,8 +109,11 @@ def fingerprint(spec: FormatSpec, sinks: list[SinkSpec], buckets: int,
     canonical filter (:func:`_filter_text`) and malformed-acceptance
     flag, the bucket count and the bucket key. Raises ``ValueError`` for
     sink names that :func:`~logparser_spark.operators.route.check_sink_names`
-    rejects."""
+    rejects and unless ``buckets`` is an int >= 1 (with no bucket to
+    route to, a job would report success without reading its input)."""
     check_sink_names(sinks)
+    if isinstance(buckets, bool) or not isinstance(buckets, int) or buckets < 1:
+        raise ValueError(f"buckets must be an int >= 1, got {buckets!r}")
 
     def filter_text(s: SinkSpec):
         ast = s.ast(spec)
@@ -216,11 +220,14 @@ def _pairs(hist: Counter) -> list:
 def _bucketed(parsed_df, key_col: str, buckets: int, todo: list[int]):
     """The to-do rows with their ``__bucket``, hash-distributed by it: each
     bucket's rows sit in one partition, so one task writes each (sink,
-    bucket) file, whatever the input's task count."""
+    bucket) file, whatever the input's task count. A NULL key goes to
+    bucket 0, so every run buckets its rows the same way and none is
+    dropped."""
     from pyspark.sql import functions as F
 
+    bucket = F.coalesce(F.pmod(F.col(key_col), F.lit(buckets)), F.lit(0))
     return parsed_df.withColumn(
-        "__bucket", F.pmod(F.col(key_col), F.lit(buckets)).cast("int")
+        "__bucket", bucket.cast("int")
     ).filter(F.col("__bucket").isin(todo)).repartition(F.col("__bucket"))
 
 

@@ -186,8 +186,8 @@ def run_job(spark, cfg: JobConfig) -> dict:
             "(expected 'checkpoint')"
         )
     spec = compile_format(cfg.format)
-    source = _source_identity(cfg)
     fp = C.fingerprint(spec, cfg.sinks, cfg.buckets, cfg.key_col)
+    source = _source_identity(cfg)
     if len(C.verified_buckets(cfg.output, fp, source)) < cfg.buckets:
         skew_conf(spark)
         pages = read_source(spark, SinkTarget.parse(cfg.input))

@@ -229,6 +229,63 @@ def test_changed_config_raises(spark, parsed, base):
     assert C.route_checkpointed(df, same, spec, base, buckets=4)["processed"] == []
 
 
+def test_null_key_is_routed_not_dropped(spark, base):
+    """A line whose bucket key is NULL goes to bucket 0: the lineage
+    counts every input line, each sink holds the rows ``route_mask``
+    routes to it, and a rerun is a no-op."""
+    from logparser_spark.functions.formats import DEFAULT_FORMAT, compile_format
+    from logparser_spark.operators.parse import explode_lines, parse_lines
+    from logparser_spark.operators.route import route_mask
+    from logparser_spark.plans import checkpoint as C
+
+    with open(os.path.join(os.path.dirname(__file__), "data",
+                           "sample.log")) as f:
+        log = f.read().splitlines()
+    spec = compile_format(DEFAULT_FORMAT)
+    pages = spark.createDataFrame(
+        [(0, "\n".join(log[3:5])), (1, log[12]), (None, log[14])],
+        "doc_id long, text string")
+    df = parse_lines(explode_lines(pages, keep_cols=["doc_id"]), spec)
+    assert df.count() == 4
+
+    r1 = C.route_checkpointed(df, _sinks(), spec, base, buckets=4)
+    assert r1["processed"] == [0, 1, 2, 3]
+    assert C.lineage_metrics(base)["rows"] == 4
+    masked = route_mask(df, _sinks(), spec)
+    for s in _sinks():
+        got = C.read_routed(spark, base, s.name)
+        want = masked.filter(F.col(f"route_{s.name}"))
+        assert got.count() == want.count(), s.name
+        assert got.filter(F.col("doc_id").isNull()).count() == \
+            want.filter(F.col("doc_id").isNull()).count() == 1, s.name
+    r2 = C.route_checkpointed(df, _sinks(), spec, base, buckets=4)
+    assert r2["processed"] == [] and r2["skipped"] == [0, 1, 2, 3]
+    assert C.lineage_metrics(base)["rows"] == 4
+
+
+@pytest.mark.parametrize("buckets", [0, -3, "16"])
+def test_buckets_below_one_raise_before_any_work(base, buckets):
+    """With no bucket to route to, a job reported success without
+    reading its input. Both entry points now raise before any Spark job
+    (no session is given) and write nothing."""
+    from logparser_spark.functions.formats import DEFAULT_FORMAT, compile_format
+    from logparser_spark.plans import checkpoint as C
+    from logparser_spark.plans.job import JobConfig, run_job
+
+    cfg = JobConfig.from_dict({
+        "input": "parquet:/nonexistent/pages",
+        "output": f"{base}/out",
+        "sinks": [{"name": "all", "filter": None}],
+        "buckets": buckets,
+    })
+    with pytest.raises(ValueError, match="buckets must be an int >= 1"):
+        run_job(None, cfg)
+    with pytest.raises(ValueError, match="buckets must be an int >= 1"):
+        C.route_checkpointed(None, _sinks(), compile_format(DEFAULT_FORMAT),
+                             f"{base}/out", buckets=buckets)
+    assert os.listdir(base) == []
+
+
 def _files_per_bucket_dir(base, sinks):
     import os
 

@@ -1,5 +1,5 @@
 """Training-data pipeline ops: dedup / similarity / textstats /
-multimodal. Invariant-style tests (the exact value parity with DuckDB is
+weburl. Invariant-style tests (the exact value parity with DuckDB is
 covered by tools/check_oracle.py and the driver's correctness gate)."""
 
 from __future__ import annotations
@@ -344,61 +344,6 @@ def test_pii_scrub_patterns(spark):
         assert "@example.com" not in s
 
 
-def test_decode_html_roundtrip(spark):
-    from logparser_spark.operators import multimodal
-    from logparser_spark.sources.pages import build_pages_from_documents
-
-    pages = build_pages_from_documents(spark, SF_DIR).limit(10)
-    out = multimodal.decode_html(pages)
-    mism = out.filter(F.col("html_text") != F.col("text")).count()
-    assert mism == 0
-
-
-def test_extract_text_rules(spark):
-    """Each boilerplate rule independently: script/style blocks with
-    '<' and '>' inside, comments, tag strip, entity order, whitespace
-    collapse. Expected values are written by hand, not recomputed."""
-    from logparser_spark.operators import multimodal
-
-    cases = [
-        # (html, expected)
-        ("<p>plain</p>", "plain"),
-        ("<script>if(a<b){y('</')}</script>after", "after"),
-        ("<SCRIPT a='x'>s</SCRIPT>kept", "kept"),
-        ("<style>p > a{}</style>t", "t"),
-        ("a<!-- <p>no</p> -->b", "ab"),
-        ("x &lt;tag&gt; &amp; &quot;q&quot; &#39;s&#39; &apos;a&apos;",
-         "x <tag> & \"q\" 's' 'a'"),
-        # &amp; unescapes LAST, so the double-escape resolves one
-        # level only — the correct single-pass HTML behavior
-        ("&amp;lt;", "&lt;"),
-        ("  a \t\n b\r\n ", "a b"),
-        ("<div><h1>T</h1>\n<p>body text</p></div>", "T body text"),
-        # numeric entities other than &#39; pass through untouched
-        ("&#169; x", "&#169; x"),
-    ]
-    df = spark.createDataFrame(
-        [(i, h) for i, (h, _) in enumerate(cases)], "id long, page string"
-    )
-    got = {
-        r["id"]: r["extracted"]
-        for r in multimodal.extract_text(
-            df, html_col="page", binary=False
-        ).collect()
-    }
-    for i, (_, want) in enumerate(cases):
-        assert got[i] == want, (i, cases[i][0], got[i])
-
-    # binary path: UTF-8 bytes round-trip (incl. multi-byte content)
-    from pyspark.sql import functions as F
-
-    bdf = spark.createDataFrame(
-        [(1, "<p>héllo &amp; wörld</p>")], "id long, page string"
-    ).select("id", F.encode("page", "UTF-8").alias("html"))
-    [r] = multimodal.extract_text(bdf).collect()
-    assert r["extracted"] == "héllo & wörld"
-
-
 def test_canonicalize_url_rules(spark):
     """Hand-written canonical expectations per normalization rule —
     including the NON-default-port-for-the-other-scheme traps
@@ -710,23 +655,6 @@ def test_filter_verdict_rules(spark):
         and got[5][1] == "lang,length,quality"  # 0 words: rep holds
     # reasons order is fixed: lang before length before quality
     assert got[5][1].split(",") == ["lang", "length", "quality"]
-
-
-def test_warc_to_wet(spark):
-    from logparser_spark.sources import warc
-
-    docs = spark.createDataFrame(
-        [(i, f"body text {i}") for i in range(20)],
-        "doc_id long, text string",
-    )
-    wet = warc.to_wet(warc.parse_warc(
-        warc.synth_warc_files(docs, per_file=4)
-    ))
-    rows = {r["rec_no"] + 4 * r["file_id"]: r for r in wet.collect()}
-    assert set(rows) == {i for i in range(20) if i % 17 != 0}
-    for i, r in rows.items():
-        assert r["wet_text"] == f"body text {i}"
-        assert r["target_uri"].endswith(f"/page/{i}")
 
 
 def test_bloom_bitmap_properties():
@@ -1817,42 +1745,6 @@ def test_registrable_domain(spark):
     for h, want in cases.items():
         key = "my.party.suf.example" if h == "extra.suf.example" else h
         assert got[key] == want, (key, got[key], want)
-
-
-def test_sniff_mime_and_http_headers(spark):
-    from logparser_spark.operators.multimodal import sniff_mime
-    from logparser_spark.sources.warc import http_headers
-
-    rows = [
-        (1, bytearray(b"\xff\xd8\xff\xe0rest"), "image/jpeg"),
-        (2, bytearray(b"\x89PNG\r\n\x1a\nx"), "image/png"),
-        (3, bytearray(b"RIFF\x00\x00\x00\x00WAVEfmt "), "audio/wav"),
-        (4, bytearray(b"RIFF\x00\x00\x00\x00AVI LIST"),
-         "video/x-msvideo"),
-        (5, bytearray(b"\x00\x00\x00 ftypisom"), "video/mp4"),
-        (6, bytearray(b"random"), "application/octet-stream"),
-        (7, None, None),
-        (8, bytearray(b"GIF89a..."), "image/gif"),
-        (9, bytearray(b"fLaC\x00"), "audio/flac"),
-        (10, bytearray(b"\x1f\x8b\x08\x00"), "application/gzip"),
-    ]
-    df = spark.createDataFrame(
-        [(i, d) for i, d, _m in rows], "doc_id long, data binary"
-    )
-    got = {r["doc_id"]: r["mime"] for r in sniff_mime(df).collect()}
-    for i, _d, want in rows:
-        assert got[i] == want, (i, got[i], want)
-
-    h = spark.createDataFrame(
-        [("r1", "HTTP/1.1 200 OK\r\nContent-Type: text/html; q=1\r\n"
-                "X-N:  7 \r\nbad line\r\nSERVER:nginx\r\n\r\n"
-                "body: colon\r\nx")],
-        "record_id string, payload string",
-    )
-    hdrs = [(r["seq"], r["name"], r["value"])
-            for r in http_headers(h).orderBy("seq").collect()]
-    assert hdrs == [(1, "content-type", "text/html; q=1"),
-                    (2, "x-n", "7"), (4, "server", "nginx")]
 
 
 def test_kmeans_matches_python_reference(spark):

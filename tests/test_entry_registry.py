@@ -49,3 +49,29 @@ def test_check_oracle_puts_its_own_checkout_first(tmp_path):
         assert sys.path[0] == str(tmp_path)
     finally:
         sys.path[:] = saved
+
+
+def _ledger_rows(name):
+    """First-column query names of the table rows in a ledger file."""
+    rows = []
+    with open(os.path.join(ROOT, name)) as f:
+        for line in f:
+            if not line.startswith("| "):
+                continue
+            cell = line.split("|")[1].strip()
+            if cell != "query":
+                rows.append(cell)
+    return rows
+
+
+def test_query_ledgers_have_one_row_per_query():
+    names = set(E.queries())
+    for ledger in ("PLANS.md", "MANIFEST.md"):
+        rows = _ledger_rows(ledger)
+        dup = sorted({r for r in rows if rows.count(r) > 1})
+        assert not dup, (ledger, dup)
+        assert set(rows) == names, {
+            "ledger": ledger,
+            "stale rows": sorted(set(rows) - names),
+            "missing rows": sorted(names - set(rows)),
+        }

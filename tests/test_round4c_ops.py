@@ -535,35 +535,3 @@ def test_domain_blocklist_evidence_and_threshold(spark):
     assert not got["c.com"].blocked          # insufficient evidence
     assert got["b.com"].ok_ppm == 0
     assert got["a.com"].ok_ppm == 1_000_000
-
-
-# ── charset sniffing ─────────────────────────────────────────────────
-
-
-def test_detect_charset_families(spark):
-    from logparser_spark.operators.multimodal import detect_charset
-
-    cases = [
-        (0, b"\xef\xbb\xbfhello", "utf-8", "bom"),
-        (1, b"\xff\xfea\x00", "utf-16le", "bom"),
-        (2, b"\xfe\xff\x00a", "utf-16be", "bom"),
-        (3, b"\xff\xfe\x00\x00a\x00\x00\x00", "utf-32le", "bom"),
-        (4, b"\x00\x00\xfe\xff\x00\x00\x00a", "utf-32be", "bom"),
-        (5, b'<META CONTENT="text/html; CHARSET=ISO-8859-2">',
-         "iso-8859-2", "meta"),
-        (6, b"<meta charset=utf-8><p>hi", "utf-8", "meta"),
-        (7, b"plain ascii", "ascii", "heuristic"),
-        (8, b"caf\xe9 page", "windows-1252", "heuristic"),
-        # BOM wins over a contradicting meta declaration
-        (9, b"\xef\xbb\xbf<meta charset=koi8-r>", "utf-8", "bom"),
-        (10, None, None, None),
-    ]
-    df = spark.createDataFrame(
-        [(i, bytearray(b) if b is not None else None)
-         for i, b, _, _ in cases],
-        "doc_id int, data binary",
-    )
-    got = {r.doc_id: (r.charset, r.charset_method)
-           for r in detect_charset(df).collect()}
-    for i, _, cs, m in cases:
-        assert got[i] == (cs, m), (i, got[i], cs, m)

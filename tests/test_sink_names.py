@@ -150,3 +150,22 @@ def test_route_mask_rejects_bits(parsed):
     check_sink_names(sinks)
     with pytest.raises(ValueError, match="'bits'"):
         route_mask(parsed, sinks, SPEC)
+
+
+def test_route_mask_takes_at_most_63_sinks(parsed):
+    """``route_bits`` is a long with bit i for sink i: 63 sinks fill its
+    non-negative range and a 64th raises a ``ValueError`` naming the
+    limit. The other routes store no packed mask, so the fingerprint of
+    ``route_checkpointed`` and ``run_job`` takes 64 sinks."""
+    from pyspark.sql import functions as F
+
+    from logparser_spark.operators.route import route_mask
+    from logparser_spark.plans.checkpoint import fingerprint
+
+    sinks = [SinkSpec(f"s{i}", None) for i in range(64)]
+    assert len(fingerprint(SPEC, sinks, 4, "doc_id")["sinks"]) == 64
+    with pytest.raises(ValueError, match="at most 63 sinks"):
+        route_mask(parsed, sinks, SPEC)
+    [row] = (route_mask(parsed, sinks[:63], SPEC)
+             .agg(F.max("route_bits").alias("m")).collect())
+    assert row["m"] == (1 << 63) - 1
