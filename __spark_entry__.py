@@ -345,8 +345,6 @@ _STATUS_DIM_SQL = """dim_status(level, severity, is_error) AS (VALUES
       ('WARN',3,true), ('ERROR',4,true))"""
 
 
-
-
 # ── training-data pipeline queries (documents / embeddings tables) ────
 
 
@@ -878,128 +876,6 @@ def q_fix_mojibake(spark, sf_dir):
     )
 
 
-def q_cms_sketch(spark, sf_dir):
-    """Count-min sketch build (Cormode-Muthukrishnan): 4 md5-hash rows
-    × 64 counters over the corpus token stream, emitted as the
-    mergeable (r, bucket, cnt) table. The bucket hash is the repo's
-    cross-engine md5 contract, so the oracle reproduces every counter
-    exactly — the map-side explode, the bounded-key aggregation and
-    the hash itself are all checked."""
-    from logparser_spark.operators import sketch
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return sketch.cms_build(docs, depth=4, width=64)
-
-
-def q_cms_heavy_hitters(spark, sf_dir):
-    """Heavy hitters through the sketch: estimate every distinct term
-    (min over the 4 probed counters, broadcast join) and keep
-    est >= 900. True counts ride along, making the one-sided
-    overestimate guarantee (est >= cnt_true, collisions only inflate)
-    part of the checked output."""
-    from logparser_spark.operators import sketch
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return sketch.cms_heavy_hitters(docs, threshold=900, depth=4,
-                                    width=64)
-
-
-def q_hll_distinct(spark, sf_dir):
-    """HyperLogLog distinct-count over the corpus word-3-gram stream
-    (thousands of distinct items — past the linear-counting range, so
-    the raw estimator is the operative one): 64 md5-contract
-    registers, rank = leading zeros of the 54-bit suffix, estimate in
-    exact integer arithmetic (alpha = 709/1000, harmonic sum scaled by
-    2^30). True distinct rides along as a literal (one O(1) scalar
-    job, the unigram-total pattern) so the estimate's accuracy is
-    visible in the checked row. CHECKED-OUTPUT ARTIFACT ONLY: a
-    production pipeline runs the sketch precisely to avoid that exact
-    distinct().count() — never copy the ride-along into a real path
-    (the sketch's whole point is dodging the exact shuffle)."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators import sketch
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.filter(F.split(F.col("text"), " "),
-                    lambda t: F.length(t) > 0)
-    grams = F.when(
-        F.size(toks) >= 3,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 3),
-            lambda i: F.array_join(F.slice(toks, i + 1, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    items = docs.select(F.explode(grams).alias("item"))
-    regs = sketch.hll_registers(items, "item")
-    est = sketch.hll_estimate(regs)
-    true_d = items.distinct().count()
-    return est.select(
-        "v_empty", "s30", "raw_est",
-        F.lit(true_d).cast("long").alias("true_distinct"),
-    )
-
-
-def q_length_quantiles(spark, sf_dir):
-    """Exact document-length quantiles (p0/p25/p50/p75/p99/p100 of the
-    whitespace-token count) by histogram rank-select — the value-keyed
-    aggregate plus the same two-level prefix sum as the global line
-    ordinal, no global sort, integer-ppm rank contract. The oracle
-    recomputes the histogram cumsum and every rank in SQL."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators import quantiles
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lens = docs.select(
-        F.size(F.filter(
-            F.split(F.col("text"), " "), lambda t: F.length(t) > 0
-        )).cast("long").alias("n_tok")
-    )
-    return quantiles.quantiles_exact(
-        lens, "n_tok",
-        [0, 250_000, 500_000, 750_000, 990_000, 1_000_000],
-    )
-
-
-def q_events_funnel(spark, sf_dir):
-    """Strict-order view→click→purchase funnel over the events table:
-    per user the earliest view, the first click strictly after it,
-    the first purchase strictly after that — chained conditional
-    window minima over one user-keyed exchange. The oracle rebuilds
-    the chain with per-step correlated aggregates, so ordering
-    strictness, per-user dedup and the ppm conversion math all have
-    to match."""
-    from logparser_spark.operators import telemetry
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return telemetry.funnel(events, ["view", "click", "purchase"])
-
-
-def q_cohort_retention(spark, sf_dir):
-    """Weekly cohort retention over the events table: cohort = the
-    week bucket (anchored 2024-01-01) of each user's first event;
-    cell (cohort, offset) counts distinct cohort users active offset
-    weeks later. Two user-keyed aggregates + one user-keyed join +
-    one bounded groupBy — the oracle rebuilds the same cells."""
-    from logparser_spark.operators import telemetry
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return telemetry.cohort_retention(events, epoch="2024-01-01")
-
-
-def q_spike_hours(spark, sf_dir):
-    """Hourly anomaly detection per event type: hours whose count
-    exceeds 1.5× the trailing-24-observed-hour mean (integer
-    cross-multiplication, full-window gate). The windows run over
-    hour-cardinality aggregates, never event rows — the oracle
-    replicates the rows-based trailing frame exactly."""
-    from logparser_spark.operators import telemetry
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return telemetry.spike_hours(events)
-
-
 def q_sample_fixed_n(spark, sf_dir):
     """Deterministic fixed-size uniform sample: the 25 documents with
     the lowest salted-md5 rank — Spark plans TakeOrdered (per-partition
@@ -1010,28 +886,6 @@ def q_sample_fixed_n(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return corpus.sample_fixed_n(docs, 25).select("doc_id", "text")
-
-
-def q_fuzzy_key_pairs(spark, sf_dir):
-    """Edit-distance-1 key pairs via FastSS deletion-neighborhood
-    blocking (no cross product): key set = corpus vocabulary plus each
-    word's first-char-dropped tail (a deterministic typo corpus, so
-    every word pairs with its own tail), candidates from the shared
-    1-deletion-variant equality join, exact levenshtein verify. The
-    oracle rebuilds neighborhoods and verification in SQL."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.fuzzyjoin import fuzzy_key_pairs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = docs.select(
-        F.explode(F.filter(
-            F.split(F.col("text"), " "), lambda t: F.length(t) > 0
-        )).alias("k")
-    ).distinct()
-    tails = words.select(F.expr("substring(k, 2)").alias("k")) \
-        .where(F.length("k") > 0)
-    return fuzzy_key_pairs(words.union(tails).distinct(), "k")
 
 
 def _boiler_pages(docs):
@@ -1313,31 +1167,6 @@ def q_dq_check(spark, sf_dir):
     })
 
 
-def q_crawl_diff(spark, sf_dir):
-    """Snapshot diff for incremental recrawls: the 'new' snapshot
-    drops every 13th doc, rewrites every 7th (of the survivors), and
-    adds fresh ids for every 11th — the diff must classify every id
-    by digest comparison (added/removed/changed/unchanged) with the
-    digests themselves exposed. Oracle rebuilds statuses and both
-    digests arithmetically."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.diffsnap import snapshot_diff
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    i = F.col("doc_id")
-    survivors = docs.where(i % 13 != 0).select(
-        "doc_id",
-        F.when(i % 7 == 0, F.concat(F.col("text"), F.lit(" CHANGED")))
-        .otherwise(F.col("text")).alias("text"),
-    )
-    added = docs.where(i % 11 == 0).select(
-        (i + 1_000_000).alias("doc_id"), "text"
-    )
-    new = survivors.unionAll(added)
-    return snapshot_diff(docs.select("doc_id", "text"), new)
-
-
 def q_span_corruption(spark, sf_dir):
     """T5-style span corruption: deterministic phase-shifted mask
     spans, sentinel-delimited (input, target) pair per doc built in
@@ -1362,83 +1191,6 @@ def q_dsir_weights(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return dsir_weights(
         docs, "source IN ('src1','src2','src3')", n_buckets=4096
-    )
-
-
-def q_url_revisions_latest(spark, sf_dir):
-    """Multi-snapshot revision dedup (the Common-Crawl recrawl
-    primitive): each doc appears as 1 + doc_id%3 captures of one URL
-    with daily-spaced warc_ts, even docs rewrite their text in the
-    final capture — keep exactly the latest revision per URL via ONE
-    map-side-combined max(struct) shuffle, carrying the winning text.
-    The oracle rebuilds the revision stream and picks winners with a
-    window over (ts DESC, digest DESC)."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.diffsnap import keep_latest
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    revs = docs.select(
-        "doc_id", "text",
-        F.explode(
-            F.sequence(F.lit(0), (F.col("doc_id") % 3).cast("int"))
-        ).alias("rev"),
-    ).select(
-        F.concat(
-            F.lit("http://site"), (F.col("doc_id") % 50).cast("string"),
-            F.lit(".com/page/"), F.col("doc_id").cast("string"),
-        ).alias("url"),
-        F.expr(
-            "timestamp '2024-01-01 00:00:00' + "
-            "make_dt_interval(rev, CAST(doc_id % 97 AS INT), 0, 0)"
-        ).alias("warc_ts"),
-        F.when(
-            (F.col("rev") == F.col("doc_id") % 3)
-            & (F.col("doc_id") % 2 == 0),
-            F.concat(F.col("text"), F.lit(" v2")),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    latest = keep_latest(revs, "url", "warc_ts",
-                         cols=("text",), carry=("text",))
-    return latest.select(
-        "url",
-        F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss")
-        .alias("latest_ts"),
-        "digest", "n_revisions", "text",
-    )
-
-
-def q_campaign_range_join(spark, sf_dir):
-    """Range (interval) join via grid decomposition: ten overlapping
-    3-hour campaign windows anchored at the hour-truncated corpus min
-    timestamp, joined to events on start <= ts < end WITHOUT a
-    nested-loop plan (interval explode + one cell equality join +
-    residual check), then per-campaign event/user counts. The oracle
-    states the plain inequality join — the rewrite is checked against
-    naive semantics, not itself."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.rangejoin import range_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
-    )
-    mn = ev.agg(F.min("ts").alias("m")).collect()[0]["m"]
-    base = mn.replace(minute=0, second=0, microsecond=0)
-    rows = [
-        (k, base + datetime.timedelta(hours=2 * k),
-         base + datetime.timedelta(hours=2 * k + 3))
-        for k in range(10)
-    ]
-    campaigns = spark.createDataFrame(
-        rows, "campaign_id int, start_ts timestamp, end_ts timestamp"
-    )
-    j = range_join(ev, campaigns, ts_col="ts", bucket_s=3600)
-    return j.groupBy("campaign_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
     )
 
 
@@ -1517,7 +1269,7 @@ def q_lang_source_pivot(spark, sf_dir):
 
 
 def q_event_transitions(spark, sf_dir):
-    """Per-user event-type transition matrix (the telemetry Markov
+    """Per-user event-type transition matrix (the first-order Markov
     table): LAG over each user's time-ordered events, count (prev →
     curr) pairs; ties at identical timestamps break by event_id so
     the sequence is deterministic."""
@@ -2082,25 +1834,6 @@ def q_proximity_search(spark, sf_dir):
     return invindex.proximity_search(idx, "spark", "table", slop=3)
 
 
-def q_hll_by_type(spark, sf_dir):
-    """Per-group HyperLogLog: distinct users per event_type as
-    integer-exact register/estimate rows (the global hll_distinct
-    contract keyed by group). The oracle rebuilds registers and the
-    alpha·m²/harmonic-sum estimate per group and carries the exact
-    distinct alongside."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators import sketch
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    regs = sketch.hll_registers_by(ev, "event_type", "user_id")
-    est = sketch.hll_estimate_by(regs, "event_type")
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("long").alias("true_distinct")
-    )
-    return est.join(exact, "event_type")
-
-
 def q_unigram_drift(spark, sf_dir):
     """Snapshot drift report: even-doc_id documents as snapshot A, odd
     as snapshot B; words whose ppm frequency moved >= 1000 ppm between
@@ -2133,20 +1866,6 @@ def q_cdc_dup_chunks(spark, sf_dir):
     )
     pages = docs.select("doc_id", "text").unionAll(shifted)
     return corpus.cdc_duplicate_chunks(pages, min_copies=2, min_len=4)
-
-
-def q_length_quantile_sketch(spark, sf_dir):
-    """Mergeable quantile sketch over document lengths: id-bucket
-    systematic compaction (every 16th by (value,id) within the bucket,
-    remainder-weighted tail), two-level cumulative weights, quartile
-    targets — deterministic, so the oracle replays every step and the
-    estimates must match exactly (not just within the rank bound)."""
-    from logparser_spark.operators import quantiles
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return quantiles.quantile_sketch(
-        docs, "n_chars", [250_000, 500_000, 750_000], r=16
-    )
 
 
 def q_contamination_check(spark, sf_dir):
@@ -2888,96 +2607,6 @@ def _dataprep_sql() -> dict[str, str]:
        ELSE 0 END)::BIGINT AS score_ppm
     FROM documents doc LEFT JOIN d USING (doc_id), tot"""
 
-    sqls["cms_sketch"] = """
-    WITH w AS (
-      SELECT unnest(list_filter(string_split(text, ' '),
-                                x -> len(x) > 0)) AS term
-      FROM documents),
-    p AS (
-      SELECT r.r AS r,
-        ('0x' || substr(md5(r.r::VARCHAR || ':' || term), 1, 8))::BIGINT
-          % 64 AS bucket
-      FROM w, unnest(range(0, 4)) r(r))
-    SELECT r::INT AS r, bucket::BIGINT AS bucket,
-      count(*)::BIGINT AS cnt
-    FROM p GROUP BY 1, 2"""
-
-    sqls["cms_heavy_hitters"] = """
-    WITH w AS (
-      SELECT unnest(list_filter(string_split(text, ' '),
-                                x -> len(x) > 0)) AS term
-      FROM documents),
-    sk AS (
-      SELECT r.r AS r,
-        ('0x' || substr(md5(r.r::VARCHAR || ':' || term), 1, 8))::BIGINT
-          % 64 AS bucket,
-        count(*)::BIGINT AS cnt
-      FROM w, unnest(range(0, 4)) r(r) GROUP BY 1, 2),
-    t AS (SELECT term, count(*)::BIGINT AS cnt_true FROM w GROUP BY 1),
-    pr AS (
-      SELECT t.term, t.cnt_true, r.r AS r,
-        ('0x' || substr(md5(r.r::VARCHAR || ':' || t.term), 1, 8))::BIGINT
-          % 64 AS bucket
-      FROM t, unnest(range(0, 4)) r(r)),
-    e AS (
-      SELECT pr.term, pr.cnt_true,
-        min(coalesce(sk.cnt, 0))::BIGINT AS est
-      FROM pr LEFT JOIN sk ON sk.r = pr.r AND sk.bucket = pr.bucket
-      GROUP BY 1, 2)
-    SELECT term, cnt_true, est FROM e WHERE est >= 900"""
-
-    sqls["hll_distinct"] = """
-    WITH t AS (
-      SELECT list_filter(string_split(text, ' '), x -> len(x) > 0) AS w
-      FROM documents),
-    g AS (
-      SELECT array_to_string(w[i.i : i.i + 2], ' ') AS item
-      FROM t, unnest(range(1, greatest(len(w) - 1, 1))) i(i)),
-    h AS (
-      SELECT ('0x' || substr(md5(item), 1, 15))::BIGINT AS h FROM g),
-    r AS (
-      SELECT h >> 54 AS bucket,
-        CASE WHEN h % (1::BIGINT << 54) = 0 THEN 55
-             ELSE 55 - length(bin(h % (1::BIGINT << 54)))
-        END AS rank
-      FROM h),
-    reg AS (SELECT bucket, max(rank) AS max_rank FROM r GROUP BY 1),
-    e AS (
-      SELECT count(*)::BIGINT AS used,
-        sum((1::BIGINT << (30 - least(max_rank, 30))))::BIGINT AS s_used
-      FROM reg)
-    SELECT (64 - used)::BIGINT AS v_empty,
-      (s_used + (64 - used) * (1::BIGINT << 30))::BIGINT AS s30,
-      ((709::BIGINT * 64 * 64 * (1::BIGINT << 30))
-       // (1000 * (s_used + (64 - used) * (1::BIGINT << 30))))::BIGINT
-        AS raw_est,
-      (SELECT count(DISTINCT item) FROM g)::BIGINT AS true_distinct
-    FROM e"""
-
-    sqls["events_funnel"] = """
-    WITH t1 AS (
-      SELECT user_id, min(ts) AS t FROM events
-      WHERE event_type = 'view' GROUP BY 1),
-    t2 AS (
-      SELECT e.user_id, min(e.ts) AS t
-      FROM events e JOIN t1 ON t1.user_id = e.user_id
-      WHERE e.event_type = 'click' AND e.ts > t1.t GROUP BY 1),
-    t3 AS (
-      SELECT e.user_id, min(e.ts) AS t
-      FROM events e JOIN t2 ON t2.user_id = e.user_id
-      WHERE e.event_type = 'purchase' AND e.ts > t2.t GROUP BY 1),
-    u AS (SELECT (SELECT count(*) FROM t1)::BIGINT AS u1,
-                 (SELECT count(*) FROM t2)::BIGINT AS u2,
-                 (SELECT count(*) FROM t3)::BIGINT AS u3)
-    SELECT s.step::INT AS step, s.event_type,
-      CASE s.step WHEN 1 THEN u1 WHEN 2 THEN u2 ELSE u3 END::BIGINT
-        AS n_users,
-      (CASE WHEN u1 > 0 THEN
-        (CASE s.step WHEN 1 THEN u1 WHEN 2 THEN u2 ELSE u3 END
-         * 1000000) // u1
-       ELSE 0 END)::BIGINT AS conv_ppm
-    FROM u, (VALUES (1, 'view'), (2, 'click'), (3, 'purchase'))
-      s(step, event_type)"""
 
     sqls["politeness_order"] = """
     WITH u AS (
@@ -3069,73 +2698,6 @@ def _dataprep_sql() -> dict[str, str]:
     SELECT doc_id, text FROM documents
     ORDER BY md5('salt42|' || doc_id::VARCHAR), doc_id LIMIT 25"""
 
-    sqls["fuzzy_key_pairs"] = """
-    WITH v AS (
-      SELECT DISTINCT unnest(list_filter(string_split(text, ' '),
-                                         x -> len(x) > 0)) AS k
-      FROM documents),
-    kk AS (
-      SELECT k FROM v
-      UNION
-      SELECT substr(k, 2) AS k FROM v WHERE len(k) > 1),
-    nb AS (
-      SELECT k, k AS var FROM kk
-      UNION
-      SELECT k, substr(k, 1, i.i - 1) || substr(k, i.i + 1, len(k))
-        AS var
-      FROM kk, unnest(range(1, len(k) + 1)) i(i)),
-    ok AS (SELECT var FROM nb GROUP BY var HAVING count(*) <= 500),
-    bd AS (SELECT nb.* FROM nb JOIN ok USING (var)),
-    p AS (
-      SELECT DISTINCT a.k AS key_a, b.k AS key_b
-      FROM bd a JOIN bd b ON a.var = b.var AND a.k < b.k)
-    SELECT key_a, key_b, levenshtein(key_a, key_b)::INT AS dist
-    FROM p WHERE levenshtein(key_a, key_b) <= 1"""
-
-    sqls["cohort_retention"] = """
-    WITH ev AS (
-      SELECT user_id AS u,
-        (datediff('day', DATE '2024-01-01', ts::DATE) // 7)::BIGINT
-          AS bkt
-      FROM events),
-    c AS (SELECT u, min(bkt) AS cohort FROM ev GROUP BY 1),
-    a AS (SELECT DISTINCT u, bkt FROM ev)
-    SELECT c.cohort::BIGINT AS cohort,
-      (a.bkt - c.cohort)::BIGINT AS "offset",
-      count(*)::BIGINT AS n_users
-    FROM a JOIN c ON a.u = c.u GROUP BY 1, 2"""
-
-    sqls["spike_hours"] = """
-    WITH h AS (
-      SELECT event_type, date_trunc('hour', ts) AS hr,
-        count(*)::BIGINT AS cnt
-      FROM events GROUP BY 1, 2),
-    w AS (
-      SELECT event_type, hr, cnt,
-        sum(cnt) OVER (PARTITION BY event_type ORDER BY hr
-          ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS trail_sum,
-        count(cnt) OVER (PARTITION BY event_type ORDER BY hr
-          ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS nprev
-      FROM h)
-    SELECT event_type, strftime(hr, '%Y-%m-%d %H:%M:%S') AS hour,
-      cnt, trail_sum::BIGINT AS trail_sum
-    FROM w WHERE nprev = 24 AND cnt * 24 * 2 > 3 * trail_sum"""
-
-    sqls["length_quantiles"] = """
-    WITH v AS (
-      SELECT len(list_filter(string_split(text, ' '),
-                             x -> len(x) > 0))::BIGINT AS val
-      FROM documents),
-    n AS (SELECT count(*)::BIGINT AS n FROM v),
-    s AS (SELECT val, count(*)::BIGINT AS c FROM v GROUP BY 1),
-    c AS (SELECT val, sum(c) OVER (ORDER BY val) AS cum FROM s),
-    q AS (SELECT unnest([0, 250000, 500000, 750000, 990000,
-                         1000000])::BIGINT AS q_ppm)
-    SELECT q.q_ppm,
-      (SELECT min(val) FROM c
-       WHERE cum >= (q.q_ppm * (n.n - 1)) // 1000000 + 1)::BIGINT
-        AS value
-    FROM q, n"""
 
     sqls["host_components"] = """
     WITH RECURSIVE e AS (
@@ -3323,43 +2885,6 @@ def _dataprep_sql() -> dict[str, str]:
       UNION ALL SELECT 'doc_id not multiple of 5', v3 FROM a
       UNION ALL SELECT 'source set', v4 FROM a) r"""
 
-    sqls["crawl_diff"] = """
-    WITH od AS (
-      SELECT doc_id, md5(text || chr(31)) AS old_digest
-      FROM documents),
-    nd AS (
-      SELECT doc_id,
-        md5(CASE WHEN doc_id % 7 = 0 THEN text || ' CHANGED'
-                 ELSE text END || chr(31)) AS new_digest
-      FROM documents WHERE doc_id % 13 <> 0
-      UNION ALL
-      SELECT doc_id + 1000000, md5(text || chr(31))
-      FROM documents WHERE doc_id % 11 = 0),
-    j AS (
-      SELECT coalesce(od.doc_id, nd.doc_id) AS doc_id,
-             od.old_digest, nd.new_digest
-      FROM od FULL OUTER JOIN nd ON od.doc_id = nd.doc_id)
-    SELECT doc_id,
-      CASE WHEN old_digest IS NULL THEN 'added'
-           WHEN new_digest IS NULL THEN 'removed'
-           WHEN old_digest = new_digest THEN 'unchanged'
-           ELSE 'changed' END AS status,
-      old_digest, new_digest
-    FROM j"""
-
-    sqls["campaign_range_join"] = """
-    WITH mn AS (SELECT date_trunc('hour', min(ts)) AS b FROM events),
-    c AS (
-      SELECT CAST(t.k AS INT) AS campaign_id,
-             b + (t.k * 2) * INTERVAL 1 HOUR AS s,
-             b + (t.k * 2 + 3) * INTERVAL 1 HOUR AS e
-      FROM mn, unnest(range(0, 10)) t(k)),
-    j AS (
-      SELECT c.campaign_id, ev.event_id, ev.user_id
-      FROM events ev JOIN c ON c.s <= ev.ts AND ev.ts < c.e)
-    SELECT campaign_id, count(*)::BIGINT AS n_events,
-           count(DISTINCT user_id)::BIGINT AS n_users
-    FROM j GROUP BY 1"""
 
     sqls["rebalance_mix"] = f"""
     WITH counts AS (
@@ -3911,27 +3436,6 @@ def _dataprep_sql() -> dict[str, str]:
       coalesce(sc.weight_ppm, 0)::BIGINT AS weight_ppm
     FROM documents doc LEFT JOIN sc ON doc.doc_id = sc.doc_id"""
 
-    sqls["url_revisions_latest"] = """
-    WITH revs AS (
-      SELECT
-        'http://site' || (doc_id % 50) || '.com/page/' || doc_id AS url,
-        TIMESTAMP '2024-01-01 00:00:00'
-          + (r.rev * INTERVAL 1 DAY)
-          + ((doc_id % 97) * INTERVAL 1 HOUR) AS warc_ts,
-        CASE WHEN r.rev = doc_id % 3 AND doc_id % 2 = 0
-             THEN text || ' v2' ELSE text END AS text
-      FROM documents, unnest(generate_series(0, doc_id % 3)) r(rev)),
-    d AS (
-      SELECT url, warc_ts, text,
-        md5(text || chr(31)) AS digest,
-        count(*) OVER (PARTITION BY url) AS n_rev,
-        row_number() OVER (
-          PARTITION BY url
-          ORDER BY warc_ts DESC, md5(text || chr(31)) DESC) AS rn
-      FROM revs)
-    SELECT url, strftime(warc_ts, '%Y-%m-%d %H:%M:%S') AS latest_ts,
-      digest, n_rev::BIGINT AS n_revisions, text
-    FROM d WHERE rn = 1"""
 
     sqls["bm25_topk"] = """
     WITH d AS (
@@ -4310,35 +3814,6 @@ def _dataprep_sql() -> dict[str, str]:
     GROUP BY 1"""
 
 
-    sqls["hll_by_type"] = """
-    WITH h AS (
-      SELECT event_type,
-        ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS h
-      FROM events),
-    r AS (
-      SELECT event_type, h >> 54 AS bucket,
-        CASE WHEN h % (1::BIGINT << 54) = 0 THEN 55
-             ELSE 55 - length(bin(h % (1::BIGINT << 54)))
-        END AS rank
-      FROM h),
-    reg AS (SELECT event_type, bucket, max(rank) AS max_rank
-            FROM r GROUP BY 1, 2),
-    e AS (
-      SELECT event_type, count(*)::BIGINT AS used,
-        sum((1::BIGINT << (30 - least(max_rank, 30))))::BIGINT AS s_used
-      FROM reg GROUP BY 1),
-    x AS (
-      SELECT event_type, count(DISTINCT user_id)::BIGINT
-        AS true_distinct
-      FROM events GROUP BY 1)
-    SELECT e.event_type, (64 - used)::BIGINT AS v_empty,
-      (s_used + (64 - used) * (1::BIGINT << 30))::BIGINT AS s30,
-      ((709::BIGINT * 64 * 64 * (1::BIGINT << 30))
-       // (1000 * (s_used + (64 - used) * (1::BIGINT << 30))))::BIGINT
-        AS raw_est,
-      x.true_distinct
-    FROM e JOIN x USING (event_type)"""
-
     sqls["unigram_drift"] = """
     WITH wa AS (
       SELECT unnest(list_filter(string_split(text, ' '),
@@ -4405,70 +3880,7 @@ def _dataprep_sql() -> dict[str, str]:
     FROM g WHERE n_copies >= 2"""
 
 
-    sqls["length_quantile_sketch"] = """
-    WITH v AS (
-      SELECT doc_id, n_chars::BIGINT AS val FROM documents
-      WHERE n_chars IS NOT NULL),
-    n AS (SELECT count(*)::BIGINT AS n FROM v),
-    rk AS (
-      SELECT doc_id // 4096 AS bucket, val,
-        row_number() OVER (PARTITION BY doc_id // 4096
-                           ORDER BY val, doc_id) AS rnk,
-        count(*) OVER (PARTITION BY doc_id // 4096) AS nb
-      FROM v),
-    s AS (
-      SELECT bucket, val, rnk,
-        least(16, nb - rnk + 1)::BIGINT AS w
-      FROM rk WHERE (rnk - 1) % 16 = 0),
-    c AS (
-      SELECT val,
-        sum(w) OVER (ORDER BY val, bucket, rnk
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      FROM s),
-    q AS (SELECT unnest([250000, 500000, 750000]) AS q_ppm),
-    t AS (SELECT q_ppm,
-                 (q_ppm * (n.n - 1)) // 1000000 + 1 AS target
-          FROM q, n)
-    SELECT t.q_ppm::BIGINT AS q_ppm,
-      (SELECT min(val) FROM c WHERE c.cum >= t.target)::BIGINT AS est
-    FROM t"""
-
-
-    sqls["levenshtein_pairs"] = """
-    WITH v AS (
-      SELECT DISTINCT unnest(list_filter(string_split(text, ' '),
-                                         x -> len(x) > 0)) AS k
-      FROM documents),
-    kk AS (
-      SELECT k FROM v
-      UNION
-      SELECT substr(k, 2) AS k FROM v WHERE len(k) > 1
-      UNION
-      SELECT substr(k, 1, len(k) - 1) AS k FROM v WHERE len(k) > 1),
-    sig AS (
-      SELECT k,
-        unnest(list_distinct([substr(k, 1, 1), substr(k, len(k), 1)]))
-          AS sig,
-        (len(k) // 3)::BIGINT AS band
-      FROM kk WHERE len(k) > 0),
-    ok AS (SELECT sig, band FROM sig
-           GROUP BY 1, 2 HAVING count(*) <= 2000),
-    sg AS (SELECT s.* FROM sig s JOIN ok USING (sig, band)),
-    a AS (
-      SELECT k AS key_a, sig,
-             unnest([band - 1, band, band + 1]) AS band
-      FROM sg),
-    p AS (
-      SELECT DISTINCT a.key_a, b.k AS key_b
-      FROM a JOIN sg b ON b.sig = a.sig AND b.band = a.band
-      WHERE a.key_a < b.k
-        AND abs(len(a.key_a) - len(b.k)) <= 2)
-    SELECT key_a, key_b, levenshtein(key_a, key_b)::INT AS dist
-    FROM p WHERE levenshtein(key_a, key_b) BETWEEN 1 AND 2"""
-
     return sqls
-
-
 
 
 def q_lineage_buckets(spark, sf_dir):
@@ -4512,8 +3924,6 @@ def q_host_line_tally_salted(spark, sf_dir):
     return salted_count(lines, "host", k=16)
 
 
-
-
 # ── navigation / windowing surface (SURVEY §2.5 N1-N6) ────────────────
 
 
@@ -4555,7 +3965,7 @@ def q_search_backward(spark, sf_dir):
     )
 
 
-# ── events telemetry aggregates (driver's generic events table) ───────
+# ── events aggregates (driver's generic events table) ─────────────────
 
 
 def q_events_by_type(spark, sf_dir):
@@ -4613,56 +4023,6 @@ def q_events_props(spark, sf_dir):
     )
 
 
-def q_events_asof(spark, sf_dir):
-    """As-of join of the event stream to a synthesized slowly-changing
-    per-user dimension (three plan changes per user at deterministic
-    timestamps): each event picks up the plan in force at its timestamp
-    via the union + running-last formulation (one shuffle, no range
-    join). Events before a user's first change keep NULL plan — the
-    left-join edge. The oracle is DuckDB's native ASOF LEFT JOIN, an
-    independent implementation of the same semantics."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators import asof
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    changes = (
-        ev.select("user_id").distinct()
-        .select(
-            "user_id",
-            F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("c"),
-        )
-        .select(
-            "user_id",
-            F.expr(
-                "timestampadd(HOUR, c * 216 + user_id % 13, "
-                "TIMESTAMP_NTZ '2024-01-01 00:00:00')"
-            ).alias("change_ts"),
-            F.concat(
-                F.lit("plan"),
-                ((F.col("user_id") + F.col("c")) % 3).cast("string"),
-            ).alias("plan"),
-        )
-    )
-    joined = asof.asof_join(
-        ev.select("event_id", "user_id", "ts"),
-        changes,
-        on="user_id",
-        left_ts="ts",
-        right_ts="change_ts",
-    )
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    ch_us = F.unix_micros(F.col("asof_change_ts").cast("timestamp"))
-    return joined.select(
-        "event_id",
-        "user_id",
-        "plan",
-        (ts_us - ch_us).cast("long").alias("age_us"),
-    )
-
-
-
-
 # ── extra parse-semantics coverage via the driver gate ────────────────
 
 DBL_FORMAT = "{STR:Name} {DBL:Value} {INT:Seq}"
@@ -4711,8 +4071,6 @@ def q_crlf_identity(spark, sf_dir):
     )
     out = explode_lines(crlf, keep_cols=["doc_id"])
     return out.select("doc_id", "line_no", "raw_line")
-
-
 
 
 def q_route_raw_contains(spark, sf_dir):
@@ -4829,8 +4187,6 @@ def q_parse_nchar_spec(spark, sf_dir):
     )
 
 
-
-
 def q_route_bits_histogram(spark, sf_dir):
     """Single-pass route_mask strategy: one packed bitmask column for all
     7 sinks (bit i = sink i), histogrammed — the large-N fan-out shape
@@ -4883,32 +4239,6 @@ def q_sample_weighted(spark, sf_dir):
     return corpus.sample_weighted_systematic(docs, 40)
 
 
-def q_levenshtein_pairs(spark, sf_dir):
-    """Edit-distance ≤2 key pairs via first/last-char + length-band
-    blocking and exact levenshtein verify: key set = corpus vocabulary
-    plus each word's drop-first and drop-last variants (deterministic
-    typo corpus with real distance-2 pairs). The oracle replays the
-    blocking (signatures, bands, ±1 expansion, bucket cap) and the
-    verify in SQL, so candidates AND survivors must match exactly."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.fuzzyjoin import blocked_levenshtein_pairs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = docs.select(
-        F.explode(F.filter(
-            F.split(F.col("text"), " "), lambda t: F.length(t) > 0
-        )).alias("k")
-    ).distinct()
-    heads = words.select(
-        F.expr("substring(k, 1, length(k) - 1)").alias("k")
-    ).where(F.length("k") > 0)
-    tails = words.select(F.expr("substring(k, 2)").alias("k")) \
-        .where(F.length("k") > 0)
-    keys = words.union(tails).union(heads).distinct()
-    return blocked_levenshtein_pairs(keys, "k", max_dist=2)
-
-
 # ── driver contract ───────────────────────────────────────────────────
 
 
@@ -4933,8 +4263,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # so ordering IS evidence routing.  _DRIVER_HEAD lists, in priority
 # order, the queries that most need a driver CORRECTNESS row this
 # round (r05): first any round-5 additions (never checked by
-# definition), then the 34 queries that have never had a driver row
-# across r01-r04 (all 34 verified green locally via
+# definition), then the 28 queries that have never had a driver row
+# across r01-r04 (all 28 verified green locally via
 # tools/check_oracle.py at sf0.01 in round 4), then 13 rotated-back
 # queries whose operator files round 4 touched (dedup.py +174,
 # parse.py +140, filters.py +15) so they re-earn a fresh row.
@@ -4946,7 +4276,7 @@ _DRIVER_HEAD: list[str] = [
     "incremental_lsh",
     "crawl_frontier",
     "sentence_dedup",
-    # -- never driver-checked across r01-r04 (34) --
+    # -- never driver-checked across r01-r04 (28) --
     "cluster_representatives",
     "norm_exact_dedup",
     "hard_negatives",
@@ -4964,28 +4294,22 @@ _DRIVER_HEAD: list[str] = [
     "rebalance_mix",
     "tag_keywords",
     "bm25_topk",
-    "url_revisions_latest",
     "dsir_weights",
     "span_corruption",
     "luhn_scrub",
     "proximity_search",
-    "hll_by_type",
     "unigram_drift",
     "cdc_dup_chunks",
-    "length_quantile_sketch",
-    "campaign_range_join",
-    "crawl_diff",
     "dq_check",
     "clean_corpus_verdicts",
     "containment_pairs",
     "collocations",
     "sample_weighted",
-    "levenshtein_pairs",
     # -- rotated back: operator files touched in round 4 (13) --
     # Ordered so the ~50-entry driver window catches the highest-value
-    # rows first (51 entries total → the last ~1 waits for the next
-    # rotation): the flagship invariant (sink_counts), the parse
-    # headline (parse_metrics) and the filters.py consumers beat the
+    # rows first (45 entries total, all inside the window): the
+    # flagship invariant (sink_counts), the parse headline
+    # (parse_metrics) and the filters.py consumers beat the
     # redundant dedup.py consumers (lsh_pairs + near_dup_clusters
     # already re-earn dedup.py's row).
     "parse_metrics",
@@ -5074,16 +4398,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "unigram_score": q_unigram_score,
         "bigram_score": q_bigram_score,
         "fix_mojibake": q_fix_mojibake,
-        "cms_sketch": q_cms_sketch,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "hll_distinct": q_hll_distinct,
         "simhash_near_dup": q_simhash_near_dup,
-        "length_quantiles": q_length_quantiles,
-        "events_funnel": q_events_funnel,
-        "cohort_retention": q_cohort_retention,
-        "spike_hours": q_spike_hours,
         "sample_fixed_n": q_sample_fixed_n,
-        "fuzzy_key_pairs": q_fuzzy_key_pairs,
         "politeness_order": q_politeness_order,
         "tfidf_top": q_tfidf_top,
         "normalize_text": q_normalize_text,
@@ -5098,7 +4414,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sitemap_urls": q_sitemap_urls,
         "term_search": q_term_search,
         "bm25_topk": q_bm25_topk,
-        "url_revisions_latest": q_url_revisions_latest,
         "dsir_weights": q_dsir_weights,
         "span_corruption": q_span_corruption,
         "phrase_search": q_phrase_search,
@@ -5106,10 +4421,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "host_hits": q_host_hits,
         "luhn_scrub": q_luhn_scrub,
         "proximity_search": q_proximity_search,
-        "hll_by_type": q_hll_by_type,
         "unigram_drift": q_unigram_drift,
         "cdc_dup_chunks": q_cdc_dup_chunks,
-        "length_quantile_sketch": q_length_quantile_sketch,
         "embedding_near_dup": q_embedding_near_dup,
         # corpus construction
         "contamination_check": q_contamination_check,
@@ -5129,14 +4442,11 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nav_page_window": q_nav_page_window,
         "nav_eof_jump": q_nav_eof_jump,
         "search_backward": q_search_backward,
-        # events telemetry
+        # events table
         "events_by_type": q_events_by_type,
         "events_hourly": q_events_hourly,
         "events_sessions": q_events_sessions,
         "events_props": q_events_props,
-        "events_asof": q_events_asof,
-        "campaign_range_join": q_campaign_range_join,
-        "crawl_diff": q_crawl_diff,
         "dq_check": q_dq_check,
         "clean_corpus_verdicts": q_clean_corpus_verdicts,
         # parse-semantics extras
@@ -5157,7 +4467,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "containment_pairs": q_containment_pairs,
         "collocations": q_collocations,
         "sample_weighted": q_sample_weighted,
-        "levenshtein_pairs": q_levenshtein_pairs,
     }
 
 
@@ -5326,19 +4635,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT (CAST(props->>'$.k' AS BIGINT) % 10) AS k_bucket,
            COUNT(*)::BIGINT AS n
     FROM events GROUP BY 1"""
-
-    sqls["events_asof"] = """
-    WITH ch AS (
-      SELECT user_id,
-        TIMESTAMP '2024-01-01 00:00:00'
-          + (c * 216 + user_id % 13) * INTERVAL '1 hour' AS change_ts,
-        'plan' || ((user_id + c) % 3) AS plan
-      FROM (SELECT DISTINCT user_id FROM events), range(3) t(c))
-    SELECT e.event_id, e.user_id, ch.plan,
-      (epoch_us(e.ts) - epoch_us(ch.change_ts))::BIGINT AS age_us
-    FROM events e
-    ASOF LEFT JOIN ch
-      ON e.user_id = ch.user_id AND e.ts >= ch.change_ts"""
 
 
     sqls["parse_dbl_spec"] = """

@@ -277,14 +277,20 @@ def parse_filter(
 
 def _ascii_lower_col(col):
     """ASCII-only lowercase, matching C ``tolower`` (line_filter.cpp:105,229).
-    ``F.lower`` is Unicode-aware; translate the 26 ASCII uppercase letters
-    instead so byte semantics agree on any input."""
+    ``F.lower`` is Unicode-aware (the Kelvin sign U+212A -> 'k'), so it
+    only lowers values whose every byte is ASCII, where it lowercases the
+    bytes in place; a value with a non-ASCII byte (more bytes than
+    characters) translates the 26 ASCII uppercase letters instead.
+    ``translate`` alone decodes every value and looks up each code point.
+    NULL stays NULL."""
     from pyspark.sql import functions as F
 
-    return F.translate(
-        col,
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-        "abcdefghijklmnopqrstuvwxyz",
+    return F.when(F.length(col) == F.octet_length(col), F.lower(col)).otherwise(
+        F.translate(
+            col,
+            "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
+            "abcdefghijklmnopqrstuvwxyz",
+        )
     )
 
 

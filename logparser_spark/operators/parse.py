@@ -150,17 +150,24 @@ def explode_lines(
     keep = list(keep_cols) if keep_cols is not None else [
         c for c in df.columns if c != text_col
     ]
-    # Strip ONE trailing newline before splitting (no phantom empty line
-    # after a final "\n"; an empty text still yields one empty line, the
-    # reference's fake-1-line-buffer rule). Single split evaluation — the
-    # earlier when(endswith)/slice formulation evaluated split() up to 3x
-    # per row inside Generate.
-    # \z (end-of-input), NOT $: Java's $ also matches before a final line
-    # terminator, so "a\n\n" would lose BOTH newlines and drop the
-    # document's final empty line (oracle split_lines keeps it).
-    lines = F.split(F.regexp_replace(F.col(text_col), "\n\\z", ""), "\n")
-    out = df.select(
-        *keep, F.posexplode(lines).alias(line_no_col, raw_col)
+    # A final "\n" leaves one empty last element, which is dropped (no
+    # phantom line; an empty text still yields one empty line, the
+    # reference's fake-1-line-buffer rule). The split is its own column
+    # so it runs once per page: inlined into the generator's when/slice,
+    # Generate evaluates it up to 3x per row. A regex here would run
+    # over every page.
+    text = F.col(text_col)
+    pages = df.select(
+        *keep,
+        F.split(text, "\n").alias("__lines"),
+        text.endswith("\n").alias("__nl"),
+    )
+    lines, nl = F.col("__lines"), F.col("__nl")
+    out = pages.select(
+        *keep,
+        F.posexplode(
+            F.when(nl, F.slice(lines, 1, F.size(lines) - 1)).otherwise(lines)
+        ).alias(line_no_col, raw_col),
     )
     # drop exactly ONE trailing CR, without a regex: Java's "\r$" also
     # matches before a final line terminator, so "a\r\r" lost both CRs

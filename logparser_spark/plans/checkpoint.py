@@ -411,9 +411,10 @@ def _writer_stage(work, sinks: list[SinkSpec], spec: FormatSpec,
     }).mapInArrow(writer, counts)
 
 
-def _fold_counts(rows, sinks: list[SinkSpec], todo: list[int]) -> dict[int, dict]:
+def _fold_counts(counts, sinks: list[SinkSpec], todo: list[int]) -> dict[int, dict]:
     """Per bucket its rows and well-formed rows, and per sink its rows and
-    its well-formed level histogram, from the writer's count rows.
+    its well-formed level histogram, from the writer's count table
+    (Arrow).
 
     Raises ``RuntimeError`` when two partitions report one bucket: both
     tasks wrote that bucket's files, so one replaced the other's rows."""
@@ -421,7 +422,7 @@ def _fold_counts(rows, sinks: list[SinkSpec], todo: list[int]) -> dict[int, dict
     stats = {b: {"rows": 0, "well_formed_rows": 0,
                  "sinks": {s.name: [0, Counter()] for s in sinks}}
              for b in todo}
-    for r in rows:
+    for r in counts.to_pylist():
         b = r["bucket"]
         if owner.setdefault(b, r["partition"]) != r["partition"]:
             raise RuntimeError(
@@ -503,7 +504,7 @@ def route_checkpointed(
     staging = os.path.join(base, f"{STAGING_PREFIX}{uuid.uuid4().hex}")
     os.makedirs(staging)
     stats = _fold_counts(
-        _writer_stage(work, sinks, spec, staging, parsed_col).collect(),
+        _writer_stage(work, sinks, spec, staging, parsed_col).toArrow(),
         sinks, todo)
     _commit_staged(staging, sinks, base, todo)
     src = _source_digest(source) if source is not None else None

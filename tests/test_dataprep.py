@@ -959,140 +959,6 @@ def test_host_pagerank_hand_computed(spark):
     assert again == got
 
 
-class TestCountMinSketch:
-    def _docs(self, spark, texts):
-        return spark.createDataFrame(
-            list(enumerate(texts)), ["doc_id", "text"]
-        )
-
-    def test_overestimate_guarantee_and_exactness_when_wide(self, spark):
-        from pyspark.sql import functions as F
-
-        from logparser_spark.operators import sketch
-
-        docs = self._docs(spark, ["a b a c a b", "c d e a", "f f f"])
-        true = {"a": 4, "b": 2, "c": 2, "d": 1, "e": 1, "f": 3}
-        hh = {
-            r["term"]: (r["cnt_true"], r["est"])
-            for r in sketch.cms_heavy_hitters(
-                docs, threshold=0, depth=4, width=4096
-            ).collect()
-        }
-        assert {t: c for t, (c, _) in hh.items()} == true
-        # est >= true always; with width >> vocab, exact w.h.p. (4096
-        # buckets, 6 terms, 4 independent rows: a collision in EVERY
-        # row is ~(6/4096)^4 — deterministic hashes, so just assert)
-        assert all(e == c for c, e in hh.values())
-
-    def test_collisions_only_inflate_never_deflate(self, spark):
-        from logparser_spark.operators import sketch
-
-        docs = self._docs(spark, ["x y z w v u t s r q p o n m"])
-        hh = {
-            r["term"]: (r["cnt_true"], r["est"])
-            for r in sketch.cms_heavy_hitters(
-                docs, threshold=0, depth=2, width=2
-            ).collect()
-        }
-        assert all(e >= c for c, e in hh.values())
-        # 14 distinct terms in 2 buckets: someone must have collided
-        assert any(e > c for c, e in hh.values())
-
-    def test_sketch_merge_equals_whole_corpus_build(self, spark):
-        from pyspark.sql import functions as F
-
-        from logparser_spark.operators import sketch
-
-        texts = ["a b c a", "b c d", "d d e a"]
-        whole = sketch.cms_build(self._docs(spark, texts),
-                                 depth=3, width=8)
-        shards = [
-            sketch.cms_build(self._docs(spark, [t]), depth=3, width=8)
-            for t in texts
-        ]
-        merged = (
-            shards[0].union(shards[1]).union(shards[2])
-            .groupBy("r", "bucket")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
-        key = lambda rows: sorted(map(tuple, rows))
-        assert key(whole.collect()) == key(merged.collect())
-
-    def test_absent_term_estimates_from_colliding_mass_only(self, spark):
-        from logparser_spark.operators import sketch
-
-        docs = self._docs(spark, ["a a a a"])
-        sk = sketch.cms_build(docs, depth=4, width=4096)
-        terms = docs.sparkSession.createDataFrame(
-            [("zzz-not-present",)], ["term"]
-        )
-        est = sketch.cms_estimate(sk, terms, depth=4,
-                                  width=4096).collect()[0]["est"]
-        assert est == 0  # wide sketch: no collision with 'a'
-
-
-class TestHyperLogLog:
-    def test_estimate_accuracy_and_duplicate_blindness(self, spark):
-        from pyspark.sql import functions as F
-
-        from logparser_spark.operators import sketch
-
-        n = 5000
-        items = spark.range(0, n).select(
-            F.concat(F.lit("item-"), F.col("id")).alias("item")
-        )
-        est1 = sketch.hll_estimate(
-            sketch.hll_registers(items, "item")
-        ).collect()[0]
-        # duplicating every item must not move a single register
-        dup = items.union(items).union(items)
-        est3 = sketch.hll_estimate(
-            sketch.hll_registers(dup, "item")
-        ).collect()[0]
-        assert est1 == est3
-        # 64 registers: typical error 1.04/sqrt(64) = 13%; allow 3x
-        assert abs(est1["raw_est"] - n) / n < 0.40
-        assert est1["v_empty"] == 0  # 5000 items >> 64 buckets
-
-    def test_register_merge_law(self, spark):
-        from pyspark.sql import functions as F
-
-        from logparser_spark.operators import sketch
-
-        a = spark.range(0, 800).select(
-            F.concat(F.lit("x"), F.col("id")).alias("item"))
-        b = spark.range(400, 1500).select(
-            F.concat(F.lit("x"), F.col("id")).alias("item"))
-        whole = sketch.hll_registers(a.union(b), "item")
-        merged = (
-            sketch.hll_registers(a, "item")
-            .union(sketch.hll_registers(b, "item"))
-            .groupBy("bucket")
-            .agg(F.max("max_rank").cast("int").alias("max_rank"))
-        )
-        key = lambda rows: sorted(map(tuple, rows))
-        assert key(whole.collect()) == key(merged.collect())
-
-    def test_rank_derivation_matches_bit_math(self, spark):
-        from pyspark.sql import functions as F
-
-        from logparser_spark.operators import sketch
-        import hashlib
-
-        items = [f"probe-{i}" for i in range(50)]
-        df = spark.createDataFrame([(s,) for s in items], ["item"])
-        rows = sketch.hll_registers(df, "item").collect()
-        regs = {r["bucket"]: r["max_rank"] for r in rows}
-        expect = {}
-        for s in items:
-            h = int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-            bucket = h >> 54
-            suffix = h % (1 << 54)
-            rank = 55 if suffix == 0 else 55 - suffix.bit_length()
-            expect[bucket] = max(expect.get(bucket, 0), rank)
-        assert regs == expect
-
-
 class TestSimhashNearDup:
     def test_pigeonhole_route_equals_brute_force(self, spark):
         """With the cap disabled, the band join must find EXACTLY the
@@ -1147,198 +1013,7 @@ class TestSimhashNearDup:
         ).count() == 30 * 29 // 2
 
 
-class TestExactQuantiles:
-    QS = [0, 250_000, 500_000, 750_000, 990_000, 1_000_000]
-
-    def _q(self, spark, vals, bucket_width=64, qs=None):
-        from logparser_spark.operators import quantiles
-
-        df = spark.createDataFrame([(v,) for v in vals], "v long")
-        out = quantiles.quantiles_exact(
-            df, "v", qs or self.QS, bucket_width=bucket_width
-        ).collect()
-        return {r["q_ppm"]: r["value"] for r in out}
-
-    @staticmethod
-    def _naive(vals, qs):
-        s = sorted(vals)
-        n = len(s)
-        return {q: s[(q * (n - 1)) // 1_000_000] for q in qs}
-
-    def test_matches_rank_contract(self, spark):
-        import random
-
-        rng = random.Random(3)
-        vals = [rng.randrange(0, 500) for _ in range(997)]
-        assert self._q(spark, vals) == self._naive(vals, self.QS)
-
-    def test_bucket_width_is_semantics_free(self, spark):
-        import random
-
-        rng = random.Random(5)
-        vals = [rng.randrange(0, 1000) for _ in range(400)]
-        for w in (1, 7, 64, 10_000):
-            assert self._q(spark, vals, bucket_width=w) \
-                == self._naive(vals, self.QS), w
-
-    def test_duplicate_heavy_and_single_value(self, spark):
-        vals = [42] * 100
-        got = self._q(spark, vals)
-        assert set(got.values()) == {42}
-        # ties at the median: 0 x50, 9 x50 -> p50 rank 50 = value 0
-        vals = [0] * 50 + [9] * 50
-        got = self._q(spark, vals, qs=[500_000])
-        assert got[500_000] == self._naive(vals, [500_000])[500_000]
-
-    def test_empty_input_yields_nulls(self, spark):
-        got = self._q(spark, [], qs=[0, 1_000_000])
-        assert got == {0: None, 1_000_000: None}
-
-
-class TestFunnel:
-    def _run(self, spark, rows, steps=("view", "click", "purchase")):
-        from logparser_spark.operators import telemetry
-
-        df = spark.createDataFrame(
-            rows, "user_id long, ts timestamp, event_type string"
-        )
-        out = telemetry.funnel(df, list(steps)).collect()
-        return {r["step"]: (r["event_type"], r["n_users"],
-                            r["conv_ppm"]) for r in out}
-
-    def test_strict_order_and_conversion(self, spark):
-        from datetime import datetime as dt
-
-        T = lambda s: dt(2024, 1, 1, 0, 0, s)
-        rows = [
-            # user 1: full funnel in order
-            (1, T(1), "view"), (1, T(2), "click"), (1, T(3), "purchase"),
-            # user 2: click BEFORE view -> stops at view
-            (2, T(5), "click"), (2, T(6), "view"),
-            # user 3: view + click, purchase before click -> step 2
-            (3, T(1), "view"), (3, T(4), "click"), (3, T(2), "purchase"),
-            # user 4: purchase only -> reaches nothing
-            (4, T(1), "purchase"),
-            # user 5: same-timestamp click as view -> NOT after
-            (5, T(1), "view"), (5, T(1), "click"),
-        ]
-        got = self._run(spark, rows)
-        assert got[1] == ("view", 4, 1_000_000)
-        assert got[2] == ("click", 2, 500_000)
-        assert got[3] == ("purchase", 1, 250_000)
-
-    def test_later_earlier_pairs_still_count(self, spark):
-        from datetime import datetime as dt
-
-        T = lambda s: dt(2024, 1, 1, 0, 0, s)
-        # first click precedes the first view, but a second click
-        # follows it: t2 = first click AFTER t1 -> user converts
-        rows = [(1, T(2), "view"), (1, T(1), "click"),
-                (1, T(3), "click"), (1, T(4), "purchase")]
-        got = self._run(spark, rows)
-        assert got[2][1] == 1 and got[3][1] == 1
-
-    def test_empty_events(self, spark):
-        got = self._run(spark, [])
-        assert got[1][1] == 0 and got[1][2] == 0
-
-
-class TestRetentionAndSpikes:
-    def test_cohort_retention_by_construction(self, spark):
-        from datetime import datetime as dt
-
-        from logparser_spark.operators import telemetry
-
-        rows = [
-            # user 1: first event week 0, active weeks 0, 1, 3
-            (1, dt(2024, 1, 2), "a"), (1, dt(2024, 1, 9), "a"),
-            (1, dt(2024, 1, 24), "a"),
-            # user 2: first event week 1, active weeks 1, 2
-            (2, dt(2024, 1, 10), "a"), (2, dt(2024, 1, 16), "a"),
-            # user 3: week 0 only (two events, one distinct bucket)
-            (3, dt(2024, 1, 3), "a"), (3, dt(2024, 1, 5), "a"),
-        ]
-        df = spark.createDataFrame(
-            rows, "user_id long, ts timestamp, event_type string"
-        )
-        got = {
-            (r["cohort"], r["offset"]): r["n_users"]
-            for r in telemetry.cohort_retention(
-                df, epoch="2024-01-01"
-            ).collect()
-        }
-        assert got == {(0, 0): 2, (0, 1): 1, (0, 3): 1,
-                       (1, 0): 1, (1, 1): 1}
-
-    def test_spike_detection_by_construction(self, spark):
-        from datetime import datetime as dt, timedelta
-
-        from logparser_spark.operators import telemetry
-
-        rows = []
-        t0 = dt(2024, 1, 1)
-        # 30 hours of steady 4 events/hour, hour 27 carries 12 (3x)
-        for h in range(30):
-            n = 12 if h == 27 else 4
-            for i in range(n):
-                rows.append((h * 100 + i, t0 + timedelta(hours=h,
-                                                         minutes=i),
-                             "view"))
-        df = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, event_type string"
-        )
-        got = telemetry.spike_hours(df).collect()
-        assert [(r["event_type"], r["hour"], r["cnt"], r["trail_sum"])
-                for r in got] == [
-            ("view", "2024-01-02 03:00:00", 12, 96)
-        ]
-        # hours 0..23 are gated out (incomplete trailing window)
-        assert all(r["hour"] >= "2024-01-02 00:00:00" for r in got)
-
-
 class TestFuzzyAndSample:
-    def test_fuzzy_pairs_equal_brute_force(self, spark):
-        import itertools
-
-        from logparser_spark.operators.fuzzyjoin import fuzzy_key_pairs
-
-        keys = ["cat", "cats", "bat", "hat", "dog", "", "a", "f",
-                "xyz", "cart", "car"]
-        df = spark.createDataFrame([(k,) for k in keys], ["key"])
-        got = sorted((r["key_a"], r["key_b"])
-                     for r in fuzzy_key_pairs(df).collect())
-
-        def lev(a, b):
-            import functools
-
-            @functools.lru_cache(None)
-            def d(i, j):
-                if i == 0:
-                    return j
-                if j == 0:
-                    return i
-                return min(d(i - 1, j) + 1, d(i, j - 1) + 1,
-                           d(i - 1, j - 1) + (a[i - 1] != b[j - 1]))
-            return d(len(a), len(b))
-
-        brute = sorted(
-            (min(a, b), max(a, b))
-            for a, b in itertools.combinations(keys, 2)
-            if lev(a, b) == 1
-        )
-        assert got == brute and len(brute) >= 6
-
-    def test_fuzzy_bucket_cap_bounds_output(self, spark):
-        from logparser_spark.operators.fuzzyjoin import fuzzy_key_pairs
-
-        # 40 keys all sharing variant 'x' (they are 'x' + distinct
-        # char): every pair is distance... only via bucket 'x'
-        keys = [f"x{chr(97 + i)}" for i in range(26)]
-        df = spark.createDataFrame([(k,) for k in keys], ["key"])
-        assert fuzzy_key_pairs(df, max_bucket=5).count() == 0
-        n = fuzzy_key_pairs(df, max_bucket=None).count()
-        assert n == 26 * 25 // 2  # all pairs differ in one substitution
-
     def test_sample_fixed_n_deterministic_and_uniformish(self, spark):
         from pyspark.sql import functions as F
 
@@ -1892,81 +1567,6 @@ def test_tag_keywords(spark):
     assert got[2] == (["spark"], 1)
     assert got[3] == ([], 0)
     assert got[4] == (["hash", "table", "window"], 3)
-
-
-def test_range_join_vs_naive(spark):
-    """Grid-decomposed range join vs the naive predicate: boundary
-    inclusion (ts == start in, ts == end out), empty and reversed
-    intervals match nothing, intervals spanning many grid cells match
-    once, and the plan has NO nested-loop/cartesian join."""
-    import datetime as dt
-
-    from logparser_spark.operators.rangejoin import range_join
-
-    t0 = dt.datetime(2026, 3, 1, 0, 0, 0)
-
-    def T(minutes):
-        return t0 + dt.timedelta(minutes=minutes)
-
-    pts = [(i, T(m)) for i, m in enumerate(
-        [0, 59, 60, 61, 119, 120, 180, 240, 600, 59, 200]
-    )]
-    ivs = [
-        (0, T(0), T(60)),       # [0, 60)
-        (1, T(60), T(120)),
-        (2, T(0), T(600)),      # spans 10 cells
-        (3, T(240), T(240)),    # empty
-        (4, T(300), T(240)),    # reversed
-        (5, T(601), T(602)),
-    ]
-    p = spark.createDataFrame(pts, "pid long, ts timestamp")
-    v = spark.createDataFrame(
-        ivs, "iid long, start_ts timestamp, end_ts timestamp"
-    )
-    out = range_join(p, v, ts_col="ts", bucket_s=3600)
-    got = sorted((r["pid"], r["iid"]) for r in out.collect())
-    want = sorted(
-        (pid, iid)
-        for pid, ts in pts
-        for iid, s, e in ivs
-        if s <= ts < e
-    )
-    assert got == want and want  # non-trivial
-    # at start_ts included; at exactly end_ts excluded
-    assert (0, 0) in got and (2, 1) in got
-    assert (2, 0) not in got and (5, 1) not in got
-    assert all(i != 3 and i != 4 for _p, i in got)
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_snapshot_diff_statuses(spark):
-    """Digest-based diff: NULL-content transitions count as changes
-    (null marker), added/removed/changed/unchanged all exercised,
-    summary counts match."""
-    from logparser_spark.operators.diffsnap import (
-        diff_summary,
-        snapshot_diff,
-    )
-
-    old = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c"), (4, None), (5, "e")],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [(1, "a"), (2, "B"), (4, "now set"), (5, None), (6, "new")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["status"]
-           for r in snapshot_diff(old, new).collect()}
-    assert got == {1: "unchanged", 2: "changed", 3: "removed",
-                   4: "changed", 5: "changed", 6: "added"}
-    summ = {r["status"]: r["n"]
-            for r in diff_summary(old, new).collect()}
-    assert summ == {"unchanged": 1, "changed": 3, "removed": 1,
-                    "added": 1}
 
 
 def test_dq_check_null_fails_closed(spark):

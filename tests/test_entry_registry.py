@@ -4,8 +4,10 @@ the tools that read the registry still import. No Spark session."""
 
 from __future__ import annotations
 
+import fnmatch
 import importlib.util
 import os
+import re
 import shutil
 import sys
 
@@ -75,3 +77,29 @@ def test_query_ledgers_have_one_row_per_query():
             "stale rows": sorted(set(rows) - names),
             "missing rows": sorted(names - set(rows)),
         }
+
+
+_QUOTED = r"`[^`]+`(?:\s*\([^()]*\))?"
+_QUOTE_LIST = re.compile(
+    rf"\bquer(?:y|ies)\s+({_QUOTED}(?:\s*(?:,|\+|\band\b)\s*{_QUOTED})*)")
+
+
+def _quoted_queries(text):
+    """Names COVERAGE.md quotes as queries: ``query `x` `` and
+    ``queries `x`, `y` `` (also joined by ``+`` or ``and``); a name's
+    parenthesised note, e.g. a sink name, is skipped."""
+    names = []
+    for m in _QUOTE_LIST.finditer(text):
+        names += re.findall(r"`([^`]+)`", re.sub(r"\([^()]*\)", "", m.group(1)))
+    return names
+
+
+def test_coverage_quotes_only_registered_queries():
+    """Every query name COVERAGE.md quotes is registered; a ``*`` pattern
+    such as ``route_*`` must match at least one."""
+    with open(os.path.join(ROOT, "COVERAGE.md")) as f:
+        quoted = _quoted_queries(f.read())
+    assert quoted
+    names = list(E.queries())
+    stale = sorted({q for q in quoted if not fnmatch.filter(names, q)})
+    assert not stale, stale

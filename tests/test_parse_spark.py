@@ -181,14 +181,24 @@ class TestExplodeLines:
             # so a "\r$" strip ate both CRs of "a\r\r" (oracle: 'a\r')
             "a\r\r\nb",
             "\r\r",
+            # a NULL page has no lines
+            None,
         ]
         df = explode_lines(self._pages(spark, texts))
         got = {}
         for r in df.collect():
             got.setdefault(r["url"], []).append((r["line_no"], r["raw_line"]))
         for i, t in enumerate(texts):
-            want = list(enumerate(split_lines(t)))
+            want = [] if t is None else list(enumerate(split_lines(t)))
             assert sorted(got.get(f"u{i}", [])) == want, f"text {t!r}"
+
+    def test_split_runs_once_per_page(self, spark):
+        """The page is split once, outside the generator, and no regex
+        runs over it."""
+        df = explode_lines(self._pages(spark, ["a\nb\n", "c"]))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("split(") == 1, plan
+        assert "regexp_replace" not in plan, plan
 
     @settings(max_examples=30, deadline=None)
     @given(texts=st.lists(st.text(alphabet="a\r\né", max_size=12),

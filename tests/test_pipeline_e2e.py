@@ -137,6 +137,47 @@ class TestRouting:
                     if (r["route_bits"] >> i) & 1}
             assert bits == want, f"bitmask {sink.name}"
 
+    def test_ci_sinks_lower_ascii_only(self, spark):
+        """``_CI`` lowers the 26 ASCII letters and nothing else, as C
+        ``tolower`` does. Unicode lowering differs on the first five
+        names: the Kelvin sign (U+212A) lowers to 'k', 'İ' to 'i' plus a
+        combining dot, 'Ä' to 'ä' and the titlecase 'ǅ' to 'ǆ'."""
+        from pyspark.sql.types import (
+            BooleanType, LongType, StringType, StructField, StructType,
+        )
+
+        from logparser_spark.operators.route import SinkSpec
+
+        spec = compile_format("{INT:Val} {STR:Name}")
+        kelvin = "\u212a"
+        names = [kelvin, "İX", "ÄBC", "ǅ", f"a{kelvin}B", "", None,
+                 "MiXeD"]
+        sinks = [
+            SinkSpec(f"s{i}", dsl) for i, dsl in enumerate([
+                "Name EQ_CI k", f"Name EQ_CI {kelvin}", "Name BW_CI i",
+                "Name BW_CI İ", "Name CT_CI äb", "Name CT_CI Äb",
+                "Name EQ_CI ǆ", "Name EQ_CI ǅ", "Name EW_CI kb",
+                f"Name EW_CI {kelvin}b", "Name CT_CI a", "Name EQ_CI mixed",
+            ])
+        ]
+        schema = StructType([
+            StructField("line_no", LongType()),
+            StructField("parsed", StructType([
+                StructField("Val", LongType()),
+                StructField("Name", StringType()),
+                StructField("well_formed", BooleanType()),
+            ])),
+        ])
+        df = spark.createDataFrame(
+            [(i, (1, n, True)) for i, n in enumerate(names)], schema)
+        rows = {r["line_no"]: r for r in route_mask(df, sinks, spec).collect()}
+        for i, n in enumerate(names):
+            line = OracleLine(raw_line="", line_num=i, values=[1, n],
+                              well_formed=True)
+            for s in sinks:
+                want = accepts(s.ast(spec), line, spec, s.accept_bad_format)
+                assert rows[i][f"route_{s.name}"] is want, (n, s.filter)
+
 
 class TestAggregates:
     def test_level_histogram(self, parsed_df):

@@ -1,6 +1,5 @@
 """Round-4b operator batch: n-gram containment (quote detection),
-PMI collocations, exact weighted systematic sampling, and blocked
-Levenshtein (distance ≤2) pairs.
+PMI collocations and exact weighted systematic sampling.
 
 Each test pins the operator against an independent pure-Python
 recomputation of the documented rule on a hand-built corpus — the same
@@ -193,58 +192,3 @@ def test_weighted_systematic_deterministic(spark):
                sample_weighted_systematic(df, 8, weight_col="w").collect())
     assert a == b
 
-
-# ── blocked levenshtein pairs ────────────────────────────────────────
-
-
-def _lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
-                           prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-def test_blocked_levenshtein_matches_blocking_aware_bruteforce(spark):
-    """The operator's documented contract: exactly the pairs within
-    distance ≤2 that share a first OR last character (the blocking
-    anchors; length banding is exhaustive so it adds no loss)."""
-    from logparser_spark.operators.fuzzyjoin import blocked_levenshtein_pairs
-
-    keys = [
-        "spark", "spork", "sparks", "spars", "stark",
-        "hadoop", "hadop", "hadooop",
-        "kitten", "sitten", "mitten",  # first-char edits share last char
-        "cat", "bath",                 # dist 2, shares NEITHER anchor
-        "x", "xy", "y",
-    ]
-    df = spark.createDataFrame([(k,) for k in keys], ["key"])
-    got = {(r.key_a, r.key_b, r.dist)
-           for r in blocked_levenshtein_pairs(df, "key").collect()}
-    expected = set()
-    for i, a in enumerate(keys):
-        for b in keys[i + 1:]:
-            lo, hi = min(a, b), max(a, b)
-            d = _lev(lo, hi)
-            if 1 <= d <= 2 and (lo[0] == hi[0] or lo[-1] == hi[-1]):
-                expected.add((lo, hi, d))
-    assert got == expected
-    # the documented miss: both-anchor edits are out of reach
-    assert ("bath", "cat", 2) not in got and _lev("cat", "bath") == 2
-    # first-char edits (the fuzzy_key_pairs blind spot) ARE found
-    assert ("kitten", "sitten", 1) in got
-    assert ("kitten", "mitten", 1) in got
-
-
-def test_blocked_levenshtein_no_false_positives(spark):
-    from logparser_spark.operators.fuzzyjoin import blocked_levenshtein_pairs
-
-    df = spark.createDataFrame(
-        [("alpha",), ("alphabet",), ("beta",)], ["key"]
-    )
-    for r in blocked_levenshtein_pairs(df, "key").collect():
-        assert 1 <= r.dist <= 2
-        assert _lev(r.key_a, r.key_b) == r.dist

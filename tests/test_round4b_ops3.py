@@ -1,63 +1,6 @@
-"""Round-4b batch 3: per-group HyperLogLog and unigram drift."""
+"""Round-4b batch 3: unigram drift."""
 
 from __future__ import annotations
-
-
-def test_hll_by_group_matches_global_per_group(spark):
-    """Per-group registers/estimate must equal running the GLOBAL hll
-    on each group's slice — the grouped op is a keyed restatement, not
-    a new sketch."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.sketch import (
-        hll_estimate,
-        hll_estimate_by,
-        hll_registers,
-        hll_registers_by,
-    )
-
-    rows = [(f"g{i % 3}", f"user{i % 37}") for i in range(500)]
-    df = spark.createDataFrame(rows, ["g", "item"])
-    grouped = {
-        r.g: (r.v_empty, r.s30, r.raw_est)
-        for r in hll_estimate_by(hll_registers_by(df, "g", "item"),
-                                 "g").collect()
-    }
-    assert set(grouped) == {"g0", "g1", "g2"}
-    for g in sorted(grouped):
-        solo = hll_estimate(
-            hll_registers(df.where(F.col("g") == g), "item")
-        ).collect()[0]
-        assert grouped[g] == (solo.v_empty, solo.s30, solo.raw_est), g
-
-
-def test_hll_by_group_estimate_in_range(spark):
-    """Each group's raw estimate lands within the HLL error envelope
-    of its exact distinct (generous 3σ ≈ 39% at m=64, small-range
-    regime included via the v_empty>0 linear-counting escape)."""
-    import math
-
-    from logparser_spark.operators.sketch import (
-        hll_estimate_by,
-        hll_registers_by,
-    )
-
-    rows = [("a", f"u{i}") for i in range(200)] + [
-        ("b", f"v{i % 9}") for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, ["g", "item"])
-    got = {r.g: r for r in hll_estimate_by(
-        hll_registers_by(df, "g", "item"), "g").collect()}
-    exact = {"a": 200, "b": 9}
-    for g, n in exact.items():
-        r = got[g]
-        if r.v_empty > 0 and r.raw_est <= 2.5 * 64:
-            # linear-counting regime: m·ln(m/V) is the client-side
-            # correction; check IT, not the raw estimate
-            est = 64 * math.log(64 / r.v_empty)
-        else:
-            est = r.raw_est
-        assert abs(est - n) <= max(0.4 * n, 4), (g, est, n)
 
 
 def test_unigram_drift_detects_shift(spark):

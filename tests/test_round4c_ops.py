@@ -1,6 +1,5 @@
-"""Round-4c operator batch: integer-exact BM25 ranked retrieval,
-multi-snapshot keep-latest revision dedup, and WHATWG-style charset
-sniffing.
+"""Round-4c operator batch: integer-exact BM25 ranked retrieval and
+the corpus operators below.
 
 Each test pins the operator against an independent pure-Python
 recomputation of the documented rule on a hand-built corpus — the same
@@ -144,53 +143,6 @@ def test_bm25_log_idf_matches_textbook_ranking(spark):
 
     assert log == want
     assert rat != log   # the engineered divergence is real
-
-
-# ── keep-latest revision dedup ───────────────────────────────────────
-
-
-def _digest(text: str) -> str:
-    return hashlib.md5((text + "\x1f").encode()).hexdigest()
-
-
-def test_keep_latest_picks_max_ts(spark):
-    import datetime
-
-    from logparser_spark.operators.diffsnap import keep_latest
-
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = [
-        ("u1", t0, "v1"),
-        ("u1", t0 + datetime.timedelta(days=1), "v2"),
-        ("u1", t0 + datetime.timedelta(days=2), "v3"),
-        ("u2", t0, "only"),
-    ]
-    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, "
-                                     "text string")
-    got = {r.url: r for r in
-           keep_latest(df, "url", "warc_ts", cols=("text",),
-                       carry=("text",)).collect()}
-    assert got["u1"].text == "v3"
-    assert got["u1"].n_revisions == 3
-    assert got["u1"].digest == _digest("v3")
-    assert got["u2"].text == "only" and got["u2"].n_revisions == 1
-
-
-def test_keep_latest_ts_tie_breaks_by_digest(spark):
-    import datetime
-
-    from logparser_spark.operators.diffsnap import keep_latest
-
-    t0 = datetime.datetime(2024, 1, 1)
-    texts = ["alpha", "bravo", "carol"]
-    df = spark.createDataFrame(
-        [("u", t0, t) for t in texts],
-        "url string, warc_ts timestamp, text string",
-    )
-    got = keep_latest(df, "url", "warc_ts", cols=("text",),
-                      carry=("text",)).collect()[0]
-    want = max(texts, key=_digest)
-    assert got.text == want and got.digest == _digest(want)
 
 
 # ── hard-negative mining ─────────────────────────────────────────────
