@@ -1,0 +1,5 @@
+"""PySpark-native log parse -> enrich -> route -> aggregate engine."""
+
+from . import _worker
+
+_worker.install()

@@ -13,6 +13,8 @@ table with dictionary dims.
 
 from __future__ import annotations
 
+from .filters import sql_string
+
 # lang -> (name, family); 'zh'/'zz' deliberately absent to exercise the
 # left-join null path
 LANG_DIM = [
@@ -47,7 +49,7 @@ def _sql_literal(v) -> str:
         return "true" if v else "false"
     if isinstance(v, int):
         return str(v)
-    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return sql_string(str(v))
 
 
 def _inline_dim(spark, rows: list[tuple], schema: str):

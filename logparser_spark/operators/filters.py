@@ -20,9 +20,10 @@ Reimplements the reference's filter engine
   reference, ``to_string`` does NOT encode the invert flag;
 - invert-via-XOR wrapper on every node (``line_filter.hpp:31-39``).
 
-``to_column`` lowers an AST to a single PySpark ``Column`` over the parsed
-struct — Catalyst then gets full predicate pushdown / boolean simplification
-for free (the reference's hand-rolled short-circuiting, SURVEY.md §4).
+``to_sql`` renders an AST as one Spark SQL expression over the parsed
+struct, and ``to_column`` is its ``F.expr`` — Catalyst then gets full
+predicate pushdown / boolean simplification for free (the reference's
+hand-rolled short-circuiting, SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ from dataclasses import dataclass, field as dc_field
 from typing import Optional, Union
 
 from ..functions.formats import FieldType, FormatSpec
+from ..functions.oracle import INT64_MAX, INT64_MIN
 
 # ── AST ───────────────────────────────────────────────────────────────
 
@@ -118,6 +120,12 @@ class RawLineFilter(_Node):
 
 
 Filter = Union[FieldFilter, CombinedFilter, LineNumberFilter, RawLineFilter]
+
+
+def ascii_lower(s: str) -> str:
+    """C ``tolower`` per character: the 26 ASCII letters and nothing else."""
+    return "".join(chr(ord(c) + 32) if "A" <= c <= "Z" else c for c in s)
+
 
 # ── parser ────────────────────────────────────────────────────────────
 
@@ -264,9 +272,7 @@ def parse_filter(
         elif ft == FieldType.STR and ci:
             # the reference lowers the stored value at construction
             # (line_filter.cpp:104-107), so to_string shows the lowered form
-            value_str = "".join(
-                chr(ord(c) + 32) if "A" <= c <= "Z" else c for c in value_str
-            )
+            value_str = ascii_lower(value_str)
     return FieldFilter(
         field=field_name, cmp=cmp, value=value_str, case_insensitive=ci
     )
@@ -274,24 +280,129 @@ def parse_filter(
 
 # ── Catalyst lowering ─────────────────────────────────────────────────
 
+_SQL_CMP = {"EQ": "=", "ST": "<", "SE": "<=", "GT": ">", "GE": ">="}
+_SQL_SUBSTR = {"CT": "contains", "BW": "startswith", "EW": "endswith"}
 
-def _ascii_lower_col(col):
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(v: str) -> str:
+    """``v`` as a Spark SQL string literal. Backslashes and quotes are
+    escaped, and ``$`` is written as ``\\u0024``: the SQL parser
+    substitutes ``${...}`` variables in the text before it lexes it."""
+    return "'" + (
+        v.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    ) + "'"
+
+
+def _ascii_lower_sql(col: str) -> str:
     """ASCII-only lowercase, matching C ``tolower`` (line_filter.cpp:105,229).
-    ``F.lower`` is Unicode-aware (the Kelvin sign U+212A -> 'k'), so it
+    ``lower`` is Unicode-aware (the Kelvin sign U+212A -> 'k'), so it
     only lowers values whose every byte is ASCII, where it lowercases the
     bytes in place; a value with a non-ASCII byte (more bytes than
     characters) translates the 26 ASCII uppercase letters instead.
     ``translate`` alone decodes every value and looks up each code point.
     NULL stays NULL."""
-    from pyspark.sql import functions as F
-
-    return F.when(F.length(col) == F.octet_length(col), F.lower(col)).otherwise(
-        F.translate(
-            col,
-            "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-            "abcdefghijklmnopqrstuvwxyz",
-        )
+    return (
+        f"CASE WHEN length({col}) = octet_length({col}) THEN lower({col}) "
+        f"ELSE translate({col}, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', "
+        f"'abcdefghijklmnopqrstuvwxyz') END"
     )
+
+
+def _int_sql(col: str, cmp: str, v: int) -> str:
+    """An INT comparison. A parsed INT saturates to int64 (C ``atol``),
+    so a value outside int64 compares the same with every non-NULL field:
+    it renders as a comparison with that constant verdict that is still
+    NULL on a NULL field."""
+    if v > INT64_MAX:  # every field is below v
+        below = cmp in ("ST", "SE")
+        return f"{col} {'<=' if below else '>'} {INT64_MAX}L"
+    if v < INT64_MIN:  # every field is above v
+        above = cmp in ("GT", "GE")
+        return f"{col} {'>=' if above else '<'} {INT64_MIN}L"
+    return f"{col} {_SQL_CMP[cmp]} {v}L"
+
+
+def _field_sql(node: FieldFilter, spec: FormatSpec, parsed_col: str) -> str:
+    loc = spec.field_by_name(node.field)
+    if loc is None:
+        raise ValueError(f"no field named {node.field}")
+    i, f = loc
+    cols = spec.column_names()
+    out_pos = [k for k, (j, _) in enumerate(spec.output_fields()) if j == i][0]
+    col = f"{sql_ident(parsed_col)}.{sql_ident(cols[out_pos])}"
+    if f.ftype == FieldType.INT and node.cmp in _SQL_CMP:
+        return _int_sql(col, node.cmp, int(node.value))
+    if f.ftype == FieldType.INT:
+        v = f"{int(node.value)}L"
+    elif f.ftype == FieldType.DBL:
+        x = float(node.value)
+        if x != x and node.cmp in _SQL_CMP:  # NaN: no comparison holds
+            return f"IF({col} IS NULL, NULL, false)"
+        v = f"CAST({sql_string(repr(x))} AS DOUBLE)"
+    elif f.ftype == FieldType.DATE:
+        import datetime
+
+        v = f"DATE {sql_string(datetime.date.fromisoformat(node.value).isoformat())}"
+    elif f.ftype == FieldType.CHR:
+        v = sql_string(node.value[0] if node.value else "\0")
+    elif node.case_insensitive:
+        col = _ascii_lower_sql(col)
+        v = sql_string(ascii_lower(node.value))
+    else:
+        v = sql_string(node.value)
+    if node.cmp not in _SQL_CMP:
+        return f"{_SQL_SUBSTR[node.cmp]}({col}, {v})"
+    sql = f"{col} {_SQL_CMP[node.cmp]} {v}"
+    # Spark orders NaN above every double and equal to itself, where the
+    # oracle's IEEE comparisons with a NaN field (strtod reads "nan") are
+    # false
+    return f"{sql} AND NOT isnan({col})" if f.ftype == FieldType.DBL else sql
+
+
+def to_sql(
+    node: Optional[Filter],
+    spec: FormatSpec,
+    parsed_col: str = "parsed",
+    line_num_col: str = "line_no",
+    raw_col: str = "raw_line",
+) -> str:
+    """Render a filter AST as one Spark SQL boolean expression over the
+    parsed struct, with the oracle's (``oracle.eval_filter``) semantics:
+    Kleene logic, NULL on an unset field, XOR as ``NOT (l = r)`` and
+    ``NOT`` at every inverted node. Literals are typed like the struct:
+    ``BIGINT``, ``DOUBLE`` and ``DATE``; strings compare in Spark's
+    default binary collation, which agrees bytewise with the reference's
+    ``string_view`` comparisons (SURVEY.md §7.4 risk 6).
+
+    ``F.expr`` of the text takes a few py4j calls, where building the same
+    tree from ``Column`` objects takes a few per node."""
+    if node is None:
+        return "true"
+    if isinstance(node, CombinedFilter):
+        left = to_sql(node.left, spec, parsed_col, line_num_col, raw_col)
+        right = to_sql(node.right, spec, parsed_col, line_num_col, raw_col)
+        if node.op == "AND":
+            sql = f"({left}) AND ({right})"
+        elif node.op == "OR":
+            sql = f"({left}) OR ({right})"
+        elif node.op == "XOR":
+            sql = f"NOT (({left}) = ({right}))"
+        else:  # NOR
+            sql = f"NOT (({left}) OR ({right}))"
+    elif isinstance(node, FieldFilter):
+        sql = _field_sql(node, spec, parsed_col)
+    elif isinstance(node, LineNumberFilter):
+        sql = f"{sql_ident(line_num_col)} BETWEEN {node.lo} AND {node.hi}"
+    elif isinstance(node, RawLineFilter):
+        sql = f"contains({sql_ident(raw_col)}, {sql_string(node.substr)})"
+    else:
+        raise TypeError(f"unknown filter node {type(node)}")
+    return f"NOT ({sql})" if node.inverted else sql
 
 
 def to_column(
@@ -301,75 +412,11 @@ def to_column(
     line_num_col: str = "line_no",
     raw_col: str = "raw_line",
 ):
-    """Lower a filter AST to a PySpark boolean Column over the parsed struct.
-
-    String comparisons rely on Spark's default binary (UTF8_BINARY) collation,
-    which agrees bytewise with the reference's ``string_view`` comparisons for
-    the ASCII corpus (SURVEY.md §7.4 risk 6).
-    """
+    """Lower a filter AST to a PySpark boolean Column over the parsed
+    struct: ``F.expr`` of :func:`to_sql`."""
     from pyspark.sql import functions as F
 
-    if node is None:
-        return F.lit(True)
-
-    if isinstance(node, CombinedFilter):
-        left = to_column(node.left, spec, parsed_col, line_num_col, raw_col)
-        right = to_column(node.right, spec, parsed_col, line_num_col, raw_col)
-        if node.op == "AND":
-            col = left & right
-        elif node.op == "OR":
-            col = left | right
-        elif node.op == "XOR":
-            col = left != right
-        else:  # NOR
-            col = ~(left | right)
-    elif isinstance(node, FieldFilter):
-        loc = spec.field_by_name(node.field)
-        if loc is None:
-            raise ValueError(f"no field named {node.field}")
-        i, f = loc
-        cols = spec.column_names()
-        out_pos = [k for k, (j, _) in enumerate(spec.output_fields()) if j == i][0]
-        c = F.col(f"{parsed_col}.{cols[out_pos]}")
-        if f.ftype == FieldType.INT:
-            v = F.lit(int(node.value))
-        elif f.ftype == FieldType.DBL:
-            v = F.lit(float(node.value))
-        elif f.ftype == FieldType.DATE:
-            import datetime
-
-            v = F.lit(datetime.date.fromisoformat(node.value))
-        elif f.ftype == FieldType.CHR:
-            v = F.lit(node.value[0] if node.value else "")
-        else:
-            v = F.lit(node.value)
-            if node.case_insensitive:
-                c = _ascii_lower_col(c)
-                v = F.lit(
-                    "".join(
-                        chr(ord(ch) + 32) if "A" <= ch <= "Z" else ch
-                        for ch in node.value
-                    )
-                )
-        ops = {
-            "EQ": lambda a, b: a == b,
-            "ST": lambda a, b: a < b,
-            "SE": lambda a, b: a <= b,
-            "GT": lambda a, b: a > b,
-            "GE": lambda a, b: a >= b,
-            "CT": lambda a, b: a.contains(b),
-            "BW": lambda a, b: a.startswith(b),
-            "EW": lambda a, b: a.endswith(b),
-        }
-        col = ops[node.cmp](c, v)
-    elif isinstance(node, LineNumberFilter):
-        col = F.col(line_num_col).between(node.lo, node.hi)
-    elif isinstance(node, RawLineFilter):
-        col = F.col(raw_col).contains(node.substr)
-    else:
-        raise TypeError(f"unknown filter node {type(node)}")
-
-    return ~col if node.inverted else col
+    return F.expr(to_sql(node, spec, parsed_col, line_num_col, raw_col))
 
 
 def accept_expr(

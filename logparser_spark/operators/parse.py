@@ -145,38 +145,35 @@ def explode_lines(
     per-document line id (the reference's global ``line_num`` scoped per
     document; SURVEY.md §7.4 risk 2 — avoids a global zipWithIndex shuffle).
     """
-    from pyspark.sql import functions as F
+    from .filters import sql_ident
 
-    keep = list(keep_cols) if keep_cols is not None else [
+    keep = [sql_ident(c) for c in (keep_cols if keep_cols is not None else [
         c for c in df.columns if c != text_col
-    ]
-    # A final "\n" leaves one empty last element, which is dropped (no
-    # phantom line; an empty text still yields one empty line, the
-    # reference's fake-1-line-buffer rule). The split is its own column
-    # so it runs once per page: inlined into the generator's when/slice,
-    # Generate evaluates it up to 3x per row. A regex here would run
-    # over every page.
-    text = F.col(text_col)
-    pages = df.select(
+    ])]
+    # Each step is one selectExpr of SQL text: a few py4j calls, where
+    # the F.* builders take a few per node. A final "\n" leaves one
+    # empty last element, which is dropped (no phantom line; an empty
+    # text still yields one empty line, the reference's
+    # fake-1-line-buffer rule). The split is its own column so it runs
+    # once per page: inlined into the generator's IF/slice, Generate
+    # evaluates it up to 3x per row. A regex here would run over every
+    # page.
+    text = sql_ident(text_col)
+    pages = df.selectExpr(
+        *keep, f"split({text}, '\\n') AS __lines", f"endswith({text}, '\\n') AS __nl")
+    line_no, raw = sql_ident(line_no_col), sql_ident(raw_col)
+    out = pages.selectExpr(
         *keep,
-        F.split(text, "\n").alias("__lines"),
-        text.endswith("\n").alias("__nl"),
-    )
-    lines, nl = F.col("__lines"), F.col("__nl")
-    out = pages.select(
-        *keep,
-        F.posexplode(
-            F.when(nl, F.slice(lines, 1, F.size(lines) - 1)).otherwise(lines)
-        ).alias(line_no_col, raw_col),
+        "posexplode(IF(__nl, slice(__lines, 1, size(__lines) - 1), __lines))"
+        f" AS ({line_no}, {raw})",
     )
     # drop exactly ONE trailing CR, without a regex: Java's "\r$" also
     # matches before a final line terminator, so "a\r\r" lost both CRs
     # where the oracle keeps "a\r"
-    raw = F.col(raw_col)
-    return out.withColumn(
-        raw_col,
-        F.when(raw.endswith("\r"), raw.substr(F.lit(1), F.length(raw) - 1))
-        .otherwise(raw),
+    return out.selectExpr(
+        *keep, line_no,
+        f"IF(endswith({raw}, '\\r'), substr({raw}, 1, length({raw}) - 1), {raw})"
+        f" AS {raw}",
     )
 
 

@@ -22,7 +22,7 @@ from dataclasses import dataclass
 from typing import Optional, Union
 
 from ..functions.formats import FormatSpec
-from .filters import Filter, accept_expr, parse_filter, to_column
+from .filters import Filter, parse_filter, sql_ident, to_sql
 
 # route_mask's bit i is sink i, and bit 63 of a long is its sign
 ROUTE_BITS_MAX_SINKS = 63
@@ -97,33 +97,35 @@ def _inverted(dsl: str):
     return f.invert()
 
 
+def sink_sql(sink: SinkSpec, spec: FormatSpec, parsed_col: str = "parsed") -> str:
+    """The full routing predicate for one sink as Spark SQL text: the
+    filter (:func:`filters.to_sql`) inside the malformed-acceptance rule
+    (``filters.accept_expr``), coalesced to false so NULL verdicts
+    neither route nor poison masks."""
+    ast = sink.ast(spec)
+    wf = f"{sql_ident(parsed_col)}.`well_formed`"
+    abf = "true" if sink.accept_bad_format else "false"
+    base = wf if ast is None else f"{wf} AND ({to_sql(ast, spec, parsed_col)})"
+    return f"coalesce((NOT {wf} AND {abf}) OR ({base}), false)"
+
+
 def sink_column(sink: SinkSpec, spec: FormatSpec, parsed_col: str = "parsed"):
-    """The full routing predicate for one sink (filter + acceptance rule),
-    coalesced to false so NULL verdicts neither route nor poison masks."""
+    """:func:`sink_sql` as a Column: one ``F.expr``."""
     from pyspark.sql import functions as F
 
-    ast = sink.ast(spec)
-    base = to_column(ast, spec, parsed_col=parsed_col) if ast is not None else None
-    wf = F.col(f"{parsed_col}.well_formed")
-    if base is None:
-        expr = (~wf & F.lit(sink.accept_bad_format)) | wf
-    else:
-        expr = accept_expr(base, wf, sink.accept_bad_format)
-    return F.coalesce(expr, F.lit(False))
+    return F.expr(sink_sql(sink, spec, parsed_col))
 
 
 def route_mask(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
                parsed_col: str = "parsed"):
     """Single-pass: adds ``route_<name>`` boolean per sink and a packed
     ``route_bits`` long (bit i = sink i). One projection, one parse-UDF
-    evaluation, no data movement.
+    evaluation, no data movement; each column is one SQL expression.
 
     Raises ``ValueError`` for the names :func:`check_sink_names` rejects,
     for a sink named ``bits``, whose ``route_bits`` column the packed
     mask would overwrite, and for more than 63 sinks, the bits of a
     non-negative long."""
-    from pyspark.sql import functions as F
-
     check_sink_names(sinks)
     if any(s.name == "bits" for s in sinks):
         raise ValueError(
@@ -136,8 +138,13 @@ def route_mask(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
             f"so it takes at most {ROUTE_BITS_MAX_SINKS} sinks, "
             f"got {len(sinks)}"
         )
-    cols = {f"route_{s.name}": sink_column(s, spec, parsed_col) for s in sinks}
-    bits = F.lit(0).cast("long")
-    for i, c in enumerate(cols.values()):
-        bits = bits + F.when(c, F.lit(1 << i)).otherwise(0)
-    return parsed_df.withColumns({**cols, "route_bits": bits})
+    preds = [sink_sql(s, spec, parsed_col) for s in sinks]
+    bits = " + ".join(
+        [f"IF({p}, {1 << i}L, 0L)" for i, p in enumerate(preds)] or ["0L"])
+    new = {f"route_{s.name}": p for s, p in zip(sinks, preds)}
+    new["route_bits"] = bits
+    # like withColumns, a column of the same name is replaced
+    keep = (["*"] if new.keys().isdisjoint(parsed_df.columns)
+            else [sql_ident(c) for c in parsed_df.columns if c not in new])
+    return parsed_df.selectExpr(
+        *keep, *(f"{v} AS {sql_ident(k)}" for k, v in new.items()))

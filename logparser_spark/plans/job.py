@@ -173,11 +173,13 @@ def run_job(spark, cfg: JobConfig) -> dict:
     The lineage is checked before the input is read: when every bucket
     is committed and the ``_agg`` tables match it, the job returns
     without launching a Spark job. A lineage written for another
-    format, sink set, bucket count, key or input raises ``ValueError``."""
+    format, sink set, bucket count, key or input raises ``ValueError``.
+    The route runs with the AQE skew profile (``plans.skew.skew_profile``),
+    and the job leaves the session's options as it found them."""
     from ..operators import enrich as enrich_mod
     from ..operators.parse import explode_lines, parse_lines
     from ..plans import checkpoint as C
-    from ..plans.skew import skew_conf
+    from ..plans.skew import skew_profile
     from ..sources.sinks import SinkTarget, read_source
 
     if cfg.route_strategy != "checkpoint":
@@ -189,7 +191,6 @@ def run_job(spark, cfg: JobConfig) -> dict:
     fp = C.fingerprint(spec, cfg.sinks, cfg.buckets, cfg.key_col)
     source = _source_identity(cfg)
     if len(C.verified_buckets(cfg.output, fp, source)) < cfg.buckets:
-        skew_conf(spark)
         pages = read_source(spark, SinkTarget.parse(cfg.input))
         keep = [c for c in (cfg.key_col, "url", "lang") if c in pages.columns]
         lines = explode_lines(pages, text_col=cfg.text_col, keep_cols=keep)
@@ -212,10 +213,12 @@ def run_job(spark, cfg: JobConfig) -> dict:
             parsed = parse_lines(lines, spec)
         if cfg.enrich and "url" in parsed.columns and "lang" in parsed.columns:
             parsed = enrich_mod.enrich_all(parsed, spark)
-        C.route_checkpointed(
-            parsed, cfg.sinks, spec, cfg.output,
-            buckets=cfg.buckets, key_col=cfg.key_col, source=source,
-        )
+        # the route runs every Spark job that AQE can shape
+        with skew_profile(spark):
+            C.route_checkpointed(
+                parsed, cfg.sinks, spec, cfg.output,
+                buckets=cfg.buckets, key_col=cfg.key_col, source=source,
+            )
 
     # per-sink level histograms, summed from the lineage entries
     _write_level_hists(cfg.output, C.sink_histograms(cfg.output))

@@ -6,8 +6,9 @@ distributions. Any groupBy/join keyed on ``url_host`` therefore has
 three partitions carrying ~23% of all rows each. Two standard fixes,
 both here:
 
-- **AQE** (`skew_conf`): adaptive skew-join splitting + partition
-  coalescing — zero code changes, works when skew appears at join time.
+- **AQE** (`skew_profile`, for one block of work): adaptive skew-join
+  splitting + partition coalescing — zero code changes, works when skew
+  appears at join time.
 - **Salting** (`salted_count`, `add_salt`): pre-aggregate on
   (key, salt) so every reducer sees ~rows/K of any hot key, then
   combine. The classic two-stage aggregation; Catalyst's partial
@@ -18,6 +19,8 @@ both here:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 AQE_SKEW_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -27,10 +30,22 @@ AQE_SKEW_CONFS = {
 }
 
 
-def skew_conf(spark) -> None:
-    """Apply the AQE skew profile to a session."""
+@contextmanager
+def skew_profile(spark):
+    """The AQE skew profile on ``spark`` inside the ``with`` block only:
+    afterwards each option reads as it did before, and one that was unset
+    is unset again."""
+    before = {k: spark.conf.get(k, None) for k in AQE_SKEW_CONFS}
     for k, v in AQE_SKEW_CONFS.items():
         spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def add_salt(df, key_col: str, k: int = 16, salt_col: str = "__salt",

@@ -87,6 +87,35 @@ def test_job_complete_lineage_launches_no_spark_job(spark, work):
     assert resumed == 0
 
 
+def test_job_restores_the_session_options(spark, work, monkeypatch):
+    """The route runs under the AQE skew profile; afterwards each of its
+    options reads as before the job: a set one keeps its value and an
+    unset one is unset again."""
+    from logparser_spark.plans import checkpoint as C
+    from logparser_spark.plans.job import run_job
+    from logparser_spark.plans.skew import AQE_SKEW_CONFS
+
+    factor = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
+    others = [k for k in AQE_SKEW_CONFS if k != factor]
+    before = {k: spark.conf.get(k, None) for k in others}
+    seen = {}
+    route = C.route_checkpointed
+
+    def recording(*a, **kw):
+        seen.update({k: spark.conf.get(k, None) for k in AQE_SKEW_CONFS})
+        return route(*a, **kw)
+
+    monkeypatch.setattr(C, "route_checkpointed", recording)
+    spark.conf.set(factor, "3")
+    try:
+        run_job(spark, _cfg(work, "out"))
+        assert seen == AQE_SKEW_CONFS
+        assert spark.conf.get(factor, None) == "3"
+        assert {k: spark.conf.get(k, None) for k in others} == before
+    finally:
+        spark.conf.unset(factor)
+
+
 def test_job_only_checkpoint_strategy(spark, work):
     from logparser_spark.plans.job import run_job
 
