@@ -973,13 +973,9 @@ def q_route_date_rows(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from logparser_spark.functions.formats import compile_format
-    from logparser_spark.operators.filters import (
-        CombinedFilter,
-        accept_expr,
-        parse_filter,
-        to_column,
-    )
+    from logparser_spark.operators.filters import CombinedFilter, parse_filter
     from logparser_spark.operators.parse import parse_lines_arrow
+    from logparser_spark.operators.route import SinkSpec
 
     _prep(spark)
     spec = compile_format(
@@ -992,7 +988,7 @@ def q_route_date_rows(spark, sf_dir):
     )
     parsed = parse_lines_arrow(_date_lines(spark, sf_dir), spec)
     return parsed.where(
-        accept_expr(to_column(flt, spec), accept_bad_format=False)
+        sink_column(SinkSpec("dates", flt, accept_bad_format=False), spec)
     ).select(
         "doc_id",
         F.col("parsed.Day").alias("day"),

@@ -419,26 +419,22 @@ def to_column(
     return F.expr(to_sql(node, spec, parsed_col, line_num_col, raw_col))
 
 
-def accept_expr(
-    filter_col,
-    well_formed_col=None,
-    accept_bad_format: bool = True,
-):
-    """Wrap a sink predicate in the malformed-acceptance rule
-    (filtered_file_reader.cpp:258-262)::
+def accept_sql(
+    filter_sql: Optional[str], wf: str, accept_bad_format: bool
+) -> str:
+    """The malformed-acceptance rule (filtered_file_reader.cpp:258-262)
+    as Spark SQL text::
 
-        (NOT well_formed AND accept_bad_format)
-        OR (well_formed AND (filter IS NULL OR filter(parsed)))
+        coalesce((NOT well_formed AND accept_bad_format)
+                 OR (well_formed AND filter), false)
 
-    Every sink predicate MUST pass through this (SURVEY.md §2.3 F10).
-    """
-    from pyspark.sql import functions as F
-
-    if well_formed_col is None:
-        well_formed_col = F.col("parsed.well_formed")
-    return (~well_formed_col & F.lit(accept_bad_format)) | (
-        well_formed_col & filter_col
-    )
+    A ``None`` filter passes every well-formed line. The verdict is
+    coalesced to false, so a NULL one neither routes nor poisons a mask.
+    Every sink predicate passes through this (``route.sink_sql``;
+    SURVEY.md §2.3 F10). ``wf`` is the SQL of the well-formed flag."""
+    base = wf if filter_sql is None else f"{wf} AND ({filter_sql})"
+    abf = "true" if accept_bad_format else "false"
+    return f"coalesce((NOT {wf} AND {abf}) OR ({base}), false)"
 
 
 # ── filter composition algebra (the :f* command verbs) ────────────────

@@ -22,7 +22,7 @@ from dataclasses import dataclass
 from typing import Optional, Union
 
 from ..functions.formats import FormatSpec
-from .filters import Filter, parse_filter, sql_ident, to_sql
+from .filters import Filter, accept_sql, parse_filter, sql_ident, to_sql
 
 # route_mask's bit i is sink i, and bit 63 of a long is its sign
 ROUTE_BITS_MAX_SINKS = 63
@@ -100,13 +100,13 @@ def _inverted(dsl: str):
 def sink_sql(sink: SinkSpec, spec: FormatSpec, parsed_col: str = "parsed") -> str:
     """The full routing predicate for one sink as Spark SQL text: the
     filter (:func:`filters.to_sql`) inside the malformed-acceptance rule
-    (``filters.accept_expr``), coalesced to false so NULL verdicts
-    neither route nor poison masks."""
+    (:func:`filters.accept_sql`)."""
     ast = sink.ast(spec)
-    wf = f"{sql_ident(parsed_col)}.`well_formed`"
-    abf = "true" if sink.accept_bad_format else "false"
-    base = wf if ast is None else f"{wf} AND ({to_sql(ast, spec, parsed_col)})"
-    return f"coalesce((NOT {wf} AND {abf}) OR ({base}), false)"
+    return accept_sql(
+        None if ast is None else to_sql(ast, spec, parsed_col),
+        f"{sql_ident(parsed_col)}.`well_formed`",
+        sink.accept_bad_format,
+    )
 
 
 def sink_column(sink: SinkSpec, spec: FormatSpec, parsed_col: str = "parsed"):
@@ -143,8 +143,8 @@ def route_mask(parsed_df, sinks: list[SinkSpec], spec: FormatSpec,
         [f"IF({p}, {1 << i}L, 0L)" for i, p in enumerate(preds)] or ["0L"])
     new = {f"route_{s.name}": p for s, p in zip(sinks, preds)}
     new["route_bits"] = bits
-    # like withColumns, a column of the same name is replaced
-    keep = (["*"] if new.keys().isdisjoint(parsed_df.columns)
-            else [sql_ident(c) for c in parsed_df.columns if c not in new])
+    # like withColumns, a column of the same name is replaced in place
+    cols = [f"{new.pop(c)} AS {sql_ident(c)}" if c in new else sql_ident(c)
+            for c in parsed_df.columns]
     return parsed_df.selectExpr(
-        *keep, *(f"{v} AS {sql_ident(k)}" for k, v in new.items()))
+        *cols, *(f"{v} AS {sql_ident(k)}" for k, v in new.items()))

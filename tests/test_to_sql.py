@@ -22,12 +22,10 @@ from logparser_spark.operators.filters import (
     FieldFilter,
     LineNumberFilter,
     RawLineFilter,
-    accept_expr,
     parse_filter,
-    to_column,
     to_sql,
 )
-from logparser_spark.operators.route import SinkSpec, route_mask
+from logparser_spark.operators.route import SinkSpec, route_mask, sink_column
 
 # field names with a backquote and a dot exercise the identifier quoting
 SPEC = compile_format(
@@ -235,13 +233,13 @@ PINNED = [
 
 
 def test_pinned_filters_match_oracle(spark):
-    """``to_column`` (the F.expr of ``to_sql``) inside ``accept_expr``
-    on hand-picked rows:
+    """``sink_column`` (``to_sql`` inside the acceptance rule, as one
+    ``F.expr``) on hand-picked rows:
     int64 saturation, the ASCII-only ``_CI`` on non-ASCII values, quotes,
     backslashes, a ``${...}`` value the SQL parser must not substitute,
     -0.0 and a NaN field, which no comparison accepts."""
     asts = [parse_filter(f, SPEC) if isinstance(f, str) else f for f, _ in PINNED]
-    preds = [accept_expr(to_column(a, SPEC), accept_bad_format=False).alias(f"p{k}")
+    preds = [sink_column(SinkSpec(f"p{k}", a, False), SPEC).alias(f"p{k}")
              for k, a in enumerate(asts)]
     rows = _frame(spark, PINNED_ROWS).select("i", *preds).collect()
     for k, (ast, (flt, want)) in enumerate(zip(asts, PINNED)):
@@ -253,8 +251,10 @@ def test_pinned_filters_match_oracle(spark):
 
 def test_route_mask_py4j_calls(spark):
     """Building ``route_mask`` over the seven fixture sinks takes a few
-    py4j round trips: one projection of SQL text, not a Column per node."""
-    import gc
+    py4j round trips: one projection of SQL text, not a Column per node.
+    Only this thread's calls count: py4j's finalizer thread sends the
+    releases of objects that earlier tests dropped whenever it runs."""
+    import threading
 
     from logparser_spark.functions.formats import DEFAULT_FORMAT
     from logparser_spark.operators.route import fixture_sinks
@@ -264,12 +264,35 @@ def test_route_mask_py4j_calls(spark):
     route_mask(df, fixture_sinks(), spec)  # loads the JVM classes once
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    me = threading.current_thread()
     calls = []
-    gc.collect()
-    client.send_command = lambda *a, **k: calls.append(a[0][:2]) or send(*a, **k)
+
+    def counted(command, *a, **k):
+        if threading.current_thread() is me:
+            calls.append(command[:2])
+        return send(command, *a, **k)
+
+    client.send_command = counted
     try:
         out = route_mask(df, fixture_sinks(), spec)
     finally:
         client.send_command = send
     assert len(calls) <= 40, calls
     assert out.columns[-8:] == [f"route_{s.name}" for s in fixture_sinks()] + ["route_bits"]
+
+
+def test_route_mask_replaces_columns_in_place(spark):
+    """Masking a masked frame again replaces each ``route_*`` column where
+    it stands, like ``withColumns``: the column order does not change."""
+    from logparser_spark.functions.formats import DEFAULT_FORMAT
+    from logparser_spark.operators.route import fixture_sinks
+
+    spec = compile_format(DEFAULT_FORMAT)
+    df = spark.createDataFrame([], _schema(spec))
+    once = route_mask(df, fixture_sinks(), spec)
+    twice = route_mask(once.select("route_bits", *df.columns, "route_sink_info"),
+                       fixture_sinks(), spec)
+    assert once.columns == [*df.columns,
+                            *(f"route_{s.name}" for s in fixture_sinks()), "route_bits"]
+    assert twice.columns == ["route_bits", *df.columns, "route_sink_info",
+                             *(f"route_{s.name}" for s in fixture_sinks()[1:])]
