@@ -345,7 +345,7 @@ _STATUS_DIM_SQL = """dim_status(level, severity, is_error) AS (VALUES
       ('WARN',3,true), ('ERROR',4,true))"""
 
 
-# ── training-data pipeline queries (documents / embeddings tables) ────
+# ── training-data pipeline queries (documents table) ─────────────────
 
 
 def q_exact_dedup(spark, sf_dir):
@@ -369,22 +369,6 @@ def q_incremental_dedup(spark, sf_dir):
         docs.where(F.col("doc_id") % 3 == 0)
     ).select("md5_hi", "md5_lo")
     return dedup.incremental_dedup(docs, seen)
-
-
-def q_incremental_dedup_bloom(spark, sf_dir):
-    """Bloom-prefiltered batch-over-ledger dedup — same ledger, same
-    batch, same ORACLE as incremental_dedup: the broadcast bloom only
-    routes rows (definitely-novel skip the anti-join; bloom-positives
-    verify exactly), so any output difference is a routing bug."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    seen = dedup.exact_dedup(
-        docs.where(F.col("doc_id") % 3 == 0)
-    ).select("md5_hi", "md5_lo")
-    return dedup.incremental_dedup_bloom(docs, seen)
 
 
 def q_minhash_signature(spark, sf_dir):
@@ -589,50 +573,6 @@ def q_fingerprint(spark, sf_dir):
     return dedup.doc_fingerprint(docs)
 
 
-def _query_vec(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return emb, list(
-        emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    )
-
-
-def q_cosine_topk(spark, sf_dir):
-    from logparser_spark.operators import similarity
-
-    emb, q = _query_vec(spark, sf_dir)
-    return similarity.cosine_topk(emb, q, k=10)
-
-
-def q_cosine_topk_ann(spark, sf_dir):
-    from logparser_spark.operators import similarity
-
-    emb, q = _query_vec(spark, sf_dir)
-    return similarity.cosine_topk_ann(emb, q, k=10)
-
-
-def q_hard_negatives(spark, sf_dir):
-    """Hard-negative mining: for query vectors 0/1/2 (with their
-    labels), the top-5 most-similar vectors of a DIFFERENT label —
-    literal-struct fan-out (no BNLJ), one rank-window shuffle. The
-    oracle restates the label-filtered cosine ranking per query."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qrows = (
-        emb.where(F.col("vec_id").isin([0, 1, 2]))
-        .orderBy("vec_id").collect()
-    )
-    queries = [
-        (r["vec_id"], list(r["embedding"]), int(r["label"]))
-        for r in qrows
-    ]
-    return similarity.hard_negatives(emb, queries, k=5)
-
-
 def q_language_id(spark, sf_dir):
     from logparser_spark.operators import textstats
 
@@ -686,16 +626,6 @@ def q_pii_scrub(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return textstats.pii_scrub(textstats.with_pii(docs))
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs via the sign-bucket candidate
-    join (never all-pairs); tau tuned to the synthetic corpus's cosine
-    range so the result is non-trivial."""
-    from logparser_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.embedding_near_dup_pairs(emb, tau=0.25)
 
 
 def q_robots_allowed(spark, sf_dir):
@@ -888,31 +818,6 @@ def q_sample_fixed_n(spark, sf_dir):
     return corpus.sample_fixed_n(docs, 25).select("doc_id", "text")
 
 
-def _boiler_pages(docs):
-    """Shared synth for the boilerplate queries: a nav block (linky),
-    a lead-augmented paragraph whose stopword density VARIES with the
-    doc's own text (so both good and low_stop verdicts occur), a
-    short teaser, and a linky footer; plus script/style elements that
-    must vanish wholesale."""
-    from pyspark.sql import functions as F
-
-    html = F.concat(
-        F.lit('<html><head><style>.x{color:red}</style>'
-              '<script>var the_thing = "of the and to in";</script>'
-              '</head><body>'
-              '<div class="nav"><a href="/">Home</a> '
-              '<a href="/about">About us</a> '
-              '<a href="/c">Contact</a></div>'
-              '<p>the data is on a table and it is in the row for it '),
-        F.col("text"),
-        F.lit('</p><p>Read more...</p>'
-              '<div class="footer">Copyright 2024 '
-              '<a href="/tos">Terms</a> <a href="/p">privacy</a>'
-              '</div></body></html>'),
-    )
-    return docs.select("doc_id", html.alias("html"))
-
-
 def q_parse_date_spec(spark, sf_dir):
     """The DATE field type end-to-end (engine extension — the
     reference README promises DATE 'incoming' but never shipped it):
@@ -1069,82 +974,6 @@ def q_host_components(spark, sf_dir):
     )
 
 
-def q_embedding_kmeans(spark, sf_dir):
-    """Deterministic integer k-means (k=4, 3 Lloyd iterations) over
-    the embeddings table: coordinates quantized via the cross-engine
-    floor(x*1e6+0.5) contract, exact int64 squared-L2 distances,
-    truncated-division centroid means, smaller-cid tie-break,
-    empty-cluster carryover. The oracle UNROLLS all three iterations
-    as SQL CTEs (assignment window + per-dim sum/count + rebuilt
-    centroid lists), so every training step is checked bit-for-bit —
-    the same unrolled-iteration pattern as the PageRank oracle."""
-    from logparser_spark.operators.kmeans import kmeans_fit_assign
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return kmeans_fit_assign(emb, k=4, iters=3)
-
-
-def q_kmeans_ann_topk(spark, sf_dir):
-    """IVF approximate nearest neighbors on the k-means coarse
-    quantizer (FAISS IVF-Flat shape): queries = every 100th vector,
-    nprobe=2 of k=4 cells, exact integer distances, top-5 by
-    (dist, vec_id). The oracle extends the unrolled-kmeans CTEs with
-    the probe ranking and candidate top-k, so cell assignment, probe
-    selection, and final ranks are all replayed bit-for-bit."""
-    from logparser_spark.operators.kmeans import kmeans_ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return kmeans_ivf_topk(emb, k=4, iters=3, nprobe=2, topk=5,
-                           query_mod=100)
-
-
-def q_semdedup(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023) over the embeddings table:
-    k-means clusters (the deterministic integer contract), exact
-    within-cluster cosine pairs at tau=0.35 (half-up ppm, the
-    embedding_near_dup cross-engine contract), transitive duplicate
-    groups, one kept representative per group (farthest from its
-    centroid, ties to the smaller id). The oracle replays the whole
-    stack: unrolled-kmeans CTEs + the pairwise-cosine predicate + a
-    RECURSIVE-CTE component closure + the same keep window."""
-    from logparser_spark.operators.semdedup import semdedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return semdedup(emb, k=4, iters=3, tau_ppm=350_000)
-
-
-def q_clean_corpus_verdicts(spark, sf_dir):
-    """Integration of the round-4 cleaning chain: HTML pages →
-    boilerplate removal (main_content) → Gopher quality gate on the
-    EXTRACTED content — one verdict row per document (docs whose
-    paragraph flunked extraction report has_content=false and never
-    reach the gate). The oracle derives everything from the raw text:
-    extraction survival = the 30% stopword-density rule, gopher
-    metrics recomputed on the lead-augmented paragraph."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.boilerplate import main_content
-    from logparser_spark.operators.textstats import gopher_quality
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    mc = main_content(_boiler_pages(docs))
-    gq = gopher_quality(
-        mc.select("doc_id", F.col("content").alias("text"))
-    ).select("doc_id", "n_words", "passes")
-    return (
-        docs.select("doc_id")
-        .join(mc.select("doc_id", F.lit(True).alias("has_content")),
-              "doc_id", "left")
-        .join(gq, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("has_content", F.lit(False)).alias("has_content"),
-            "n_words",
-            F.coalesce("passes", F.lit(False)).alias("passes"),
-        )
-    )
-
-
 def q_dq_check(spark, sf_dir):
     """Table-contract expectation check over the documents snapshot:
     five rules in ONE aggregate over ONE scan (conditional sums with
@@ -1218,71 +1047,6 @@ def q_tag_keywords(spark, sf_dir):
     )
 
 
-def q_crawl_rollup(spark, sf_dir):
-    """Hierarchical corpus accounting via ROLLUP (the crawl-report
-    shape: totals per (source, lang), per source, and grand total in
-    ONE pass — Spark expands grouping sets with a single shuffle,
-    partial aggregation intact). NULL grouping levels are surfaced as
-    the literal '(all)' so the hash compare is unambiguous."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        docs.rollup("source", "lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-        )
-        .select(
-            F.coalesce("source", F.lit("(all)")).alias("source"),
-            F.coalesce("lang", F.lit("(all)")).alias("lang"),
-            "n_docs",
-            "n_chars",
-        )
-    )
-
-
-def q_lang_source_pivot(spark, sf_dir):
-    """Language × source contingency table via PIVOT: one row per
-    lang, one count column per source (fixed column list so the
-    schema is deterministic). The oracle states the same table as
-    conditional aggregation."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sources = [r["source"] for r in
-               docs.select("source").distinct().collect()]
-    piv = (
-        docs.groupBy("lang")
-        .pivot("source", sorted(sources))
-        .count()
-    )
-    from pyspark.sql import functions as F
-
-    return piv.select(
-        "lang",
-        *[F.coalesce(F.col(f"`{s}`"), F.lit(0)).cast("long")
-          .alias(f"n_{s}") for s in sorted(sources)],
-    )
-
-
-def q_event_transitions(spark, sf_dir):
-    """Per-user event-type transition matrix (the first-order Markov
-    table): LAG over each user's time-ordered events, count (prev →
-    curr) pairs; ties at identical timestamps break by event_id so
-    the sequence is deterministic."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id", "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    ).where(F.col("prev_type").isNotNull())
-    return seq.groupBy("prev_type", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-
-
 def q_etld1(spark, sf_dir):
     """Registrable-domain (eTLD+1) extraction: five host shapes per
     doc_id (multi-label public suffixes .co.uk/.com.au/.co.jp, plain
@@ -1306,30 +1070,6 @@ def q_etld1(spark, sf_dir):
     return registrable_domain(
         docs.select("doc_id", host.alias("host"))
     ).select("doc_id", "host", "etld1")
-
-
-def q_boilerplate_blocks(spark, sf_dir):
-    """jusText-style block classification over the synth pages. The
-    oracle is ANALYTIC: the three boilerplate blocks are restated as
-    constants (their text never varies), and the paragraph's
-    word/stopword counts are recomputed in SQL from the raw document
-    text — the block splitter, tag stripper, and density rules are
-    checked without rerunning any of their regexes."""
-    from logparser_spark.operators.boilerplate import boilerplate_blocks
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return boilerplate_blocks(_boiler_pages(docs))
-
-
-def q_main_content(spark, sf_dir):
-    """Main-content reassembly: only 'good' paragraph blocks survive,
-    so a document appears iff its lead-augmented paragraph clears the
-    30% stopword-density bar — the oracle recomputes that predicate
-    per doc and rebuilds the kept content string."""
-    from logparser_spark.operators.boilerplate import main_content
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return main_content(_boiler_pages(docs))
 
 
 def q_sitemap_urls(spark, sf_dir):
@@ -1398,35 +1138,6 @@ def q_gopher_quality(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return gopher_quality(docs)
-
-
-def q_winnow_fingerprints(spark, sf_dir):
-    """Winnowing (MOSS) fingerprints over the documents table:
-    k=5 grams of the case/punct-normalized text, w=4 windows,
-    min-hash per window with the paper's rightmost tie-break. The
-    oracle restates gram explosion, the packed (hash, 10^9−pos)
-    selection key, the window-frame min, and the full-window filter
-    in SQL, so the selection rule matches pair-for-pair."""
-    from logparser_spark.operators.winnow import winnow_fingerprints
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return winnow_fingerprints(docs, k=5, w=4)
-
-
-def q_winnow_overlap(spark, sf_dir):
-    """MOSS match table on the winnowed fingerprints: fingerprints in
-    more than max_df=8 documents are dropped (boilerplate guard, which
-    also caps every self-join bucket), then document pairs sharing ≥ 3
-    surviving fingerprints report their shared count."""
-    from logparser_spark.operators.winnow import (
-        winnow_fingerprints,
-        winnow_overlap,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return winnow_overlap(
-        winnow_fingerprints(docs, k=5, w=4), max_df=8, min_shared=3
-    )
 
 
 def q_politeness_order(spark, sf_dir):
@@ -2133,9 +1844,6 @@ def _dataprep_sql() -> dict[str, str]:
     FROM k ANTI JOIN seen USING (md5_hi, md5_lo)
     GROUP BY 1, 2"""
 
-    # the bloom variant must be output-identical by construction
-    sqls["incremental_dedup_bloom"] = sqls["incremental_dedup"]
-
     sqls["minhash_signature"] = f"""WITH {shingle_cte},
     {sig_cte}
     SELECT * FROM sig"""
@@ -2170,7 +1878,6 @@ def _dataprep_sql() -> dict[str, str]:
     {bands_cte},
     {pairs_cte},
     ipairs AS (SELECT id_a, id_b FROM pairs),{jaccard_tail}"""
-
 
     # C4-rule sentence dedup: sentinel split (RE2 has no lookbehind),
     # keep-first = rank 1 over (doc_id, pos) per exact sentence string,
@@ -2285,59 +1992,6 @@ def _dataprep_sql() -> dict[str, str]:
     sqls["fingerprint"] = f"""WITH {shingle_cte}
     SELECT doc_id, {fp_cols}
     FROM shingles GROUP BY doc_id"""
-
-    sqls["cosine_topk"] = """
-    WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-    sims AS (
-      SELECT e.vec_id,
-        ROUND(list_dot_product(e.embedding::DOUBLE[], q.qv)
-          / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-             * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos_sim
-      FROM embeddings e CROSS JOIN q)
-    SELECT vec_id, cos_sim FROM sims
-    ORDER BY cos_sim DESC, vec_id LIMIT 10"""
-
-    sqls["hard_negatives"] = """
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv, label AS ql
-      FROM embeddings WHERE vec_id IN (0, 1, 2)),
-    sims AS (
-      SELECT q.query_id, e.vec_id,
-        ROUND(list_dot_product(e.embedding::DOUBLE[], q.qv)
-          / (sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                   e.embedding::DOUBLE[]))
-             * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos_sim
-      FROM embeddings e CROSS JOIN q
-      WHERE e.label <> q.ql),
-    r AS (
-      SELECT query_id, vec_id, cos_sim,
-        row_number() OVER (
-          PARTITION BY query_id
-          ORDER BY cos_sim DESC, vec_id) AS rank
-      FROM sims)
-    SELECT query_id, rank::INT AS rank, vec_id, cos_sim
-    FROM r WHERE rank <= 5"""
-
-    bucket_expr = " + ".join(
-        f"CASE WHEN v[{j + 1}] >= 0 THEN {1 << j} ELSE 0 END"
-        for j in range(8)
-    )
-    sqls["cosine_topk_ann"] = f"""
-    WITH b AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    bk AS (SELECT vec_id, v, {bucket_expr} AS bucket FROM b),
-    q AS (SELECT v AS qv, bucket AS qb FROM bk WHERE vec_id = 0),
-    cand AS (
-      SELECT bk.vec_id, bk.v, q.qv FROM bk CROSS JOIN q
-      WHERE bit_count(xor(bk.bucket::BIGINT, q.qb::BIGINT)) <= 1),
-    sims AS (
-      SELECT vec_id,
-        ROUND(list_dot_product(v, qv)
-          / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))),
-          6) AS cos_sim
-      FROM cand)
-    SELECT vec_id, cos_sim FROM sims
-    ORDER BY cos_sim DESC, vec_id LIMIT 10"""
 
     def count_occ(padded: str, needle: str) -> str:
         ln = len(needle)
@@ -2490,22 +2144,6 @@ def _dataprep_sql() -> dict[str, str]:
       len(regexp_extract_all(text, '{TOKEN_REGEX}'))::BIGINT AS rx_tokens
     FROM documents"""
 
-    sqls["embedding_near_dup"] = """
-    WITH b AS (
-      SELECT vec_id, embedding,
-             (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END) + (CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END) + (CASE WHEN embedding[3] >= 0 THEN 4 ELSE 0 END) + (CASE WHEN embedding[4] >= 0 THEN 8 ELSE 0 END) + (CASE WHEN embedding[5] >= 0 THEN 16 ELSE 0 END) + (CASE WHEN embedding[6] >= 0 THEN 32 ELSE 0 END) + (CASE WHEN embedding[7] >= 0 THEN 64 ELSE 0 END) + (CASE WHEN embedding[8] >= 0 THEN 128 ELSE 0 END) AS bk
-      FROM embeddings)
-    SELECT id_a, id_b, cos_sim FROM (
-      SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-        FLOOR(list_dot_product(x.embedding::DOUBLE[], y.embedding::DOUBLE[])
-              / (sqrt(list_dot_product(x.embedding::DOUBLE[], x.embedding::DOUBLE[]))
-                 * sqrt(list_dot_product(y.embedding::DOUBLE[], y.embedding::DOUBLE[])))
-              * 1000000 + 0.5) / 1000000
-          AS cos_sim
-      FROM b x JOIN b y
-        ON x.vec_id < y.vec_id AND bit_count(xor(x.bk, y.bk)) <= 1)
-    WHERE cos_sim >= 0.25"""
-
     # integer-space half-up 6-decimal rounding (same contract as
     # quality_score: IEEE division is cross-engine exact, ROUND is not)
     def _r6(num: str, den: str) -> str:
@@ -2603,7 +2241,6 @@ def _dataprep_sql() -> dict[str, str]:
        ELSE 0 END)::BIGINT AS score_ppm
     FROM documents doc LEFT JOIN d USING (doc_id), tot"""
 
-
     sqls["politeness_order"] = """
     WITH u AS (
       SELECT 'https://site' || (doc_id % 37)::VARCHAR
@@ -2694,7 +2331,6 @@ def _dataprep_sql() -> dict[str, str]:
     SELECT doc_id, text FROM documents
     ORDER BY md5('salt42|' || doc_id::VARCHAR), doc_id LIMIT 25"""
 
-
     sqls["host_components"] = """
     WITH RECURSIVE e AS (
       SELECT DISTINCT src_host AS a, dst_host AS b FROM (
@@ -2709,149 +2345,6 @@ def _dataprep_sql() -> dict[str, str]:
     )
     SELECT node AS host, min(lbl) AS component_id
     FROM reach GROUP BY 1""".format(edges=_OUTLINK_EDGES_SQL)
-
-    # integer k-means, 3 unrolled Lloyd iterations (PageRank-style
-    # oracle): trunc-division means via //, tie-break on (dist, cid),
-    # empty clusters keep the previous centroid
-    _km_iter = """,
-    d{t} AS (
-      SELECT q.vec_id, q.q, c.cid,
-        list_sum(list_transform(generate_series(1, 64),
-          i -> (q.q[i] - c.c[i]) * (q.q[i] - c.c[i]))) AS dist
-      FROM q, c{t} c),
-    a{t} AS (
-      SELECT vec_id, q, cid AS cluster, dist,
-        row_number() OVER (PARTITION BY vec_id
-                           ORDER BY dist, cid) AS rk
-      FROM d{t}),
-    s{t} AS (
-      SELECT cluster, CAST(i.i AS INT) AS dim,
-             sum(q[CAST(i.i AS INT)])::BIGINT AS s,
-             count(*)::BIGINT AS n
-      FROM a{t}, generate_series(1, 64) i(i)
-      WHERE rk = 1
-      GROUP BY 1, 2),
-    c{t1} AS (
-      SELECT cluster AS cid, list(s // n ORDER BY dim) AS c
-      FROM s{t} GROUP BY 1
-      UNION ALL
-      SELECT cid, c FROM c{t}
-      WHERE cid NOT IN (SELECT cluster FROM s{t}))
-    """
-
-    _km_prefix = (
-        """
-    WITH q AS (
-      SELECT vec_id, list_transform(embedding,
-        x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5)
-                  AS BIGINT)) AS q
-      FROM embeddings),
-    c0 AS (
-      SELECT (row_number() OVER (ORDER BY vec_id) - 1)::INT AS cid,
-             q AS c
-      FROM (SELECT vec_id, q FROM q ORDER BY vec_id LIMIT 4))
-    """
-        + _km_iter.format(t=0, t1=1)
-        + _km_iter.format(t=1, t1=2)
-        + _km_iter.format(t=2, t1=3)
-    )
-
-    sqls["embedding_kmeans"] = _km_prefix + """,
-    df AS (
-      SELECT q.vec_id, c.cid,
-        list_sum(list_transform(generate_series(1, 64),
-          i -> (q.q[i] - c.c[i]) * (q.q[i] - c.c[i]))) AS dist
-      FROM q, c3 c)
-    SELECT vec_id, cluster::INT AS cluster, dist::BIGINT AS dist
-    FROM (
-      SELECT vec_id, cid AS cluster, dist,
-        row_number() OVER (PARTITION BY vec_id
-                           ORDER BY dist, cid) AS rk
-      FROM df)
-    WHERE rk = 1"""
-
-    sqls["kmeans_ann_topk"] = _km_prefix + """,
-    asg AS (
-      SELECT vec_id, q, cluster FROM (
-        SELECT q.vec_id, q.q, c.cid AS cluster,
-          list_sum(list_transform(generate_series(1, 64),
-            i -> (q.q[i] - c.c[i]) * (q.q[i] - c.c[i]))) AS dist,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            list_sum(list_transform(generate_series(1, 64),
-              i -> (q.q[i] - c.c[i]) * (q.q[i] - c.c[i]))),
-            c.cid) AS rk
-        FROM q, c3 c)
-      WHERE rk = 1),
-    qv AS (SELECT vec_id AS qid, q AS qq FROM q
-           WHERE vec_id % 100 = 0),
-    pd AS (
-      SELECT qv.qid, qv.qq, c.cid,
-        list_sum(list_transform(generate_series(1, 64),
-          i -> (qv.qq[i] - c.c[i]) * (qv.qq[i] - c.c[i]))) AS cdist
-      FROM qv, c3 c),
-    probe AS (
-      SELECT qid, qq, cid FROM (
-        SELECT qid, qq, cid,
-          row_number() OVER (PARTITION BY qid
-                             ORDER BY cdist, cid) AS prk
-        FROM pd)
-      WHERE prk <= 2),
-    cand AS (
-      SELECT p.qid, a.vec_id,
-        list_sum(list_transform(generate_series(1, 64),
-          i -> (p.qq[i] - a.q[i]) * (p.qq[i] - a.q[i]))) AS dist
-      FROM probe p JOIN asg a ON a.cluster = p.cid)
-    SELECT qid, vec_id, dist::BIGINT AS dist, rank::INT AS rank
-    FROM (
-      SELECT qid, vec_id, dist,
-        row_number() OVER (PARTITION BY qid
-                           ORDER BY dist, vec_id) AS rank
-      FROM cand)
-    WHERE rank <= 5"""
-
-    # SemDeDup: the unrolled-kmeans prefix (hoisted to WITH RECURSIVE
-    # so the component closure can live in the same statement) + exact
-    # within-cluster cosine pairs + reachability closure + keep window
-    sqls["semdedup"] = _km_prefix.replace(
-        "WITH q AS", "WITH RECURSIVE q AS", 1
-    ) + """,
-    asg AS (
-      SELECT vec_id, cluster, dist FROM (
-        SELECT q.vec_id, c.cid AS cluster,
-          list_sum(list_transform(generate_series(1, 64),
-            i -> (q.q[i] - c.c[i]) * (q.q[i] - c.c[i]))) AS dist,
-          row_number() OVER (PARTITION BY q.vec_id ORDER BY
-            list_sum(list_transform(generate_series(1, 64),
-              i -> (q.q[i] - c.c[i]) * (q.q[i] - c.c[i]))),
-            c.cid) AS rk
-        FROM q, c3 c)
-      WHERE rk = 1),
-    pr AS (
-      SELECT ax.vec_id AS a, ay.vec_id AS b
-      FROM asg ax JOIN asg ay
-        ON ax.cluster = ay.cluster AND ax.vec_id < ay.vec_id
-      JOIN embeddings x ON x.vec_id = ax.vec_id
-      JOIN embeddings y ON y.vec_id = ay.vec_id
-      WHERE FLOOR(
-        list_dot_product(x.embedding::DOUBLE[], y.embedding::DOUBLE[])
-        / (sqrt(list_dot_product(x.embedding::DOUBLE[],
-                                 x.embedding::DOUBLE[]))
-           * sqrt(list_dot_product(y.embedding::DOUBLE[],
-                                   y.embedding::DOUBLE[])))
-        * 1000000 + 0.5)::BIGINT >= 350000),
-    sym AS (SELECT a, b FROM pr UNION SELECT b, a FROM pr),
-    reach(node, lbl) AS (
-      SELECT vec_id, vec_id FROM q
-      UNION
-      SELECT s.b, r.lbl FROM reach r JOIN sym s ON s.a = r.node),
-    comp AS (
-      SELECT node AS vec_id, min(lbl) AS component_id
-      FROM reach GROUP BY 1)
-    SELECT a.vec_id, a.cluster::INT AS cluster, a.dist::BIGINT AS dist,
-      c.component_id::BIGINT AS component_id,
-      (row_number() OVER (PARTITION BY c.component_id
-                          ORDER BY a.dist DESC, a.vec_id) = 1) AS keep
-    FROM asg a JOIN comp c ON c.vec_id = a.vec_id"""
 
     _bucket = ("('0x' || substr(md5('salt42|' || doc_id::VARCHAR), 1, 8))"
                "::BIGINT % 1000000")
@@ -2880,7 +2373,6 @@ def _dataprep_sql() -> dict[str, str]:
       UNION ALL SELECT 'text non-empty', v2 FROM a
       UNION ALL SELECT 'doc_id not multiple of 5', v3 FROM a
       UNION ALL SELECT 'source set', v4 FROM a) r"""
-
 
     sqls["rebalance_mix"] = f"""
     WITH counts AS (
@@ -2913,34 +2405,7 @@ def _dataprep_sql() -> dict[str, str]:
         AS n_tags
     FROM documents"""
 
-    sqls["crawl_rollup"] = """
-    SELECT coalesce(source, '(all)') AS source,
-           coalesce(lang, '(all)') AS lang,
-           count(*)::BIGINT AS n_docs,
-           sum(n_chars)::BIGINT AS n_chars
-    FROM documents
-    GROUP BY ROLLUP(source, lang)"""
-
     _srcs = [f"src{j}" for j in range(20)]
-    sqls["lang_source_pivot"] = (
-        "SELECT lang, "
-        + ", ".join(
-            f"sum(CASE WHEN source = '{s}' THEN 1 ELSE 0 END)::BIGINT"
-            f" AS n_{s}"
-            for s in sorted(_srcs)
-        )
-        + " FROM documents GROUP BY lang"
-    )
-
-    sqls["event_transitions"] = """
-    WITH s AS (
-      SELECT user_id, event_type,
-        lag(event_type) OVER (PARTITION BY user_id
-                              ORDER BY ts, event_id) AS prev_type
-      FROM events)
-    SELECT prev_type, event_type, count(*)::BIGINT AS n
-    FROM s WHERE prev_type IS NOT NULL
-    GROUP BY 1, 2"""
 
     sqls["etld1"] = """
     SELECT doc_id,
@@ -3021,100 +2486,6 @@ def _dataprep_sql() -> dict[str, str]:
       CASE WHEN ok THEN 'm' || doc_id END AS msg,
       ok AS well_formed
     FROM v"""
-
-    # analytic paragraph metrics for the boilerplate oracles: the
-    # lead-augmented paragraph is the only block whose verdict varies
-    _boiler_para = """
-    WITH p AS (
-      SELECT doc_id,
-        trim(regexp_replace(
-          'the data is on a table and it is in the row for it '
-            || text, '\\s+', ' ', 'g')) AS para
-      FROM documents),
-    pw AS (
-      SELECT doc_id, para,
-        list_filter(string_split(para, ' '), x -> len(x) > 0) AS words
-      FROM p),
-    pm AS (
-      SELECT doc_id, para,
-        len(words)::BIGINT AS n_words,
-        len(list_filter(words, x -> list_contains(
-          ['the','a','an','and','or','of','to','in','on','is','it',
-           'that','this','with','as','for','was','are','be','by'],
-          lower(x))))::BIGINT AS ns
-      FROM pw),
-    para_row AS (
-      SELECT doc_id, para, n_words,
-        0::BIGINT AS link_density_ppm,
-        ((ns * 1000000) // n_words)::BIGINT AS stopword_density_ppm
-      FROM pm)
-    """
-
-    sqls["boilerplate_blocks"] = _boiler_para + """
-    SELECT doc_id, 1::BIGINT AS seq, 'Home About us Contact' AS text,
-      4::BIGINT AS n_words, 904761::BIGINT AS link_density_ppm,
-      0::BIGINT AS stopword_density_ppm, 'linky' AS verdict
-    FROM documents
-    UNION ALL
-    SELECT doc_id, 3::BIGINT, para, n_words, link_density_ppm,
-      stopword_density_ppm,
-      CASE WHEN stopword_density_ppm >= 300000 THEN 'good'
-           ELSE 'low_stop' END
-    FROM para_row
-    UNION ALL
-    SELECT doc_id, 5::BIGINT, 'Read more...', 2::BIGINT, 0::BIGINT,
-      0::BIGINT, 'short'
-    FROM documents
-    UNION ALL
-    SELECT doc_id, 7::BIGINT, 'Copyright 2024 Terms privacy',
-      4::BIGINT, 428571::BIGINT, 0::BIGINT, 'linky'
-    FROM documents"""
-
-    sqls["main_content"] = _boiler_para + """
-    SELECT doc_id, para AS content, 1::BIGINT AS n_good_blocks
-    FROM para_row
-    WHERE stopword_density_ppm >= 300000"""
-
-    sqls["clean_corpus_verdicts"] = _boiler_para + """,
-    g AS (
-      SELECT pw.doc_id, pw.para, pw.words, pr.stopword_density_ppm
-      FROM pw JOIN para_row pr USING (doc_id)),
-    m AS (
-      SELECT doc_id, stopword_density_ppm,
-        len(words)::BIGINT AS n_words,
-        coalesce(list_sum(list_transform(words, x -> len(x))),
-                 0)::BIGINT AS swl,
-        ((len(para) - len(replace(para, '#', '')))
-         + (len(para) - len(replace(para, '...', ''))) // 3)::BIGINT
-          AS nsym,
-        (CASE WHEN regexp_matches(trim(para), '(\\.\\.\\.|…)$')
-              THEN 1 ELSE 0 END)::BIGINT AS nell,
-        (CASE WHEN regexp_matches(trim(para), '^[•\\-*]')
-              THEN 1 ELSE 0 END)::BIGINT AS nbul,
-        len(list_filter(words,
-            x -> regexp_matches(x, '[A-Za-z]')))::BIGINT AS nalpha,
-        len(list_intersect(
-            list_distinct(list_transform(words, x -> lower(x))),
-            ['the','be','to','of','and','that','have','with']
-        ))::BIGINT AS nstop
-      FROM g),
-    v AS (
-      SELECT doc_id,
-        stopword_density_ppm >= 300000 AS has_content, n_words,
-        (n_words BETWEEN 50 AND 100000)
-        AND ((swl * 1000000) // n_words BETWEEN 3000000 AND 10000000)
-        AND ((nsym * 1000000) // n_words <= 100000)
-        AND (nbul * 1000000 <= 900000)
-        AND (nell * 1000000 <= 300000)
-        AND ((nalpha * 1000000) // n_words >= 800000)
-        AND (nstop >= 2) AS gpass
-      FROM m)
-    SELECT d.doc_id,
-      coalesce(v.has_content, FALSE) AS has_content,
-      CASE WHEN v.has_content THEN v.n_words END AS n_words,
-      coalesce(v.has_content AND v.gpass, FALSE) AS passes
-    FROM documents d LEFT JOIN v ON v.doc_id = d.doc_id"""
-
 
     sqls["sitemap_urls"] = """
     WITH s AS (
@@ -3233,54 +2604,6 @@ def _dataprep_sql() -> dict[str, str]:
        AND coalesce(alpha_word_ppm >= 800000, FALSE)
        AND n_stop_distinct >= 2) AS passes
     FROM p"""
-
-    # shared fingerprint CTE for both winnowing oracles: k=5, w=4,
-    # packed (hash-hex, 10^9 - pos) selection key, window-frame min,
-    # full-window filter with the short-doc single-window exception
-    _winnow_fps = """
-    WITH n AS (
-      SELECT doc_id,
-             regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS norm
-      FROM documents),
-    g AS (
-      SELECT doc_id, norm, (length(norm) - 4)::INT AS gmax FROM n),
-    grams AS (
-      SELECT g.doc_id, g.gmax, CAST(t.p AS INT) AS pos,
-             substr(md5(substr(g.norm, CAST(t.p AS INT), 5)), 1, 15)
-             || lpad(CAST(1000000000 - t.p AS VARCHAR), 10, '0') AS sel
-      FROM g, unnest(range(1, g.gmax + 1)) t(p)
-      WHERE g.gmax >= 1),
-    w AS (
-      SELECT doc_id, pos, gmax,
-             min(sel) OVER (PARTITION BY doc_id ORDER BY pos
-                            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING)
-               AS fp
-      FROM grams),
-    fps AS (
-      SELECT DISTINCT doc_id,
-             substr(fp, 1, 15) AS fingerprint,
-             (1000000000
-              - CAST(substr(fp, 16, 10) AS BIGINT))::BIGINT AS pos
-      FROM w
-      WHERE pos <= greatest(gmax - 3, 1))
-    """
-
-    sqls["winnow_fingerprints"] = _winnow_fps + """
-    SELECT doc_id, fingerprint, pos FROM fps"""
-
-    sqls["winnow_overlap"] = _winnow_fps + """,
-    dfp AS (SELECT DISTINCT doc_id, fingerprint FROM fps),
-    keep AS (
-      SELECT fingerprint FROM dfp
-      GROUP BY fingerprint HAVING count(*) <= 8),
-    k AS (SELECT dfp.doc_id, dfp.fingerprint
-          FROM dfp JOIN keep USING (fingerprint))
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           count(*)::BIGINT AS n_shared
-    FROM k a JOIN k b USING (fingerprint)
-    WHERE a.doc_id < b.doc_id
-    GROUP BY 1, 2
-    HAVING count(*) >= 3"""
 
     sqls["fix_mojibake"] = """
     SELECT doc_id,
@@ -3431,7 +2754,6 @@ def _dataprep_sql() -> dict[str, str]:
       coalesce(sc.n_grams, 0)::BIGINT AS n_grams,
       coalesce(sc.weight_ppm, 0)::BIGINT AS weight_ppm
     FROM documents doc LEFT JOIN sc ON doc.doc_id = sc.doc_id"""
-
 
     sqls["bm25_topk"] = """
     WITH d AS (
@@ -3809,7 +3131,6 @@ def _dataprep_sql() -> dict[str, str]:
                AND b.p > a.p AND b.p <= a.p + 3
     GROUP BY 1"""
 
-
     sqls["unigram_drift"] = """
     WITH wa AS (
       SELECT unnest(list_filter(string_split(text, ' '),
@@ -3835,7 +3156,6 @@ def _dataprep_sql() -> dict[str, str]:
     SELECT word, cnt_a, cnt_b, ppm_a, ppm_b,
       abs(ppm_a - ppm_b)::BIGINT AS delta_ppm
     FROM p WHERE abs(ppm_a - ppm_b) >= 1000"""
-
 
     sqls["cdc_dup_chunks"] = """
     WITH pages AS (
@@ -3874,7 +3194,6 @@ def _dataprep_sql() -> dict[str, str]:
       (k // 1000000)::BIGINT AS canonical_doc,
       (k % 1000000)::INT AS canonical_idx
     FROM g WHERE n_copies >= 2"""
-
 
     return sqls
 
@@ -3958,64 +3277,6 @@ def q_search_backward(spark, sf_dir):
         F.max(
             F.struct("line_no", F.locate("Ioctl", F.col("raw_line")).alias("p"))
         )["p"].cast("long").alias("pos"),
-    )
-
-
-# ── events aggregates (driver's generic events table) ─────────────────
-
-
-def q_events_by_type(spark, sf_dir):
-    """Counts + exact decimal sums by event type (decimal, not double:
-    float summation order is nondeterministic under parallelism)."""
-    from pyspark.sql import functions as F
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .cast("double").alias("value_sum"),
-    )
-
-
-def q_events_hourly(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy(
-        F.date_format("ts", "yyyy-MM-dd HH").alias("hour")
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
-def q_events_sessions(spark, sf_dir):
-    """Sessionization: 30-minute-gap rule per user via lag + running sum
-    (the standard watermark-free batch formulation)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # ts is TIMESTAMP_NTZ; epoch seconds via a timestamp cast (session tz
-    # is UTC). Gaps are offset-invariant so this matches DuckDB epoch().
-    sec = F.col("ts").cast("timestamp").cast("long")
-    gap = sec - F.lag(sec).over(w)
-    marked = ev.withColumn(
-        "new_sess",
-        F.when(gap.isNull() | (gap > 1800), 1).otherwise(0),
-    )
-    return marked.groupBy("user_id").agg(
-        F.sum("new_sess").cast("long").alias("n_sessions"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-def q_events_props(spark, sf_dir):
-    """JSON prop extraction + bucket histogram."""
-    from pyspark.sql import functions as F
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return ev.groupBy((k % 10).alias("k_bucket")).agg(
-        F.count(F.lit(1)).alias("n")
     )
 
 
@@ -4254,39 +3515,20 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# The driver oracle-checks only the first ~50 queries() entries per
-# round (r01: 45, r02-r04: 50 — exactly the registry head each time),
-# so ordering IS evidence routing.  _DRIVER_HEAD lists, in priority
-# order, the queries that most need a driver CORRECTNESS row this
-# round (r05): first any round-5 additions (never checked by
-# definition), then the 28 queries that have never had a driver row
-# across r01-r04 (all 28 verified green locally via
-# tools/check_oracle.py at sf0.01 in round 4), then 13 rotated-back
-# queries whose operator files round 4 touched (dedup.py +174,
-# parse.py +140, filters.py +15) so they re-earn a fresh row.
-# Everything else (green in r01-r04, files untouched) follows in its
-# original grouping.  Rotate per round.
+# queries() lists these names first and the rest in registration order;
+# the fixed head keeps MANIFEST.md's `head#` column stable.
 _DRIVER_HEAD: list[str] = [
-    # -- round-5 additions (never driver-checked; prepend as added) --
     "grok_parse",
     "incremental_lsh",
     "crawl_frontier",
     "sentence_dedup",
-    # -- never driver-checked across r01-r04 (28) --
     "cluster_representatives",
     "norm_exact_dedup",
-    "hard_negatives",
-    "embedding_kmeans",
-    "kmeans_ann_topk",
-    "semdedup",
     "domain_blocklist",
     "crawl_delays",
     "crawl_schedule",
     "host_components",
     "host_hits",
-    "crawl_rollup",
-    "lang_source_pivot",
-    "event_transitions",
     "rebalance_mix",
     "tag_keywords",
     "bm25_topk",
@@ -4297,23 +3539,14 @@ _DRIVER_HEAD: list[str] = [
     "unigram_drift",
     "cdc_dup_chunks",
     "dq_check",
-    "clean_corpus_verdicts",
     "containment_pairs",
     "collocations",
     "sample_weighted",
-    # -- rotated back: operator files touched in round 4 (13) --
-    # Ordered so the ~50-entry driver window catches the highest-value
-    # rows first (45 entries total, all inside the window): the
-    # flagship invariant (sink_counts), the parse headline
-    # (parse_metrics) and the filters.py consumers beat the
-    # redundant dedup.py consumers (lsh_pairs + near_dup_clusters
-    # already re-earn dedup.py's row).
     "parse_metrics",
     "sink_counts",
     "route_mixed_rows",
     "exact_dedup",
     "incremental_dedup",
-    "incremental_dedup_bloom",
     "lsh_pairs",
     "near_dup_clusters",
     "ngram_jaccard",
@@ -4356,7 +3589,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # training-data pipeline ops
         "exact_dedup": q_exact_dedup,
         "incremental_dedup": q_incremental_dedup,
-        "incremental_dedup_bloom": q_incremental_dedup_bloom,
         "minhash_signature": q_minhash_signature,
         "lsh_pairs": q_lsh_pairs,
         "incremental_lsh": q_incremental_lsh,
@@ -4368,12 +3600,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "norm_exact_dedup": q_norm_exact_dedup,
         "simhash": q_simhash,
         "fingerprint": q_fingerprint,
-        "cosine_topk": q_cosine_topk,
-        "hard_negatives": q_hard_negatives,
-        "cosine_topk_ann": q_cosine_topk_ann,
-        "embedding_kmeans": q_embedding_kmeans,
-        "kmeans_ann_topk": q_kmeans_ann_topk,
-        "semdedup": q_semdedup,
         "language_id": q_language_id,
         "quality_score": q_quality_score,
         "domain_blocklist": q_domain_blocklist,
@@ -4382,8 +3608,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repetition_stats": q_repetition_stats,
         "filter_verdict": q_filter_verdict,
         "pii_scrub": q_pii_scrub,
-        "boilerplate_blocks": q_boilerplate_blocks,
-        "main_content": q_main_content,
         "canonical_urls": q_canonical_urls,
         "cdx_index": q_cdx_index,
         "cdx_lookup": q_cdx_lookup,
@@ -4402,9 +3626,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "outlink_degrees": q_outlink_degrees,
         "anchor_text_stats": q_anchor_text_stats,
         "host_components": q_host_components,
-        "crawl_rollup": q_crawl_rollup,
-        "lang_source_pivot": q_lang_source_pivot,
-        "event_transitions": q_event_transitions,
         "rebalance_mix": q_rebalance_mix,
         "tag_keywords": q_tag_keywords,
         "sitemap_urls": q_sitemap_urls,
@@ -4419,7 +3640,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "proximity_search": q_proximity_search,
         "unigram_drift": q_unigram_drift,
         "cdc_dup_chunks": q_cdc_dup_chunks,
-        "embedding_near_dup": q_embedding_near_dup,
         # corpus construction
         "contamination_check": q_contamination_check,
         "chunk_dedup": q_chunk_dedup,
@@ -4427,8 +3647,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sample_stratified": q_sample_stratified,
         "domain_mix": q_domain_mix,
         "paragraph_dedup": q_paragraph_dedup,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "winnow_overlap": q_winnow_overlap,
         "duplicate_spans": q_duplicate_spans,
         "strip_duplicate_spans": q_strip_duplicate_spans,
         # checkpoint/lineage + skew
@@ -4438,13 +3656,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nav_page_window": q_nav_page_window,
         "nav_eof_jump": q_nav_eof_jump,
         "search_backward": q_search_backward,
-        # events table
-        "events_by_type": q_events_by_type,
-        "events_hourly": q_events_hourly,
-        "events_sessions": q_events_sessions,
-        "events_props": q_events_props,
         "dq_check": q_dq_check,
-        "clean_corpus_verdicts": q_clean_corpus_verdicts,
         # parse-semantics extras
         "parse_dbl_spec": q_parse_dbl_spec,
         "crlf_identity": q_crlf_identity,
@@ -4570,7 +3782,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT host || '.' || tld AS host, COUNT(*)::BIGINT AS n
     FROM pages GROUP BY 1"""
 
-
     sqls["lineage_buckets"] = f"""{_prelude()}
     SELECT (doc_id % 8)::INT AS bucket,
            COUNT(*)::BIGINT AS rows,
@@ -4582,7 +3793,6 @@ def oracle_sql() -> dict[str, str]:
     l2 AS (
       SELECT regexp_extract(url, 'https://([^/]*)/', 1) AS host FROM lines)
     SELECT host, COUNT(*)::BIGINT AS n FROM l2 GROUP BY 1"""
-
 
     info_pred = _accept(_SINK_PREDS["sink_info"])
     sqls["nav_page_window"] = f"""{_prelude()},
@@ -4605,34 +3815,6 @@ def oracle_sql() -> dict[str, str]:
     WHERE contains(raw_line, 'Ioctl') AND line_no < 40
     GROUP BY doc_id"""
 
-    sqls["events_by_type"] = """
-    SELECT event_type, COUNT(*)::BIGINT AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-    FROM events GROUP BY 1"""
-
-    sqls["events_hourly"] = """
-    SELECT strftime(ts, '%Y-%m-%d %H') AS hour, COUNT(*)::BIGINT AS n
-    FROM events GROUP BY 1"""
-
-    sqls["events_sessions"] = """
-    WITH m AS (
-      SELECT user_id,
-        CASE WHEN lag(epoch(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-             OR epoch(ts) - lag(epoch(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) > 1800
-          THEN 1 ELSE 0 END AS new_sess
-      FROM events)
-    SELECT user_id, SUM(new_sess)::BIGINT AS n_sessions,
-           COUNT(*)::BIGINT AS n_events
-    FROM m GROUP BY 1"""
-
-    sqls["events_props"] = """
-    SELECT (CAST(props->>'$.k' AS BIGINT) % 10) AS k_bucket,
-           COUNT(*)::BIGINT AS n
-    FROM events GROUP BY 1"""
-
-
     sqls["parse_dbl_spec"] = """
     WITH raw AS (
       SELECT doc_id,
@@ -4651,7 +3833,6 @@ def oracle_sql() -> dict[str, str]:
 
     sqls["crlf_identity"] = f"""{_prelude('lines')}
     SELECT doc_id, line_no, raw_line FROM lines"""
-
 
     sqls["route_raw_contains"] = f"""{_prelude()}
     SELECT doc_id, line_no, raw_line FROM parsed
@@ -4693,7 +3874,6 @@ def oracle_sql() -> dict[str, str]:
                 '^(.{4}):(-)-*([0-9]+)$', 3) AS BIGINT) END AS num,
       regexp_matches(raw_line, '^(.{4}):(-)-*([0-9]+)$') AS well_formed
     FROM raw"""
-
 
     bit_terms = []
     for bi, (sname, spred) in enumerate(_SINK_PREDS.items()):

@@ -702,8 +702,8 @@ def rebalance_mix(docs, target_ppm: Mapping[str, int],
     Output: kept rows ``(doc_id, lang, bucket, accept_ppm)``.
 
     Scale shape: one per-lang count aggregate (#langs rows collected —
-    driver data bounded by the lang vocabulary, same budget class as
-    the kmeans centroid fold), then a map-only filter. Products stay
+    driver data bounded by the lang vocabulary), then a map-only
+    filter. Products stay
     ≤ n·10¹² — int64-safe to ~10⁶-row strata; past that the driver
     math widens to python bigints automatically and only the SQL
     oracle needs DECIMAL."""

@@ -352,7 +352,7 @@ def near_dup_clusters(docs, pairs, id_col: str = "doc_id",
     # localCheckpoint, not persist: each round's table references the
     # previous one TWICE (via nbr_min and via the left join), so with
     # plain persist the LOGICAL plan doubles per round — exponential in
-    # rounds (a 10-round run produced a 2 GiB plan string via semdedup)
+    # rounds (a 10-round run produced a 2 GiB plan string)
     # even though the data is cached. localCheckpoint truncates lineage
     # so plan size stays O(1) per round; the round's `changed` count
     # materializes the table anyway, so eager checkpointing adds no

@@ -12,8 +12,7 @@ parsed DataFrame in one projection. The consumers build on those:
 ``plans/checkpoint.route_checkpointed`` (the batch writer) hash-distributes
 rows by lineage bucket, adds each sink's :func:`sink_column`, and one
 ``mapInArrow`` stage splits every Arrow batch per (sink, bucket) and writes
-the files; ``aggregate.sink_count_frame`` sums the verdicts; the streaming
-writer filters each micro-batch by them.
+the files; ``aggregate.sink_count_frame`` sums the verdicts.
 """
 
 from __future__ import annotations

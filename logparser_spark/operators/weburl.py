@@ -526,8 +526,8 @@ def host_hits(edges, iters: int = 3):
 
     Scale shape: each iteration is two shuffle join+aggregate steps
     over the edge list (the canonical distributed HITS step) plus one
-    O(1) scalar max per step (a driver literal, like the kmeans
-    centroids — two tiny jobs per iteration). ``iters`` unrolls into
+    O(1) scalar max per step (a driver literal — two tiny jobs per
+    iteration). ``iters`` unrolls into
     the logical plan, so keep it small (≤6) or checkpoint between
     iterations — the same contract as :func:`host_pagerank`.
     """

@@ -1,6 +1,6 @@
-"""Training-data pipeline ops: dedup / similarity / textstats /
-weburl. Invariant-style tests (the exact value parity with DuckDB is
-covered by tools/check_oracle.py and the driver's correctness gate)."""
+"""Training-data pipeline ops: dedup / textstats / weburl / corpus.
+Invariant-style tests (the exact value parity with DuckDB is covered by
+tools/check_oracle.py)."""
 
 from __future__ import annotations
 
@@ -13,11 +13,6 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
 
 
 def test_exact_dedup_identity_and_dups(spark, docs):
@@ -153,103 +148,6 @@ def test_simhash_near_dup_low_hamming(spark, docs):
             sh.filter(F.col("doc_id").isin([0, 99_999])).collect()}
     ham = bin(vals[0] ^ vals[99_999]).count("1")
     assert ham <= 6  # near-identical docs -> few differing bits
-
-
-def test_cosine_topk_self_first_and_ann_subset(spark, emb):
-    from logparser_spark.operators import similarity
-
-    q = list(emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"])
-    exact = similarity.cosine_topk(emb, q, k=10).collect()
-    assert exact[0]["vec_id"] == 0 and abs(exact[0]["cos_sim"] - 1.0) < 1e-6
-    # descending similarity
-    sims = [r["cos_sim"] for r in exact]
-    assert sims == sorted(sims, reverse=True)
-
-    ann = similarity.cosine_topk_ann(emb, q, k=10).collect()
-    assert ann[0]["vec_id"] == 0
-    # ANN results are a subset of the candidate-restricted exact ranking:
-    # every ANN sim must appear in the full table with the same value
-    exact_all = {
-        r["vec_id"]: r["cos_sim"]
-        for r in similarity.cosine_topk(emb, q, k=500).collect()
-    }
-    for r in ann:
-        assert abs(exact_all[r["vec_id"]] - r["cos_sim"]) < 1e-9
-
-
-def test_embedding_near_dup_matches_bruteforce(spark, emb):
-    """embedding_near_dup_pairs == brute-force pairs restricted to the
-    Hamming<=1 sign-bucket candidate set (the documented recall trade),
-    on a 100-vector sample."""
-    import math
-
-    from logparser_spark.operators import similarity
-
-    sub = emb.filter(F.col("vec_id") < 100)
-    tau = 0.2
-    got = {
-        (r["id_a"], r["id_b"]): r["cos_sim"]
-        for r in similarity.embedding_near_dup_pairs(sub, tau=tau).collect()
-    }
-
-    rows = {r["vec_id"]: list(r["embedding"]) for r in sub.collect()}
-
-    def bucket(v):
-        return sum(1 << j for j in range(8) if v[j] >= 0)
-
-    def cos(a, b):
-        d = sum(float(x) * float(y) for x, y in zip(a, b))
-        na = math.sqrt(sum(float(x) * float(x) for x in a))
-        nb = math.sqrt(sum(float(y) * float(y) for y in b))
-        return round(d / (na * nb), 6)
-
-    want = {}
-    ids = sorted(rows)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            if bin(bucket(rows[a]) ^ bucket(rows[b])).count("1") <= 1:
-                c = cos(rows[a], rows[b])
-                if c >= tau:
-                    want[(a, b)] = c
-    assert set(got) == set(want)
-    for k in want:
-        assert abs(got[k] - want[k]) < 2e-6, k
-
-
-def test_ann_bucketed_writer_prunes_partitions(spark, emb, tmp_path):
-    """write_embeddings_bucketed + cosine_topk_ann_pruned: the scan must
-    touch only the hamming+1 candidate bucket DIRECTORIES (real
-    partition pruning), and the result must equal the filter-scan ANN."""
-    import re
-
-    from logparser_spark.operators import similarity
-
-    path = str(tmp_path / "emb_bucketed")
-    similarity.write_embeddings_bucketed(emb, path)
-
-    q = list(emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"])
-    allowed = set(similarity.query_buckets(q))
-
-    pruned = similarity.cosine_topk_ann_pruned(spark, path, q, k=10)
-    base = similarity.cosine_topk_ann(emb, q, k=10)
-    assert [tuple(r) for r in pruned.collect()] == [
-        tuple(r) for r in base.collect()
-    ]
-
-    # the candidate scan's file listing stays inside the allowed buckets
-    df = spark.read.parquet(path)
-    cand = df.filter(F.col("sign_bucket").isin(list(allowed)))
-    files = {
-        r[0] for r in cand.select(F.input_file_name()).distinct().collect()
-    }
-    assert files
-    touched = {
-        int(re.search(r"sign_bucket=(\d+)", f).group(1)) for f in files
-    }
-    assert touched <= allowed
-    # ...and the full table really has more buckets than we scanned
-    all_buckets = {r[0] for r in df.select("sign_bucket").distinct().collect()}
-    assert len(all_buckets) > len(touched)
 
 
 def test_language_id_markers(spark):
@@ -1308,57 +1206,6 @@ def test_parse_sitemaps(spark):
     ]
 
 
-def test_boilerplate_blocks_and_main_content(spark):
-    """jusText-lite rules: script/style removed wholesale, the four
-    verdict tiers (linky / good / short / low_stop), density ppm
-    math, block order preserved in the reassembled content, and
-    no-good-block pages yielding no row."""
-    from logparser_spark.operators.boilerplate import (
-        boilerplate_blocks,
-        main_content,
-    )
-
-    good_p = ("This is the first real paragraph of the page and it is "
-              "full of the usual function words that a normal English "
-              "sentence carries with it.")
-    good_p2 = ("Here is a second content paragraph and it also has "
-               "plenty of the common words that are needed for it to "
-               "pass the bar.")
-    html = (
-        '<html><head><style>.x{color:red}</style>'
-        '<script>var s = "of the and to in";</script></head><body>'
-        '<div class="nav"><a href="/">Home</a> '
-        '<a href="/about">About us</a> <a href="/c">Contact</a></div>'
-        f"<p>{good_p}</p>"
-        "<p>Read more...</p>"
-        "<div>word soup lacking stop tokens entirely just nouns "
-        "verbs objects widgets gadgets sprockets flanges</div>"
-        f"<p>{good_p2}</p>"
-        '<div class="footer">Copyright 2024 <a href="/tos">Terms</a> '
-        '<a href="/p">privacy</a></div></body></html>'
-    )
-    linky_only = ('<html><body><div><a href="/a">one link</a> '
-                  '<a href="/b">two links</a></div></body></html>')
-    df = spark.createDataFrame(
-        [(1, html), (2, linky_only)], "doc_id long, html string"
-    )
-    blocks = sorted(
-        ((r["doc_id"], r["seq"]), (r["verdict"], r["n_words"]))
-        for r in boilerplate_blocks(df).collect()
-    )
-    verdicts = [v for (_d, _s), (v, _n) in blocks]
-    assert verdicts == ["linky", "good", "short", "low_stop", "good",
-                        "linky", "linky"]
-    # script/style text never leaks into any block
-    texts = [r["text"] for r in boilerplate_blocks(df).collect()]
-    assert not any("color:red" in t or "var s" in t for t in texts)
-
-    mc = {r["doc_id"]: r for r in main_content(df).collect()}
-    assert set(mc) == {1}
-    assert mc[1]["n_good_blocks"] == 2
-    assert mc[1]["content"] == f"{good_p}\n{good_p2}"
-
-
 def test_dedup_lines_within_doc(spark):
     """Intra-doc line dedup: first occurrence kept, order preserved,
     blank lines dedup like any line, counts exact."""
@@ -1422,111 +1269,6 @@ def test_registrable_domain(spark):
         assert got[key] == want, (key, got[key], want)
 
 
-def test_kmeans_matches_python_reference(spark):
-    """Integer k-means vs an independent per-row python reference
-    (same quantize/trunc-div/tie-break/empty-carryover contract), on
-    vectors engineered to exercise ties and an emptied cluster."""
-    import math
-
-    from logparser_spark.operators.kmeans import kmeans_fit_assign
-
-    vecs = [
-        (0, [0.0, 0.0]), (1, [0.1, 0.0]), (2, [10.0, 10.0]),
-        (3, [10.1, 10.0]), (4, [10.0, 10.1]), (5, [0.05, 0.05]),
-        (6, [-5.0, -5.0]), (7, [-5.1, -5.0]), (8, [20.0, 20.0]),
-    ]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs],
-        "vec_id long, embedding array<float>",
-    )
-    K, IT = 3, 4
-    got = {r["vec_id"]: (r["cluster"], r["dist"])
-           for r in kmeans_fit_assign(df, k=K, iters=IT).collect()}
-
-    # reference: float32-faithful quantization, then pure ints
-    def quant(v):
-        import struct
-        return [math.floor(
-            struct.unpack("f", struct.pack("f", x))[0] * 1e6 + 0.5
-        ) for x in v]
-
-    q = {i: quant(v) for i, v in vecs}
-    cent = [q[i] for i in range(K)]
-
-    def dist(a, b):
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    def assign():
-        out = {}
-        for i, qq in q.items():
-            best = min((dist(qq, c), j) for j, c in enumerate(cent))
-            out[i] = best
-        return out
-
-    for _ in range(IT):
-        a = assign()
-        sums = {}
-        for i, (d, j) in a.items():
-            s = sums.setdefault(j, [[0] * len(q[i]), 0])
-            s[0] = [x + y for x, y in zip(s[0], q[i])]
-            s[1] += 1
-        for j, (svec, n) in sums.items():
-            cent[j] = [(abs(s) // n) * (1 if s >= 0 else -1)
-                       for s in svec]
-    ref = {i: (j, d) for i, (d, j) in assign().items()}
-    assert got == ref
-
-
-def test_kmeans_ivf_topk_recall_and_self_hit(spark):
-    """IVF ANN: self-hit at rank 1 with dist 0; results are a subset
-    of brute-force candidates restricted to probed cells with exact
-    integer distances; raising nprobe to k makes it EXACT brute-force
-    top-k (the IVF recall law)."""
-    from logparser_spark.operators.kmeans import (
-        kmeans_fit,
-        kmeans_ivf_topk,
-        quantize,
-    )
-
-    import random
-    rng = random.Random(5)
-    vecs = [(i, [rng.uniform(-1, 1) for _ in range(8)])
-            for i in range(60)]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs],
-        "vec_id long, embedding array<float>",
-    )
-    out = kmeans_ivf_topk(df, k=3, iters=2, nprobe=1, topk=4,
-                          query_mod=20)
-    rows = sorted(
-        (r["qid"], r["rank"], r["vec_id"], r["dist"])
-        for r in out.collect()
-    )
-    qids = {q for q, _r, _v, _d in rows}
-    assert qids == {0, 20, 40}
-    for q in qids:
-        first = [r for r in rows if r[0] == q and r[1] == 1][0]
-        assert first[2] == q and first[3] == 0  # self-hit
-
-    # nprobe = k  ==> exact brute-force top-k
-    exact = kmeans_ivf_topk(df, k=3, iters=2, nprobe=3, topk=4,
-                            query_mod=20)
-    got = {(r["qid"], r["rank"]): (r["vec_id"], r["dist"])
-           for r in exact.collect()}
-    qrows = {r["vec_id"]: list(r["q"])
-             for r in quantize(df).collect()}
-
-    def d2(a, b):
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    for q in qids:
-        bf = sorted(
-            (d2(qrows[q], qv), v) for v, qv in qrows.items()
-        )[:4]
-        for rk, (dd, vv) in enumerate(bf, start=1):
-            assert got[(q, rk)] == (vv, dd), (q, rk)
-
-
 def test_rebalance_mix_rates_and_binding_stratum(spark):
     """Rate derivation: binding stratum keeps 100%, other rates scale
     by the exact rational, absent strata drop, kept counts land near
@@ -1585,73 +1327,6 @@ def test_dq_check_null_fails_closed(spark):
     assert got == {"text not null": (4, 1, False),
                    "v in range": (4, 2, False),
                    "id positive": (4, 0, True)}
-
-
-def test_kmeans_backends_agree(spark):
-    """The catalyst (broadcast-join argmin) and arrow (mapInArrow
-    NumPy) assignment backends are bit-identical — same clusters,
-    same exact integer distances, same tie-breaks — on vectors with
-    engineered ties."""
-    import random
-
-    from logparser_spark.operators.kmeans import kmeans_fit_assign
-
-    rng = random.Random(11)
-    vecs = [(i, [rng.uniform(-1, 1) for _ in range(6)])
-            for i in range(80)]
-    # engineered exact ties: rows equidistant from two init rows
-    vecs += [(100, [1.0] * 6), (101, [-1.0] * 6), (102, [0.0] * 6)]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs],
-        "vec_id long, embedding array<float>",
-    )
-    cat = {r["vec_id"]: (r["cluster"], r["dist"])
-           for r in kmeans_fit_assign(df, k=4, iters=3,
-                                      backend="catalyst").collect()}
-    arr = {r["vec_id"]: (r["cluster"], r["dist"])
-           for r in kmeans_fit_assign(df, k=4, iters=3,
-                                      backend="arrow").collect()}
-    assert cat == arr
-
-
-def test_kmeans_large_k_plan_is_o1(spark):
-    """The round-4 verdict's k-budget finding: assignment must not
-    embed k·dim literal expressions. At k=512 × dim=16 the physical
-    plan stays small (codebook travels as broadcast DATA), uses a
-    BroadcastHashJoin (never BroadcastNestedLoopJoin), and the
-    assignment matches a NumPy reference."""
-    import random
-
-    import numpy as np
-
-    from logparser_spark.operators.kmeans import _assign, quantize
-
-    rng = random.Random(7)
-    K, DIM = 512, 16
-    cents = [[rng.randint(-1_000_000, 1_000_000) for _ in range(DIM)]
-             for _ in range(K)]
-    df = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(DIM)])
-         for i in range(50)],
-        "vec_id long, embedding array<float>",
-    )
-    qdf = quantize(df)
-    out = _assign(qdf, cents)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-    # O(1) plan: a literal fan-out at k=512×16 would be ~100k nodes /
-    # megabytes of toString; the broadcast-data plan is a few KB.
-    assert len(plan) < 20_000
-
-    rows = out.collect()
-    cm = np.asarray(cents, dtype=np.int64)
-    qm = {r["vec_id"]: np.asarray(list(r["q"]), dtype=np.int64)
-          for r in qdf.collect()}
-    for r in rows:
-        d = ((cm - qm[r["vec_id"]][None, :]) ** 2).sum(axis=1)
-        j = int(d.argmin())
-        assert (r["cluster"], r["dist"]) == (j, int(d[j]))
 
 
 def test_incremental_lsh_matches_batch_minus_old_old(spark):

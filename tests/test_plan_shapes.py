@@ -33,17 +33,11 @@ def test_at_most_one_python_stage_per_query(query_plans):
     """The parse is the only Python stage and must be planned ONCE —
     two ArrowEvalPython/MapInArrow nodes means the optimizer cloned the
     UDF (the filter+project pushdown bug) and every line parses twice."""
-    # incremental_dedup_bloom intentionally plans the digest+bloom UDF
-    # in BOTH union branches (bypass + verify): a deliberate
-    # scan-twice / shuffle-only-candidates trade — the map-only stage
-    # repeats, the expensive anti-join shuffle does not.
-    allowed_two_arrow = {"incremental_dedup_bloom"}
     bad = {
         name: (p.count("ArrowEvalPython"), p.count("MapInArrow"),
                p.count("MapInPandas"))
         for name, p in query_plans.items()
-        if (p.count("ArrowEvalPython") > 1
-            and name not in allowed_two_arrow)
+        if p.count("ArrowEvalPython") > 1
         or p.count("MapInArrow") > 1
         or p.count("MapInPandas") > 1
     }

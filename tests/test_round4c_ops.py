@@ -145,59 +145,6 @@ def test_bm25_log_idf_matches_textbook_ranking(spark):
     assert rat != log   # the engineered divergence is real
 
 
-# ── hard-negative mining ─────────────────────────────────────────────
-
-
-def test_hard_negatives_excludes_same_label(spark):
-    import math
-
-    from logparser_spark.operators.similarity import hard_negatives
-
-    rows = [
-        (0, [1.0, 0.0], 0),       # query
-        (1, [0.99, 0.14], 0),     # closest but SAME label → excluded
-        (2, [0.9, 0.44], 1),      # closest other-label
-        (3, [0.0, 1.0], 1),       # orthogonal
-        (4, [-1.0, 0.0], 2),      # opposite
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    got = [(r.rank, r.vec_id, r.cos_sim)
-           for r in hard_negatives(df, [(0, [1.0, 0.0], 0)], k=3)
-           .collect()]
-    assert [v for _, v, _ in got] == [2, 3, 4]
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return round(d / (na * nb), 6)
-
-    assert got[0][2] == cos([0.9, 0.44], [1.0, 0.0])
-
-
-def test_hard_negatives_multi_query_ranks(spark):
-    from logparser_spark.operators.similarity import hard_negatives
-
-    rows = [(i, [float(i % 3 == 0), float(i % 3 == 1),
-                 float(i % 3 == 2)], i % 3) for i in range(9)]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    qs = [(0, rows[0][1], 0), (1, rows[1][1], 1)]
-    out = hard_negatives(df, qs, k=4).collect()
-    by_q: dict = {}
-    for r in out:
-        by_q.setdefault(r.query_id, []).append(r)
-    assert set(by_q) == {0, 1}
-    for qid, lst in by_q.items():
-        assert [r.rank for r in lst] == [1, 2, 3, 4]
-        # all negatives carry a different label than the query
-        labels = {rows[r.vec_id][2] for r in lst}
-        assert qs[qid][2] not in labels
-
-
 # ── cluster representatives ──────────────────────────────────────────
 
 

@@ -1,14 +1,13 @@
 """Sink names are checked before any routing: duplicate, empty or
 ``_``-prefixed names, names containing ``/`` or NUL and the names ``.``
 and ``..`` raise ``ValueError`` in ``route_mask``, ``route_checkpointed``,
-``run_job``, the streaming batch writer and ``sink_count_frame``.
+``run_job`` and ``sink_count_frame``.
 
 A name is a column (``route_<name>``) and an output directory
 (``{base}/<name>``). Two sinks named ``dup`` would share one column in
 ``route_mask`` (the later predicate wins), one directory in
-``route_checkpointed`` (both sinks' rows merged) and in the streaming
-writer (the second sink's overwrite replaces the first's rows), and one
-sum alias in ``sink_count_frame`` (both read the first sink's count). A
+``route_checkpointed`` (both sinks' rows merged), and one sum alias in
+``sink_count_frame`` (both read the first sink's count). A
 sink named ``_staging_x`` would be deleted by the next resume's staging
 cleanup while its lineage says it is done. A sink named ``../escaped``
 would write ``{base}/../escaped`` and a resume would delete its bucket
@@ -104,31 +103,6 @@ def test_run_job_rejects_before_reading_input(spark, base, case):
     })
     with pytest.raises(ValueError, match=MESSAGE):
         run_job(spark, cfg)
-    assert os.listdir(base) == []
-
-
-@pytest.mark.parametrize("case", sorted(BAD))
-def test_batch_writer_rejects_when_built(base, case):
-    from logparser_spark.streaming.pipeline import make_batch_writer
-
-    with pytest.raises(ValueError, match=MESSAGE):
-        make_batch_writer(BAD[case], SPEC, f"{base}/out")
-    assert os.listdir(base) == []
-
-
-@pytest.mark.parametrize("case", sorted(BAD))
-def test_route_stream_rejects_before_starting(spark, base, case):
-    from logparser_spark.streaming import pipeline as SP
-
-    src = tempfile.mkdtemp(prefix="sinknames_src_")
-    try:
-        parsed = SP.parse_stream(SP.stream_pages(spark, src), SPEC)
-        with pytest.raises(ValueError, match=MESSAGE):
-            SP.route_stream(parsed, BAD[case], SPEC, f"{base}/out",
-                            f"{base}/ckpt")
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    assert spark.streams.active == []
     assert os.listdir(base) == []
 
 

@@ -51,7 +51,7 @@ def main():
     con = duckdb.connect()
     for t in [
         "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
+        "lineitem", "events", "documents",
     ]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
