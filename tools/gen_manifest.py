@@ -57,11 +57,9 @@ def main() -> int:
         "whose committed",
         "CORRECTNESS_r{N}.json has a passing row for the query; `—` = "
         "never inside the",
-        "driver's ~50-entry per-round window yet (covered by pytest + "
-        "`tools/check_oracle.py`",
-        "until rotated in). `head#` = current position in the rotation "
-        "order (the driver",
-        "checks roughly the first 50).",
+        "old per-round correctness window (covered by pytest + "
+        "`tools/check_oracle.py`).",
+        "`head#` = position in `queries()`.",
         "",
         "| query | latest green | all green rounds | oracle | head# |",
         "|---|---|---|---|---|",
